@@ -57,20 +57,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // shuffle partitions TRACK the core count (the driver also runs
-      // this bench at a lower SPARK_GRAFT_CPUS to measure scaling; a
-      // constant 32 would make the low-core run schedule 4× more tasks
-      // per exchange than it has cores, charging it pure task-dispatch
-      // overhead — guide §2.2: partitions sized to the execution, with
-      // AQE coalescing below). At 32 CPUs this is byte-identical to the
-      // r8–r15 configuration, so cross-round comparisons stand.
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val cpus = GraftSession.cpus
+    // shuffle partitions TRACK the core count (GraftSession's default):
+    // scaling runs use a lower SPARK_GRAFT_CPUS, and a constant 32 would
+    // make a low-core run schedule 4× more tasks per exchange than it
+    // has cores, charging it pure task-dispatch overhead. At 32 CPUs
+    // this is byte-identical to the r8–r15 configuration, so cross-round
+    // comparisons stand.
+    val spark = GraftSession.builder()
       .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
       // sized for the local SF: the biggest table is ~11 MB, so the 128 MB
       // defaults would serialize every scan into one task and let AQE
@@ -329,7 +323,7 @@ object Bench {
     val calMtAfter = Calibrate.runParallel(nProbeThreads)
     val rt = Runtime.getRuntime
     val env = s""""jvm":{"maxHeapMb":${rt.maxMemory() / (1 << 20)},""" +
-      s""""cpus":${rt.availableProcessors()},"master":"local[$cpus]"},""" +
+      s""""cpus":$cpus,"master":"local[$cpus]"},""" +
       f""""calibration":{"before_sec":$calBefore%.3f,"after_sec":$calAfter%.3f,""" +
       f""""mt_before_sec":$calMtBefore%.3f,"mt_after_sec":$calMtAfter%.3f,""" +
       s""""mt_threads":$nProbeThreads,""" +
@@ -418,10 +412,7 @@ object Bench {
     val csHeadline =
       s"""{"metric":"total","value":${math.round(headlineTotal * 100)},"unit":"cs","queries":$qsCs,"sf":"$sfTag"}"""
     val headlineLine =
-      if (fullHeadline.length <= 1924) fullHeadline
-      else if (csHeadline.length <= 1924) csHeadline
-      else
-        s"""{"value":${math.round(headlineTotal * 100)},"queries":$qsCs,"sf":"$sfTag"}"""
+      if (fullHeadline.length <= 1924) fullHeadline else csHeadline
     if (headlineLine.length > 1924)
       System.err.println(s"[bench] WARNING: printed line is " +
         s"${headlineLine.length} chars even after the fallback renders — " +

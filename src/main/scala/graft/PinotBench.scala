@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.pinot.{SegmentWriter, VarByteChunkV4}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Supplementary benchmark: the reference's 7 query shapes over a
@@ -23,12 +23,9 @@ object PinotBench {
     // also the like-for-like basis). At cluster scale the engine runs
     // with AQE on and partitions sized to the data (see Bench.scala) —
     // this is per-workload tuning, not a code fork.
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.props.getOrElse("graft.bench.shufflePartitions", "1"))
+    val spark = GraftSession.builder()
+      .config("spark.sql.shuffle.partitions", "1")
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
       // 16 shapes × several codegen stages + floor/A-B variants brush
       // against the default 100-entry codegen class cache; size it so
       // no timed rep ever re-compiles generated code (same rationale
@@ -120,16 +117,12 @@ object PinotBench {
     def tPlain: DataFrame = spark.read.format("pinot").load(tPlainDir.toString)
     def tIdx: DataFrame = spark.read.format("pinot").load(tIdxDir.toString)
 
-    // Task sizing A/B hook (-Dgraft.bench.splitTargetBytes): measured
-    // 256 KB / 1 MB / 128 MB split targets across multiple runs — at
-    // this 3 MB segment the sub-millisecond decode phases are dwarfed
-    // by per-task scheduling, so slicing is a wash-to-loss and the
-    // default (1 task, like the single-threaded reference) stays.
-    val splitTarget = java.lang.Long.getLong(
-      "graft.bench.splitTargetBytes",
-      graft.sources.pinot.PinotScan.DefaultSplitTargetBytes)
-    def table: DataFrame = spark.read.format("pinot")
-      .option("splitTargetBytes", splitTarget).load(tableDir.toString)
+    // Default task sizing: 256 KB / 1 MB / 128 MB split targets were
+    // measured across multiple runs (BASELINE.md) — at this 3 MB segment
+    // the sub-millisecond decode phases are dwarfed by per-task
+    // scheduling, so slicing is a wash-to-loss and the default (1 task,
+    // like the single-threaded reference) stays.
+    def table: DataFrame = spark.read.format("pinot").load(tableDir.toString)
 
     // Floor control: the same DSv2 code path over a 1-row segment — any
     // time spent here is fixed Spark per-query cost (plan, schedule, noop

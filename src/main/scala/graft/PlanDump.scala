@@ -1,20 +1,60 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Dev tool: dump explain("formatted") of flagship queries → PLANS.md. */
+/** Dumps `explain("formatted")` of queries, in one of two modes:
+  *
+  *  - no arguments (or just `<sfDir>`): the curated flagship plans, at
+  *    sf0.001 by default → PLANS.md;
+  *  - `<sfDir> <outDir> <suffix> <q1,q2,...|all>`: one file per query,
+  *    `<outDir>/<query>_<suffix>.txt`, so a before/after diff shows
+  *    exactly what a change did to each plan.
+  *
+  * Usage: runMain graft.PlanDump [<sfDir> [<outDir> <suffix> <queries|all>]]
+  */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // the extensions install UpsertViewRule/JsonIndexRule — without
-      // them the upsert/json plans below would dump RAW-scan shapes
-      // that the production session never runs
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // The production session (extensions on: without them the upsert
+    // and json-index plans would show RAW-scan shapes that never run)
+    // at a fixed 8 cores, so committed plans do not depend on the box.
+    val spark = GraftSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    try args match {
+      case Array() | Array(_) => writePlansMd(spark, sfDir)
+      case Array(_, outDir, suffix, qs) =>
+        val names =
+          if (qs == "all") SparkEntry.queries.keys.toSeq.sorted
+          else qs.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+        writePerQuery(spark, sfDir, Paths.get(outDir), suffix, names)
+      case _ => throw new IllegalArgumentException(
+        "usage: PlanDump [<sfDir> [<outDir> <suffix> <q1,q2,...|all>]]")
+    } finally spark.stop()
+  }
+
+  private def plan(spark: SparkSession, sfDir: String, name: String): String =
+    SparkEntry.queries(name)(spark, sfDir).queryExecution
+      .explainString(FormattedMode)
+
+  /** Writes `<outDir>/<name>_<suffix>.txt` per query; a query whose plan
+    * fails is reported and skipped. */
+  def writePerQuery(spark: SparkSession, sfDir: String, outDir: Path,
+      suffix: String, names: Seq[String]): Unit = {
+    Files.createDirectories(outDir)
+    for (name <- names) {
+      try {
+        Files.writeString(outDir.resolve(s"${name}_$suffix.txt"),
+          plan(spark, sfDir, name))
+        println(s"[plandump] $name ok")
+      } catch { case e: Throwable =>
+        println(s"[plandump] $name FAILED: ${e.getMessage}")
+      }
+    }
+  }
+
+  private def writePlansMd(spark: SparkSession, sfDir: String): Unit = {
     val picks = Seq(
       "q01_count_star", "q08_filter_range", "q12_tpch_q1",
       "q13_join_broadcast", "q18_tpch_q3", "q20_window_rank",
@@ -58,14 +98,9 @@ object PlanDump {
     sb ++= "BroadcastHashJoin for dims, partial+final HashAggregate,\n"
     sb ++= "TakeOrderedAndProject for top-k, WholeStageCodegen spans,\n"
     sb ++= "and PinotScan's pushed limit/skip-filters.\n\n"
-    for (name <- picks) {
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb ++= s"## $name\n\n```\n$plan```\n\n"
-    }
+    for (name <- picks)
+      sb ++= s"## $name\n\n```\n${plan(spark, sfDir, name)}```\n\n"
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${picks.size} plans)")
-    spark.stop()
   }
 }

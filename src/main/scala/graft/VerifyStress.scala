@@ -5,14 +5,10 @@ import java.nio.file.{Files, Paths}
 object VerifyStress {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master("local[8]")
+    val spark = GraftSession.builder(8)
       .config("spark.sql.shuffle.partitions", "13") // odd, non-default
       .config("spark.sql.files.maxPartitionBytes", "262144") // 256 KB
       .config("spark.sql.files.openCostInBytes", "0")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -8,11 +8,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * plain SQL can call them:
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-  *   ...
+  * val spark = graft.GraftSession.builder().getOrCreate()
   * spark.sql("SELECT dot_q(a, b) FROM vectors")
   * }}}
+  *
+  * [[graft.GraftSession]] installs it; any other session needs
+  * `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -48,6 +48,14 @@ case class ShingleGen(child: Expression, distinct: Boolean = true)
     // `toString.split(" ", -1)` path (empty tokens kept, <3 words emit
     // nothing, first-occurrence distinct): ShingleGenSpec pins the
     // equality against the declarative expression chain.
+    // Aliasing precondition: the wrappers may outlive this row only
+    // because `u.getBytes` returns a PRIVATE copy unless `u` spans a
+    // whole on-heap byte[] (offset at the array base, length equal to
+    // the array's) — then it returns that backing array itself. A
+    // string read out of an UnsafeRow is a slice of the row buffer and
+    // so is always copied; an input path that hands over a whole-array
+    // string and later REUSES the array would corrupt emitted
+    // shingles, so such a path must copy the bytes first.
     val u = v.asInstanceOf[UTF8String]
     val bytes = u.getBytes
     val nb = bytes.length

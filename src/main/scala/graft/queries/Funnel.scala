@@ -86,8 +86,8 @@ object Funnel {
     // with millions of REPLAYED step events collapses map-side before
     // anything crosses the wire, and the downstream window task holds
     // one row per distinct triple instead of per event. Price: one extra
-    // exchange on (keys, event_type, ts) ahead of the user_id exchange —
-    // FunnelHotKeyProbe measures both shapes; keep it off for organic
+    // exchange on (keys, event_type, ts) ahead of the user_id exchange
+    // (both shapes measured in BASELINE.md); keep it off for organic
     // traffic, turn it on when one key can own millions of duplicates.
     // (A bot with millions of DISTINCT timestamps still concentrates in
     // one window task — that residual bound is semantic: the funnel

@@ -231,9 +231,7 @@ class PinotHistAggReaderFactory(groupCols: Array[String],
             val ccGlobal = cm.cardinality
             if (ccGlobal <= 0) throw new graft.pinot.PinotFormatException(
               s"histogram agg: no recorded cardinality for RAW $c")
-            if (ccGlobal >= cm.totalDocs &&
-                !java.lang.Boolean.getBoolean(
-                  "graft.pinot.disableUniqueSlotFastPath")) {
+            if (ccGlobal >= cm.totalDocs) {
               // PAIRWISE-DISTINCT column (writer-recorded cardinality ==
               // totalDocs — the GROUP BY doc-id / dedup-key shape): every
               // value is its own group, so the slot IS the doc position

@@ -154,8 +154,6 @@ class PinotScanBuilder(segmentPaths: Seq[String], fullSchema: StructType,
   override def pushTopN(
       orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
       l: Int): Boolean = {
-    if (java.lang.Boolean.getBoolean("graft.pinot.disableTopNPush"))
-      return false // kill switch (A/B + operational escape hatch)
     if (l <= 0 || l > PinotScan.TopNPushCap) return false
     // PLAIN scan, single sort key on a column every segment stores
     // SORTED (non-nullable, single-value): the partition's top-k is its
@@ -257,16 +255,13 @@ class PinotScanBuilder(segmentPaths: Seq[String], fullSchema: StructType,
         // SUM/AVG from writer-recorded exact sums, MIN/MAX from the
         // min/max metadata (integral, non-nullable, every segment) —
         // a filterless global aggregate then never reads column data.
-        // -Dgraft.pinot.disableMetaAgg=true is the A/B + escape hatch.
-        case s: Sum => !metaAggDisabled && !s.isDistinct &&
+        case s: Sum => !s.isDistinct &&
           fieldName(s.column()).exists(c =>
             metaSummable(c) && metaSumTotalFits(c))
-        case a: Avg => !metaAggDisabled && !a.isDistinct &&
+        case a: Avg => !a.isDistinct &&
           fieldName(a.column()).exists(metaAvgExact)
-        case m: Min => !metaAggDisabled &&
-          fieldName(m.column()).exists(metaMinMaxable)
-        case m: Max => !metaAggDisabled &&
-          fieldName(m.column()).exists(metaMinMaxable)
+        case m: Min => fieldName(m.column()).exists(metaMinMaxable)
+        case m: Max => fieldName(m.column()).exists(metaMinMaxable)
         case _ => false
       }
     if (ok) { aggComplete = true; return true }
@@ -356,9 +351,6 @@ class PinotScanBuilder(segmentPaths: Seq[String], fullSchema: StructType,
     * is readable and carries the column (nullCount is then exact — zero
     * without a null vector, the recorded bitmap cardinality with one).
     */
-  private def metaAggDisabled: Boolean =
-    java.lang.Boolean.getBoolean("graft.pinot.disableMetaAgg")
-
   private def metaCountable(col: String): Boolean = {
     val metas = segmentPaths.map(PinotScan.segmentMeta)
     metas.nonEmpty && !metas.exists(_ == null) &&
@@ -540,9 +532,7 @@ class PinotScanBuilder(segmentPaths: Seq[String], fullSchema: StructType,
         // (integral, non-nullable) — Spark's final aggregate merges;
         // AVG arrives here already rewritten to SUM+COUNT by Spark's
         // partial-pushdown translation, so key-pure AVG rides along.
-        // The SAME kill switch as the complete path gates it: the
-        // escape hatch must disable every metadata-sourced sum
-        case s: Sum => !metaAggDisabled && !s.isDistinct &&
+        case s: Sum => !s.isDistinct &&
           fieldName(s.column()).exists(metaSummable)
         case _ => false
       }

@@ -71,19 +71,21 @@ class ShingleGenSpec extends SparkTestBase {
   }
 
   test("all-occurrences mode matches the declarative reference (order + dups)") {
-    val df = cases.toDF("text")
-    val got = df.select(col("text"),
+    // one partition plus a position column: collect() returns the docs in
+    // position order and each doc's generator rows in generation order,
+    // so the comparison below pins order as well as duplicates
+    val df = cases.zipWithIndex.toDF("text", "pos").coalesce(1)
+    val got = df.select(col("pos"),
         ShingleGen.shinglesAll(col("text")).as(Seq("sh")))
-      .groupBy("text").agg(collect_list("sh").as("got"))
-    val want = df.select(col("text"),
+      .collect().map(r => r.getInt(0) -> r.getString(1)).toSeq
+    val want = df.orderBy("pos").select(
       when(size(split(col("text"), " ")) >= 3,
-        referenceAll("text")).otherwise(array()).as("want"))
-    got.join(want, "text").collect().foreach { r =>
-      // generator output order within a doc is the generation order;
-      // collect_list over local[4] with one doc per row preserves it
-      val g = r.getSeq[String](1).sorted
-      val w = r.getSeq[String](2).sorted
-      assert(g == w, s"all-mode shingles diverged for ${r.getString(0)}")
+        referenceAll("text")).otherwise(array()))
+      .collect().map(_.getSeq[String](0))
+    for (i <- cases.indices) {
+      val g = got.collect { case (`i`, sh) => sh }
+      assert(g == want(i), s"all-mode shingles diverged for " +
+        s"'${cases(i)}': got $g want ${want(i)}")
     }
   }
 

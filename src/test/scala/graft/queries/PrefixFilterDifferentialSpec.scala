@@ -85,7 +85,7 @@ class PrefixFilterDifferentialSpec extends SparkTestBase {
     val d8 = s"$boiler aaa bbb ccc"
     val d9 = s"$boiler ddd eee fff"
     // 60 filler docs all carrying the boilerplate shingle → its df = 62
-    // > tau = max(50, 72 div 10) = 50 → dropped from the universe
+    // > tau = max(50, 69 div 10) = 50 → dropped from the universe
     val fillers = (0 until 60).map(k =>
       (100L + k, s"$boiler f${k}a f${k}b f${k}c"))
     val docs = (Seq(
