@@ -26,6 +26,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // upsert tables: a plain read (load / catalog SQL) returns the
     // upsert VIEW; raw segment reads need .option("upsertView", "raw")
     ext.injectResolutionRule(_ => graft.plans.UpsertViewRule)
+    // a Pinot scan planned as one task reports SinglePartition, so no
+    // exchange is added above it
+    ext.injectPlannerStrategy(graft.plans.SinglePartitionScanStrategy(_))
     ext.injectFunction((
       FunctionIdentifier("latest_by"),
       new ExpressionInfo(classOf[LatestByAgg].getName, "latest_by"),

@@ -80,7 +80,7 @@ object TextOps {
       .repartitionByRange(col("df"), col("shingle"))
       .sortWithinPartitions("df", "shingle")
       .rdd.map(_.getString(0)).zipWithIndex()
-      .map { case (sh, i) => (sh, i.toInt) }
+      .map { case (sh, i) => (sh, Math.toIntExact(i)) }
       .toDF("shingle", "sid")
     val sh = sh0.join(keep, "shingle").select(col("doc_id"), col("sid"))
     // Per-doc SORTED sid set, ONE row per doc (the guide §8 "decide with

@@ -176,12 +176,21 @@ class PinotHistAggReaderFactory(groupCols: Array[String],
     // merge with sibling slices' in Spark's final aggregate. Decoders
     // are slice-addressable (absolute doc positions), and concurrent
     // slices of one segment share sections through the JVM-wide cache.
-    val (path, lo, hiReq) = partition match {
-      case PinotAggSlicePartition(p, s0, s1) => (p, s0, s1)
-      case p: PinotAggPartition => (p.segmentPath, 0, Int.MaxValue)
-    }
+    // A segment-list partition emits each segment's partials in turn.
+    PinotScan.rowReader(partition match {
+      case PinotAggSlicePartition(p, s0, s1) => segmentRows(p, s0, s1)
+      case PinotAggPartition(ps) =>
+        ps.iterator.flatMap(segmentRows(_, 0, Int.MaxValue))
+    })
+  }
+
+  /** One segment's partial (or, histFinal, final) rows over docs
+    * `[lo, hiReq)`, fully materialized before the reader closes.
+    */
+  private def segmentRows(path: String, lo: Int, hiReq: Int)
+      : Iterator[InternalRow] = {
     val reader = SegmentReader.open(path)
-    val rows: Iterator[InternalRow] = try {
+    try {
       val docs = math.min(reader.metadata.totalDocs, hiReq)
       if (docs <= lo) Iterator.empty
       else {
@@ -571,14 +580,6 @@ class PinotHistAggReaderFactory(groupCols: Array[String],
         }
       }
     } finally reader.close() // all sections are materialized above
-
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = null
-      override def next(): Boolean =
-        if (rows.hasNext) { cur = rows.next(); true } else false
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
-    }
   }
 
   /** MIN/MAX surface in the metric column's own Spark type. */

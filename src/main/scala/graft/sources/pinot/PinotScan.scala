@@ -23,6 +23,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * schedules the split/grouped partitions across executors, so the design
   * parallelizes linearly in data volume AND saturates a cluster even when
   * segment sizes are skewed — no driver-side materialization anywhere.
+  * A table within the planner's per-task row floor (16 windows, ~131k
+  * rows) is the exception: it plans as ONE task whatever its on-disk
+  * bytes (which count index files the scan never reads), and Spark then
+  * plans no exchange above it — for an interactive query one task beats
+  * a second stage.
   */
 class PinotScanBuilder(segmentPaths: Seq[String], fullSchema: StructType,
     tableDir: Option[String] = None,
@@ -1061,9 +1066,15 @@ class PinotAggScan(segmentPaths: Seq[String], agg: Aggregation,
     * answer — so the merge-free plan parallelizes too. Metadata/
     * dictionary/star-tree paths never read the forward index — nothing
     * to slice.
+    *
+    * Every other path plans one partition per segment, except that a
+    * table within the one-task row floor ([[PinotScan.fitsOneTask]])
+    * plans ONE partition over all its segments: the per-segment
+    * partials then merge in the same task, and with one partition
+    * Spark needs no exchange before its final aggregate.
     */
   override def planInputPartitions(): Array[InputPartition] =
-    if (complete) Array(PinotAggPartition(null))
+    if (complete) Array(PinotAggPartition(Nil))
     else if (histogram && !histFinal && splitTargetBytes > 0)
       PinotScan.planAggSlices(segmentPaths)
     else if (histogram && histFinal && splitTargetBytes > 0 &&
@@ -1078,7 +1089,9 @@ class PinotAggScan(segmentPaths: Seq[String], agg: Aggregation,
         (topN.isEmpty || segmentPaths.exists(p =>
           PinotScan.segmentDocs(p) > PinotScan.CompleteAggMaxDocs)))
       PinotScan.planAggSlices(segmentPaths)
-    else segmentPaths.map(p => PinotAggPartition(p): InputPartition).toArray
+    else if (splitTargetBytes > 0 && PinotScan.fitsOneTask(segmentPaths))
+      Array(PinotAggPartition(segmentPaths))
+    else segmentPaths.map(p => PinotAggPartition(Seq(p)): InputPartition).toArray
 
   /** The lone group column's values are pairwise-distinct in every
     * segment, so doc-range slices partition the GROUPS as well as the
@@ -1198,7 +1211,10 @@ class PinotAggScan(segmentPaths: Seq[String], agg: Aggregation,
   }
 }
 
-case class PinotAggPartition(segmentPath: String) extends InputPartition
+/** The segments one aggregate task answers, each emitting its own
+  * partial rows (empty for the driver-answered complete path).
+  */
+case class PinotAggPartition(segmentPaths: Seq[String]) extends InputPartition
 
 /** One pushed sort key over the aggregate scan's output layout:
   * `outIdx` indexes the (group columns ++ aggregates) row. Nullability
@@ -1229,71 +1245,65 @@ class PinotAggReaderFactory(specs: Array[AggSpec], complete: Boolean,
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
+      : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
+    PinotScan.rowReader(if (complete) {
+      Iterator.single(new org.apache.spark.sql.catalyst.expressions
+        .GenericInternalRow(completeVals.clone()))
+    } else partition.asInstanceOf[PinotAggPartition].segmentPaths.iterator
+      .flatMap(segmentRows))
+
+  /** One segment's partial rows. */
+  private def segmentRows(path: String)
+      : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-
-    val rows: Iterator[InternalRow] = if (complete) {
-      Iterator.single(new GenericInternalRow(completeVals.clone()))
+    val reader = SegmentReader.open(path)
+    val docs = reader.metadata.totalDocs
+    // every branch below materializes eagerly (dictionary arrays,
+    // metadata scalars), so the channel can be released before the
+    // iterator is handed to Spark — no fd outlives createReader
+    try if (groupCols.nonEmpty && specs.isEmpty) {
+      // DISTINCT pushdown: the segment's dictionary IS its distinct
+      // value set (Pinot builds dictionaries from the segment's own
+      // values) — emit one row per entry, never touch the forward
+      // index; Spark's final aggregate dedups across segments
+      if (docs == 0) Iterator.empty
+      else dictDistinctValues(reader, groupCols(0)).iterator
+        .map(v => new GenericInternalRow(Array(v)): InternalRow)
+    } else if (docs == 0 && groupCols.nonEmpty) {
+      Iterator.empty // no key → no group row
     } else {
-      val path = partition.asInstanceOf[PinotAggPartition].segmentPath
-      val reader = SegmentReader.open(path)
-      val docs = reader.metadata.totalDocs
-      // every branch below materializes eagerly (dictionary arrays,
-      // metadata scalars), so the channel can be released before the
-      // iterator is handed to Spark — no fd outlives createReader
-      try if (groupCols.nonEmpty && specs.isEmpty) {
-        // DISTINCT pushdown: the segment's dictionary IS its distinct
-        // value set (Pinot builds dictionaries from the segment's own
-        // values) — emit one row per entry, never touch the forward
-        // index; Spark's final aggregate dedups across segments
-        if (docs == 0) Iterator.empty
-        else dictDistinctValues(reader, groupCols(0)).iterator
-          .map(v => new GenericInternalRow(Array(v)): InternalRow)
-      } else if (docs == 0 && groupCols.nonEmpty) {
-        Iterator.empty // no key → no group row
-      } else {
-        // key-pure group columns: the segment's single key value comes
-        // straight from metadata (min == max, builder-validated)
-        val keys: Array[Any] = groupCols.map { c =>
-          val cm = reader.metadata.column(c)
-          val v = cm.minValue.get
-          cm.dataType match {
-            case graft.pinot.PinotType.PInt => v.toInt
-            case graft.pinot.PinotType.PLong => v.toLong
-            case _ => UTF8String.fromString(v)
-          }
+      // key-pure group columns: the segment's single key value comes
+      // straight from metadata (min == max, builder-validated)
+      val keys: Array[Any] = groupCols.map { c =>
+        val cm = reader.metadata.column(c)
+        val v = cm.minValue.get
+        cm.dataType match {
+          case graft.pinot.PinotType.PInt => v.toInt
+          case graft.pinot.PinotType.PLong => v.toLong
+          case _ => UTF8String.fromString(v)
         }
-        val values: Array[Any] = specs.map { s =>
-          if (s.isCount) {
-            // COUNT(col) on a nullable column: docs − nullCount (exact)
-            if (s.column.isEmpty) docs.toLong
-            else (docs - reader.metadata.columns
-              .get(s.column).fold(0)(_.nullCount)).toLong
-          }
-          else if (docs == 0) null
-          else if (s.isSum)
-            // writer-recorded exact sum, builder-gated to integral
-            // columns whose per-segment sums fit in long — Spark's
-            // final merge owns any cross-segment overflow semantics
-            reader.metadata.column(s.column).sumValue.getOrElse(
-              throw new graft.pinot.PinotFormatException(
-                s"SUM pushdown without recorded sum for ${s.column}"))
-              .longValue
-          else dictMinMax(reader, s.column, s.isMin)
-        }
-        Iterator.single(new GenericInternalRow(keys ++ values))
-      } finally reader.close()
-    }
-
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = null
-      override def next(): Boolean = {
-        if (rows.hasNext) { cur = rows.next(); true } else false
       }
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
-    }
+      val values: Array[Any] = specs.map { s =>
+        if (s.isCount) {
+          // COUNT(col) on a nullable column: docs − nullCount (exact)
+          if (s.column.isEmpty) docs.toLong
+          else (docs - reader.metadata.columns
+            .get(s.column).fold(0)(_.nullCount)).toLong
+        }
+        else if (docs == 0) null
+        else if (s.isSum)
+          // writer-recorded exact sum, builder-gated to integral
+          // columns whose per-segment sums fit in long — Spark's
+          // final merge owns any cross-segment overflow semantics
+          reader.metadata.column(s.column).sumValue.getOrElse(
+            throw new graft.pinot.PinotFormatException(
+              s"SUM pushdown without recorded sum for ${s.column}"))
+            .longValue
+        else dictMinMax(reader, s.column, s.isMin)
+      }
+      Iterator.single(new GenericInternalRow(keys ++ values))
+    } finally reader.close()
   }
 
   /** The dictionary entries as Catalyst values (builder guarantees: dict,
@@ -1380,115 +1390,125 @@ class PinotStarTreeReaderFactory(groupCols: Array[String],
   import graft.pinot.StarTree
 
   override def createReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
+      : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
+    PinotScan.rowReader(
+      partition.asInstanceOf[PinotAggPartition].segmentPaths.iterator
+        .flatMap(segmentRows))
+
+  /** One segment's rolled-up partial rows. */
+  private def segmentRows(path: String)
+      : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 
-    val path = partition.asInstanceOf[PinotAggPartition].segmentPath
     val reader = SegmentReader.open(path)
     // the star-tree sections and dim dictionaries are fully materialized
     // below (keyLookup closes over decoded arrays), so the channel is
     // released before the lazy row iterator escapes
-    val rows: Iterator[InternalRow] =
-      try if (reader.metadata.totalDocs == 0) Iterator.empty
-      else {
-        val tree = reader.starTree.getOrElse(
-          throw new graft.pinot.PinotFormatException(
-            s"segment $path lost its star-tree after planning"))
-        val colType: String => PinotType =
-          c => reader.metadata.column(c).dataType
-        val treeDbl = tree.metrics.map(StarTree.isDouble(_, colType))
-        val dimIdx = groupCols.map { c =>
-          val i = tree.dims.indexOf(c)
-          if (i < 0) throw new graft.pinot.PinotFormatException(
-            s"star-tree of $path lacks dim $c")
-          i
-        }
-        val metricIdx = specs.map { s =>
-          val i = tree.metrics.indexWhere(_.key == s.metricKey)
-          if (i < 0) throw new graft.pinot.PinotFormatException(
-            s"star-tree of $path lacks metric ${s.metricKey}")
-          i
-        }
-        // roll leaf records up to the requested dims
-        val acc = scala.collection.mutable.LinkedHashMap
-          .empty[scala.collection.immutable.ArraySeq[Int], Array[Long]]
-        var r = 0
-        while (r < tree.dimIds.length) {
-          val key = scala.collection.immutable.ArraySeq.unsafeWrapArray(
-            dimIdx.map(tree.dimIds(r)(_)))
-          acc.get(key) match {
-            case None => acc(key) = metricIdx.map(tree.values(r)(_))
-            case Some(cur) =>
-              var i = 0
-              while (i < cur.length) {
-                val mi = metricIdx(i)
-                cur(i) = StarTree.mergeBits(tree.metrics(mi), treeDbl(mi),
-                  cur(i), tree.values(r)(mi))
-                i += 1
-              }
-          }
-          r += 1
-        }
-        // dict id → Catalyst value, per group column
-        val keyLookup: Array[Int => Any] = groupCols.map { c =>
-          val cm = reader.metadata.column(c)
-          (reader.dictionary(c), cm.dataType) match {
-            case (PinotDictionary.Ints(v), PinotType.PBoolean) =>
-              (id: Int) => (v(id) != 0): Any
-            case (PinotDictionary.Ints(v), _) => (id: Int) => v(id): Any
-            case (PinotDictionary.Longs(v), PinotType.PTimestamp) =>
-              (id: Int) => Math.multiplyExact(v(id), 1000L): Any
-            case (PinotDictionary.Longs(v), _) => (id: Int) => v(id): Any
-            case (PinotDictionary.Strings(v), _) =>
-              (id: Int) => UTF8String.fromString(v(id)): Any
-            case (other, _) => throw new graft.pinot.PinotFormatException(
-              s"star-tree dim $c: unsupported dictionary $other")
-          }
-        }
-        // metric bits → Catalyst value in the readSchema's field type
-        val valLookup: Array[Long => Any] = specs.zip(metricIdx).map {
-          case (s, mi) =>
-            val dbl = treeDbl(mi)
-            s.func match {
-              case "COUNT" => (bits: Long) => bits: Any
-              case "SUM" =>
-                if (dbl) (bits: Long) => java.lang.Double.longBitsToDouble(bits): Any
-                else (bits: Long) => bits: Any
-              case _ => // MIN/MAX surface in the column's own type
-                colType(s.column) match {
-                  case PinotType.PInt => (bits: Long) => bits.toInt: Any
-                  case PinotType.PLong => (bits: Long) => bits: Any
-                  case PinotType.PFloat =>
-                    (bits: Long) => java.lang.Double.longBitsToDouble(bits).toFloat: Any
-                  case PinotType.PDouble =>
-                    (bits: Long) => java.lang.Double.longBitsToDouble(bits): Any
-                  case other => throw new graft.pinot.PinotFormatException(
-                    s"star-tree MIN/MAX over ${other.name} column ${s.column}")
-                }
+    try if (reader.metadata.totalDocs == 0) Iterator.empty
+    else {
+      val tree = reader.starTree.getOrElse(
+        throw new graft.pinot.PinotFormatException(
+          s"segment $path lost its star-tree after planning"))
+      val colType: String => PinotType =
+        c => reader.metadata.column(c).dataType
+      val treeDbl = tree.metrics.map(StarTree.isDouble(_, colType))
+      val dimIdx = groupCols.map { c =>
+        val i = tree.dims.indexOf(c)
+        if (i < 0) throw new graft.pinot.PinotFormatException(
+          s"star-tree of $path lacks dim $c")
+        i
+      }
+      val metricIdx = specs.map { s =>
+        val i = tree.metrics.indexWhere(_.key == s.metricKey)
+        if (i < 0) throw new graft.pinot.PinotFormatException(
+          s"star-tree of $path lacks metric ${s.metricKey}")
+        i
+      }
+      // roll leaf records up to the requested dims
+      val acc = scala.collection.mutable.LinkedHashMap
+        .empty[scala.collection.immutable.ArraySeq[Int], Array[Long]]
+      var r = 0
+      while (r < tree.dimIds.length) {
+        val key = scala.collection.immutable.ArraySeq.unsafeWrapArray(
+          dimIdx.map(tree.dimIds(r)(_)))
+        acc.get(key) match {
+          case None => acc(key) = metricIdx.map(tree.values(r)(_))
+          case Some(cur) =>
+            var i = 0
+            while (i < cur.length) {
+              val mi = metricIdx(i)
+              cur(i) = StarTree.mergeBits(tree.metrics(mi), treeDbl(mi),
+                cur(i), tree.values(r)(mi))
+              i += 1
             }
         }
-        acc.iterator.map { case (key, vals) =>
-          val out = new Array[Any](key.length + vals.length)
-          var i = 0
-          while (i < key.length) { out(i) = keyLookup(i)(key(i)); i += 1 }
-          var j = 0
-          while (j < vals.length) { out(key.length + j) = valLookup(j)(vals(j)); j += 1 }
-          new GenericInternalRow(out): InternalRow
+        r += 1
+      }
+      // dict id → Catalyst value, per group column
+      val keyLookup: Array[Int => Any] = groupCols.map { c =>
+        val cm = reader.metadata.column(c)
+        (reader.dictionary(c), cm.dataType) match {
+          case (PinotDictionary.Ints(v), PinotType.PBoolean) =>
+            (id: Int) => (v(id) != 0): Any
+          case (PinotDictionary.Ints(v), _) => (id: Int) => v(id): Any
+          case (PinotDictionary.Longs(v), PinotType.PTimestamp) =>
+            (id: Int) => Math.multiplyExact(v(id), 1000L): Any
+          case (PinotDictionary.Longs(v), _) => (id: Int) => v(id): Any
+          case (PinotDictionary.Strings(v), _) =>
+            (id: Int) => UTF8String.fromString(v(id)): Any
+          case (other, _) => throw new graft.pinot.PinotFormatException(
+            s"star-tree dim $c: unsupported dictionary $other")
         }
-      } finally reader.close()
-
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = null
-      override def next(): Boolean =
-        if (rows.hasNext) { cur = rows.next(); true } else false
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
-    }
+      }
+      // metric bits → Catalyst value in the readSchema's field type
+      val valLookup: Array[Long => Any] = specs.zip(metricIdx).map {
+        case (s, mi) =>
+          val dbl = treeDbl(mi)
+          s.func match {
+            case "COUNT" => (bits: Long) => bits: Any
+            case "SUM" =>
+              if (dbl) (bits: Long) => java.lang.Double.longBitsToDouble(bits): Any
+              else (bits: Long) => bits: Any
+            case _ => // MIN/MAX surface in the column's own type
+              colType(s.column) match {
+                case PinotType.PInt => (bits: Long) => bits.toInt: Any
+                case PinotType.PLong => (bits: Long) => bits: Any
+                case PinotType.PFloat =>
+                  (bits: Long) => java.lang.Double.longBitsToDouble(bits).toFloat: Any
+                case PinotType.PDouble =>
+                  (bits: Long) => java.lang.Double.longBitsToDouble(bits): Any
+                case other => throw new graft.pinot.PinotFormatException(
+                  s"star-tree MIN/MAX over ${other.name} column ${s.column}")
+              }
+          }
+      }
+      acc.iterator.map { case (key, vals) =>
+        val out = new Array[Any](key.length + vals.length)
+        var i = 0
+        while (i < key.length) { out(i) = keyLookup(i)(key(i)); i += 1 }
+        var j = 0
+        while (j < vals.length) { out(key.length + j) = valLookup(j)(vals(j)); j += 1 }
+        new GenericInternalRow(out): InternalRow
+      }
+    } finally reader.close()
   }
 }
 
 object PinotScan {
+
+  /** A partition reader over rows already computed (or computed lazily
+    * per segment) by an aggregate reader. */
+  private[pinot] def rowReader(
+      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow])
+      : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
+    new PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
+      private var cur: org.apache.spark.sql.catalyst.InternalRow = null
+      override def next(): Boolean =
+        if (rows.hasNext) { cur = rows.next(); true } else false
+      override def get(): org.apache.spark.sql.catalyst.InternalRow = cur
+      override def close(): Unit = ()
+    }
 
   /** Compare a metadata bound (string form) against a filter value.
     * Some(sign) when comparable; None → cannot prune on this filter.
@@ -1845,7 +1865,10 @@ object PinotScan {
 
   /** Default task sizing target (Spark's files.maxPartitionBytes). Set
     * the `splitTargetBytes` read option to 0 to force the legacy strict
-    * 1-task == 1-segment planning.
+    * 1-task == 1-segment planning. Whatever the target, a table within
+    * [[OneTaskMaxRows]] plans as ONE task: the byte count includes index
+    * files the scan never reads, and one task below the floor beats the
+    * second stage Spark adds above several.
     */
   val DefaultSplitTargetBytes: Long = 128L << 20
 
@@ -1856,6 +1879,19 @@ object PinotScan {
 
   /** Rows per decode window — split boundaries align to it. */
   private[pinot] val WindowRows = 8192
+
+  /** Per-task row floor of the planner (16 windows, ~131k rows ≈ a few
+    * ms of decode): no split task is planned smaller, and a whole table
+    * within it plans as one task.
+    */
+  private[pinot] val OneTaskMaxRows: Long = 16L * WindowRows
+
+  /** The table's total docs (cached metadata) are within the per-task
+    * row floor, so one task answers it: with one input partition Spark
+    * plans no exchange above the scan (graft.plans.SinglePartitionScan).
+    */
+  def fitsOneTask(segs: Seq[String]): Boolean =
+    segs.iterator.map(segmentDocs).sum <= OneTaskMaxRows
 
   /** Lone-segment doc count past which the COMPLETE histogram pushdown
     * (one task, no final aggregate) yields to partial mode + doc-range
@@ -1901,7 +1937,7 @@ object PinotScan {
         if (docs <= WindowRows) 1
         else math.min((docs.toLong + target - 1) / target,
           (docs.toLong + WindowRows - 1) / WindowRows).toInt
-      if (nSplits <= 1) out += PinotAggPartition(p)
+      if (nSplits <= 1) out += PinotAggPartition(Seq(p))
       else {
         val rowsRaw = (docs.toLong + nSplits - 1) / nSplits
         val rows = ((rowsRaw + WindowRows - 1) / WindowRows) * WindowRows
@@ -1941,10 +1977,21 @@ object PinotScan {
     * single 16 MB segment still fans out across idle cores; it never
     * exceeds `targetBytes`. All sizing inputs are driver-cached
     * metadata — no column IO at planning time.
+    *
+    * One-task rule: a table whose total docs are within the row floor
+    * ([[OneTaskMaxRows]]) is ONE partition, whatever its on-disk bytes
+    * — a [[PinotInputPartition]] or a [[PinotGroupPartition]] over every
+    * segment. The byte count includes index files (inverted, bloom,
+    * range, text, star-tree) that the scan never reads, and below the
+    * floor one task beats the exchange and second stage Spark plans
+    * above several.
     */
   def planSplits(segs: Seq[String], targetBytes: Long): Array[InputPartition] = {
     if (targetBytes <= 0 || segs.isEmpty)
       return segs.map(p => PinotInputPartition(p): InputPartition).toArray
+    if (fitsOneTask(segs))
+      return Array(if (segs.length == 1) PinotInputPartition(segs.head)
+        else PinotGroupPartition(segs.toList))
     val infos = segs.map(p => (p, segmentMeta(p), segmentBytes(p)))
     val totalBytes = infos.map(_._3).sum
     val totalRows = infos.map { case (_, m, _) =>
@@ -1958,10 +2005,9 @@ object PinotScan {
       math.min(targetBytes, totalBytes / math.max(1L, 3L * parallelism)))
     // decode cost scales with ROWS, not on-disk bytes (bit-packed dict
     // ids compress a 2M-row segment to ~2 MB) — a rows target keeps
-    // CPU-bound scans parallel even when the bytes look tiny. Floor of
-    // 16 windows (~131k rows ≈ a few ms of decode) keeps each task's
-    // work well above launch overhead.
-    val effRowTarget = math.max(16L * WindowRows,
+    // CPU-bound scans parallel even when the bytes look tiny. The row
+    // floor keeps each task's work well above launch overhead.
+    val effRowTarget = math.max(OneTaskMaxRows,
       totalRows / math.max(1L, 3L * parallelism))
     val out = Array.newBuilder[InputPartition]
     val group = scala.collection.mutable.ArrayBuffer.empty[String]

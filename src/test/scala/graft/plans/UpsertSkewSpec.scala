@@ -49,8 +49,11 @@ class UpsertSkewSpec extends SparkTestBase {
       // collect() on the SAME Dataset whose plan is inspected below
       // (.as[...] would build a second queryExecution and leave this
       // one's metrics at zero)
-      val df = spark.read.format("pinot").load(dir)
-        .select("k", "ver").as[(Long, Long)]
+      // per-segment planning: the 40k-row table is within the one-task
+      // row floor, so a default read is one task with no exchange at all
+      // (pinned below); the skew claim is about the multi-task shuffle
+      val df = spark.read.format("pinot").option("splitTargetBytes", "0")
+        .load(dir).select("k", "ver").as[(Long, Long)]
       val got = df.collect()
       assert(got.length === nCold + 1)
       assert(got.toMap.apply(0L) === nRows - 2, "hot key winner wrong")
@@ -101,6 +104,15 @@ class UpsertSkewSpec extends SparkTestBase {
       assert(max <= 3 * median + 64,
         s"reduce-task read spread $perTask — the hot key's reducer " +
           "dominates; map-side partials are not bounding it")
+
+      // default planning: one task, the view's aggregate runs with no
+      // exchange, same answer
+      val small = spark.read.format("pinot").load(dir)
+        .select("k", "ver").as[(Long, Long)]
+      assert(small.collect().toMap === got.toMap)
+      assert(nodes(small.queryExecution.executedPlan).count(
+        _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec]) === 0,
+        small.queryExecution.executedPlan)
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
