@@ -116,6 +116,64 @@ class SubSegmentSplitSpec extends SparkTestBase {
       === name(54321))
   }
 
+  /** The query's Pinot scan node (its input partitions are the splits). */
+  private def scanOf(q: org.apache.spark.sql.DataFrame) =
+    q.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.head
+
+  /** Expected rows `(k, v, name, bal)` for fixture doc ids. */
+  private def rowsAt(ids: Seq[Int]): Seq[(Long, Int, String, Long)] =
+    ids.map(i => (k(i), v(i), name(i), bal(i)))
+
+  private def rowsOf(q: org.apache.spark.sql.DataFrame)
+      : Seq[(Long, Int, String, Long)] =
+    q.collect().toSeq.map(r =>
+      (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3)))
+
+  test("pushed top-N over slices of one large segment equals the fixture") {
+    val df = spark.read.format("pinot").load(bigDir)
+      .select("k", "v", "name", "bal")
+    val docs = 0 until n
+    // (query, leaf tag, expected doc ids in output order); k and name are
+    // unique, so those orders are total — bal repeats, so its case
+    // compares the bal sequence and checks every row is a fixture row
+    val cases: Seq[(String, org.apache.spark.sql.DataFrame, String, Seq[Int])] =
+      Seq(
+        ("asc k", df.orderBy("k").limit(9), "pushedTopN=[sorted k ASC limit=9]",
+          docs.take(9)),
+        ("desc k", df.orderBy(desc("k")).limit(9),
+          "pushedTopN=[sorted k DESC limit=9]", docs.reverse.take(9)),
+        ("asc bal", df.orderBy("bal").limit(9),
+          "pushedTopN=[value bal ASC limit=9]", docs.sortBy(bal(_)).take(9)),
+        ("desc name", df.orderBy(desc("name")).limit(9),
+          "pushedTopN=[value name DESC limit=9]",
+          docs.sortBy(name(_)).reverse.take(9)))
+    for ((label, q, tag, want) <- cases) {
+      val scan = scanOf(q)
+      assert(scan.inputRDD.getNumPartitions > 1,
+        s"$label: the 200k-row segment should slice")
+      assert(scan.toString.contains(tag), s"$label: ${scan.toString}")
+      val got = rowsOf(q)
+      if (label == "asc bal") {
+        assert(got.map(_._4) === rowsAt(want).map(_._4), label)
+        assert(got === rowsAt(got.map(_._1.toInt)), s"$label: fixture rows")
+      } else assert(got === rowsAt(want), label)
+    }
+  }
+
+  test("a filtered limit over slices returns matching fixture rows") {
+    val q = spark.read.format("pinot").load(bigDir)
+      .select("k", "v", "name", "bal").filter(col("v") < 3).limit(40)
+    assert(scanOf(q).inputRDD.getNumPartitions > 1,
+      "the 200k-row segment should slice")
+    val got = rowsOf(q)
+    assert(got.length === 40)
+    assert(got.map(_._1).distinct.length === 40, "no row repeated")
+    assert(got === rowsAt(got.map(_._1.toInt)), "rows must be fixture rows")
+    assert(got.forall(_._2 < 3), "every row must pass the filter")
+  }
+
   test("grouped tiny segments keep per-segment pruning and full results") {
     val df = spark.read.format("pinot").load(tinyDir)
     assert(df.rdd.getNumPartitions < 6, "tiny segments should share tasks")
