@@ -172,16 +172,13 @@ class PinotHistAggReaderFactory(groupCols: Array[String],
   }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    // A slice partition aggregates docs [lo, hi) only — its partials
+    // A slice range aggregates docs [lo, hi) only — its partials
     // merge with sibling slices' in Spark's final aggregate. Decoders
     // are slice-addressable (absolute doc positions), and concurrent
     // slices of one segment share sections through the JVM-wide cache.
-    // A segment-list partition emits each segment's partials in turn.
-    PinotScan.rowReader(partition match {
-      case PinotAggSlicePartition(p, s0, s1) => segmentRows(p, s0, s1)
-      case PinotAggPartition(ps) =>
-        ps.iterator.flatMap(segmentRows(_, 0, Int.MaxValue))
-    })
+    // A split of several ranges emits each range's partials in turn.
+    PinotScan.rowReader(partition.asInstanceOf[PinotSplit].ranges.iterator
+      .flatMap(r => segmentRows(r.path, r.start, r.end)))
   }
 
   /** One segment's partial (or, histFinal, final) rows over docs
@@ -210,31 +207,13 @@ class PinotHistAggReaderFactory(groupCols: Array[String],
         final case class GroupPart(card: Int,
             idWindow: (Int, Int) => Array[Int], keyOf: Int => Any)
 
-        // dictionary id → Catalyst group key (same translations as the
-        // DISTINCT pushdown path)
-        def dictKeyFn(c: String): Int => Any = {
-          val t = reader.metadata.column(c).dataType
-          (reader.dictionary(c), t) match {
-            case (PinotDictionary.Ints(v), PinotType.PBoolean) => id => v(id) != 0
-            case (PinotDictionary.Ints(v), _) => id => v(id)
-            case (PinotDictionary.Longs(v), PinotType.PTimestamp) =>
-              id => Math.multiplyExact(v(id), 1000L)
-            case (PinotDictionary.Longs(v), _) => id => v(id)
-            case (PinotDictionary.Floats(v), _) => id => v(id)
-            case (PinotDictionary.Doubles(v), _) => id => v(id)
-            case (PinotDictionary.Strings(v), _) =>
-              id => UTF8String.fromString(v(id))
-            case (other, tt) => throw new graft.pinot.PinotFormatException(
-              s"histogram agg: unsupported group dictionary $other for $c:${tt.name}")
-          }
-        }
-
         def groupPart(c: String): GroupPart = {
           val cm = reader.metadata.column(c)
           if (cm.hasDictionary) {
             val fbr = reader.dictIdReader(c)
-            GroupPart(reader.dictionary(c).size,
-              (p, n) => fbr.readRange(p, n), dictKeyFn(c))
+            val dict = reader.dictionary(c)
+            GroupPart(dict.size, (p, n) => fbr.readRange(p, n),
+              PinotScan.dictValueAt(dict, cm.dataType, c))
           } else {
             val chunk = reader.rawChunkReader(c)
             val ccGlobal = cm.cardinality

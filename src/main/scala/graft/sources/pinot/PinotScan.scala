@@ -10,6 +10,8 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.sql.execution.vectorized.{Dictionary, OnHeapColumnVector}
 import org.apache.spark.unsafe.types.UTF8String
 
+import scala.util.control.NonFatal
+
 /** Scan pipeline: the segment is the base unit of parallelism
   * (reference: exec.rs:41,52), refined by sub-segment task planning —
   * large segments split into window-aligned doc-range slices, tiny
@@ -965,7 +967,7 @@ class PinotScan(segmentPaths: Seq[String], projected: StructType,
 
   override def planInputPartitions(): Array[InputPartition] =
     if (fullLimit)
-      Array(PinotChainPartition(segmentPaths))
+      Array(PinotSplit.wholeSegments(segmentPaths))
     else partitionInfo match {
       case Some((_, keys)) =>
         // storage-partitioned join: the 1-segment == 1-key contract is
@@ -981,7 +983,7 @@ class PinotScan(segmentPaths: Seq[String], projected: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PinotReaderFactory(projected.fieldNames, skipFilters, limit,
-      PinotScan.expectedTypes(projected), scanTopN, offset, jsonEq)
+      PinotScan.expectedTypes(projected), scanTopN, offset, jsonEq, fullLimit)
 }
 
 /** Scan for a pushed-down global COUNT/MIN/MAX aggregation.
@@ -1074,7 +1076,7 @@ class PinotAggScan(segmentPaths: Seq[String], agg: Aggregation,
     * Spark needs no exchange before its final aggregate.
     */
   override def planInputPartitions(): Array[InputPartition] =
-    if (complete) Array(PinotAggPartition(Nil))
+    if (complete) Array(PinotSplit(Nil))
     else if (histogram && !histFinal && splitTargetBytes > 0)
       PinotScan.planAggSlices(segmentPaths)
     else if (histogram && histFinal && splitTargetBytes > 0 &&
@@ -1090,8 +1092,9 @@ class PinotAggScan(segmentPaths: Seq[String], agg: Aggregation,
           PinotScan.segmentDocs(p) > PinotScan.CompleteAggMaxDocs)))
       PinotScan.planAggSlices(segmentPaths)
     else if (splitTargetBytes > 0 && PinotScan.fitsOneTask(segmentPaths))
-      Array(PinotAggPartition(segmentPaths))
-    else segmentPaths.map(p => PinotAggPartition(Seq(p)): InputPartition).toArray
+      Array(PinotSplit.wholeSegments(segmentPaths))
+    else segmentPaths.map(p =>
+      PinotSplit.wholeSegments(Seq(p)): InputPartition).toArray
 
   /** The lone group column's values are pairwise-distinct in every
     * segment, so doc-range slices partition the GROUPS as well as the
@@ -1211,11 +1214,6 @@ class PinotAggScan(segmentPaths: Seq[String], agg: Aggregation,
   }
 }
 
-/** The segments one aggregate task answers, each emitting its own
-  * partial rows (empty for the driver-answered complete path).
-  */
-case class PinotAggPartition(segmentPaths: Seq[String]) extends InputPartition
-
 /** One pushed sort key over the aggregate scan's output layout:
   * `outIdx` indexes the (group columns ++ aggregates) row. Nullability
   * is impossible on the accepting path, so only direction is carried.
@@ -1231,12 +1229,6 @@ case class TopNKey(outIdx: Int, descending: Boolean)
 case class ScanTopN(column: String, descending: Boolean, limit: Int,
     sorted: Boolean)
 
-/** Doc range `[startDoc, endDoc)` of one segment for a sliced histogram
-  * partial task — window-aligned start, exclusive end.
-  */
-case class PinotAggSlicePartition(segmentPath: String, startDoc: Int,
-    endDoc: Int) extends InputPartition
-
 case class AggSpec(column: String, isCount: Boolean, isMin: Boolean,
     isSum: Boolean = false)
 
@@ -1249,8 +1241,7 @@ class PinotAggReaderFactory(specs: Array[AggSpec], complete: Boolean,
     PinotScan.rowReader(if (complete) {
       Iterator.single(new org.apache.spark.sql.catalyst.expressions
         .GenericInternalRow(completeVals.clone()))
-    } else partition.asInstanceOf[PinotAggPartition].segmentPaths.iterator
-      .flatMap(segmentRows))
+    } else PinotScan.wholeSegments(partition).flatMap(segmentRows))
 
   /** One segment's partial rows. */
   private def segmentRows(path: String)
@@ -1268,8 +1259,14 @@ class PinotAggReaderFactory(specs: Array[AggSpec], complete: Boolean,
       // values) — emit one row per entry, never touch the forward
       // index; Spark's final aggregate dedups across segments
       if (docs == 0) Iterator.empty
-      else dictDistinctValues(reader, groupCols(0)).iterator
-        .map(v => new GenericInternalRow(Array(v)): InternalRow)
+      else {
+        val col = groupCols(0)
+        val dict = reader.dictionary(col)
+        val valueAt = PinotScan.dictValueAt(dict,
+          reader.metadata.column(col).dataType, col)
+        Array.tabulate(dict.size)(id =>
+          new GenericInternalRow(Array(valueAt(id))): InternalRow).iterator
+      }
     } else if (docs == 0 && groupCols.nonEmpty) {
       Iterator.empty // no key → no group row
     } else {
@@ -1304,28 +1301,6 @@ class PinotAggReaderFactory(specs: Array[AggSpec], complete: Boolean,
       }
       Iterator.single(new GenericInternalRow(keys ++ values))
     } finally reader.close()
-  }
-
-  /** The dictionary entries as Catalyst values (builder guarantees: dict,
-    * single-value, no null vector, supported type). TIMESTAMP dictionaries
-    * store epoch millis → Catalyst micros; BOOLEAN stores int 0/1.
-    */
-  private def dictDistinctValues(reader: SegmentReader, col: String): Array[Any] = {
-    val cm = reader.metadata.column(col)
-    (reader.dictionary(col), cm.dataType) match {
-      case (PinotDictionary.Ints(v), PinotType.PBoolean) =>
-        v.map(i => (i != 0): Any)
-      case (PinotDictionary.Ints(v), _) => v.map(x => x: Any)
-      case (PinotDictionary.Longs(v), PinotType.PTimestamp) =>
-        v.map(ms => Math.multiplyExact(ms, 1000L): Any)
-      case (PinotDictionary.Longs(v), _) => v.map(x => x: Any)
-      case (PinotDictionary.Floats(v), _) => v.map(x => x: Any)
-      case (PinotDictionary.Doubles(v), _) => v.map(x => x: Any)
-      case (PinotDictionary.Strings(v), _) =>
-        v.map(s => UTF8String.fromString(s): Any)
-      case (other, _) => throw new graft.pinot.PinotFormatException(
-        s"DISTINCT pushdown on unsupported dictionary $other")
-    }
   }
 
   /** MIN/MAX over the segment's dictionary values (all dictionary entries
@@ -1391,9 +1366,7 @@ class PinotStarTreeReaderFactory(groupCols: Array[String],
 
   override def createReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
-    PinotScan.rowReader(
-      partition.asInstanceOf[PinotAggPartition].segmentPaths.iterator
-        .flatMap(segmentRows))
+    PinotScan.rowReader(PinotScan.wholeSegments(partition).flatMap(segmentRows))
 
   /** One segment's rolled-up partial rows. */
   private def segmentRows(path: String)
@@ -1446,21 +1419,8 @@ class PinotStarTreeReaderFactory(groupCols: Array[String],
         r += 1
       }
       // dict id → Catalyst value, per group column
-      val keyLookup: Array[Int => Any] = groupCols.map { c =>
-        val cm = reader.metadata.column(c)
-        (reader.dictionary(c), cm.dataType) match {
-          case (PinotDictionary.Ints(v), PinotType.PBoolean) =>
-            (id: Int) => (v(id) != 0): Any
-          case (PinotDictionary.Ints(v), _) => (id: Int) => v(id): Any
-          case (PinotDictionary.Longs(v), PinotType.PTimestamp) =>
-            (id: Int) => Math.multiplyExact(v(id), 1000L): Any
-          case (PinotDictionary.Longs(v), _) => (id: Int) => v(id): Any
-          case (PinotDictionary.Strings(v), _) =>
-            (id: Int) => UTF8String.fromString(v(id)): Any
-          case (other, _) => throw new graft.pinot.PinotFormatException(
-            s"star-tree dim $c: unsupported dictionary $other")
-        }
-      }
+      val keyLookup: Array[Int => Any] = groupCols.map(c =>
+        PinotScan.dictValueAt(reader.dictionary(c), colType(c), c))
       // metric bits → Catalyst value in the readSchema's field type
       val valLookup: Array[Long => Any] = specs.zip(metricIdx).map {
         case (s, mi) =>
@@ -1509,6 +1469,36 @@ object PinotScan {
       override def get(): org.apache.spark.sql.catalyst.InternalRow = cur
       override def close(): Unit = ()
     }
+
+  /** The segments of an aggregate task's split. Metadata, dictionary and
+    * star-tree answers cover whole segments only, so a partial range is
+    * a planning bug.
+    */
+  private[pinot] def wholeSegments(partition: InputPartition): Iterator[String] =
+    partition.asInstanceOf[PinotSplit].ranges.iterator.map { r =>
+      if (!r.isWhole) throw new IllegalStateException(
+        s"aggregate reader given a partial range $r")
+      r.path
+    }
+
+  /** Dictionary id → Catalyst value for a column of type `tpe`: BOOLEAN
+    * dictionaries store ints 0/1, TIMESTAMP ones epoch millis (Catalyst
+    * counts micros). Shared by the DISTINCT, star-tree and histogram
+    * key paths.
+    */
+  private[pinot] def dictValueAt(dict: PinotDictionary, tpe: PinotType,
+      col: String): Int => Any = (dict, tpe) match {
+    case (PinotDictionary.Ints(v), PinotType.PBoolean) => id => v(id) != 0
+    case (PinotDictionary.Ints(v), _) => id => v(id)
+    case (PinotDictionary.Longs(v), PinotType.PTimestamp) =>
+      id => Math.multiplyExact(v(id), 1000L)
+    case (PinotDictionary.Longs(v), _) => id => v(id)
+    case (PinotDictionary.Floats(v), _) => id => v(id)
+    case (PinotDictionary.Doubles(v), _) => id => v(id)
+    case (PinotDictionary.Strings(v), _) => id => UTF8String.fromString(v(id))
+    case (other, t) => throw new graft.pinot.PinotFormatException(
+      s"unsupported dictionary $other for $col:${t.name}")
+  }
 
   /** Compare a metadata bound (string form) against a filter value.
     * Some(sign) when comparable; None → cannot prune on this filter.
@@ -1922,34 +1912,41 @@ object PinotScan {
     * one task each.
     */
   def planAggSlices(segs: Seq[String]): Array[InputPartition] = {
-    val infos = segs.map(p => (p, segmentMeta(p)))
-    val totalRows = infos.map { case (_, m) =>
-      if (m == null) 0L else m.totalDocs.toLong }.sum
+    val infos = segs.map(p => (p, segmentDocs(p)))
+    val target = math.max(AggSliceRows.toLong, perTask(infos.map(_._2).sum))
+    infos.flatMap { case (p, docs) =>
+      windowSlices(p, docs, ceilDiv(docs, target))
+    }.map(r => PinotSplit(Seq(r)): InputPartition).toArray
+  }
+
+  /** Rows or bytes per task for ~3 task waves per core. The session's
+    * parallelism sizes it; planning without a live session (a unit
+    * test) assumes 8 cores.
+    */
+  private def perTask(total: Long): Long = {
     val parallelism =
       try org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
-      catch { case _: Throwable => 8 }
-    val target = math.max(AggSliceRows.toLong,
-      totalRows / math.max(1L, 3L * parallelism))
-    val out = Array.newBuilder[InputPartition]
-    infos.foreach { case (p, m) =>
-      val docs = if (m == null) 0 else m.totalDocs
-      val nSplits =
-        if (docs <= WindowRows) 1
-        else math.min((docs.toLong + target - 1) / target,
-          (docs.toLong + WindowRows - 1) / WindowRows).toInt
-      if (nSplits <= 1) out += PinotAggPartition(Seq(p))
-      else {
-        val rowsRaw = (docs.toLong + nSplits - 1) / nSplits
-        val rows = ((rowsRaw + WindowRows - 1) / WindowRows) * WindowRows
-        var s0 = 0L
-        while (s0 < docs) {
-          out += PinotAggSlicePartition(p, s0.toInt,
-            math.min(docs.toLong, s0 + rows).toInt)
-          s0 += rows
-        }
-      }
+      catch { case NonFatal(_) => 8 }
+    total / math.max(1L, 3L * parallelism)
+  }
+
+  private def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / b
+
+  /** One segment as at most `wanted` window-aligned doc-range slices,
+    * the last ending at `docs`; a segment of one window, or one slice,
+    * is a single whole range. Long arithmetic: docs near Int.MaxValue
+    * would wrap the rounding (and `s0 + rows`) in Int.
+    */
+  private def windowSlices(path: String, docs: Long,
+      wanted: Long): Seq[SegmentRange] = {
+    val nSplits =
+      if (docs <= WindowRows) 1L else math.min(wanted, ceilDiv(docs, WindowRows))
+    if (nSplits <= 1) Seq(SegmentRange.whole(path))
+    else {
+      val rows = ceilDiv(ceilDiv(docs, nSplits), WindowRows) * WindowRows
+      (0L until docs by rows).map(s0 =>
+        SegmentRange(path, s0.toInt, math.min(docs, s0 + rows).toInt))
     }
-    out.result()
   }
 
   private val sizeCache = new LruCache[String, java.lang.Long](65536)
@@ -1963,87 +1960,63 @@ object PinotScan {
       try {
         val io = graft.pinot.SegmentIO.forPath(p)
         io.listFiles(p).map(f =>
-          try io.size(f) catch { case _: Throwable => 0L }).sum
-      } catch { case _: Throwable => 0L }
+          try io.size(f) catch { case NonFatal(_) => 0L }).sum
+      } catch { case NonFatal(_) => 0L }
     })
 
   /** Sub-segment task planning (SURVEY §4's 100 TB mapping: "per-segment
-    * splits grouped into tasks"). Large segments split into doc-range
-    * slices on window boundaries so one huge segment saturates the
-    * cluster instead of running as ONE task; tiny segments group into
-    * shared tasks so a million-segment table doesn't pay a million task
-    * launches. The effective per-task size target adapts downward (to
-    * ≥1 MB) when the table is small relative to the cluster, so a
-    * single 16 MB segment still fans out across idle cores; it never
-    * exceeds `targetBytes`. All sizing inputs are driver-cached
-    * metadata — no column IO at planning time.
+    * splits grouped into tasks"). Each [[PinotSplit]] is one task's list
+    * of [[SegmentRange]]s. A large segment splits into window-aligned
+    * doc-range slices, one split each, so one huge segment saturates the
+    * cluster instead of running as ONE task; tiny segments share one
+    * split as whole ranges, so a million-segment table doesn't pay a
+    * million task launches. The effective per-task size target adapts
+    * downward (to ≥1 MB) when the table is small relative to the
+    * cluster, so a single 16 MB segment still fans out across idle
+    * cores; it never exceeds `targetBytes`. All sizing inputs are
+    * driver-cached metadata — no column IO at planning time.
+    * `targetBytes <= 0` plans one split per whole segment.
     *
     * One-task rule: a table whose total docs are within the row floor
-    * ([[OneTaskMaxRows]]) is ONE partition, whatever its on-disk bytes
-    * — a [[PinotInputPartition]] or a [[PinotGroupPartition]] over every
-    * segment. The byte count includes index files (inverted, bloom,
-    * range, text, star-tree) that the scan never reads, and below the
-    * floor one task beats the exchange and second stage Spark plans
-    * above several.
+    * ([[OneTaskMaxRows]]) is ONE split over every whole segment,
+    * whatever its on-disk bytes. The byte count includes index files
+    * (inverted, bloom, range, text, star-tree) that the scan never
+    * reads, and below the floor one task beats the exchange and second
+    * stage Spark plans above several.
     */
   def planSplits(segs: Seq[String], targetBytes: Long): Array[InputPartition] = {
     if (targetBytes <= 0 || segs.isEmpty)
-      return segs.map(p => PinotInputPartition(p): InputPartition).toArray
-    if (fitsOneTask(segs))
-      return Array(if (segs.length == 1) PinotInputPartition(segs.head)
-        else PinotGroupPartition(segs.toList))
-    val infos = segs.map(p => (p, segmentMeta(p), segmentBytes(p)))
-    val totalBytes = infos.map(_._3).sum
-    val totalRows = infos.map { case (_, m, _) =>
-      if (m == null) 0L else m.totalDocs.toLong }.sum
-    val parallelism =
-      try org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
-      catch { case _: Throwable => 8 }
+      return segs.map(p => PinotSplit.wholeSegments(Seq(p)): InputPartition).toArray
+    if (fitsOneTask(segs)) return Array(PinotSplit.wholeSegments(segs))
+    val infos = segs.map(p => (p, segmentDocs(p), segmentBytes(p)))
     // ~3 task waves per core when data allows; floor 1 MB keeps tiny
     // tables from shattering into window-sized tasks
     val effTarget = math.max(1L << 20,
-      math.min(targetBytes, totalBytes / math.max(1L, 3L * parallelism)))
+      math.min(targetBytes, perTask(infos.map(_._3).sum)))
     // decode cost scales with ROWS, not on-disk bytes (bit-packed dict
     // ids compress a 2M-row segment to ~2 MB) — a rows target keeps
     // CPU-bound scans parallel even when the bytes look tiny. The row
     // floor keeps each task's work well above launch overhead.
-    val effRowTarget = math.max(OneTaskMaxRows,
-      totalRows / math.max(1L, 3L * parallelism))
+    val effRowTarget = math.max(OneTaskMaxRows, perTask(infos.map(_._2).sum))
     val out = Array.newBuilder[InputPartition]
-    val group = scala.collection.mutable.ArrayBuffer.empty[String]
+    val group = scala.collection.mutable.ArrayBuffer.empty[SegmentRange]
     var groupBytes = 0L
     var groupRows = 0L
     def flush(): Unit = {
-      if (group.length == 1) out += PinotInputPartition(group.head)
-      else if (group.nonEmpty) out += PinotGroupPartition(group.toList)
+      if (group.nonEmpty) out += PinotSplit(group.toList)
       group.clear(); groupBytes = 0L; groupRows = 0L
     }
-    infos.foreach { case (p, m, bytes) =>
-      val docs = if (m == null) 0 else m.totalDocs
-      val nSplits =
-        if (m == null || docs <= WindowRows) 1
-        else math.min(
-          math.max((bytes + effTarget - 1) / effTarget,
-            (docs + effRowTarget - 1) / effRowTarget),
-          (docs.toLong + WindowRows - 1) / WindowRows).toInt
-      if (nSplits > 1) {
+    infos.foreach { case (p, docs, bytes) =>
+      val ranges = windowSlices(p, docs, math.max(ceilDiv(bytes, effTarget),
+        ceilDiv(docs, effRowTarget)))
+      if (ranges.length > 1) {
         flush()
-        // Long arithmetic throughout: docs near Int.MaxValue would wrap
-        // the +nSplits-1 rounding (and s0+rows) in Int, making `rows`
-        // non-positive and the loop spin or mis-slice.
-        val rowsRaw = (docs.toLong + nSplits - 1) / nSplits
-        val rows = ((rowsRaw + WindowRows - 1) / WindowRows) * WindowRows
-        var s0 = 0L
-        while (s0 < docs) {
-          out += PinotSlicePartition(p, s0.toInt,
-            math.min(docs.toLong, s0 + rows).toInt)
-          s0 += rows
-        }
+        ranges.foreach(r => out += PinotSplit(Seq(r)))
       } else {
         if (group.nonEmpty &&
             (groupBytes + bytes > effTarget ||
              groupRows + docs > effRowTarget)) flush()
-        group += p
+        group ++= ranges
         groupBytes += bytes
         groupRows += docs
       }
@@ -2071,28 +2044,31 @@ private[pinot] final class LruCache[K, V](max: Int) {
   def remove(k: K): Unit = synchronized { m.remove(k); () }
 }
 
-case class PinotInputPartition(segmentPath: String) extends InputPartition
-
-/** A doc-range SLICE of one segment (sub-segment parallelism): several
-  * tasks scan disjoint `[start, end)` windows of the same large segment
-  * concurrently. Boundaries are multiples of the 8,192-row batch window,
-  * and every decode path is position-addressable (fixed-bit ids, raw
-  * chunks, MV offsets), so a slice reads only its own windows.
+/** Docs `[start, end)` of one segment; `end = Int.MaxValue` reads to the
+  * segment's end. Slice boundaries are multiples of the 8,192-row batch
+  * window, and every decode path is position-addressable (fixed-bit ids,
+  * raw chunks, MV offsets), so a range reads only its own windows.
   */
-case class PinotSlicePartition(segmentPath: String, start: Int, end: Int)
-    extends InputPartition
+final case class SegmentRange(path: String, start: Int, end: Int) {
+  def isWhole: Boolean = start == 0 && end == Int.MaxValue
+}
 
-/** Several TINY segments share one task (small-segment grouping): the
-  * reader chains full per-segment readers, each still applying its own
-  * pruning/index logic. At 100 TB a table with millions of small
-  * segments must not pay one task launch per segment.
-  */
-case class PinotGroupPartition(segmentPaths: Seq[String]) extends InputPartition
+object SegmentRange {
+  def whole(path: String): SegmentRange = SegmentRange(path, 0, Int.MaxValue)
+}
 
-/** Fully-pushed limit: ONE partition chaining segments until the limit
-  * fills (Spark planned no Limit node above).
+/** What one task reads: its segment ranges, in order. Planning makes a
+  * slice of one large segment, whole tiny segments sharing a task, or
+  * every segment of a fully pushed limit or of a table within the
+  * one-task floor; aggregate tasks read whole segments, or histogram
+  * slices. The complete metadata aggregate reads none.
   */
-case class PinotChainPartition(segmentPaths: Seq[String]) extends InputPartition
+case class PinotSplit(ranges: Seq[SegmentRange]) extends InputPartition
+
+object PinotSplit {
+  def wholeSegments(paths: Seq[String]): PinotSplit =
+    PinotSplit(paths.map(SegmentRange.whole).toList)
+}
 
 /** One segment holding exactly one partition-key value — feeds Spark's
   * storage-partitioned join (HasPartitionKey).
@@ -2103,11 +2079,16 @@ case class PinotKeyedPartition(segmentPath: String,
   override def partitionKey(): org.apache.spark.sql.catalyst.InternalRow = key
 }
 
+/** Reads a split through one [[PinotChainReader]] over its ranges. With a
+  * fully pushed limit (`fullLimit`) the split's rows `[offset, limit)`
+  * come back in range order under one global budget; otherwise each
+  * range's reader applies the advisory per-range `limit`, or its top-N.
+  */
 class PinotReaderFactory(columns: Array[String], skipFilters: Array[Filter],
     limit: Option[Int],
     expectedTypes: Map[String, (PinotType, Boolean)] = Map.empty,
     scanTopN: Option[ScanTopN] = None, offset: Option[Int] = None,
-    jsonEq: Seq[PinotScan.JsonProbe] = Nil)
+    jsonEq: Seq[PinotScan.JsonProbe] = Nil, fullLimit: Boolean = false)
     extends PartitionReaderFactory {
 
   override def supportColumnarReads(partition: InputPartition): Boolean = true
@@ -2115,77 +2096,62 @@ class PinotReaderFactory(columns: Array[String], skipFilters: Array[Filter],
   override def createReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
     throw new UnsupportedOperationException("columnar-only reader")
 
-  /** A sorted-column top-N restricts a partition's doc range to its
-    * first (ASC) or last (DESC) k docs — the rest can never reach the
-    * top-k, so they are never decoded. Returns the slice `[lo, hi)`.
-    */
-  private def topSlice(totalLo: Int, totalHi: Int): (Int, Int) = {
-    val t = scanTopN.get
-    if (t.descending) (math.max(totalLo, totalHi - t.limit), totalHi)
-    else (totalLo, math.min(totalHi, totalLo + t.limit))
-  }
-
-  /** The per-partition top-N reader for a doc range of one segment:
-    * sorted mode = a slice; value mode = heap-select then decode-k.
-    */
-  private def topNReader(path: String, lo: Int, hi: Int)
-      : PartitionReader[ColumnarBatch] = {
-    val t = scanTopN.get
-    if (t.sorted) {
-      val (s, e) = topSlice(lo, hi)
-      new PinotColumnarReader(path, columns, skipFilters, limit,
-        expectedTypes, slice = Some((s, e)), jsonEq = jsonEq)
-    } else
-      new PinotValueTopNReader(path, columns, t, expectedTypes, lo, hi)
-  }
-
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
-    val path = partition match {
-      case PinotInputPartition(p) => p
-      case PinotKeyedPartition(p, _) => p
-      case PinotSlicePartition(p, s, e) =>
-        return if (scanTopN.isDefined) topNReader(p, s, e)
-        else new PinotColumnarReader(p, columns, skipFilters, limit,
-          expectedTypes, slice = Some((s, e)), jsonEq = jsonEq)
-      case PinotGroupPartition(paths) =>
-        return new PinotSegmentChainReader(paths, columns, skipFilters,
-          limit, expectedTypes, scanTopN, jsonEq)
-      case PinotChainPartition(paths) =>
-        // pushed rows are [offset, pushedLimit): the emission budget is
-        // their difference (Spark pushed limit = user limit + offset)
-        val skip = offset.getOrElse(0)
-        val budget = limit.fold(Int.MaxValue)(l => math.max(0, l - skip))
-        return new PinotChainedLimitReader(paths, columns, budget,
-          expectedTypes, skip)
+    val ranges = partition match {
+      case PinotSplit(rs) => rs
+      case PinotKeyedPartition(p, _) => Seq(SegmentRange.whole(p))
       case other => throw new IllegalArgumentException(s"unexpected $other")
     }
-    scanTopN match {
-      case Some(_) =>
-        topNReader(path, 0, PinotScan.segmentDocsStrict(path).toInt)
-      case None =>
-        new PinotColumnarReader(path, columns, skipFilters, limit,
-          expectedTypes, jsonEq = jsonEq)
-    }
+    if (fullLimit) {
+      // pushed rows are [offset, pushedLimit): the emission budget is
+      // their difference (Spark pushed limit = user limit + offset)
+      val skip = offset.getOrElse(0)
+      new PinotChainReader(ranges, plainReader,
+        Some(limit.fold(Int.MaxValue)(l => math.max(0, l - skip))), skip)
+    } else new PinotChainReader(ranges, (r, _) => rangeReader(r))
   }
+
+  private def plainReader(r: SegmentRange, cap: Option[Int])
+      : PartitionReader[ColumnarBatch] =
+    new PinotColumnarReader(r.path, columns, skipFilters, cap, expectedTypes,
+      slice = Some((r.start, r.end)), jsonEq = jsonEq)
+
+  /** One range's reader. Plain-scan top-N: EACH range contributes its
+    * own top-k (sorted mode means sorted within each segment) and
+    * Spark's TakeOrderedAndProject merges the survivors. Sorted mode
+    * reads the range's first (ASC) or last (DESC) k docs; value mode
+    * selects the k best docs and reads just those.
+    */
+  private def rangeReader(r: SegmentRange): PartitionReader[ColumnarBatch] =
+    scanTopN match {
+      case None => plainReader(r, limit)
+      case Some(t) =>
+        val end =
+          if (r.end == Int.MaxValue) PinotScan.segmentDocsStrict(r.path).toInt
+          else r.end
+        if (!t.sorted)
+          new PinotChainReader(
+            PinotValueTopN.winners(r.path, t, expectedTypes, r.start, end),
+            (w, _) => plainReader(w, None))
+        else if (t.descending)
+          plainReader(SegmentRange(r.path, math.max(r.start, end - t.limit), end), limit)
+        else
+          plainReader(SegmentRange(r.path, r.start, math.min(end, r.start + t.limit)), limit)
+    }
 }
 
 /** Value-mode top-N over one segment's doc range `[lo, hi)`: pass 1
   * decodes ONLY the sort column (windowed, through the standard
-  * columnar reader) and bounded-heap-selects the k best doc ids; pass 2
-  * decodes the projected columns for just those docs, as slice readers
-  * over each contiguous winner run. At 100 TB the non-sort columns of a
-  * wide projection decode for k docs per task, not the whole segment.
-  * Partial-push contract: any k docs carrying the best k sort values
-  * are a correct partition answer (single key ⇒ the value multiset is
-  * exact; Spark's TakeOrderedAndProject settles ties exactly as it
-  * would unpushed).
+  * columnar reader) and bounded-heap-selects the k best doc ids; the
+  * winners come back as doc ranges over each contiguous run, so the
+  * projected columns decode for just those docs. At 100 TB the non-sort
+  * columns of a wide projection decode for k docs per task, not the
+  * whole segment. Partial-push contract: any k docs carrying the best k
+  * sort values are a correct partition answer (single key ⇒ the value
+  * multiset is exact; Spark's TakeOrderedAndProject settles ties
+  * exactly as it would unpushed).
   */
-class PinotValueTopNReader(path: String, columns: Array[String],
-    topN: ScanTopN, expectedTypes: Map[String, (PinotType, Boolean)],
-    lo: Int, hi: Int)
-    extends PartitionReader[ColumnarBatch] {
-
-  import org.apache.spark.unsafe.types.UTF8String
+object PinotValueTopN {
 
   /** Per-type top-k selector over the probe batches. The hot loop is a
     * PRIMITIVE threshold check per row (the heap's current worst, cached
@@ -2285,11 +2251,12 @@ class PinotValueTopNReader(path: String, columns: Array[String],
   }
 
   /** The pass-1 hot loop lives in its own SMALL method: inside the big
-    * `runReaders` initializer the JVM refuses to JIT it
-    * (DontCompileHugeMethods) and the interpreted loop ran ~40× slower
-    * than the same code compiled.
+    * `winners` body the JVM refuses to JIT it (DontCompileHugeMethods)
+    * and the interpreted loop ran ~40× slower than the same code
+    * compiled.
     */
-  private def drainProbe(probe: PinotColumnarReader, sel: Selector): Unit = {
+  private def drainProbe(probe: PinotColumnarReader, sel: Selector,
+      lo: Int): Unit = {
     var absBase = lo
     while (probe.next()) {
       val batch = probe.get()
@@ -2301,7 +2268,10 @@ class PinotValueTopNReader(path: String, columns: Array[String],
     }
   }
 
-  private lazy val runReaders: Iterator[PinotColumnarReader] = {
+  /** The k best docs of `[lo, hi)` as contiguous doc ranges, ascending. */
+  def winners(path: String, topN: ScanTopN,
+      expectedTypes: Map[String, (PinotType, Boolean)],
+      lo: Int, hi: Int): Seq[SegmentRange] = {
     val tpe = expectedTypes.get(topN.column).map(_._1).getOrElse(
       PinotScan.segmentMeta(path).columns(topN.column).dataType)
     // pass 1: sort column only
@@ -2345,133 +2315,63 @@ class PinotValueTopNReader(path: String, columns: Array[String],
       case other => throw new graft.pinot.PinotFormatException(
         s"value top-N on unsupported type $other")
     }
-    try drainProbe(probe, sel)
+    try drainProbe(probe, sel, lo)
     finally probe.close()
-    // pass 2: contiguous winner runs, ascending doc order
-    val docs = sel.docs.sorted
-    val runs = collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    docs.foreach { d =>
-      if (runs.nonEmpty && runs.last._2 == d) {
-        val (s, _) = runs.remove(runs.length - 1)
-        runs += ((s, d + 1))
-      } else runs += ((d, d + 1))
+    val runs = collection.mutable.ArrayBuffer.empty[SegmentRange]
+    sel.docs.sorted.foreach { d =>
+      if (runs.nonEmpty && runs.last.end == d)
+        runs(runs.length - 1) = runs.last.copy(end = d + 1)
+      else runs += SegmentRange(path, d, d + 1)
     }
-    runs.iterator.map { case (s, e) =>
-      new PinotColumnarReader(path, columns, Array.empty, None,
-        expectedTypes, slice = Some((s, e)))
-    }
+    runs.toSeq
   }
-
-  private var cur: PinotColumnarReader = null
-  private var batch: ColumnarBatch = null
-
-  @scala.annotation.tailrec
-  final override def next(): Boolean =
-    if (cur == null) {
-      if (!runReaders.hasNext) false
-      else { cur = runReaders.next(); next() }
-    } else if (cur.next()) { batch = cur.get(); true }
-    else { cur.close(); cur = null; next() }
-
-  override def get(): ColumnarBatch = batch
-
-  override def close(): Unit = if (cur != null) { cur.close(); cur = null }
 }
 
-/** Chains full per-segment readers for a [[PinotGroupPartition]]. Each
-  * sub-reader runs its own segment pruning / sorted-ranging / index
-  * logic and applies the same per-partition advisory limit it would
-  * have applied as its own partition.
+/** Drains one reader per [[SegmentRange]], in order: the reader of every
+  * split, and of a value top-N's winner runs. With a `budget` (a fully
+  * pushed limit) it emits at most that many rows, capping each range's
+  * reader at what remains, after skipping the first `skip` rows (the
+  * pushed offset): whole ranges skip on metadata doc counts without
+  * opening the segment, and the boundary range starts mid-range. Without
+  * one, each range's reader caps itself.
   */
-class PinotSegmentChainReader(paths: Seq[String], columns: Array[String],
-    skipFilters: Array[Filter], limit: Option[Int],
-    expectedTypes: Map[String, (PinotType, Boolean)],
-    scanTopN: Option[ScanTopN] = None,
-    jsonEq: Seq[PinotScan.JsonProbe] = Nil)
+final class PinotChainReader(ranges: Seq[SegmentRange],
+    open: (SegmentRange, Option[Int]) => PartitionReader[ColumnarBatch],
+    budget: Option[Int] = None, skip: Int = 0)
     extends PartitionReader[ColumnarBatch] {
 
-  private var idx = 0
+  private val todo = ranges.iterator
+  private var remaining = budget.getOrElse(Int.MaxValue)
+  private var toSkip = skip.toLong
   private var cur: PartitionReader[ColumnarBatch] = null
   private var batch: ColumnarBatch = null
 
-  // plain-scan top-N: EACH segment contributes its own top-k (segments
-  // are independent; sorted mode means sorted WITHIN each segment);
-  // Spark's TakeOrderedAndProject merges the k×segments survivors
-  private def readerOf(path: String): PartitionReader[ColumnarBatch] =
-    scanTopN match {
-      case Some(t) if t.sorted =>
-        val docs = PinotScan.segmentDocsStrict(path).toInt
-        val sl = if (t.descending) (math.max(0, docs - t.limit), docs)
-        else (0, math.min(docs, t.limit))
-        new PinotColumnarReader(path, columns, skipFilters, limit,
-          expectedTypes, slice = Some(sl))
-      case Some(t) =>
-        new PinotValueTopNReader(path, columns, t, expectedTypes,
-          0, PinotScan.segmentDocsStrict(path).toInt)
-      case None =>
-        new PinotColumnarReader(path, columns, skipFilters, limit,
-          expectedTypes, jsonEq = jsonEq)
+  /** What is left of `r` after the pending offset skip, if anything. */
+  private def afterSkip(r: SegmentRange): Option[SegmentRange] =
+    if (budget.isEmpty) Some(r)
+    else {
+      val docs = math.max(0L,
+        math.min(r.end.toLong, PinotScan.segmentDocsStrict(r.path)) - r.start)
+      if (toSkip >= docs) { toSkip -= docs; None }
+      else {
+        val start = r.start + toSkip.toInt
+        toSkip = 0
+        Some(r.copy(start = start))
+      }
     }
 
   @scala.annotation.tailrec
-  final override def next(): Boolean =
-    if (cur == null) {
-      if (idx >= paths.length) false
-      else {
-        cur = readerOf(paths(idx))
-        idx += 1
-        next()
-      }
-    } else if (cur.next()) { batch = cur.get(); true }
-    else { cur.close(); cur = null; next() }
-
-  override def get(): ColumnarBatch = batch
-
-  override def close(): Unit = if (cur != null) { cur.close(); cur = null }
-}
-
-/** Chains per-segment readers until `limit` rows have been emitted —
-  * the execution side of the fully-pushed limit. Each segment reader is
-  * capped at the REMAINING budget, so the global total is exact and a
-  * small limit touches one window of one segment.
-  */
-class PinotChainedLimitReader(paths: Seq[String], columns: Array[String],
-    limit: Int, expectedTypes: Map[String, (PinotType, Boolean)],
-    skip: Int = 0)
-    extends PartitionReader[ColumnarBatch] {
-
-  private var idx = 0
-  private var remaining = limit
-  // pushed OFFSET: doc budget still to skip before the first emitted
-  // row; whole segments skip on metadata doc counts alone (no open),
-  // the boundary segment starts mid-segment via a doc-range slice
-  private var toSkip = skip
-  private var cur: PinotColumnarReader = null
-  private var batch: ColumnarBatch = null
-
-  @scala.annotation.tailrec
-  final override def next(): Boolean =
+  override def next(): Boolean =
     if (remaining <= 0) false
     else if (cur == null) {
-      if (idx >= paths.length) false
+      if (!todo.hasNext) false
       else {
-        val docs = PinotScan.segmentDocsStrict(paths(idx)).toInt
-        if (toSkip >= docs) {
-          toSkip -= docs
-          idx += 1
-          next()
-        } else {
-          val slice = if (toSkip > 0) Some((toSkip, docs)) else None
-          toSkip = 0
-          cur = new PinotColumnarReader(paths(idx), columns, Array.empty,
-            Some(remaining), expectedTypes, slice = slice)
-          idx += 1
-          next()
-        }
+        afterSkip(todo.next()).foreach(r => cur = open(r, budget.map(_ => remaining)))
+        next()
       }
     } else if (cur.next()) {
       batch = cur.get()
-      remaining -= batch.numRows()
+      if (budget.isDefined) remaining -= batch.numRows()
       true
     } else {
       cur.close()

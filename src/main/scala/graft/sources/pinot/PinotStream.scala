@@ -99,7 +99,7 @@ class PinotMicroBatchStream(tableDir: String, columns: Array[String],
     end.asInstanceOf[PinotStreamOffset].segments
       .filterNot(seen)
       .sorted
-      .map(p => PinotInputPartition(p): InputPartition)
+      .map(p => PinotSplit.wholeSegments(Seq(p)): InputPartition)
       .toArray
   }
 

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkTestBase
 import graft.pinot.SegmentWriter
-import graft.sources.pinot.{PinotGroupPartition, PinotScan}
+import graft.sources.pinot.{PinotScan, PinotSplit}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.SparkPlan
@@ -124,7 +124,7 @@ class SinglePartitionScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper
     // byte sizing alone (index files included) would have split it
     assert(segs.map(PinotScan.segmentBytes).sum > (1L << 20))
     assert(PinotScan.planSplits(segs, PinotScan.DefaultSplitTargetBytes)
-      .toSeq === Seq(PinotGroupPartition(segs)))
+      .toSeq === Seq(PinotSplit.wholeSegments(segs)))
   }
 
   private val shapes: Seq[(String, DataFrame => DataFrame)] = Seq(
@@ -313,8 +313,7 @@ class SinglePartitionScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper
       assert(got === want, name)
       assert(got.nonEmpty, name)
       val parts = pinotScans(df).flatMap(_.inputPartitions)
-      assert(parts.length === 1 && parts.head.isInstanceOf[PinotGroupPartition],
-        s"$name: $parts")
+      assert(parts === Seq(PinotSplit.wholeSegments(segs)), s"$name: $parts")
       assert(exchanges(df) === 0, s"$name:\n${df.queryExecution.executedPlan}")
     }
   }

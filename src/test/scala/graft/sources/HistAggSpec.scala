@@ -308,6 +308,15 @@ class HistAggSpec extends SparkTestBase {
     (0 until m).groupBy(ts).foreach { case (t, is) =>
       assert(gotT(t) === is.length.toLong, s"ts=$t")
     }
+    // the dictionary-DISTINCT path translates the same key types
+    val dFlag = df.select("flag").distinct()
+    assert(leafOf(dFlag).contains("PinotAggScan") &&
+      leafOf(dFlag).contains("histogram=false"), leafOf(dFlag))
+    assert(dFlag.collect().map(_.getBoolean(0)).toSet === flag.toSet)
+    val dTs = df.select("ts").distinct()
+    assert(leafOf(dTs).contains("PinotAggScan") &&
+      leafOf(dTs).contains("histogram=false"), leafOf(dTs))
+    assert(dTs.collect().map(_.getTimestamp(0).getTime).toSet === ts.toSet)
   }
 
   test("limit above a pushed COMPLETE aggregate is preserved") {
@@ -401,13 +410,14 @@ class HistAggSpec extends SparkTestBase {
     val parts = graft.sources.pinot.PinotScan.planAggSlices(
       Seq(t.resolve("seg0").toString))
     val slices = parts.collect {
-      case s: graft.sources.pinot.PinotAggSlicePartition => s }
+      case graft.sources.pinot.PinotSplit(Seq(r)) if !r.isWhole => r }
     assert(slices.length === parts.length && slices.length > 1, parts.toSeq.toString)
-    assert(slices.head.startDoc === 0 && slices.last.endDoc === m)
+    assert(slices.forall(_.path == t.resolve("seg0").toString))
+    assert(slices.head.start === 0 && slices.last.end === m)
     slices.sliding(2).foreach {
       case Array(a, b) =>
-        assert(a.endDoc === b.startDoc, "slices must tile contiguously")
-        assert(b.startDoc % 8192 === 0, "window-aligned")
+        assert(a.end === b.start, "slices must tile contiguously")
+        assert(b.start % 8192 === 0, "window-aligned")
       case _ => ()
     }
   }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.pinot.{SegmentWriter, VarByteChunkV4}
-import graft.sources.pinot.{PinotGroupPartition, PinotInputPartition, PinotScan, PinotSlicePartition}
+import graft.sources.pinot.{AggSpec, PinotAggReaderFactory, PinotReaderFactory, PinotScan, PinotSplit, PinotStarTreeReaderFactory, ScanTopN, SegmentRange, StarAggSpec}
 import org.apache.spark.sql.functions._
 
 /** Sub-segment task planning: large segments split into window-aligned
@@ -52,8 +52,9 @@ class SubSegmentSplitSpec extends SparkTestBase {
   test("planSplits slices large segments on window boundaries") {
     val parts = PinotScan.planSplits(Seq(s"$bigDir/seg0"), 1L << 20)
     assert(parts.length > 1, s"expected slices, got ${parts.toSeq}")
-    val slices = parts.collect { case s: PinotSlicePartition => s }
+    val slices = parts.collect { case PinotSplit(Seq(r)) if !r.isWhole => r }
     assert(slices.length === parts.length, "all partitions should be slices")
+    assert(slices.forall(_.path == s"$bigDir/seg0"))
     // contiguous cover of [0, n) with window-aligned starts
     assert(slices.head.start === 0)
     assert(slices.last.end === n)
@@ -70,14 +71,13 @@ class SubSegmentSplitSpec extends SparkTestBase {
     val parts = PinotScan.planSplits(segs, PinotScan.DefaultSplitTargetBytes)
     assert(parts.length < 6, s"tiny segments should group: ${parts.length}")
     val covered = parts.flatMap {
-      case PinotGroupPartition(ps) => ps
-      case PinotInputPartition(p) => Seq(p)
+      case PinotSplit(rs) if rs.forall(_.isWhole) => rs.map(_.path)
       case other => fail(s"unexpected $other")
     }
     assert(covered.toSet === segs.toSet, "grouping must cover every segment")
     val strict = PinotScan.planSplits(segs, 0)
     assert(strict.length === 6)
-    assert(strict.forall(_.isInstanceOf[PinotInputPartition]))
+    assert(strict.toSeq === segs.map(p => PinotSplit(Seq(SegmentRange.whole(p)))))
   }
 
   test("sliced scan preserves full fidelity across every decode family") {
@@ -172,6 +172,52 @@ class SubSegmentSplitSpec extends SparkTestBase {
     assert(got.map(_._1).distinct.length === 40, "no row repeated")
     assert(got === rowsAt(got.map(_._1.toInt)), "rows must be fixture rows")
     assert(got.forall(_._2 < 3), "every row must pass the filter")
+  }
+
+  /** Every `k` value a reader emits, in order. */
+  private def drainK(f: PinotReaderFactory, split: PinotSplit): Seq[Long] = {
+    val r = f.createColumnarReader(split)
+    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
+    try while (r.next()) {
+      val b = r.get()
+      (0 until b.numRows()).foreach(i => out += b.column(0).getLong(i))
+    } finally r.close()
+    out.toSeq
+  }
+
+  test("the chain reader caps each range, or the whole split under a pushed limit") {
+    val seg = s"$bigDir/seg0"
+    val split = PinotSplit(Seq(SegmentRange(seg, 0, 8192),
+      SegmentRange(seg, 16384, 24576), SegmentRange(seg, 196608, Int.MaxValue)))
+    // advisory: each range's reader stops after 5 rows
+    assert(drainK(new PinotReaderFactory(Array("k"), Array.empty, Some(5)), split)
+      === (0L until 5L) ++ (16384L until 16389L) ++ (196608L until 196613L))
+    // fully pushed: rows [8190, 8196) of the split, the offset skip
+    // crossing from the first range into the second
+    val pushed = new PinotReaderFactory(Array("k"), Array.empty, Some(8196),
+      offset = Some(8190), fullLimit = true)
+    assert(drainK(pushed, split) === Seq(8190L, 8191L, 16384L, 16385L, 16386L, 16387L))
+    // an offset that skips two whole ranges lands in the open-ended one
+    val tail = new PinotReaderFactory(Array("k"), Array.empty, Some(16387),
+      offset = Some(16384), fullLimit = true)
+    assert(drainK(tail, split) === Seq(196608L, 196609L, 196610L))
+    // a pushed top-N reads each range's own top-k
+    val top = new PinotReaderFactory(Array("k"), Array.empty, None,
+      scanTopN = Some(ScanTopN("k", descending = true, 2, sorted = true)))
+    assert(drainK(top, split) === Seq(8190L, 8191L, 24574L, 24575L, 199998L, 199999L))
+  }
+
+  test("aggregate readers refuse a partial range") {
+    val seg = s"$bigDir/seg0"
+    val partial = PinotSplit(Seq(SegmentRange(seg, 0, 8192)))
+    val count = new PinotAggReaderFactory(
+      Array(AggSpec("", isCount = true, isMin = false)), complete = false,
+      Array.empty)
+    assert(count.createReader(PinotSplit.wholeSegments(Seq(seg))).next())
+    intercept[IllegalStateException](count.createReader(partial).next())
+    val star = new PinotStarTreeReaderFactory(Array.empty,
+      Array(StarAggSpec("COUNT", "")))
+    intercept[IllegalStateException](star.createReader(partial).next())
   }
 
   test("grouped tiny segments keep per-segment pruning and full results") {
