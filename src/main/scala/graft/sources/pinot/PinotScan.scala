@@ -1241,7 +1241,7 @@ class PinotAggReaderFactory(specs: Array[AggSpec], complete: Boolean,
     PinotScan.rowReader(if (complete) {
       Iterator.single(new org.apache.spark.sql.catalyst.expressions
         .GenericInternalRow(completeVals.clone()))
-    } else PinotScan.wholeSegments(partition).flatMap(segmentRows))
+    } else PinotScan.wholeSegmentPaths(partition).flatMap(segmentRows))
 
   /** One segment's partial rows. */
   private def segmentRows(path: String)
@@ -1366,7 +1366,8 @@ class PinotStarTreeReaderFactory(groupCols: Array[String],
 
   override def createReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
-    PinotScan.rowReader(PinotScan.wholeSegments(partition).flatMap(segmentRows))
+    PinotScan.rowReader(
+      PinotScan.wholeSegmentPaths(partition).flatMap(segmentRows))
 
   /** One segment's rolled-up partial rows. */
   private def segmentRows(path: String)
@@ -1474,7 +1475,7 @@ object PinotScan {
     * star-tree answers cover whole segments only, so a partial range is
     * a planning bug.
     */
-  private[pinot] def wholeSegments(partition: InputPartition): Iterator[String] =
+  private[pinot] def wholeSegmentPaths(partition: InputPartition): Iterator[String] =
     partition.asInstanceOf[PinotSplit].ranges.iterator.map { r =>
       if (!r.isWhole) throw new IllegalStateException(
         s"aggregate reader given a partial range $r")
