@@ -24,31 +24,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * At 100 TB: per-task memory is O(cardinality × aggregates), bounded by
   * the builder's cardinality cap, independent of segment row count.
   */
-sealed trait HistAggSpec
-object HistAggSpec {
-  /** COUNT(*) or COUNT(non-nullable col) — the histogram itself. */
-  case object HCount extends HistAggSpec
-  final case class HSum(column: String) extends HistAggSpec
-  final case class HMin(column: String) extends HistAggSpec
-  final case class HMax(column: String) extends HistAggSpec
-  /** Only under COMPLETE (single-segment) pushdown — partial pushdown
-    * sees AVG rewritten to SUM+COUNT by Spark.
-    */
-  final case class HAvg(column: String) extends HistAggSpec
-}
-
 /** `groupCols` empty is the GLOBAL-aggregate case: one synthetic group
   * (card 1, all-zero ids), one partial row per segment — the path that
   * pushes global SUM/AVG, which metadata alone can never answer.
   * Multiple dict columns compose into one id by stride arithmetic.
+  * COUNT of a (builder-validated non-nullable) column is the histogram
+  * itself.
   */
 class PinotHistAggReaderFactory(groupCols: Array[String],
-    specs: Array[HistAggSpec],
+    funcs: Array[PushedFunc],
     topN: Option[(Array[TopNKey], Int)] = None,
     ansi: Boolean = true)
     extends PartitionReaderFactory {
 
-  import HistAggSpec._
+  import PushedFunc._
 
   private val Window = 8192
 
@@ -328,13 +317,8 @@ class PinotHistAggReaderFactory(groupCols: Array[String],
               if (n == Window) zeroWindow else new Array[Int](n))
           } else {
             val cards = parts.map(_.card)
-            // saturating fold — a corrupt cardinality must not wrap Long
-            // into accidental acceptance (cap 2^20 × card < 2^31 cannot
-            // overflow before saturating)
-            val cap = 1L << 20
-            val prod = cards.foldLeft(1L)((acc, c) =>
-              if (acc > cap) acc else acc * math.max(1, c))
-            if (prod > cap) throw new graft.pinot.PinotFormatException(
+            val prod = PinotHistAgg.groupSlots(cards.map(_.toLong))
+            if (prod > PinotHistAgg.GroupCap) throw new graft.pinot.PinotFormatException(
               s"histogram agg: group cardinality product over cap")
             if (parts.length == 1) {
               (cards(0), parts(0).idWindow)
@@ -356,19 +340,19 @@ class PinotHistAggReaderFactory(groupCols: Array[String],
         val counts = new Array[Long](card)
 
         val metricType: Map[String, org.apache.spark.sql.types.DataType] =
-          specs.collect {
-            case HMin(c) => c -> reader.metadata.column(c).dataType.sparkType
-            case HMax(c) => c -> reader.metadata.column(c).dataType.sparkType
+          funcs.collect {
+            case Min(c) => c -> reader.metadata.column(c).dataType.sparkType
+            case Max(c) => c -> reader.metadata.column(c).dataType.sparkType
           }.toMap
 
-        val accs: Array[Acc] = specs.map {
-          case HCount => new Acc {
+        val accs: Array[Acc] = funcs.map {
+          case Count(_) => new Acc {
             def add(g: Array[Int], p: Int, n: Int): Unit = ()
             def result(g: Int): Any = counts(g) // filled by the shared loop
             override def primKind: Int = 0
             override def resultLong(g: Int): Long = counts(g)
           }
-          case HAvg(c) => numWindow(reader, c) match {
+          case Avg(c) => numWindow(reader, c) match {
             case lw: LongWindow => new Acc {
               private val s = new Array[Long](card)
               def add(g: Array[Int], p: Int, n: Int): Unit = {
@@ -391,7 +375,7 @@ class PinotHistAggReaderFactory(groupCols: Array[String],
               override def resultDouble(g: Int): Double = s(g) / counts(g)
             }
           }
-          case HSum(c) => numWindow(reader, c) match {
+          case Sum(c) => numWindow(reader, c) match {
             case lw: LongWindow => new Acc {
               private val s = new Array[Long](card)
               def add(g: Array[Int], p: Int, n: Int): Unit = {
@@ -418,7 +402,7 @@ class PinotHistAggReaderFactory(groupCols: Array[String],
               override def resultDouble(g: Int): Double = s(g)
             }
           }
-          case HMin(c) => numWindow(reader, c) match {
+          case Min(c) => numWindow(reader, c) match {
             case lw: LongWindow => new Acc {
               private val s = Array.fill(card)(Long.MaxValue)
               def add(g: Array[Int], p: Int, n: Int): Unit = {
@@ -442,7 +426,7 @@ class PinotHistAggReaderFactory(groupCols: Array[String],
               override def resultDouble(g: Int): Double = s(g)
             }
           }
-          case HMax(c) => numWindow(reader, c) match {
+          case Max(c) => numWindow(reader, c) match {
             case lw: LongWindow => new Acc {
               private val s = Array.fill(card)(Long.MinValue)
               def add(g: Array[Int], p: Int, n: Int): Unit = {
@@ -575,6 +559,19 @@ class PinotHistAggReaderFactory(groupCols: Array[String],
 }
 
 object PinotHistAgg {
+
+  /** Most group slots one histogram task allocates per accumulator:
+    * 1M entries ≈ 8 MB. The builder refuses group columns whose
+    * cardinality product exceeds it in any segment.
+    */
+  val GroupCap: Long = 1L << 20
+
+  /** Π `cards` (each at least 1), saturating once past [[GroupCap]] — a
+    * corrupt cardinality must not wrap Long into accidental acceptance
+    * (2^20 × a card < 2^31 cannot overflow before saturating).
+    */
+  def groupSlots(cards: Iterable[Long]): Long =
+    cards.foldLeft(1L)((acc, c) => if (acc > GroupCap) acc else acc * math.max(1L, c))
 
   /** Bounded top-`limit` selection over a PRIMITIVE long key array —
     * the boxed-comparator selection costs two boxed values + a virtual

@@ -1,8 +1,8 @@
 package graft.sources.pinot
 
 import graft.pinot.{PinotDictionary, PinotType, SegmentReader}
-import org.apache.spark.sql.connector.expressions.NamedReference
-import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Avg, Count, CountStar, Max, Min, Sum}
+import org.apache.spark.sql.connector.expressions.{NamedReference, aggregate}
+import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, StringContains, StringEndsWith, StringStartsWith}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -41,36 +41,37 @@ class PinotScanBuilder(segmentPaths: Seq[String], fullSchema: StructType,
     with SupportsPushDownTopN with SupportsPushDownOffset
     with SupportsPushDownAggregates {
 
+  import PushedFunc._
+
   private var projected: StructType = fullSchema
   private var skipFilters: Array[Filter] = Array.empty
   private var sawFilters = false
-  private var limit: Option[Int] = None
-  private var pushedAgg: Option[Aggregation] = None
-  private var aggComplete = false
-  private var useStarTree = false
-  private var useHistogram = false
-  private var histFinal = false
-  // single-segment single-col DISTINCT accepted as COMPLETE (dictionary
-  // is the final answer) — tracked so the plan description is truthful
-  private var distinctFinal = false
-  // pushed ORDER BY ... LIMIT over a complete histogram aggregate:
-  // (sort keys over the scan's output layout, limit)
-  private var topN: Option[(Array[TopNKey], Int)] = None
-  // pushed ORDER BY ... LIMIT over a PLAIN scan: sorted mode slices the
-  // partition's first/last k docs; value mode decodes the sort column,
-  // bounded-heap-selects k docs, and decodes everything else for those
-  // k only
-  private var scanTopN: Option[ScanTopN] = None
-  // pushed OFFSET (pagination): rows [offset, pushedLimit) come back —
-  // the chained single partition skips whole segments via metadata doc
-  // counts, so OFFSET 1e9 over a 100 TB table opens no forward index
-  // before the target segment
-  private var offset: Option[Int] = None
+  // Spark accepted complete pushdown (it plans no final aggregate). Spark
+  // asks before pushAggregation, which then picks who answers.
+  private var complete = false
+  private var pushed: Option[(Aggregation, AggPlan)] = None
+  private var rowCap: RowCap = RowCap.NoCap
+
+  /** Every segment's metadata, read once. None on an empty table or when
+    * any segment's metadata is unreadable: every gate then refuses.
+    */
+  private lazy val metas: Option[Seq[graft.pinot.SegmentMetadata]] = {
+    val ms = segmentPaths.map(PinotScan.segmentMeta)
+    if (ms.isEmpty || ms.contains(null)) None else Some(ms)
+  }
+
+  private def allSegments(p: graft.pinot.SegmentMetadata => Boolean): Boolean =
+    metas.exists(_.forall(p))
+
+  /** `col` exists in every segment and `p` holds for it there. */
+  private def everySegment(col: String)(
+      p: graft.pinot.ColumnMetadata => Boolean): Boolean =
+    allSegments(_.columns.get(col).exists(p))
 
   // Catalyst's ColumnPruning hands us the required columns; we keep their
   // names and decode only those (≙ SupportsPushDownRequiredColumns).
   override def pruneColumns(requiredSchema: StructType): Unit =
-    if (pushedAgg.isEmpty) projected = requiredSchema
+    if (pushed.isEmpty) projected = requiredSchema
 
   /** Equality/IN/range filters are accepted as ADVISORY: each partition
     * consults the segment's per-column dictionary (equality/IN) and its
@@ -114,23 +115,22 @@ class PinotScanBuilder(segmentPaths: Seq[String], fullSchema: StructType,
     * here (with `isPartiallyPushed = false`) would make Spark DELETE its
     * Limit node above a complete aggregate scan — e.g.
     * `distinct().limit(2)` returning every distinct value. Aggregate
-    * pushdown runs before limit pushdown, so `pushedAgg` is final here.
+    * pushdown runs before limit pushdown, so `pushed` is final here.
     */
   override def pushLimit(l: Int): Boolean = {
-    if (pushedAgg.isDefined) return false
-    limit = Some(l)
+    if (pushed.isDefined) return false
+    rowCap = if (sawFilters) RowCap.PerRange(l) else RowCap.Budget(0, Some(l))
     true
   }
 
-  // shared by SupportsPushDownLimit and SupportsPushDownTopN: a pushed
-  // limit is FULL only with no filters in play; a pushed top-N is ALWAYS
-  // partial — each partition emits its local top-k and Spark's
-  // TakeOrderedAndProject stays authoritative over ≤ k×partitions rows
-  // (correct under sub-segment slicing and ties, and exactly the shape
-  // that scales: a 1000-segment ORDER BY ... LIMIT 10 moves 10 rows per
-  // task instead of each task's whole histogram)
-  override def isPartiallyPushed(): Boolean =
-    sawFilters || topN.isDefined || scanTopN.isDefined
+  // shared by SupportsPushDownLimit and SupportsPushDownTopN: only a
+  // global budget (a limit with no filters in play) is FULLY pushed; a
+  // pushed top-N is ALWAYS partial — each partition emits its local
+  // top-k and Spark's TakeOrderedAndProject stays authoritative over
+  // ≤ k×partitions rows (correct under sub-segment slicing and ties, and
+  // exactly the shape that scales: a 1000-segment ORDER BY ... LIMIT 10
+  // moves 10 rows per task instead of each task's whole histogram)
+  override def isPartiallyPushed(): Boolean = !rowCap.isInstanceOf[RowCap.Budget]
 
   /** OFFSET pushdown (Spark offers it only after a FULLY pushed limit,
     * or bare): accepted on the plain filterless scan, where the chained
@@ -139,10 +139,76 @@ class PinotScanBuilder(segmentPaths: Seq[String], fullSchema: StructType,
     * target skip via metadata doc counts alone. Refused with a top-N in
     * play (per-partition top-k and a global row skip don't compose).
     */
-  override def pushOffset(o: Int): Boolean = {
-    if (o <= 0 || sawFilters || pushedAgg.isDefined ||
-        topN.isDefined || scanTopN.isDefined) return false
-    offset = Some(o)
+  override def pushOffset(o: Int): Boolean = rowCap match {
+    case RowCap.NoCap | _: RowCap.Budget
+        if o > 0 && !sawFilters && pushed.isEmpty =>
+      rowCap = RowCap.Budget(o, rowCap.pushedLimit)
+      true
+    case _ => false
+  }
+
+  override def pushTopN(
+      orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
+      l: Int): Boolean =
+    if (l <= 0 || l > PinotScan.TopNPushCap) false
+    else pushed match {
+      case None => pushScanTopN(orders, l)
+      case Some((agg, h @ AggPlan.Histogram(true, _))) =>
+        pushHistTopN(agg, h, orders, l)
+      case _ => false
+    }
+
+  private def descending(
+      o: org.apache.spark.sql.connector.expressions.SortOrder): Boolean =
+    o.direction() ==
+      org.apache.spark.sql.connector.expressions.SortDirection.DESCENDING
+
+  /** PLAIN scan, single sort key on a column every segment stores
+    * SORTED (non-nullable, single-value): the partition's top-k is its
+    * first (ASC) or last (DESC) k docs — a doc-range slice, decoding
+    * NOTHING for the sort itself (Pinot's selection-order
+    * short-circuit; `ORDER BY ts LIMIT k` over a 100 TB time-ordered
+    * table reads k docs per task). Partial push only, so ties at the
+    * boundary stay Spark's arbitrary choice exactly as unpushed — the
+    * first/last-k value MULTISET is exact for a single key, which is
+    * why multi-key orders must refuse (a key2 tie-break could prefer a
+    * doc outside the first k of key1 ties).
+    */
+  private def pushScanTopN(
+      orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
+      l: Int): Boolean = {
+    if (sawFilters || rowCap != RowCap.NoCap || orders.length != 1)
+      return false
+    val colName = fieldName(orders(0).expression()) match {
+      case Some(c) => c
+      case None => return false
+    }
+    def everywhere(p: graft.pinot.ColumnMetadata => Boolean): Boolean =
+      everySegment(colName)(cm =>
+        cm.isSingleValue && !cm.hasNullVector && p(cm))
+    // sorted mode: numeric/boolean/timestamp only — the writer's
+    // isSorted uses JVM orderings, which agree with Spark's for these
+    // types; STRING is excluded (UTF-16 vs UTF8-byte order can
+    // disagree off-ASCII)
+    val sortedEverywhere = everywhere(cm => cm.isSorted &&
+      (cm.dataType match {
+        case PinotType.PInt | PinotType.PLong | PinotType.PFloat |
+             PinotType.PDouble | PinotType.PBoolean |
+             PinotType.PTimestamp => true
+        case _ => false
+      }))
+    // value mode: any orderable single-value non-null column — the
+    // reader compares DECODED values with Spark's own orderings, so
+    // STRING is safe here (UTF8String.compareTo IS Spark's order)
+    val valueOrderable = everywhere(cm => cm.dataType match {
+      case PinotType.PInt | PinotType.PLong | PinotType.PFloat |
+           PinotType.PDouble | PinotType.PBoolean |
+           PinotType.PTimestamp | PinotType.PString => true
+      case _ => false
+    })
+    if (!sortedEverywhere && !valueOrderable) return false
+    rowCap = ScanTopN(colName, descending(orders(0)), l,
+      sorted = sortedEverywhere)
     true
   }
 
@@ -158,61 +224,9 @@ class PinotScanBuilder(segmentPaths: Seq[String], fullSchema: StructType,
     * top-N push with no Filter above the scan, and every graft filter is
     * residual.
     */
-  override def pushTopN(
+  private def pushHistTopN(agg: Aggregation, hist: AggPlan.Histogram,
       orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
       l: Int): Boolean = {
-    if (l <= 0 || l > PinotScan.TopNPushCap) return false
-    // PLAIN scan, single sort key on a column every segment stores
-    // SORTED (non-nullable, single-value): the partition's top-k is its
-    // first (ASC) or last (DESC) k docs — a doc-range slice, decoding
-    // NOTHING for the sort itself (Pinot's selection-order
-    // short-circuit; `ORDER BY ts LIMIT k` over a 100 TB time-ordered
-    // table reads k docs per task). Partial push only, so ties at the
-    // boundary stay Spark's arbitrary choice exactly as unpushed — the
-    // first/last-k value MULTISET is exact for a single key, which is
-    // why multi-key orders must refuse (a key2 tie-break could prefer a
-    // doc outside the first k of key1 ties).
-    if (pushedAgg.isEmpty) {
-      if (sawFilters || limit.isDefined || orders.length != 1) return false
-      val o = orders(0)
-      val colName = o.expression() match {
-        case nr: NamedReference if nr.fieldNames().length == 1 =>
-          nr.fieldNames()(0)
-        case _ => return false
-      }
-      val desc = o.direction() ==
-        org.apache.spark.sql.connector.expressions.SortDirection.DESCENDING
-      val metas = segmentPaths.map(PinotScan.segmentMeta)
-      if (metas.isEmpty || metas.exists(_ == null)) return false
-      def everywhere(p: graft.pinot.ColumnMetadata => Boolean): Boolean =
-        metas.forall(_.columns.get(colName).exists(cm =>
-          cm.isSingleValue && !cm.hasNullVector && p(cm)))
-      // sorted mode: numeric/boolean/timestamp only — the writer's
-      // isSorted uses JVM orderings, which agree with Spark's for these
-      // types; STRING is excluded (UTF-16 vs UTF8-byte order can
-      // disagree off-ASCII)
-      val sortedEverywhere = everywhere(cm => cm.isSorted &&
-        (cm.dataType match {
-          case PinotType.PInt | PinotType.PLong | PinotType.PFloat |
-               PinotType.PDouble | PinotType.PBoolean |
-               PinotType.PTimestamp => true
-          case _ => false
-        }))
-      // value mode: any orderable single-value non-null column — the
-      // reader compares DECODED values with Spark's own orderings, so
-      // STRING is safe here (UTF8String.compareTo IS Spark's order)
-      val valueOrderable = everywhere(cm => cm.dataType match {
-        case PinotType.PInt | PinotType.PLong | PinotType.PFloat |
-             PinotType.PDouble | PinotType.PBoolean |
-             PinotType.PTimestamp | PinotType.PString => true
-        case _ => false
-      })
-      if (!sortedEverywhere && !valueOrderable) return false
-      scanTopN = Some(ScanTopN(colName, desc, l, sorted = sortedEverywhere))
-      return true
-    }
-    if (!(useHistogram && histFinal)) return false
-    val agg = pushedAgg.getOrElse(return false)
     val groupCols = agg.groupByExpressions.flatMap(fieldName)
     if (groupCols.length != agg.groupByExpressions.length) return false
     // Spark rewrites sort attributes over a pushed aggregate back into
@@ -223,146 +237,240 @@ class PinotScanBuilder(segmentPaths: Seq[String], fullSchema: StructType,
     // columns are value-identical, so sorting by either is the same.
     val aggSlots: Map[String, Int] = agg.aggregateExpressions.zipWithIndex
       .foldLeft(Map.empty[String, Int]) { case (m, (f, i)) =>
-        // first-wins: duplicate functions are value-identical, keep slot 0
         if (m.contains(f.toString)) m
         else m + (f.toString -> (groupCols.length + i))
       }
-    val keys = new Array[TopNKey](orders.length)
-    var i = 0
-    while (i < orders.length) {
-      val o = orders(i)
-      val outIdx = o.expression() match {
-        case nr: NamedReference if nr.fieldNames().length == 1 &&
-            groupCols.contains(nr.fieldNames()(0)) =>
-          groupCols.indexOf(nr.fieldNames()(0))
-        case e => aggSlots.getOrElse(e.toString, return false)
-      }
-      keys(i) = TopNKey(outIdx,
-        o.direction() ==
-          org.apache.spark.sql.connector.expressions.SortDirection.DESCENDING)
-      i += 1
+    val keys = orders.map { o =>
+      fieldName(o.expression()).filter(groupCols.contains)
+        .map(groupCols.indexOf(_))
+        .orElse(aggSlots.get(o.expression().toString))
+        .map(TopNKey(_, descending(o)))
     }
-    topN = Some((keys, l))
+    if (keys.exists(_.isEmpty)) return false
+    pushed = Some(agg -> hist.copy(topN = Some((keys.flatten, l))))
     true
   }
 
-  /** COUNT-only global aggregations are answered COMPLETELY from segment
-    * metadata (`segment.total.docs` + per-column `nullValueCount`, cached
-    * on the driver): no tasks touch any column data, and a single row
-    * comes back — Spark plans no final aggregate. `COUNT(col)` =
-    * totalDocs − nullCount, exact even for nullable columns because the
-    * writer records the null-vector cardinality.
+  /** Complete pushdown (Spark plans no final aggregate) for two shapes.
+    *
+    * A filterless global aggregate the driver answers from cached
+    * metadata (see [[driverAnswers]]): no task touches column data and
+    * one row comes back.
+    *
+    * Any aggregate over a lone segment that the segment answers finally
+    * ([[loneSegmentFinal]]) — exactly how a lone Pinot server answers a
+    * group-by, so the query is one stage: scan → top-k. Multi-segment
+    * tables fall back to parallel per-segment partials.
     */
   override def supportCompletePushDown(agg: Aggregation): Boolean = {
-    val ok = agg.groupByExpressions.isEmpty && !sawFilters &&
-      agg.aggregateExpressions.forall {
-        case _: CountStar => true
-        case c: Count => !c.isDistinct &&
-          fieldName(c.column()).exists(metaCountable)
-        // SUM/AVG from writer-recorded exact sums, MIN/MAX from the
-        // min/max metadata (integral, non-nullable, every segment) —
-        // a filterless global aggregate then never reads column data.
-        case s: Sum => !s.isDistinct &&
-          fieldName(s.column()).exists(c =>
-            metaSummable(c) && metaSumTotalFits(c))
-        case a: Avg => !a.isDistinct &&
-          fieldName(a.column()).exists(metaAvgExact)
-        case m: Min => fieldName(m.column()).exists(metaMinMaxable)
-        case m: Max => fieldName(m.column()).exists(metaMinMaxable)
-        case _ => false
-      }
-    if (ok) { aggComplete = true; return true }
-    // Single-segment dict group-by: the per-segment histogram IS the
-    // final answer (exactly how a lone Pinot server answers a group-by)
-    // — Spark plans NO final aggregate and NO exchange, so the query is
-    // one stage: scan → top-k. Complete pushdown also receives AVG
-    // un-rewritten; the histogram answers it as sum/count at emit.
-    // Multi-segment tables fall back to parallel per-segment partials.
-    val gOpt = agg.groupByExpressions.map(fieldName(_))
-    if (gOpt.exists(_.isEmpty) || segmentPaths.length != 1 || sawFilters)
-      return false
-    val groupCols = gOpt.flatten
-    // Complete histogram paths read the lone segment's FORWARD INDEXES
-    // in ONE task (no final aggregate exists to merge slices). Past
-    // `completeAggMaxDocs` AND when groups are much fewer than rows,
-    // partial mode + doc-range slices win despite the extra merge
-    // stage — refuse so pushAggregation takes over and
-    // planInputPartitions slices. High-cardinality keys stay complete:
-    // each slice would emit ~cardinality partial rows into a shuffle,
-    // costing more than the saved decode. The dictionary-only
-    // single-col DISTINCT below stays size-independent.
-    def loneTooBigToFinal(groupCols: Array[String]): Boolean =
-      splitTargetBytes > 0 && {
-        val m = PinotScan.segmentMeta(segmentPaths.head)
-        m != null && m.totalDocs > PinotScan.CompleteAggMaxDocs && {
-          val cap = 1L << 20
-          val prod = groupCols.foldLeft(1L) { (acc, c) =>
-            val card = math.max(1,
-              m.columns.get(c).fold(Int.MaxValue.toLong)(_.cardinality.toLong))
-            if (acc > cap) acc else acc * card
-          }
-          prod <= m.totalDocs / 4
-        }
-      }
-    // single-segment DISTINCT is final by construction: the dictionary
-    // (single col) / the occupied composite-id set (multi col) each
-    // emit every present key exactly once — Spark plans no dedup
-    if (agg.aggregateExpressions.isEmpty && groupCols.nonEmpty) {
-      if (groupCols.length == 1 && isDictDistinctable(groupCols.head)) {
-        distinctFinal = true
-        return true
-      }
-      // composite-id / RAW-slot histogram: occupied keys are final
-      if (!loneTooBigToFinal(groupCols) &&
-          groupCols.forall(c =>
-            isDictDistinctable(c) || isRawStringGroupable(c)) &&
-          cardProductOk(groupCols)) {
-        histFinal = true
-        return true
-      }
-      return false
-    }
-    if (!loneTooBigToFinal(groupCols) &&
-        histCovers(groupCols, agg.aggregateExpressions, allowAvg = true)) {
-      // an empty segment emits NO partial rows, but a GLOBAL aggregate
-      // must still return its mandatory single row (SUM = NULL,
-      // COUNT = 0) — only Spark's final aggregate can produce it, so
-      // complete pushdown refuses and the partial path takes over.
-      // (Group-by over an empty segment is correctly empty either way.)
-      if (groupCols.isEmpty &&
-          Option(PinotScan.segmentMeta(segmentPaths.head))
-            .forall(_.totalDocs == 0)) return false
-      histFinal = true
-      return true
-    }
-    false
+    complete = !sawFilters && PushedFunc.all(agg).exists(funcs =>
+      (agg.groupByExpressions.isEmpty && driverAnswers(funcs)) ||
+        loneSegmentFinal(agg, funcs))
+    complete
   }
 
-  /** Π segment cardinalities of `cols` stays within the per-task
-    * histogram array cap in EVERY segment (1M entries ≈ 8 MB). The fold
-    * saturates at the cap instead of multiplying on — a 3×2^21 product
-    * must not wrap Long into accidental acceptance.
+  /** A global aggregate answered on the DRIVER from segment metadata:
+    * COUNT(*) = Σ `segment.total.docs`, COUNT(col) = Σ (docs −
+    * `nullValueCount`) — exact even for nullable columns because the
+    * writer records the null-vector cardinality — SUM/AVG from
+    * writer-recorded exact sums and MIN/MAX from the min/max metadata
+    * (integral, non-nullable, every segment).
     */
-  private def cardProductOk(cols: Array[String]): Boolean = {
-    val cap = 1L << 20
-    val metas = segmentPaths.map(PinotScan.segmentMeta)
-    metas.nonEmpty && !metas.exists(_ == null) && metas.forall { m =>
-      cols.foldLeft(1L) { (acc, c) =>
-        val card = math.max(1, m.columns.get(c).fold(Int.MaxValue)(_.cardinality))
-        if (acc > cap) acc else acc * card
-      } <= cap
+  private def driverAnswers(funcs: Array[PushedFunc]): Boolean =
+    funcs.forall {
+      case Count(c) => c.isEmpty || metaCountable(c)
+      case Sum(c) => metaSummable(c) && metaSumTotalFits(c)
+      case Avg(c) => metaAvgExact(c)
+      case Min(c) => metaMinMaxable(c)
+      case Max(c) => metaMinMaxable(c)
     }
+
+  /** One segment's histogram, dictionary or occupied-key set IS the
+    * final answer. Complete pushdown also receives AVG un-rewritten; the
+    * histogram answers it as sum/count at emit. pushAggregation may still
+    * pick a cheaper answerer (key-pure metadata, the star-tree): a lone
+    * segment's rows are final whoever computes them.
+    */
+  private def loneSegmentFinal(agg: Aggregation,
+      funcs: Array[PushedFunc]): Boolean = {
+    val gOpt = agg.groupByExpressions.map(fieldName(_))
+    if (gOpt.exists(_.isEmpty) || segmentPaths.length != 1) return false
+    val groupCols = gOpt.flatten
+    // single-segment DISTINCT is final by construction: the dictionary
+    // (single col) / the occupied composite-id set (multi col) each
+    // emit every present key exactly once — Spark plans no dedup. The
+    // dictionary-only single-col DISTINCT stays size-independent.
+    if (funcs.isEmpty && groupCols.nonEmpty)
+      (groupCols.length == 1 && isDictDistinctable(groupCols.head)) ||
+        (!loneTooBigToFinal(groupCols) && histGroupable(groupCols))
+    // an empty segment emits NO partial rows, but a GLOBAL aggregate
+    // must still return its mandatory single row (SUM = NULL,
+    // COUNT = 0) — only Spark's final aggregate can produce it, so
+    // complete pushdown refuses and the partial path takes over.
+    // (Group-by over an empty segment is correctly empty either way.)
+    else !loneTooBigToFinal(groupCols) &&
+      histCovers(groupCols, funcs, allowAvg = true) &&
+      (groupCols.nonEmpty || metas.exists(_.head.totalDocs > 0))
+  }
+
+  /** Complete histogram paths read the lone segment's FORWARD INDEXES
+    * in ONE task (no final aggregate exists to merge slices). Past
+    * `CompleteAggMaxDocs` AND when groups are much fewer than rows,
+    * partial mode + doc-range slices win despite the extra merge stage —
+    * refuse so pushAggregation takes over and planInputPartitions
+    * slices. High-cardinality keys stay complete: each slice would emit
+    * ~cardinality partial rows into a shuffle, costing more than the
+    * saved decode.
+    */
+  private def loneTooBigToFinal(groupCols: Array[String]): Boolean =
+    splitTargetBytes > 0 && metas.exists { ms =>
+      val m = ms.head
+      m.totalDocs > PinotScan.CompleteAggMaxDocs &&
+        groupSlots(m, groupCols) <= m.totalDocs / 4
+    }
+
+  /** Histogram slots `cols` need in segment `m` (saturating). */
+  private def groupSlots(m: graft.pinot.SegmentMetadata,
+      cols: Array[String]): Long =
+    PinotHistAgg.groupSlots(cols.map(c =>
+      m.columns.get(c).fold(Int.MaxValue.toLong)(_.cardinality.toLong)))
+
+  /** Partial pushdown picks who answers; complete pushdown, accepted just
+    * before, picks too and keeps its answer final.
+    *
+    * Per-segment metadata / dictionaries: each task answers from its own
+    * segment's metadata + dictionary (cardinality entries, never the
+    * forward index), and Spark merges the per-segment rows. Distributed —
+    * at 100 TB the tiny dictionary reads happen on executors, not the
+    * driver. GROUP BY pushes down this way when every group column is
+    * KEY-PURE (each segment's metadata records min == max — how
+    * partitionBy-written ingest lands): each segment task emits ONE
+    * (key…, partials) row. A per-tenant COUNT over a key-partitioned
+    * 100 TB table becomes a metadata-only query.
+    */
+  override def pushAggregation(agg: Aggregation): Boolean = {
+    if (sawFilters || rowCap != RowCap.NoCap) return false
+    val groupColsOpt = agg.groupByExpressions.map(fieldName)
+    if (groupColsOpt.exists(_.isEmpty)) return false
+    pushed = PushedFunc.all(agg)
+      .flatMap(choosePlan(groupColsOpt.flatten, _)).map(agg -> _)
+    pushed.isDefined
+  }
+
+  private def choosePlan(groupCols: Array[String],
+      funcs: Array[PushedFunc]): Option[AggPlan] =
+    // metadata-complete global aggregate, validated by
+    // supportCompletePushDown just before this call (SUM/AVG would fail
+    // the per-segment partial checks below — they are answered on the
+    // DRIVER from cached metadata, not by tasks)
+    if (groupCols.isEmpty && complete && driverAnswers(funcs))
+      Some(AggPlan.DriverRow)
+    // DISTINCT pushdown (no aggregate functions, one dict group column):
+    // each segment's dictionary IS its distinct value set, so the scan
+    // emits cardinality rows per segment — SELECT DISTINCT col over a
+    // 100 TB table reads dictionaries only, never a forward index.
+    // Multi-column or RAW DISTINCT: dictionaries alone cannot answer
+    // it (a key PAIR must actually co-occur; RAW columns have no
+    // dictionary), but the composite-id/slot histogram can — each
+    // segment emits its occupied key set and Spark dedups the merge.
+    else if (funcs.isEmpty) {
+      if (groupCols.length == 1 && isDictDistinctable(groupCols.head))
+        Some(AggPlan.SegmentMeta(complete))
+      else if (groupCols.nonEmpty && histGroupable(groupCols))
+        Some(AggPlan.Histogram(complete))
+      else None
+    }
+    else if (groupCols.forall(isKeyPure) && funcs.forall {
+        // COUNT(col) = docs − nullCount per segment (exact from
+        // metadata); MIN/MAX refuse nullable columns — their
+        // dictionaries hold the stored DEFAULT at null docs
+        case Count(c) => c.isEmpty || metaCountable(c)
+        case Min(c) => minMaxPushable(c)
+        case Max(c) => minMaxPushable(c)
+        // partial SUM straight from each segment's writer-recorded sum
+        // (integral, non-nullable) — Spark's final aggregate merges;
+        // AVG arrives here already rewritten to SUM+COUNT by Spark's
+        // partial-pushdown translation, so key-pure AVG rides along.
+        case Sum(c) => metaSummable(c)
+        case Avg(_) => false
+      }) Some(AggPlan.SegmentMeta(complete))
+    // Star-tree fallback: when EVERY segment carries a star-tree whose
+    // dims cover the group columns and whose metrics cover every
+    // aggregate (COUNT/SUM/MIN/MAX incl. SUM, which no other pushdown
+    // path answers), each task rolls its pre-aggregated records up to
+    // the requested dims — a GROUP BY over a 100 TB table reads
+    // |combos| records per segment instead of the forward index.
+    else if (starTreeCovers(groupCols, funcs)) Some(AggPlan.StarTree(complete))
+    // Dictionary-id histogram fallback: each segment task aggregates over
+    // packed ids in one pass (cardinality-sized arrays, the id IS the
+    // hash slot) and emits per-key partials. Reads forward indexes
+    // (unlike key-pure/star-tree) but never materializes per-row keys,
+    // and only |dictionary| rows cross the scan boundary.
+    else if (histCovers(groupCols, funcs, allowAvg = complete))
+      Some(AggPlan.Histogram(complete))
+    else None
+
+  /** Group columns compose into one histogram id by stride arithmetic.
+    * Each may be dict-encoded (ids off the packed stream) OR a RAW string
+    * with a writer-recorded exact cardinality (per-SEGMENT slot map over
+    * decoded values — partial rows carry the VALUES, so slots merge
+    * correctly across segments in Spark's final aggregate). Per-task
+    * arrays are O(Π cardinalities × aggs): the PRODUCT is capped in
+    * every segment at [[PinotHistAgg.GroupCap]].
+    */
+  private def histGroupable(groupCols: Array[String]): Boolean =
+    groupCols.forall(c => isDictDistinctable(c) || isRawStringGroupable(c)) &&
+      allSegments(groupSlots(_, groupCols) <= PinotHistAgg.GroupCap)
+
+  /** Histogram-aggregable: groupable columns, and every aggregate a COUNT
+    * over non-nullable data or SUM/MIN/MAX of a non-nullable single-value
+    * numeric column (dict or RAW fixed-byte). An EMPTY group list is the
+    * global-aggregate case: one synthetic group, one partial row per
+    * segment — this is what pushes global SUM/AVG that metadata cannot
+    * answer. Nullable metrics refuse: the forward index holds stored
+    * DEFAULTS at null docs, which must not enter partials.
+    */
+  private def histCovers(groupCols: Array[String], funcs: Array[PushedFunc],
+      allowAvg: Boolean): Boolean = {
+    def numericReadable(col: String): Boolean = everySegment(col)(cm =>
+      cm.isSingleValue && !cm.hasNullVector && (cm.dataType match {
+        case PinotType.PInt | PinotType.PLong | PinotType.PFloat |
+             PinotType.PDouble => true
+        case _ => false
+      }))
+    funcs.nonEmpty && histGroupable(groupCols) && funcs.forall {
+      case Count(c) => c.isEmpty || everySegment(c)(!_.hasNullVector)
+      case Sum(c) => numericReadable(c)
+      case Min(c) => numericReadable(c)
+      case Max(c) => numericReadable(c)
+      case Avg(c) => allowAvg && numericReadable(c)
+    }
+  }
+
+  /** Every segment has a star-tree covering the requested group columns
+    * (as dims, dict-encoded non-nullable) and every aggregate function
+    * (as its `FUNC__column` metric; COUNT(col) maps to COUNT__* only for
+    * provably non-nullable columns).
+    */
+  private def starTreeCovers(groupCols: Array[String],
+      funcs: Array[PushedFunc]): Boolean = allSegments { m =>
+    val mets = m.starTreeMetrics.toSet
+    m.starTreeDims.nonEmpty &&
+      groupCols.forall(c => m.starTreeDims.contains(c) &&
+        m.columns.get(c).exists(cm => cm.hasDictionary &&
+          cm.isSingleValue && !cm.hasNullVector)) &&
+      funcs.forall(f => f.starMetric.exists(mt => mets.contains(mt.key)) &&
+        (f match {
+          case Count(c) => c.isEmpty || m.columns.get(c).exists(!_.hasNullVector)
+          case _ => true
+        }))
   }
 
   /** COUNT(col) answerable from metadata alone: every segment's metadata
     * is readable and carries the column (nullCount is then exact — zero
     * without a null vector, the recorded bitmap cardinality with one).
     */
-  private def metaCountable(col: String): Boolean = {
-    val metas = segmentPaths.map(PinotScan.segmentMeta)
-    metas.nonEmpty && !metas.exists(_ == null) &&
-      metas.forall(_.columns.contains(col))
-  }
+  private def metaCountable(col: String): Boolean = everySegment(col)(_ => true)
 
   /** SUM(col) answerable from metadata alone: every non-empty segment
     * recorded an exact writer sum, fitting in a long, for a non-nullable
@@ -382,36 +490,32 @@ class PinotScanBuilder(segmentPaths: Seq[String], fullSchema: StructType,
     // can never transiently overflow; mixed signs additionally require
     // Σ|v| ≤ rows × max(|min|,|max|) to fit, which bounds every prefix.
     def noTransientOverflow(cm: graft.pinot.ColumnMetadata,
-        rows: Int): Boolean = {
-      val bnds = for (
-        mn <- cm.minValue.flatMap(v => scala.util.Try(BigInt(v)).toOption);
-        mx <- cm.maxValue.flatMap(v => scala.util.Try(BigInt(v)).toOption))
-      yield (mn, mx)
-      bnds.exists { case (mn, mx) =>
-        mn.signum >= 0 || mx.signum <= 0 ||
-          (mn.abs.max(mx.abs) * rows).isValidLong
-      }
+        rows: Int): Boolean = bounds(cm).exists { case (mn, mx) =>
+      mn.signum >= 0 || mx.signum <= 0 ||
+        (mn.abs.max(mx.abs) * rows).isValidLong
     }
-    val metas = segmentPaths.map(PinotScan.segmentMeta)
-    metas.nonEmpty && !metas.exists(_ == null) &&
-      metas.forall(m => m.totalDocs == 0 ||
-        m.columns.get(col).exists(cm => cm.isSingleValue &&
-          !cm.hasNullVector && cm.sumValue.exists(_.isValidLong) &&
-          noTransientOverflow(cm, m.totalDocs) &&
-          (cm.dataType == PinotType.PInt || cm.dataType == PinotType.PLong)))
+    allSegments(m => m.totalDocs == 0 ||
+      m.columns.get(col).exists(cm => cm.isSingleValue &&
+        !cm.hasNullVector && cm.sumValue.exists(_.isValidLong) &&
+        noTransientOverflow(cm, m.totalDocs) &&
+        (cm.dataType == PinotType.PInt || cm.dataType == PinotType.PLong)))
   }
+
+  /** A column's metadata [min, max] as integers, when both parse. */
+  private def bounds(cm: graft.pinot.ColumnMetadata): Option[(BigInt, BigInt)] =
+    for (mn <- cm.minValue.flatMap(v => scala.util.Try(BigInt(v)).toOption);
+         mx <- cm.maxValue.flatMap(v => scala.util.Try(BigInt(v)).toOption))
+    yield (mn, mx)
 
   /** The exact TOTAL sum fits in a long — required for the COMPLETE
     * metadata answer (the overflowing case defers to execution so ANSI
     * mode throws exactly as an unpushed plan would).
     */
-  private def metaSumTotalFits(col: String): Boolean = {
-    val metas = segmentPaths.map(PinotScan.segmentMeta)
-    metas.foldLeft(BigInt(0)) { (acc, m) =>
-      if (m == null || m.totalDocs == 0) acc
+  private def metaSumTotalFits(col: String): Boolean =
+    metas.exists(_.foldLeft(BigInt(0)) { (acc, m) =>
+      if (m.totalDocs == 0) acc
       else acc + m.columns.get(col).flatMap(_.sumValue).getOrElse(BigInt(0))
-    }.isValidLong
-  }
+    }.isValidLong)
 
   /** AVG(col) from metadata is exact only while Spark's own
     * double-accumulated sum is exact: every running partial sum must
@@ -419,18 +523,13 @@ class PinotScanBuilder(segmentPaths: Seq[String], fullSchema: StructType,
     * so the gate is conservative — outside it the histogram path
     * answers instead (bit-identical by construction, just not free).
     */
-  private def metaAvgExact(col: String): Boolean = metaSummable(col) && {
-    val metas = segmentPaths.map(PinotScan.segmentMeta)
-    val bound = metas.foldLeft(BigInt(0)) { (acc, m) =>
+  private def metaAvgExact(col: String): Boolean = metaSummable(col) &&
+    metas.exists(_.foldLeft(BigInt(0)) { (acc, m) =>
       if (m.totalDocs == 0) acc
-      else m.columns.get(col).flatMap(cm =>
-        for (mn <- cm.minValue.flatMap(v => scala.util.Try(BigInt(v)).toOption);
-             mx <- cm.maxValue.flatMap(v => scala.util.Try(BigInt(v)).toOption))
-        yield acc + mn.abs.max(mx.abs) * m.totalDocs)
-        .getOrElse(acc + BigInt(2).pow(60))
-    }
-    bound <= BigInt(2).pow(53)
-  }
+      else m.columns.get(col).flatMap(bounds)
+        .fold(acc + BigInt(2).pow(60)) { case (mn, mx) =>
+          acc + mn.abs.max(mx.abs) * m.totalDocs }
+    } <= BigInt(2).pow(53))
 
   /** MIN/MAX(col) answerable from metadata bounds alone: numeric or
     * timestamp, non-nullable, min/max recorded in every non-empty
@@ -441,7 +540,6 @@ class PinotScanBuilder(segmentPaths: Seq[String], fullSchema: StructType,
     * diverges from UTF8 bytes off-ASCII).
     */
   private def metaMinMaxable(col: String): Boolean = {
-    val metas = segmentPaths.map(PinotScan.segmentMeta)
     // Bounds must PARSE in the column's type (and fit its range) before
     // the complete push is accepted: a foreign writer recording e.g.
     // "1.0" for an INT column would otherwise pass planning here and
@@ -460,297 +558,81 @@ class PinotScanBuilder(segmentPaths: Seq[String], fullSchema: StructType,
           .exists(l => l >= Long.MinValue / 1000 && l <= Long.MaxValue / 1000)
         case _ => false
       }
-    metas.nonEmpty && !metas.exists(_ == null) &&
-      metas.forall(m => m.totalDocs == 0 ||
-        m.columns.get(col).exists(cm => cm.isSingleValue &&
-          !cm.hasNullVector &&
-          cm.minValue.exists(parsable(cm, _)) &&
-          cm.maxValue.exists(parsable(cm, _)) &&
-          (cm.dataType match {
-            case PinotType.PInt | PinotType.PLong | PinotType.PFloat |
-                 PinotType.PDouble | PinotType.PTimestamp => true
-            case _ => false
-          })))
-  }
-
-  /** Partial pushdown for global COUNT/MIN/MAX: each task answers from its
-    * own segment's metadata + dictionary (cardinality entries, never the
-    * forward index), and Spark merges the per-segment rows. Distributed —
-    * at 100 TB the tiny dictionary reads happen on executors, not the
-    * driver. MIN/MAX limited to dictionary-encoded numeric columns
-    * (string ordering semantics and RAW decode costs stay engine-side).
-    *
-    * GROUP BY pushes down too when every group column is KEY-PURE (each
-    * segment's metadata records min == max — how partitionBy-written
-    * ingest lands): each segment task emits ONE (key…, partials) row
-    * straight from metadata/dictionaries, and Spark's final aggregate
-    * merges. A per-tenant COUNT over a key-partitioned 100 TB table
-    * becomes a metadata-only query — no forward index is ever read.
-    */
-  override def pushAggregation(agg: Aggregation): Boolean = {
-    if (sawFilters || limit.isDefined) return false
-    val groupColsOpt = agg.groupByExpressions.map(fieldName)
-    if (groupColsOpt.exists(_.isEmpty)) return false
-    val groupCols = groupColsOpt.flatten
-    // metadata-complete global aggregate, validated by
-    // supportCompletePushDown just before this call (SUM/AVG would fail
-    // the per-segment partial checks below — they are answered on the
-    // DRIVER from cached metadata, not by tasks)
-    if (groupCols.isEmpty && aggComplete) {
-      pushedAgg = Some(agg)
-      return true
-    }
-    // DISTINCT pushdown (no aggregate functions, one dict group column):
-    // each segment's dictionary IS its distinct value set, so the scan
-    // emits cardinality rows per segment — SELECT DISTINCT col over a
-    // 100 TB table reads dictionaries only, never a forward index
-    if (agg.aggregateExpressions.isEmpty) {
-      if (groupCols.length == 1 && isDictDistinctable(groupCols.head)) {
-        pushedAgg = Some(agg)
-        return true
-      }
-      // multi-column or RAW DISTINCT: dictionaries alone cannot answer
-      // it (a key PAIR must actually co-occur; RAW columns have no
-      // dictionary), but the composite-id/slot histogram can — each
-      // segment emits its occupied key set and Spark dedups the merge
-      if (groupCols.nonEmpty &&
-          groupCols.forall(c =>
-            isDictDistinctable(c) || isRawStringGroupable(c)) &&
-          cardProductOk(groupCols)) {
-        pushedAgg = Some(agg)
-        useHistogram = true
-        return true
-      }
-      return false
-    }
-    val keyPureOk = groupCols.forall(isKeyPure) &&
-      agg.aggregateExpressions.forall {
-        // COUNT(col) = docs − nullCount per segment (exact from metadata);
-        // MIN/MAX refuse nullable columns — their dictionaries hold the
-        // stored DEFAULT at null docs
-        case _: CountStar => true
-        case c: Count => !c.isDistinct &&
-          fieldName(c.column()).exists(metaCountable)
-        case m: Min => fieldName(m.column()).exists(n =>
-          isMinMaxPushable(n) && !mayHaveNulls(n))
-        case m: Max => fieldName(m.column()).exists(n =>
-          isMinMaxPushable(n) && !mayHaveNulls(n))
-        // partial SUM straight from each segment's writer-recorded sum
-        // (integral, non-nullable) — Spark's final aggregate merges;
-        // AVG arrives here already rewritten to SUM+COUNT by Spark's
-        // partial-pushdown translation, so key-pure AVG rides along.
-        case s: Sum => !s.isDistinct &&
-          fieldName(s.column()).exists(metaSummable)
-        case _ => false
-      }
-    if (keyPureOk) { pushedAgg = Some(agg); return true }
-    // Star-tree fallback: when EVERY segment carries a star-tree whose
-    // dims cover the group columns and whose metrics cover every
-    // aggregate (COUNT/SUM/MIN/MAX incl. SUM, which no other pushdown
-    // path answers), each task rolls its pre-aggregated records up to
-    // the requested dims — a GROUP BY over a 100 TB table reads
-    // |combos| records per segment instead of the forward index.
-    if (starTreeCovers(groupCols, agg.aggregateExpressions)) {
-      pushedAgg = Some(agg)
-      useStarTree = true
-      return true
-    }
-    // Dictionary-id histogram fallback: GROUP BY one dict-encoded column
-    // with COUNT/SUM/MIN/MAX over numeric columns — each segment task
-    // aggregates over packed ids in one pass (cardinality-sized arrays,
-    // the id IS the hash slot) and emits per-key partials. Reads forward
-    // indexes (unlike key-pure/star-tree) but never materializes per-row
-    // keys, and only |dictionary| rows cross the scan boundary.
-    if (histCovers(groupCols, agg.aggregateExpressions,
-        allowAvg = histFinal)) {
-      pushedAgg = Some(agg)
-      useHistogram = true
-      return true
-    }
-    false
-  }
-
-  /** Histogram-aggregable: at most one dict group column (same
-    * preconditions as DISTINCT pushdown) with a bounded cardinality (the
-    * per-task arrays are O(card × aggs); 1M entries ≈ 8 MB — fine at any
-    * segment size), and every aggregate a COUNT over non-nullable data
-    * or SUM/MIN/MAX of a non-nullable single-value numeric column (dict
-    * or RAW fixed-byte). An EMPTY group list is the global-aggregate
-    * case: one synthetic group, one partial row per segment — this is
-    * what pushes global SUM/AVG (metadata can only ever answer
-    * COUNT/MIN/MAX). Nullable metrics refuse: the forward index holds
-    * stored DEFAULTS at null docs, which must not enter partials.
-    */
-  private def histCovers(groupCols: Array[String],
-      funcs: Array[AggregateFunc], allowAvg: Boolean = false): Boolean = {
-    if (funcs.isEmpty) return false
-    val metas = segmentPaths.map(PinotScan.segmentMeta)
-    if (metas.isEmpty || metas.exists(_ == null)) return false
-    // Group columns compose into one id key by stride arithmetic. Each
-    // may be dict-encoded (ids off the packed stream) OR a RAW string
-    // with a writer-recorded exact cardinality (per-SEGMENT slot map
-    // over decoded values — partial rows carry the VALUES, so slots
-    // merge correctly across segments in Spark's final aggregate).
-    val groupOk = groupCols.forall(c =>
-      isDictDistinctable(c) || isRawStringGroupable(c))
-    if (!groupOk) return false
-    // per-task arrays are O(Π cardinalities × aggs): cap the PRODUCT in
-    // every segment (1M entries ≈ 8 MB)
-    if (groupCols.nonEmpty && !cardProductOk(groupCols)) return false
-    def numericReadable(col: String): Boolean = metas.forall { m =>
-      m.columns.get(col).exists(cm => cm.isSingleValue && !cm.hasNullVector &&
-        (cm.dataType match {
-          case PinotType.PInt | PinotType.PLong | PinotType.PFloat |
-               PinotType.PDouble => true
-          case _ => false
-        }))
-    }
-    funcs.forall {
-      case _: CountStar => true
-      case c: Count => !c.isDistinct && fieldName(c.column()).exists(n =>
-        metaCountable(n) && !mayHaveNulls(n))
-      case s: Sum => !s.isDistinct &&
-        fieldName(s.column()).exists(numericReadable)
-      case m: Min => fieldName(m.column()).exists(numericReadable)
-      case m: Max => fieldName(m.column()).exists(numericReadable)
-      case a: Avg => allowAvg && !a.isDistinct &&
-        fieldName(a.column()).exists(numericReadable)
-      case _ => false
-    }
-  }
-
-  /** Every segment has a star-tree covering the requested group columns
-    * (as dims, dict-encoded non-nullable) and every aggregate function
-    * (as `FUNC__column` metrics; COUNT(col) maps to COUNT__* only for
-    * provably non-nullable columns).
-    */
-  private def starTreeCovers(groupCols: Array[String],
-      funcs: Array[AggregateFunc]): Boolean = {
-    val metas = segmentPaths.map(PinotScan.segmentMeta)
-    metas.nonEmpty && !metas.exists(_ == null) && metas.forall { m =>
-      val mets = m.starTreeMetrics.toSet
-      m.starTreeDims.nonEmpty &&
-        groupCols.forall(c => m.starTreeDims.contains(c) &&
-          m.columns.get(c).exists(cm => cm.hasDictionary &&
-            cm.isSingleValue && !cm.hasNullVector)) &&
-        funcs.forall {
-          case _: CountStar => mets.contains("COUNT__*")
-          case c: Count => !c.isDistinct && mets.contains("COUNT__*") &&
-            fieldName(c.column()).exists(col =>
-              m.columns.get(col).exists(!_.hasNullVector))
-          case s: Sum => !s.isDistinct && fieldName(s.column()).exists(col =>
-            mets.contains(s"SUM__$col"))
-          case mn: Min => fieldName(mn.column()).exists(col =>
-            mets.contains(s"MIN__$col"))
-          case mx: Max => fieldName(mx.column()).exists(col =>
-            mets.contains(s"MAX__$col"))
-          case _ => false
-        }
-    }
+    allSegments(m => m.totalDocs == 0 ||
+      m.columns.get(col).exists(cm => cm.isSingleValue &&
+        !cm.hasNullVector &&
+        cm.minValue.exists(parsable(cm, _)) &&
+        cm.maxValue.exists(parsable(cm, _))))
   }
 
   /** RAW (dictionary-less) single-value non-nullable STRING column with
     * a writer-recorded exact cardinality in EVERY segment — the
     * preconditions for the per-segment slot-map group path.
     */
-  private def isRawStringGroupable(col: String): Boolean = {
-    val metas = segmentPaths.map(PinotScan.segmentMeta)
-    metas.nonEmpty && !metas.exists(_ == null) && metas.forall(
-      _.columns.get(col).exists(cm =>
-        !cm.hasDictionary && cm.isSingleValue && !cm.hasNullVector &&
-          cm.dataType == PinotType.PString && cm.cardinality > 0))
-  }
+  private def isRawStringGroupable(col: String): Boolean =
+    everySegment(col)(cm =>
+      !cm.hasDictionary && cm.isSingleValue && !cm.hasNullVector &&
+        cm.dataType == PinotType.PString && cm.cardinality > 0)
 
   /** Dictionary-encoded single-value non-nullable column of a scalar type
     * in EVERY segment — the preconditions for dictionary-as-distinct-set.
     * (A null vector breaks it: the stored default sits in the dictionary
     * whether or not any non-null row carries it.)
     */
-  private def isDictDistinctable(col: String): Boolean = {
-    val metas = segmentPaths.map(PinotScan.segmentMeta)
-    metas.nonEmpty && !metas.exists(_ == null) && metas.forall { m =>
-      m.columns.get(col).exists(cm =>
-        cm.hasDictionary && cm.isSingleValue && !cm.hasNullVector &&
-          (cm.dataType match {
-            case PinotType.PInt | PinotType.PLong | PinotType.PFloat |
-                 PinotType.PDouble | PinotType.PString |
-                 PinotType.PBoolean | PinotType.PTimestamp => true
-            case _ => false
-          }))
-    }
-  }
-
-  /** Any segment records a null-value vector for this column (unreadable
-    * metadata counts as "may" — refusal is always safe).
-    */
-  private def mayHaveNulls(col: String): Boolean =
-    segmentPaths.exists { p =>
-      val m = PinotScan.segmentMeta(p)
-      m == null || m.columns.get(col).exists(_.hasNullVector)
-    }
-
-  /** min == max recorded in EVERY segment, with a typed key form. */
-  private def isKeyPure(col: String): Boolean = {
-    val metas = segmentPaths.map(PinotScan.segmentMeta)
-    metas.nonEmpty && !metas.exists(_ == null) && metas.forall { m =>
-      m.columns.get(col).exists(cm =>
-        !cm.hasNullVector &&
-          cm.isSingleValue && cm.minValue.isDefined &&
-          cm.minValue == cm.maxValue &&
-          (cm.dataType match {
-            case PinotType.PInt | PinotType.PLong | PinotType.PString => true
-            case _ => false
-          }))
-    }
-  }
-
-  private def fieldName(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-    e match {
-      case nr: NamedReference if nr.fieldNames().length == 1 =>
-        Some(nr.fieldNames()(0))
-      case _ => None
-    }
-
-  /** MIN/MAX answerable without a forward-index read in EVERY segment:
-    * numeric with a dictionary (sorted entries), or RAW numeric whose
-    * writer-recorded metadata min/max both survived (r3 — Pinot answers
-    * these from column metadata the same way).
-    */
-  private def isMinMaxPushable(col: String): Boolean = {
-    val metas = segmentPaths.map(PinotScan.segmentMeta)
-    metas.nonEmpty && !metas.exists(_ == null) && metas.forall { m =>
-      m.columns.get(col).exists(cm => cm.isSingleValue &&
+  private def isDictDistinctable(col: String): Boolean =
+    everySegment(col)(cm =>
+      cm.hasDictionary && cm.isSingleValue && !cm.hasNullVector &&
         (cm.dataType match {
           case PinotType.PInt | PinotType.PLong | PinotType.PFloat |
-               PinotType.PDouble => true
+               PinotType.PDouble | PinotType.PString |
+               PinotType.PBoolean | PinotType.PTimestamp => true
           case _ => false
-        }) &&
-        (cm.hasDictionary ||
-          (cm.minValue.isDefined && cm.maxValue.isDefined)))
-    }
-  }
+        }))
 
-  override def build(): Scan = pushedAgg match {
-    case Some(agg) =>
-      new PinotAggScan(segmentPaths, agg, aggComplete, fullSchema, useStarTree,
-        useHistogram, histFinal, distinctFinal, splitTargetBytes, topN)
+  /** min == max recorded in EVERY segment, with a typed key form. */
+  private def isKeyPure(col: String): Boolean =
+    everySegment(col)(cm =>
+      !cm.hasNullVector && cm.isSingleValue && cm.minValue.isDefined &&
+        cm.minValue == cm.maxValue &&
+        (cm.dataType match {
+          case PinotType.PInt | PinotType.PLong | PinotType.PString => true
+          case _ => false
+        }))
+
+  /** MIN/MAX answerable without a forward-index read in EVERY segment:
+    * a non-nullable numeric column with a dictionary (sorted entries), or
+    * RAW whose writer-recorded metadata min/max both survived (r3 — Pinot
+    * answers these from column metadata the same way).
+    */
+  private def minMaxPushable(col: String): Boolean =
+    everySegment(col)(cm => cm.isSingleValue && !cm.hasNullVector &&
+      (cm.dataType match {
+        case PinotType.PInt | PinotType.PLong | PinotType.PFloat |
+             PinotType.PDouble => true
+        case _ => false
+      }) &&
+      (cm.hasDictionary || (cm.minValue.isDefined && cm.maxValue.isDefined)))
+
+  override def build(): Scan = pushed match {
+    case Some((agg, plan)) =>
+      new PinotAggScan(segmentPaths, agg, plan, fullSchema, splitTargetBytes)
     case None =>
-      new PinotScan(segmentPaths, projected, skipFilters, limit, tableDir,
-        fullLimit = (limit.isDefined || offset.isDefined) && !sawFilters,
-        splitTargetBytes = splitTargetBytes, scanTopN = scanTopN,
-        offset = offset, jsonEq = jsonEq, rawUpsertView = rawUpsertView)
+      new PinotScan(segmentPaths, projected, skipFilters, rowCap, tableDir,
+        splitTargetBytes, jsonEq, rawUpsertView)
   }
 }
 
 class PinotScan(segmentPaths: Seq[String], projected: StructType,
-    skipFilters: Array[Filter], limit: Option[Int],
-    tableDir: Option[String] = None, fullLimit: Boolean = false,
+    skipFilters: Array[Filter], rowCap: RowCap = RowCap.NoCap,
+    tableDir: Option[String] = None,
     splitTargetBytes: Long = PinotScan.DefaultSplitTargetBytes,
-    scanTopN: Option[ScanTopN] = None, offset: Option[Int] = None,
     jsonEq: Seq[PinotScan.JsonProbe] = Nil,
     rawUpsertView: Boolean = false)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsReportPartitioning with SupportsRuntimeFiltering {
+
+  // a fully pushed limit/offset: one split answers the query alone
+  private def global: Boolean = rowCap.isInstanceOf[RowCap.Budget]
 
   override def readSchema(): StructType = projected
 
@@ -771,7 +653,7 @@ class PinotScan(segmentPaths: Seq[String], projected: StructType,
     // a fully-pushed limit opts out of runtime filtering: Spark removed
     // its Limit node, so the chained single partition must answer the
     // query alone, unrestricted by join-side pruning
-    if (fullLimit) Array.empty
+    if (global) Array.empty
     else projected.fieldNames.map(
       org.apache.spark.sql.connector.expressions.Expressions.column)
 
@@ -813,7 +695,8 @@ class PinotScan(segmentPaths: Seq[String], projected: StructType,
         s"$dir is an upsert table: a raw stream would surface superseded " +
           "versions. Use PinotUpsert.latestStream for the upsert view, " +
           """or .option("upsertView", "raw") for the raw segment tail""")
-    new PinotMicroBatchStream(dir, projected.fieldNames, skipFilters, limit)
+    new PinotMicroBatchStream(dir, projected.fieldNames, skipFilters,
+      rowCap.pushedLimit)
   }
 
   /** Segment-aligned partition column: a projected dict SV column whose
@@ -858,7 +741,7 @@ class PinotScan(segmentPaths: Seq[String], projected: StructType,
 
   override def outputPartitioning()
       : org.apache.spark.sql.connector.read.partitioning.Partitioning =
-    if (fullLimit)
+    if (global)
       new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(1)
     else partitionInfo match {
       case Some((col, _)) =>
@@ -946,7 +829,7 @@ class PinotScan(segmentPaths: Seq[String], projected: StructType,
     s"PinotScan(segments=${segmentPaths.length}, " +
       s"columns=${projected.fieldNames.mkString(",")}, " +
       s"skipFilters=[${skipFilters.mkString(",")}], " +
-      s"limit=${limit.getOrElse(-1)}, splitTarget=$splitTargetBytes" +
+      s"limit=${rowCap.pushedLimit.getOrElse(-1)}, splitTarget=$splitTargetBytes" +
       (if (jsonEq.isEmpty) ""
        else ", jsonEq=[" + jsonEq.map {
          case PinotScan.JsonEqProbe(c, p, Seq(v)) => s"$c $p=$v"
@@ -959,14 +842,16 @@ class PinotScan(segmentPaths: Seq[String], projected: StructType,
            val h = hi.fold("")(v => if (hiInc) s"<=$v" else s"<$v")
            s"$c $p$l$h"
        }.mkString(",") + "]") +
-      offset.fold("")(o => s", pushedOffset=$o") +
-      scanTopN.fold("")(t =>
-        s", pushedTopN=[${if (t.sorted) "sorted" else "value"} ${t.column}" +
-          s" ${if (t.descending) "DESC" else "ASC"} limit=${t.limit}]") +
-      ")"
+      (rowCap match {
+        case RowCap.Budget(o, _) if o > 0 => s", pushedOffset=$o"
+        case t: ScanTopN =>
+          s", pushedTopN=[${if (t.sorted) "sorted" else "value"} ${t.column}" +
+            s" ${if (t.descending) "DESC" else "ASC"} limit=${t.limit}]"
+        case _ => ""
+      }) + ")"
 
   override def planInputPartitions(): Array[InputPartition] =
-    if (fullLimit)
+    if (global)
       Array(PinotSplit.wholeSegments(segmentPaths))
     else partitionInfo match {
       case Some((_, keys)) =>
@@ -982,87 +867,96 @@ class PinotScan(segmentPaths: Seq[String], projected: StructType,
     }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PinotReaderFactory(projected.fieldNames, skipFilters, limit,
-      PinotScan.expectedTypes(projected), scanTopN, offset, jsonEq, fullLimit)
+    new PinotReaderFactory(projected.fieldNames, skipFilters, rowCap,
+      PinotScan.expectedTypes(projected), jsonEq)
 }
 
-/** Scan for a pushed-down global COUNT/MIN/MAX aggregation.
+/** Scan for a pushed-down aggregation, answered as its [[AggPlan]] says:
   *
-  * `complete = true` (COUNT-only shapes): one partition emits the final
-  * single row, computed from the driver's cached per-segment doc totals —
-  * zero column I/O, no final aggregate in the plan.
+  *  - `DriverRow`: one partition emits the final single row, computed
+  *    on the driver from cached per-segment metadata — zero column I/O,
+  *    no final aggregate in the plan.
+  *  - `SegmentMeta`: each task emits one row per segment from its
+  *    metadata (key-pure groups; COUNT from doc and null counts, SUM from
+  *    writer sums, MIN/MAX from the dictionary) or, for DISTINCT, one row
+  *    per dictionary entry; the forward index is never read.
+  *  - `StarTree`: each task rolls its segments' star-tree records up to
+  *    the group columns.
+  *  - `Histogram`: each task aggregates the forward indexes over
+  *    dictionary-id (or RAW-slot) histograms, optionally keeping only a
+  *    pushed top-N of groups.
   *
-  * `complete = false`: one partition per segment; each task emits one
-  * partial row — counts from segment metadata, MIN/MAX from the segment's
-  * dictionary (cardinality entries; the forward index is never read).
-  * Spark's final aggregate merges the per-segment rows.
+  * Unless the plan is complete, Spark's final aggregate merges the
+  * per-task rows.
   */
 class PinotAggScan(segmentPaths: Seq[String], agg: Aggregation,
-    complete: Boolean, fullSchema: StructType,
-    starTree: Boolean = false, histogram: Boolean = false,
-    histFinal: Boolean = false, distinctFinal: Boolean = false,
-    splitTargetBytes: Long = PinotScan.DefaultSplitTargetBytes,
-    topN: Option[(Array[TopNKey], Int)] = None)
+    plan: AggPlan, fullSchema: StructType,
+    splitTargetBytes: Long = PinotScan.DefaultSplitTargetBytes)
     extends Scan with Batch {
 
-  private val funcs: Array[AggregateFunc] = agg.aggregateExpressions()
-  // group-by pushdown: key-pure columns, validated by the builder
-  private val groupCols: Array[String] = agg.groupByExpressions().map(
-    _.asInstanceOf[NamedReference].fieldNames()(0))
+  import PushedFunc._
 
+  // builder-validated: every function translates, every group column
+  // is a plain column
+  private val funcs: Array[PushedFunc] = PushedFunc.all(agg).get
+  private val groupCols: Array[String] =
+    agg.groupByExpressions().flatMap(fieldName)
+
+  private def colType(c: String) = fullSchema(c).dataType
+
+  // per the SupportsPushDownAggregates contract, group columns lead.
   // SUM partials carry Spark's sum result type (long for integral
-  // columns, double for fractional) so the final merge is type-exact
-  private def sumType(e: org.apache.spark.sql.connector.expressions.Expression) =
-    colType(e) match {
-      case org.apache.spark.sql.types.FloatType |
-           org.apache.spark.sql.types.DoubleType =>
-        org.apache.spark.sql.types.DoubleType
-      case _ => LongType
-    }
-
-  // per the SupportsPushDownAggregates contract, group columns lead
+  // columns, double for fractional) so the final merge is type-exact.
   override def readSchema(): StructType = StructType(
-    groupCols.map(c => StructField(c, fullSchema(c).dataType, nullable = false))
-      ++ funcs.zipWithIndex.map {
-    case (_: CountStar, i) => StructField(s"agg_$i", LongType, nullable = false)
-    case (_: Count, i) => StructField(s"agg_$i", LongType, nullable = false)
-    case (m: Min, i) => StructField(s"agg_$i", colType(m.column()), nullable = true)
-    case (m: Max, i) => StructField(s"agg_$i", colType(m.column()), nullable = true)
-    case (s: Sum, i) => StructField(s"agg_$i", sumType(s.column()), nullable = true)
-    case (_: Avg, i) => // complete pushdown only (histFinal)
-      StructField(s"agg_$i", org.apache.spark.sql.types.DoubleType, nullable = true)
-    case (f, _) => throw new IllegalStateException(s"unexpected pushed agg $f")
-  })
-
-  private def colName(e: org.apache.spark.sql.connector.expressions.Expression): String =
-    e.asInstanceOf[NamedReference].fieldNames()(0)
-
-  private def colType(e: org.apache.spark.sql.connector.expressions.Expression) =
-    fullSchema(colName(e)).dataType
+    groupCols.map(c => StructField(c, colType(c), nullable = false)) ++
+      funcs.zipWithIndex.map { case (f, i) =>
+        val dt = f match {
+          case Count(_) => LongType
+          case Min(c) => colType(c)
+          case Max(c) => colType(c)
+          case Sum(c) => colType(c) match {
+            case org.apache.spark.sql.types.FloatType |
+                 org.apache.spark.sql.types.DoubleType =>
+              org.apache.spark.sql.types.DoubleType
+            case _ => LongType
+          }
+          case Avg(_) => org.apache.spark.sql.types.DoubleType
+        }
+        StructField(s"agg_$i", dt, nullable = !f.isInstanceOf[Count])
+      })
 
   override def toBatch: Batch = this
 
-  // "complete" in the description means ANY path Spark planned with no
-  // final aggregate above the scan (metadata COUNT, histFinal histogram,
-  // single-segment single-col DISTINCT) — truthful for plan audits
-  override def description(): String =
-    s"PinotAggScan(complete=${complete || histFinal || distinctFinal}, " +
-      s"metaComplete=$complete, starTree=$starTree, " +
-      s"histogram=$histogram, histFinal=$histFinal, " +
-      s"funcs=[${funcs.mkString(", ")}], segments=${segmentPaths.length}" +
+  // "complete" means ANY path Spark planned with no final aggregate
+  // above the scan; "histFinal" a complete plan accepted by the lone-
+  // segment gate, other than the driver row and dictionary DISTINCT
+  override def description(): String = {
+    val (histFinal, topN) = plan match {
+      case AggPlan.Histogram(c, t) => (c, t)
+      case AggPlan.StarTree(c) => (c, None)
+      case AggPlan.SegmentMeta(c) => (c && funcs.nonEmpty, None)
+      case AggPlan.DriverRow => (false, None)
+    }
+    s"PinotAggScan(complete=${plan.complete}, " +
+      s"metaComplete=${plan == AggPlan.DriverRow}, " +
+      s"starTree=${plan.isInstanceOf[AggPlan.StarTree]}, " +
+      s"histogram=${plan.isInstanceOf[AggPlan.Histogram]}, " +
+      s"histFinal=$histFinal, " +
+      s"funcs=[${agg.aggregateExpressions.mkString(", ")}], " +
+      s"segments=${segmentPaths.length}" +
       topN.fold("")(t => s", pushedTopN=[limit=${t._2}, keys=" +
         t._1.map(k => s"${k.outIdx}${if (k.descending) " DESC" else ""}")
           .mkString(",") + "]") + ")"
+  }
 
   /** Histogram PARTIAL tasks read forward indexes, so they slice into
     * doc ranges like the plain scan (each slice emits its own partials;
     * Spark's final aggregate merges) — a huge lone-segment GROUP BY
-    * saturates the cluster instead of decoding on one core. The
-    * complete paths (metadata COUNT, histFinal, distinctFinal) plan no
-    * final aggregate, so normally they must stay one task —
-    * EXCEPT when the single group column is row-unique in the segment
-    * (writer-recorded exact cardinality == totalDocs, the GROUP BY
-    * doc-id / dedup-key shape): then no group can span two doc-range
+    * saturates the cluster instead of decoding on one core. A complete
+    * histogram plans no final aggregate, so normally it must stay one
+    * task — EXCEPT when the single group column is row-unique in the
+    * segment (writer-recorded exact cardinality == totalDocs, the GROUP
+    * BY doc-id / dedup-key shape): then no group can span two doc-range
     * slices, every slice's histogram rows are already final (the emit
     * loop skips zero-count slots), and the union of slices IS the
     * answer — so the merge-free plan parallelizes too. Metadata/
@@ -1075,11 +969,11 @@ class PinotAggScan(segmentPaths: Seq[String], agg: Aggregation,
     * partials then merge in the same task, and with one partition
     * Spark needs no exchange before its final aggregate.
     */
-  override def planInputPartitions(): Array[InputPartition] =
-    if (complete) Array(PinotSplit(Nil))
-    else if (histogram && !histFinal && splitTargetBytes > 0)
+  override def planInputPartitions(): Array[InputPartition] = plan match {
+    case AggPlan.DriverRow => Array(PinotSplit(Nil))
+    case AggPlan.Histogram(false, _) if splitTargetBytes > 0 =>
       PinotScan.planAggSlices(segmentPaths)
-    else if (histogram && histFinal && splitTargetBytes > 0 &&
+    case AggPlan.Histogram(true, topN) if splitTargetBytes > 0 &&
         uniqueKeyGroups &&
         // With a pushed top-N, >1 slice makes Spark's
         // TakeOrderedAndProject SHUFFLE the survivors into one partition
@@ -1089,12 +983,13 @@ class PinotAggScan(segmentPaths: Seq[String], agg: Aggregation,
         // the lone segment is strictly faster; past it, parallel slice
         // decode amortizes the stage (each slice emits ≤ k rows).
         (topN.isEmpty || segmentPaths.exists(p =>
-          PinotScan.segmentDocs(p) > PinotScan.CompleteAggMaxDocs)))
+          PinotScan.segmentDocs(p) > PinotScan.CompleteAggMaxDocs)) =>
       PinotScan.planAggSlices(segmentPaths)
-    else if (splitTargetBytes > 0 && PinotScan.fitsOneTask(segmentPaths))
+    case _ if splitTargetBytes > 0 && PinotScan.fitsOneTask(segmentPaths) =>
       Array(PinotSplit.wholeSegments(segmentPaths))
-    else segmentPaths.map(p =>
-      PinotSplit.wholeSegments(Seq(p)): InputPartition).toArray
+    case _ =>
+      segmentPaths.map(p => PinotSplit.wholeSegments(Seq(p)): InputPartition).toArray
+  }
 
   /** The lone group column's values are pairwise-distinct in every
     * segment, so doc-range slices partition the GROUPS as well as the
@@ -1116,101 +1011,148 @@ class PinotAggScan(segmentPaths: Seq[String], agg: Aggregation,
         }
     }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    if (starTree) {
-      val specs = funcs.map {
-        case _: CountStar => StarAggSpec("COUNT", "")
-        case c: Count => StarAggSpec("COUNT", "") // non-nullable ⇒ = COUNT(*)
-        case s: Sum => StarAggSpec("SUM", colName(s.column()))
-        case m: Min => StarAggSpec("MIN", colName(m.column()))
-        case m: Max => StarAggSpec("MAX", colName(m.column()))
-        case f => throw new IllegalStateException(s"unexpected star agg $f")
-      }
-      return new PinotStarTreeReaderFactory(groupCols, specs)
-    }
-    if (histogram) {
-      val specs: Array[HistAggSpec] = funcs.map {
-        case _: CountStar => HistAggSpec.HCount
-        case _: Count => HistAggSpec.HCount // builder-validated non-null
-        case s: Sum => HistAggSpec.HSum(colName(s.column()))
-        case m: Min => HistAggSpec.HMin(colName(m.column()))
-        case m: Max => HistAggSpec.HMax(colName(m.column()))
-        case a: Avg => HistAggSpec.HAvg(colName(a.column())) // histFinal only
-        case f => throw new IllegalStateException(s"unexpected hist agg $f")
-      }
-      return new PinotHistAggReaderFactory(groupCols, specs, topN,
+  override def createReaderFactory(): PartitionReaderFactory = plan match {
+    case AggPlan.StarTree(_) => new PinotStarTreeReaderFactory(groupCols, funcs)
+    case AggPlan.Histogram(_, topN) =>
+      new PinotHistAggReaderFactory(groupCols, funcs, topN,
         ansi = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
-    }
-    // complete mode: the whole answer resolves on the DRIVER from cached
-    // metadata — COUNT(*) = Σ docs, COUNT(col) = Σ (docs − nullCount),
-    // SUM/AVG from writer-recorded exact sums (builder-gated to
-    // non-nullable integral columns whose exact totals FIT IN LONG, so
-    // `.longValue` below never wraps — overflowing totals refused the
-    // push and keep Spark's own ANSI/legacy overflow semantics),
-    // MIN/MAX from the per-segment bounds.
-    if (complete) {
-      val metas = segmentPaths.map(PinotScan.segmentMeta)
-      val live = metas.filter(m => m != null && m.totalDocs > 0)
-      val docsTotal = metas.map(m => if (m == null) 0L else m.totalDocs.toLong).sum
-      def sumBig(c: String): BigInt =
-        live.foldLeft(BigInt(0))((acc, m) => acc + m.columns(c).sumValue.get)
-      def bound(c: String, isMin: Boolean): Any =
-        if (live.isEmpty) null
-        else {
-          val raw = live.map { m =>
-            val cm = m.columns(c)
-            if (isMin) cm.minValue.get else cm.maxValue.get
-          }
-          // typed reduce: float/double fold with java compare (NaN
-          // largest, matching Spark); timestamps are stored millis and
-          // surface as Catalyst micros
-          fullSchema(c).dataType match {
-            case org.apache.spark.sql.types.IntegerType =>
-              val vs = raw.map(BigInt(_))
-              (if (isMin) vs.min else vs.max).toInt
-            case org.apache.spark.sql.types.FloatType =>
-              raw.map(_.toFloat).reduce((a, b) =>
-                if ((java.lang.Float.compare(a, b) <= 0) == isMin) a else b)
-            case org.apache.spark.sql.types.DoubleType =>
-              raw.map(_.toDouble).reduce((a, b) =>
-                if ((java.lang.Double.compare(a, b) <= 0) == isMin) a else b)
-            case org.apache.spark.sql.types.TimestampType =>
-              val vs = raw.map(_.toLong)
-              Math.multiplyExact(if (isMin) vs.min else vs.max, 1000L)
-            case _ =>
-              val vs = raw.map(BigInt(_))
-              (if (isMin) vs.min else vs.max).toLong
-          }
+    case AggPlan.SegmentMeta(_) => new PinotAggReaderFactory(funcs, groupCols)
+    case AggPlan.DriverRow => new PinotDriverRowFactory(driverRow)
+  }
+
+  /** The driver-answered row, from cached metadata: COUNT(*) = Σ docs,
+    * COUNT(col) = Σ (docs − nullCount), SUM/AVG from writer-recorded
+    * exact sums (builder-gated to non-nullable integral columns whose
+    * exact totals FIT IN LONG, so `.longValue` below never wraps —
+    * overflowing totals refused the push and keep Spark's own
+    * ANSI/legacy overflow semantics), MIN/MAX from the per-segment
+    * bounds.
+    */
+  private def driverRow: Array[Any] = {
+    val metas = segmentPaths.map(PinotScan.segmentMeta)
+    val live = metas.filter(m => m != null && m.totalDocs > 0)
+    val docsTotal = metas.map(m => if (m == null) 0L else m.totalDocs.toLong).sum
+    def sumBig(c: String): BigInt =
+      live.foldLeft(BigInt(0))((acc, m) => acc + m.columns(c).sumValue.get)
+    def bound(c: String, isMin: Boolean): Any =
+      if (live.isEmpty) null
+      else {
+        val raw = live.map { m =>
+          val cm = m.columns(c)
+          if (isMin) cm.minValue.get else cm.maxValue.get
         }
-      val row: Array[Any] = funcs.map {
-        case _: CountStar => docsTotal: Any
-        case c: Count =>
-          val col = colName(c.column())
-          metas.map(m => if (m == null) 0L
-            else (m.totalDocs - m.columns.get(col).fold(0)(_.nullCount)).toLong)
-            .sum: Any
-        case s: Sum =>
-          if (live.isEmpty) null else sumBig(colName(s.column())).longValue: Any
-        case a: Avg =>
-          if (live.isEmpty) null
-          else sumBig(colName(a.column())).toDouble / docsTotal: Any
-        case m: Min => bound(colName(m.column()), isMin = true)
-        case m: Max => bound(colName(m.column()), isMin = false)
-        case f => throw new IllegalStateException(s"unexpected complete agg $f")
+        // typed reduce: float/double fold with java compare (NaN
+        // largest, matching Spark); timestamps are stored millis and
+        // surface as Catalyst micros
+        colType(c) match {
+          case org.apache.spark.sql.types.IntegerType =>
+            val vs = raw.map(BigInt(_))
+            (if (isMin) vs.min else vs.max).toInt
+          case org.apache.spark.sql.types.FloatType =>
+            raw.map(_.toFloat).reduce((a, b) =>
+              if ((java.lang.Float.compare(a, b) <= 0) == isMin) a else b)
+          case org.apache.spark.sql.types.DoubleType =>
+            raw.map(_.toDouble).reduce((a, b) =>
+              if ((java.lang.Double.compare(a, b) <= 0) == isMin) a else b)
+          case org.apache.spark.sql.types.TimestampType =>
+            val vs = raw.map(_.toLong)
+            Math.multiplyExact(if (isMin) vs.min else vs.max, 1000L)
+          case _ =>
+            val vs = raw.map(BigInt(_))
+            (if (isMin) vs.min else vs.max).toLong
+        }
       }
-      return new PinotAggReaderFactory(Array.empty, complete = true, row,
-        groupCols)
+    funcs.map {
+      case Count(c) =>
+        metas.map(m => if (m == null) 0L
+          else (m.totalDocs - m.columns.get(c).fold(0)(_.nullCount)).toLong)
+          .sum: Any
+      case Sum(c) => if (live.isEmpty) null else sumBig(c).longValue: Any
+      case Avg(c) =>
+        if (live.isEmpty) null else sumBig(c).toDouble / docsTotal: Any
+      case Min(c) => bound(c, isMin = true)
+      case Max(c) => bound(c, isMin = false)
     }
-    val specs: Array[AggSpec] = funcs.map {
-      case _: CountStar => AggSpec("", isCount = true, isMin = false)
-      case c: Count => AggSpec(colName(c.column()), isCount = true, isMin = false)
-      case m: Min => AggSpec(colName(m.column()), isCount = false, isMin = true)
-      case m: Max => AggSpec(colName(m.column()), isCount = false, isMin = false)
-      case s: Sum => AggSpec(colName(s.column()), isCount = false,
-        isMin = false, isSum = true)
-      case f => throw new IllegalStateException(s"unexpected partial agg $f")
+  }
+}
+
+/** Who answers a pushed aggregate, chosen once by the builder.
+  * `complete`: Spark accepted complete pushdown and plans no final
+  * aggregate, so the scan's rows are the answer.
+  */
+sealed trait AggPlan { def complete: Boolean }
+
+object AggPlan {
+  /** The driver computes the one final row from cached metadata. */
+  case object DriverRow extends AggPlan { val complete = true }
+  /** Each segment answers from its metadata (key-pure groups) or its
+    * dictionary (single-column DISTINCT). Complete only for a lone
+    * segment, whose rows are final.
+    */
+  final case class SegmentMeta(complete: Boolean) extends AggPlan
+  /** Each segment rolls its star-tree records up to the group columns. */
+  final case class StarTree(complete: Boolean) extends AggPlan
+  /** Each task aggregates forward indexes over group-id histograms;
+    * `topN` (sort keys over the scan's output layout, limit) keeps only
+    * the best groups, and is pushed only over a complete histogram.
+    */
+  final case class Histogram(complete: Boolean,
+      topN: Option[(Array[TopNKey], Int)] = None) extends AggPlan
+}
+
+/** One pushed aggregate function, translated once from Spark's
+  * [[AggregateFunc]]; every reader decodes this type. `Count("")` is
+  * COUNT(*); COUNT(col) reaches a reader only where its null count is
+  * known (metadata) or zero (histogram, star-tree).
+  */
+sealed trait PushedFunc {
+  def column: String
+
+  /** The star-tree metric that answers this function, if any. COUNT of
+    * a (builder-validated non-nullable) column is COUNT(*).
+    */
+  def starMetric: Option[graft.pinot.StarTree.Metric] = this match {
+    case PushedFunc.Count(_) => Some(graft.pinot.StarTree.Metric("COUNT", ""))
+    case PushedFunc.Sum(c) => Some(graft.pinot.StarTree.Metric("SUM", c))
+    case PushedFunc.Min(c) => Some(graft.pinot.StarTree.Metric("MIN", c))
+    case PushedFunc.Max(c) => Some(graft.pinot.StarTree.Metric("MAX", c))
+    case PushedFunc.Avg(_) => None
+  }
+}
+
+object PushedFunc {
+  final case class Count(column: String) extends PushedFunc
+  final case class Sum(column: String) extends PushedFunc
+  final case class Min(column: String) extends PushedFunc
+  final case class Max(column: String) extends PushedFunc
+  /** Only under complete pushdown: partial pushdown sees AVG rewritten
+    * to SUM+COUNT by Spark.
+    */
+  final case class Avg(column: String) extends PushedFunc
+
+  def fieldName(
+      e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
+    e match {
+      case nr: NamedReference if nr.fieldNames().length == 1 =>
+        Some(nr.fieldNames()(0))
+      case _ => None
     }
-    new PinotAggReaderFactory(specs, complete = false, Array.empty, groupCols)
+
+  /** None for DISTINCT variants, other functions and non-column inputs. */
+  def of(f: AggregateFunc): Option[PushedFunc] = f match {
+    case _: aggregate.CountStar => Some(Count(""))
+    case c: aggregate.Count if !c.isDistinct => fieldName(c.column()).map(Count)
+    case s: aggregate.Sum if !s.isDistinct => fieldName(s.column()).map(Sum)
+    case a: aggregate.Avg if !a.isDistinct => fieldName(a.column()).map(Avg)
+    case m: aggregate.Min => fieldName(m.column()).map(Min)
+    case m: aggregate.Max => fieldName(m.column()).map(Max)
+    case _ => None
+  }
+
+  /** Every function of `agg`, or None when one does not translate. */
+  def all(agg: Aggregation): Option[Array[PushedFunc]] = {
+    val fs = agg.aggregateExpressions.map(of)
+    if (fs.forall(_.isDefined)) Some(fs.map(_.get)) else None
   }
 }
 
@@ -1220,40 +1162,69 @@ class PinotAggScan(segmentPaths: Seq[String], agg: Aggregation,
   */
 case class TopNKey(outIdx: Int, descending: Boolean)
 
-/** A pushed single-key ORDER BY + LIMIT over a plain scan. `sorted` —
-  * the column is stored sorted in every segment, so the partition's
-  * top-k is a doc-range slice (no sort-column decode); otherwise the
-  * reader decodes the sort column, heap-selects the k best docs, and
-  * decodes the remaining columns only for those.
+/** How many rows a plain scan returns, chosen once by the builder. */
+sealed trait RowCap {
+  /** The LIMIT Spark pushed, if any (it includes a pushed offset). */
+  def pushedLimit: Option[Int] = None
+}
+
+object RowCap {
+  case object NoCap extends RowCap
+  /** Advisory, under residual filters: each range's reader stops after
+    * `limit` rows and Spark's Limit above the Filter stays authoritative.
+    */
+  final case class PerRange(limit: Int) extends RowCap {
+    override def pushedLimit: Option[Int] = Some(limit)
+  }
+  /** Fully pushed, with no filters: the split emits rows
+    * `[offset, limit)` in range order under one global budget; `limit`
+    * None is a bare OFFSET.
+    */
+  final case class Budget(offset: Int, limit: Option[Int]) extends RowCap {
+    override def pushedLimit: Option[Int] = limit
+  }
+}
+
+/** A pushed single-key ORDER BY + LIMIT over a plain scan, applied per
+  * range. `sorted` — the column is stored sorted in every segment, so
+  * the range's top-k is a doc-range slice (no sort-column decode);
+  * otherwise the reader decodes the sort column, heap-selects the k best
+  * docs, and decodes the remaining columns only for those.
   */
 case class ScanTopN(column: String, descending: Boolean, limit: Int,
-    sorted: Boolean)
+    sorted: Boolean) extends RowCap
 
-case class AggSpec(column: String, isCount: Boolean, isMin: Boolean,
-    isSum: Boolean = false)
+/** The driver-answered aggregate: one precomputed row. */
+class PinotDriverRowFactory(row: Array[Any]) extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition)
+      : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
+    PinotScan.rowReader(Iterator.single(
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        row.clone())))
+}
 
-class PinotAggReaderFactory(specs: Array[AggSpec], complete: Boolean,
-    completeVals: Array[Any], groupCols: Array[String] = Array.empty)
+/** Per-segment rows from metadata and dictionaries (`AggPlan.SegmentMeta`). */
+class PinotAggReaderFactory(funcs: Array[PushedFunc],
+    groupCols: Array[String] = Array.empty)
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
-    PinotScan.rowReader(if (complete) {
-      Iterator.single(new org.apache.spark.sql.catalyst.expressions
-        .GenericInternalRow(completeVals.clone()))
-    } else PinotScan.wholeSegmentPaths(partition).flatMap(segmentRows))
+    PinotScan.rowReader(
+      PinotScan.wholeSegmentPaths(partition).flatMap(segmentRows))
 
   /** One segment's partial rows. */
   private def segmentRows(path: String)
       : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import PushedFunc._
     val reader = SegmentReader.open(path)
     val docs = reader.metadata.totalDocs
     // every branch below materializes eagerly (dictionary arrays,
     // metadata scalars), so the channel can be released before the
     // iterator is handed to Spark — no fd outlives createReader
-    try if (groupCols.nonEmpty && specs.isEmpty) {
+    try if (groupCols.nonEmpty && funcs.isEmpty) {
       // DISTINCT pushdown: the segment's dictionary IS its distinct
       // value set (Pinot builds dictionaries from the segment's own
       // values) — emit one row per entry, never touch the forward
@@ -1281,23 +1252,21 @@ class PinotAggReaderFactory(specs: Array[AggSpec], complete: Boolean,
           case _ => UTF8String.fromString(v)
         }
       }
-      val values: Array[Any] = specs.map { s =>
-        if (s.isCount) {
-          // COUNT(col) on a nullable column: docs − nullCount (exact)
-          if (s.column.isEmpty) docs.toLong
-          else (docs - reader.metadata.columns
-            .get(s.column).fold(0)(_.nullCount)).toLong
-        }
-        else if (docs == 0) null
-        else if (s.isSum)
-          // writer-recorded exact sum, builder-gated to integral
-          // columns whose per-segment sums fit in long — Spark's
-          // final merge owns any cross-segment overflow semantics
-          reader.metadata.column(s.column).sumValue.getOrElse(
+      val values: Array[Any] = funcs.map {
+        // COUNT(col) on a nullable column: docs − nullCount (exact)
+        case Count(c) =>
+          (docs - reader.metadata.columns.get(c).fold(0)(_.nullCount)).toLong
+        case _ if docs == 0 => null
+        // writer-recorded exact sum, builder-gated to integral columns
+        // whose per-segment sums fit in long — Spark's final merge owns
+        // any cross-segment overflow semantics
+        case Sum(c) =>
+          reader.metadata.column(c).sumValue.getOrElse(
             throw new graft.pinot.PinotFormatException(
-              s"SUM pushdown without recorded sum for ${s.column}"))
-            .longValue
-        else dictMinMax(reader, s.column, s.isMin)
+              s"SUM pushdown without recorded sum for $c")).longValue
+        case Min(c) => dictMinMax(reader, c, isMin = true)
+        case Max(c) => dictMinMax(reader, c, isMin = false)
+        case f => throw new IllegalStateException(s"unexpected partial agg $f")
       }
       Iterator.single(new GenericInternalRow(keys ++ values))
     } finally reader.close()
@@ -1345,13 +1314,6 @@ class PinotAggReaderFactory(specs: Array[AggSpec], complete: Boolean,
   }
 }
 
-/** One pushed aggregate resolved against star-tree metrics: func ∈
-  * COUNT/SUM/MIN/MAX, column empty for COUNT.
-  */
-case class StarAggSpec(func: String, column: String) {
-  def metricKey: String = s"${func}__${if (column.isEmpty) "*" else column}"
-}
-
 /** Per-segment star-tree rollup: reads the pre-aggregated records, folds
   * them to the requested group columns (dims not grouped roll up — the
   * star-node semantics, executed in the task instead of materialized on
@@ -1360,7 +1322,7 @@ case class StarAggSpec(func: String, column: String) {
   * across segments. The forward index is NEVER read.
   */
 class PinotStarTreeReaderFactory(groupCols: Array[String],
-    specs: Array[StarAggSpec]) extends PartitionReaderFactory {
+    funcs: Array[PushedFunc]) extends PartitionReaderFactory {
 
   import graft.pinot.StarTree
 
@@ -1393,10 +1355,12 @@ class PinotStarTreeReaderFactory(groupCols: Array[String],
           s"star-tree of $path lacks dim $c")
         i
       }
-      val metricIdx = specs.map { s =>
-        val i = tree.metrics.indexWhere(_.key == s.metricKey)
+      val wanted = funcs.map(f => f.starMetric.getOrElse(
+        throw new IllegalStateException(s"unexpected star agg $f")))
+      val metricIdx = wanted.map { w =>
+        val i = tree.metrics.indexWhere(_.key == w.key)
         if (i < 0) throw new graft.pinot.PinotFormatException(
-          s"star-tree of $path lacks metric ${s.metricKey}")
+          s"star-tree of $path lacks metric ${w.key}")
         i
       }
       // roll leaf records up to the requested dims
@@ -1423,16 +1387,16 @@ class PinotStarTreeReaderFactory(groupCols: Array[String],
       val keyLookup: Array[Int => Any] = groupCols.map(c =>
         PinotScan.dictValueAt(reader.dictionary(c), colType(c), c))
       // metric bits → Catalyst value in the readSchema's field type
-      val valLookup: Array[Long => Any] = specs.zip(metricIdx).map {
-        case (s, mi) =>
+      val valLookup: Array[Long => Any] = wanted.zip(metricIdx).map {
+        case (w, mi) =>
           val dbl = treeDbl(mi)
-          s.func match {
+          w.func match {
             case "COUNT" => (bits: Long) => bits: Any
             case "SUM" =>
               if (dbl) (bits: Long) => java.lang.Double.longBitsToDouble(bits): Any
               else (bits: Long) => bits: Any
             case _ => // MIN/MAX surface in the column's own type
-              colType(s.column) match {
+              colType(w.column) match {
                 case PinotType.PInt => (bits: Long) => bits.toInt: Any
                 case PinotType.PLong => (bits: Long) => bits: Any
                 case PinotType.PFloat =>
@@ -1440,7 +1404,7 @@ class PinotStarTreeReaderFactory(groupCols: Array[String],
                 case PinotType.PDouble =>
                   (bits: Long) => java.lang.Double.longBitsToDouble(bits): Any
                 case other => throw new graft.pinot.PinotFormatException(
-                  s"star-tree MIN/MAX over ${other.name} column ${s.column}")
+                  s"star-tree MIN/MAX over ${other.name} column ${w.column}")
               }
           }
       }
@@ -2080,16 +2044,15 @@ case class PinotKeyedPartition(segmentPath: String,
   override def partitionKey(): org.apache.spark.sql.catalyst.InternalRow = key
 }
 
-/** Reads a split through one [[PinotChainReader]] over its ranges. With a
-  * fully pushed limit (`fullLimit`) the split's rows `[offset, limit)`
-  * come back in range order under one global budget; otherwise each
-  * range's reader applies the advisory per-range `limit`, or its top-N.
+/** Reads a split through one [[PinotChainReader]] over its ranges. Under
+  * a global budget the split's rows `[offset, limit)` come back in range
+  * order; otherwise each range's reader applies the per-range cap or its
+  * top-N.
   */
 class PinotReaderFactory(columns: Array[String], skipFilters: Array[Filter],
-    limit: Option[Int],
+    rowCap: RowCap = RowCap.NoCap,
     expectedTypes: Map[String, (PinotType, Boolean)] = Map.empty,
-    scanTopN: Option[ScanTopN] = None, offset: Option[Int] = None,
-    jsonEq: Seq[PinotScan.JsonProbe] = Nil, fullLimit: Boolean = false)
+    jsonEq: Seq[PinotScan.JsonProbe] = Nil)
     extends PartitionReaderFactory {
 
   override def supportColumnarReads(partition: InputPartition): Boolean = true
@@ -2103,13 +2066,14 @@ class PinotReaderFactory(columns: Array[String], skipFilters: Array[Filter],
       case PinotKeyedPartition(p, _) => Seq(SegmentRange.whole(p))
       case other => throw new IllegalArgumentException(s"unexpected $other")
     }
-    if (fullLimit) {
+    rowCap match {
       // pushed rows are [offset, pushedLimit): the emission budget is
       // their difference (Spark pushed limit = user limit + offset)
-      val skip = offset.getOrElse(0)
-      new PinotChainReader(ranges, plainReader,
-        Some(limit.fold(Int.MaxValue)(l => math.max(0, l - skip))), skip)
-    } else new PinotChainReader(ranges, (r, _) => rangeReader(r))
+      case RowCap.Budget(skip, limit) =>
+        new PinotChainReader(ranges, plainReader,
+          Some(limit.fold(Int.MaxValue)(l => math.max(0, l - skip))), skip)
+      case _ => new PinotChainReader(ranges, (r, _) => rangeReader(r))
+    }
   }
 
   private def plainReader(r: SegmentRange, cap: Option[Int])
@@ -2124,9 +2088,9 @@ class PinotReaderFactory(columns: Array[String], skipFilters: Array[Filter],
     * selects the k best docs and reads just those.
     */
   private def rangeReader(r: SegmentRange): PartitionReader[ColumnarBatch] =
-    scanTopN match {
-      case None => plainReader(r, limit)
-      case Some(t) =>
+    rowCap match {
+      case RowCap.PerRange(limit) => plainReader(r, Some(limit))
+      case t: ScanTopN =>
         val end =
           if (r.end == Int.MaxValue) PinotScan.segmentDocsStrict(r.path).toInt
           else r.end
@@ -2135,9 +2099,10 @@ class PinotReaderFactory(columns: Array[String], skipFilters: Array[Filter],
             PinotValueTopN.winners(r.path, t, expectedTypes, r.start, end),
             (w, _) => plainReader(w, None))
         else if (t.descending)
-          plainReader(SegmentRange(r.path, math.max(r.start, end - t.limit), end), limit)
+          plainReader(SegmentRange(r.path, math.max(r.start, end - t.limit), end), None)
         else
-          plainReader(SegmentRange(r.path, r.start, math.min(end, r.start + t.limit)), limit)
+          plainReader(SegmentRange(r.path, r.start, math.min(end, r.start + t.limit)), None)
+      case _ => plainReader(r, None)
     }
 }
 

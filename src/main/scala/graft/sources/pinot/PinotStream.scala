@@ -104,7 +104,8 @@ class PinotMicroBatchStream(tableDir: String, columns: Array[String],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PinotReaderFactory(columns, skipFilters, limit)
+    new PinotReaderFactory(columns, skipFilters,
+      limit.fold[RowCap](RowCap.NoCap)(RowCap.PerRange))
 
   override def commit(end: Offset): Unit = () // checkpoint holds the state
 

@@ -380,7 +380,8 @@ class PinotSourceSpec extends SparkTestBase {
     // strict per-segment planning so partition counts read as segment
     // counts (DPP pruning happens before split/group planning)
     def scan() = new graft.sources.pinot.PinotScan(
-      segs, schema, Array.empty, None, splitTargetBytes = 0)
+      segs, schema, Array.empty, graft.sources.pinot.RowCap.NoCap,
+      splitTargetBytes = 0)
     val s0 = scan()
     assert(s0.planInputPartitions().length === 3)
     assert(s0.filterAttributes().map(_.fieldNames().head).toSet
@@ -796,7 +797,7 @@ class PinotSourceSpec extends SparkTestBase {
     val scan = new graft.sources.pinot.PinotScan(
       Seq(s"$tablePath/seg0/v3", s"$tablePath/seg1/v3", s"$tablePath/seg2/v3"),
       spark.read.format("pinot").load(tablePath).schema,
-      Array.empty, None)
+      Array.empty, graft.sources.pinot.RowCap.NoCap)
     val stats = scan.estimateStatistics()
     assert(stats.numRows().getAsLong === n)
     assert(stats.sizeInBytes().getAsLong > 0)

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.pinot.{SegmentWriter, VarByteChunkV4}
-import graft.sources.pinot.{AggSpec, PinotAggReaderFactory, PinotReaderFactory, PinotScan, PinotSplit, PinotStarTreeReaderFactory, ScanTopN, SegmentRange, StarAggSpec}
+import graft.sources.pinot.{PinotAggReaderFactory, PinotReaderFactory, PinotScan, PinotSplit, PinotStarTreeReaderFactory, PushedFunc, RowCap, ScanTopN, SegmentRange}
 import org.apache.spark.sql.functions._
 
 /** Sub-segment task planning: large segments split into window-aligned
@@ -190,33 +190,31 @@ class SubSegmentSplitSpec extends SparkTestBase {
     val split = PinotSplit(Seq(SegmentRange(seg, 0, 8192),
       SegmentRange(seg, 16384, 24576), SegmentRange(seg, 196608, Int.MaxValue)))
     // advisory: each range's reader stops after 5 rows
-    assert(drainK(new PinotReaderFactory(Array("k"), Array.empty, Some(5)), split)
+    assert(drainK(new PinotReaderFactory(Array("k"), Array.empty, RowCap.PerRange(5)), split)
       === (0L until 5L) ++ (16384L until 16389L) ++ (196608L until 196613L))
     // fully pushed: rows [8190, 8196) of the split, the offset skip
     // crossing from the first range into the second
-    val pushed = new PinotReaderFactory(Array("k"), Array.empty, Some(8196),
-      offset = Some(8190), fullLimit = true)
+    val pushed = new PinotReaderFactory(Array("k"), Array.empty,
+      RowCap.Budget(8190, Some(8196)))
     assert(drainK(pushed, split) === Seq(8190L, 8191L, 16384L, 16385L, 16386L, 16387L))
     // an offset that skips two whole ranges lands in the open-ended one
-    val tail = new PinotReaderFactory(Array("k"), Array.empty, Some(16387),
-      offset = Some(16384), fullLimit = true)
+    val tail = new PinotReaderFactory(Array("k"), Array.empty,
+      RowCap.Budget(16384, Some(16387)))
     assert(drainK(tail, split) === Seq(196608L, 196609L, 196610L))
     // a pushed top-N reads each range's own top-k
-    val top = new PinotReaderFactory(Array("k"), Array.empty, None,
-      scanTopN = Some(ScanTopN("k", descending = true, 2, sorted = true)))
+    val top = new PinotReaderFactory(Array("k"), Array.empty,
+      ScanTopN("k", descending = true, 2, sorted = true))
     assert(drainK(top, split) === Seq(8190L, 8191L, 24574L, 24575L, 199998L, 199999L))
   }
 
   test("aggregate readers refuse a partial range") {
     val seg = s"$bigDir/seg0"
     val partial = PinotSplit(Seq(SegmentRange(seg, 0, 8192)))
-    val count = new PinotAggReaderFactory(
-      Array(AggSpec("", isCount = true, isMin = false)), complete = false,
-      Array.empty)
+    val count = new PinotAggReaderFactory(Array(PushedFunc.Count("")))
     assert(count.createReader(PinotSplit.wholeSegments(Seq(seg))).next())
     intercept[IllegalStateException](count.createReader(partial).next())
     val star = new PinotStarTreeReaderFactory(Array.empty,
-      Array(StarAggSpec("COUNT", "")))
+      Array(PushedFunc.Count("")))
     intercept[IllegalStateException](star.createReader(partial).next())
   }
 
