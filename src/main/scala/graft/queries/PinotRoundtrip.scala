@@ -406,7 +406,7 @@ object PinotRoundtrip {
 
   /** Single-segment fixture for the pushdown-INTERACTION shapes
     * (q106–q108): only a lone segment takes the COMPLETE paths
-    * (distinctFinal / histFinal, where Spark plans no final aggregate)
+    * (dictionary DISTINCT, complete histogram: no final aggregate)
     * — exactly the plan shape where r4's pushed-limit bug (Spark
     * 4.1.2's pushDownLimit deleting its own Limit above a complete
     * aggregate scan, so `distinct().limit(2)` returned every value)

@@ -170,7 +170,7 @@ class PinotHistAggReaderFactory(groupCols: Array[String],
       .flatMap(r => segmentRows(r.path, r.start, r.end)))
   }
 
-  /** One segment's partial (or, histFinal, final) rows over docs
+  /** One segment's partial (or, when complete, final) rows over docs
     * `[lo, hiReq)`, fully materialized before the reader closes.
     */
   private def segmentRows(path: String, lo: Int, hiReq: Int)

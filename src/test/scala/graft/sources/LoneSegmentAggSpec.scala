@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
 /** A one-segment table's aggregates are final as the segment answers
   * them, so Spark accepts complete pushdown through the histogram gate —
   * and the scan may then answer from metadata or the star-tree instead
-  * of the histogram. Each shape must plan no final aggregate, say which
-  * path answered, and equal the same query over a parquet copy.
+  * of the histogram (a single-column DISTINCT from the dictionary). Each
+  * shape must plan no final aggregate, say which path answered, and equal
+  * the same query over a parquet copy.
   */
 class LoneSegmentAggSpec extends SparkTestBase {
 
@@ -66,6 +67,12 @@ class LoneSegmentAggSpec extends SparkTestBase {
       min("score").as("mn"), max("score").as("mx")),
       "complete=true, metaComplete=false, starTree=true, " +
         "histogram=false, histFinal=true,")
+  }
+
+  test("single-column DISTINCT: complete, answered from the dictionary") {
+    check(_.select("team").distinct(),
+      "complete=true, metaComplete=false, starTree=false, " +
+        "histogram=false, histFinal=false,")
   }
 
   test("grouped AVG: complete histogram") {
