@@ -5,12 +5,9 @@ committed PLANS.md) modulo the ids Spark renumbers on every run.
     python3 scripts/plans_diff.py OLD NEW
 
 Expression ids (`count#24`, `sum#45L`) become `#N` (a type suffix such as
-`L` stays) and `plan_id=7` becomes `plan_id=N` before the compare. So
-does the IVF index cache directory (`graft_ivf_cache_<user>/<md5>`):
-`IvfIndex` names it by the embeddings file's path, sizes and mtimes, so
-it changes whenever the test data is regenerated. Prints a unified diff
-of whatever still differs. Exit status: 0 when the files
-are identical modulo ids, 1 when they differ, 2 on bad usage.
+`L` stays) and `plan_id=7` becomes `plan_id=N` before the compare.
+Prints a unified diff of whatever still differs. Exit status: 0 when the
+files are identical modulo ids, 1 when they differ, 2 on bad usage.
 """
 import difflib
 import re
@@ -18,14 +15,11 @@ import sys
 
 EXPR_ID = re.compile(r'#\d+')
 PLAN_ID = re.compile(r'plan_id=\d+')
-IVF_DIR = re.compile(r'graft_ivf_cache_[^/\s]+/[0-9a-f]{32}')
 
 
 def normalized(path):
     with open(path, encoding='utf-8') as f:
-        return [IVF_DIR.sub('graft_ivf_cache_USER/FINGERPRINT',
-                            PLAN_ID.sub('plan_id=N', EXPR_ID.sub('#N', line)))
-                for line in f]
+        return [PLAN_ID.sub('plan_id=N', EXPR_ID.sub('#N', line)) for line in f]
 
 
 def main(argv):
@@ -41,8 +35,7 @@ def main(argv):
                       if d[:1] in '+-' and d[:3] not in ('+++', '---'))
         print(f'plans_diff: {changed} lines differ modulo ids')
         return 1
-    print('plans_diff: identical modulo expression ids, plan_id and the '
-          'IVF cache fingerprint')
+    print('plans_diff: identical modulo expression ids and plan_id')
     return 0
 
 

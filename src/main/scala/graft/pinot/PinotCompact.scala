@@ -624,6 +624,7 @@ object PinotCompact {
     (cols, nullVectors)
   }
 
+  /** Deletes a local file or directory tree; an absent path is a no-op. */
   private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       val walk = Files.walk(p)

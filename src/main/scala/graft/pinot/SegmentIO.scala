@@ -164,15 +164,8 @@ object LocalSegmentIO extends SegmentIO {
     Files.write(path, bytes)
     ()
   }
-  override def deleteRecursively(p: String): Unit = {
-    val path = Paths.get(p)
-    if (Files.exists(path)) {
-      val walk = Files.walk(path)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.deleteIfExists(f))
-      finally walk.close()
-    }
-  }
+  override def deleteRecursively(p: String): Unit =
+    PinotCompact.deleteRecursively(Paths.get(p))
   override def rename(src: String, dst: String): Unit = {
     Files.move(Paths.get(src), Paths.get(dst))
     ()

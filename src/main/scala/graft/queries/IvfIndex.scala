@@ -1,8 +1,6 @@
 package graft.queries
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -21,11 +19,9 @@ import org.apache.spark.sql.functions._
   * never the rest of the corpus. At 100 TB this is the difference
   * between scanning everything per query and reading nprobe/k of it.
   *
-  * The index is keyed by a CORPUS FINGERPRINT (embedding parquet file
-  * names + sizes + mtimes): a changed corpus gets a fresh build, an
-  * unchanged one reuses the cached index across sessions. Builds land
-  * in a tmp dir and rename in atomically — concurrent builders race
-  * benignly (same content, first rename wins).
+  * The index is a [[FixtureCache]] entry of the sf dir: its reuse rule
+  * (owner, `_SUCCESS` with the source fingerprint) and atomic build
+  * decide when a cached index is used.
   */
 object IvfIndex {
 
@@ -46,60 +42,16 @@ object IvfIndex {
   val NProbe = 5
   val MultiAssign = 3
 
-  // per-user cache dir: a shared tmpdir root would hit permission
-  // failures across OS users and trust any pre-existing _SUCCESS dir
-  // regardless of who wrote it
-  private[graft] def cacheRoot: Path =
-    Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_ivf_cache_${sys.props.getOrElse("user.name", "unknown")}")
+  private val Family = s"ivf_v2_m$MultiAssign"
 
-  /** Reuse only index dirs this user owns (or ownership is unreadable on
-    * this filesystem — the per-user path already isolates in that case).
-    */
-  private def ownedByUs(dir: Path): Boolean =
-    try {
-      val owner = Files.getOwner(dir).getName
-      owner == sys.props.getOrElse("user.name", owner)
-    } catch { case _: Exception => true }
+  /** The dir holding one index entry per sf dir. */
+  private[graft] def cacheRoot: Path = FixtureCache.root.resolve(Family)
 
-  /** Corpus version key from file metadata (immutable-file convention,
-    * same basis as the driver's parquet fixtures): names, sizes, mtimes.
-    */
-  private def fingerprint(sfDir: String): String = {
-    val src = Paths.get(sfDir, "embeddings.parquet")
-    val parts: Seq[String] =
-      if (Files.isDirectory(src)) {
-        val listing = Files.list(src)
-        try listing.iterator().asScala.map(p =>
-          s"${p.getFileName}:${Files.size(p)}:" +
-            s"${Files.getLastModifiedTime(p).toMillis}").toSeq.sorted
-        finally listing.close()
-      } else Seq(s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}")
-    val md = java.security.MessageDigest.getInstance("MD5")
-    // format-version salt: a layout change (e.g. multi-assignment) must
-    // not reuse an index built under the old layout for the same corpus
-    md.update(s"ivf_v2_m${MultiAssign}_".getBytes("UTF-8"))
-    md.update(src.toAbsolutePath.toString.getBytes("UTF-8"))
-    parts.foreach(p => md.update(p.getBytes("UTF-8")))
-    md.digest().map(b => f"$b%02x").mkString
-  }
+  /** The index directory for `d`'s corpus, built on first use. */
+  def ensure(s: SparkSession, d: String, emb: DataFrame): Path =
+    FixtureCache.once(Family, d)(dir => build(emb, dir))
 
-  /** The index directory for `sfDir`'s embeddings, building it if this
-    * corpus version has none yet. Thread-safe within a JVM; across
-    * processes the atomic rename arbitrates.
-    */
-  def ensure(s: SparkSession, d: String, emb: DataFrame): Path = synchronized {
-    val dir = cacheRoot.resolve(fingerprint(d))
-    if (Files.exists(dir.resolve("_SUCCESS")) && ownedByUs(dir)) return dir
-    Files.createDirectories(cacheRoot)
-    val tmp = Files.createTempDirectory(cacheRoot, "build_")
-    try buildInto(s, emb, tmp, dir)
-    catch { case e: Throwable => deleteRecursively(tmp); throw e }
-  }
-
-  private def buildInto(s: SparkSession, emb: DataFrame, tmp: Path,
-      dir: Path): Path = {
-
+  private def build(emb: DataFrame, dir: Path): Unit = {
     def centroidsOf(assigned: DataFrame, key: String): DataFrame = assigned
       .select(col(key), posexplode(col("qvec")).as(Seq("pos", "v")))
       .groupBy(key, "pos").agg(avg(col("v")).as("c"))
@@ -129,17 +81,9 @@ object IvfIndex {
     val clustered = assign(cent, MultiAssign)
 
     cent.coalesce(1).write.mode("overwrite")
-      .parquet(tmp.resolve("centroids").toString)
+      .parquet(dir.resolve("centroids").toString)
     clustered.write.mode("overwrite").partitionBy("cluster")
-      .parquet(tmp.resolve("assignments").toString)
-    Files.writeString(tmp.resolve("_SUCCESS"), "")
-    try Files.move(tmp, dir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException
-           | _: java.nio.file.DirectoryNotEmptyException =>
-        deleteRecursively(tmp) // another builder won the race — same content
-    }
-    dir
+      .parquet(dir.resolve("assignments").toString)
   }
 
   def centroids(s: SparkSession, dir: Path): DataFrame =
@@ -147,7 +91,4 @@ object IvfIndex {
 
   def assignments(s: SparkSession, dir: Path): DataFrame =
     s.read.parquet(dir.resolve("assignments").toString)
-
-  private def deleteRecursively(p: Path): Unit =
-    graft.pinot.PinotCompact.deleteRecursively(p)
 }

@@ -2,6 +2,8 @@ package graft.queries
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,19 +19,22 @@ import org.apache.spark.sql.functions._
   */
 object PinotRoundtrip {
 
+  // bump when a fixture's subset or columns change: it names the
+  // FixtureCache family, so no entry built under an older layout is reused
+  private val LayoutVersion = 15 // r15: group-slice fixture gains bitmap+kmv
+
+  /** The cached fixture dir `name` built from sf dir `d` by `build`; see
+    * [[FixtureCache]] for when an entry is reused.
+    */
+  private def fixture(d: String, name: String)(build: String => Unit): String =
+    FixtureCache.once(s"pinot_rt_v$LayoutVersion", d, name)(p =>
+      build(p.toString)).toString
+
   /** Build (once per sf dir) a 3-segment Pinot table from the first
     * 30,000 lineitem rows, ordered for determinism.
     */
-  // bump when the subset/columns change — keys the /tmp cache so a stale
-  // layout from an earlier build is never reused
-  private val LayoutVersion = 15 // r15: group-slice fixture gains bitmap+kmv
-
-  private def segmentTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("lineitemPinot_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def segmentTable(s: SparkSession, d: String): String =
+    fixture(d, "lineitemPinot_OFFLINE") { tableDir =>
       Tables.load(s, d, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_quantity",
           "l_extendedprice", "l_returnflag", "l_shipdate")
@@ -50,21 +55,15 @@ object PinotRoundtrip {
           encode(concat(col("l_returnflag"), col("l_orderkey").cast("string")),
             "UTF-8").as("l_payload"))
         .repartition(3)
-        .write.format("pinot").mode("append").save(tableDir.toString)
+        .write.format("pinot").mode("append").save(tableDir)
     }
-    tableDir.toString
-  }
 
   /** MV fixture: one row per order, lineitem numbers/flags as PAIRED
     * multi-value columns (order preserved via a sorted struct collect, so
     * `arrays_zip` downstream reconstructs the original rows exactly).
     */
-  private def mvTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("lineitemMV_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def mvTable(s: SparkSession, d: String): String =
+    fixture(d, "lineitemMV_OFFLINE") { tableDir =>
       Tables.load(s, d, "lineitem")
         .groupBy("l_orderkey")
         .agg(sort_array(collect_list(struct(col("l_linenumber"),
@@ -74,21 +73,15 @@ object PinotRoundtrip {
           expr("transform(sorted, x -> x.l_linenumber)").as("lines"),
           expr("transform(sorted, x -> x.l_returnflag)").as("flags"))
         .repartition(2)
-        .write.format("pinot").mode("append").save(tableDir.toString)
+        .write.format("pinot").mode("append").save(tableDir)
     }
-    tableDir.toString
-  }
 
   /** JSON + BIG_DECIMAL fixture: events subset through the DSv2 writer
     * with `jsonColumns` (props stores as Pinot JSON) and an exact
     * integer-derived decimal column (BIG_DECIMAL storage).
     */
-  private def jsonDecTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("eventsPinot_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def jsonDecTable(s: SparkSession, d: String): String =
+    fixture(d, "eventsPinot_OFFLINE") { tableDir =>
       // props2: a second json column with VARIED document shapes so
       // IN-list and IS-NOT-NULL probes have bite — nested objects
       // (refused path), >MaxValueLen leaves (unposted path: exists
@@ -117,22 +110,16 @@ object PinotRoundtrip {
         .write.format("pinot").mode("append")
         .option("jsonColumns", "props,props2")
         .option("jsonIndexColumns", "props,props2")
-        .save(tableDir.toString)
+        .save(tableDir)
     }
-    tableDir.toString
-  }
 
   /** Nullable-column fixture (null-value vector extension): NULLs derived
     * deterministically from lineitem values, written through the DSv2
     * writer with `nullableColumns`, stored as default + RoaringBitmap
     * null vector per segment.
     */
-  private def nullableTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("lineitemNull_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def nullableTable(s: SparkSession, d: String): String =
+    fixture(d, "lineitemNull_OFFLINE") { tableDir =>
       Tables.load(s, d, "lineitem")
         .orderBy("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
         .limit(30000)
@@ -148,21 +135,15 @@ object PinotRoundtrip {
         .repartition(3)
         .write.format("pinot").mode("append")
         .option("nullableColumns", "n_qty,n_line,n_status")
-        .save(tableDir.toString)
+        .save(tableDir)
     }
-    tableDir.toString
-  }
 
   /** Inverted-index fixture: events subset with a bitmap inverted index
     * on event_type — q81's equality filter exercises posting-list window
     * skipping inside the oracle gate.
     */
-  private def indexedTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("eventsIdx_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def indexedTable(s: SparkSession, d: String): String =
+    fixture(d, "eventsIdx_OFFLINE") { tableDir =>
       Tables.load(s, d, "events")
         .orderBy("event_id")
         .limit(20000)
@@ -170,21 +151,15 @@ object PinotRoundtrip {
         .repartition(2)
         .write.format("pinot").mode("append")
         .option("invertedIndexColumns", "event_type")
-        .save(tableDir.toString)
+        .save(tableDir)
     }
-    tableDir.toString
-  }
 
   /** Bloom fixture: events subset with a HIGH-CARDINALITY digest column
     * (RAW storage — no dictionary to prune against) carrying a bloom
     * filter; point lookups exercise the bloom pruning path end-to-end.
     */
-  private def bloomTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("eventsBloom_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def bloomTable(s: SparkSession, d: String): String =
+    fixture(d, "eventsBloom_OFFLINE") { tableDir =>
       Tables.load(s, d, "events")
         .orderBy("event_id")
         .limit(20000)
@@ -194,57 +169,39 @@ object PinotRoundtrip {
         .write.format("pinot").mode("append")
         .option("bloomFilterColumns", "payload")
         .option("rangeIndexColumns", "value")
-        .save(tableDir.toString)
+        .save(tableDir)
     }
-    tableDir.toString
-  }
 
   /** v1-format fixture: the DSv2-written v3 segments CONVERTED to the
     * per-index-file v1/v2 layout (the pre-v3 format the reference
     * rejects) via [[graft.pinot.PinotCompact.convert]] — the migration
     * path real v1 segments from old Pinot clusters arrive through.
     */
-  private def v1Table(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("lineitemV1_OFFLINE")
-    if (!Files.exists(tableDir)) {
-      val src = Paths.get(segmentTable(s, d))
-      val segs = java.nio.file.Files.list(src).iterator()
-      val tmp = root.resolve("tmp_v1build")
-      while (segs.hasNext) {
-        val seg = segs.next()
+  private def v1Table(s: SparkSession, d: String): String =
+    fixture(d, "lineitemV1_OFFLINE") { tableDir =>
+      val segs = Files.list(Paths.get(segmentTable(s, d)))
+      try segs.iterator().asScala
         // segment DIRS only: skip in-flight tmp output and table-root
-        // files (the writer-maintained _graft_manifest.v1)
-        if (!seg.getFileName.toString.startsWith("tmp") &&
-            Files.isDirectory(seg))
-          graft.pinot.PinotCompact.convert(seg.toString,
-            tmp.resolve(seg.getFileName.toString).toString, formatVersion = 1)
-      }
-      Files.move(tmp, tableDir)
+        // files (the writer-maintained _graft_manifest.v1, _SUCCESS)
+        .filter(seg => !seg.getFileName.toString.startsWith("tmp") &&
+          Files.isDirectory(seg))
+        .foreach(seg => graft.pinot.PinotCompact.convert(seg.toString,
+          s"$tableDir/${seg.getFileName}", formatVersion = 1))
+      finally segs.close()
     }
-    tableDir.toString
-  }
 
   /** Text-index fixture: the documents corpus through the DSv2 writer
     * with `textIndexColumns` on the (RAW, high-cardinality) text column.
     */
-  private def textTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("documentsText_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def textTable(s: SparkSession, d: String): String =
+    fixture(d, "documentsText_OFFLINE") { tableDir =>
       Tables.load(s, d, "documents")
         .select("doc_id", "text", "lang", "n_chars")
         .repartition(2)
         .write.format("pinot").mode("append")
         .option("textIndexColumns", "text")
-        .save(tableDir.toString)
+        .save(tableDir)
     }
-    tableDir.toString
-  }
 
   /** Cased/punctuated text fixture for the v2 STANDARD-analyzer text
     * index: every 7th doc upper-cased (its folded tokens make it an
@@ -252,12 +209,8 @@ object PinotRoundtrip {
     * drop it), every remaining 5th dash-joined (punctuation splits
     * tokens where the whitespace analyzer kept one blob).
     */
-  private def textCasedTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("documentsCased_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def textCasedTable(s: SparkSession, d: String): String =
+    fixture(d, "documentsCased_OFFLINE") { tableDir =>
       Tables.load(s, d, "documents")
         .select(col("doc_id"),
           when(col("doc_id") % 7 === 0, upper(col("text")))
@@ -268,63 +221,45 @@ object PinotRoundtrip {
         .repartition(2)
         .write.format("pinot").mode("append")
         .option("textIndexColumns", "text_mod")
-        .save(tableDir.toString)
+        .save(tableDir)
     }
-    tableDir.toString
-  }
 
   /** Vector fixture: the embeddings corpus stored IN Pinot segments as
     * multi-value double columns — float32 widens exactly, so similarity
     * math over the read-back vectors is bit-identical to the parquet
     * originals.
     */
-  private def vecTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("embeddingsPinot_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def vecTable(s: SparkSession, d: String): String =
+    fixture(d, "embeddingsPinot_OFFLINE") { tableDir =>
       Tables.load(s, d, "embeddings")
         .select(col("vec_id"),
           col("embedding").cast("array<double>").as("emb"))
         .repartition(2)
-        .write.format("pinot").mode("append").save(tableDir.toString)
+        .write.format("pinot").mode("append").save(tableDir)
     }
-    tableDir.toString
-  }
 
   /** Orders fixture for the Pinot×Pinot join: the orders subset keyed by
     * the same o_orderkey domain as the lineitem fixture.
     */
-  private def ordersTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("ordersPinot_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def ordersTable(s: SparkSession, d: String): String =
+    fixture(d, "ordersPinot_OFFLINE") { tableDir =>
       Tables.load(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
         .orderBy("o_orderkey")
         .limit(10000)
         .repartition(2)
-        .write.format("pinot").mode("append").save(tableDir.toString)
+        .write.format("pinot").mode("append").save(tableDir)
     }
-    tableDir.toString
-  }
 
   /** Schema-evolution fixture: the even half of documents written BEFORE
     * the `n_chars` column existed (old segments), the odd half after —
     * both through the DSv2 writer, merged into one table dir the way
     * old segments persist through a real schema change.
     */
-  private def evolvedTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("documentsEvo_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def evolvedTable(s: SparkSession, d: String): String =
+    fixture(d, "documentsEvo_OFFLINE") { tableDir =>
       val docs = Tables.load(s, d, "documents")
-      val oldDir = root.resolve("tmp_evo_old")
+      val oldDir = Paths.get(tableDir).resolveSibling("tmp_evo_old")
       docs.filter(col("doc_id") % 2 === 0)
         .select("doc_id", "lang")
         .repartition(1)
@@ -332,17 +267,14 @@ object PinotRoundtrip {
       docs.filter(col("doc_id") % 2 === 1)
         .select("doc_id", "lang", "n_chars")
         .repartition(1)
-        .write.format("pinot").mode("append").save(tableDir.toString)
+        .write.format("pinot").mode("append").save(tableDir)
       // adopt the pre-evolution segments into the evolved table
       val it = Files.list(oldDir).iterator()
       while (it.hasNext) {
         val seg = it.next()
-        Files.move(seg, tableDir.resolve(s"old_${seg.getFileName}"))
+        Files.move(seg, Paths.get(tableDir, s"old_${seg.getFileName}"))
       }
-      Files.delete(oldDir)
     }
-    tableDir.toString
-  }
 
   /** Hybrid fixture: events under a synthetic strictly-increasing time
     * column, split into OFFLINE (first 7,000) and REALTIME (rows 5,000+)
@@ -350,12 +282,8 @@ object PinotRoundtrip {
     * realtime/offline overlap a hybrid read must dedup at the time
     * boundary.
     */
-  private def hybridRoot(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val offDir = root.resolve("eventsHybrid_OFFLINE")
-    if (!Files.exists(offDir)) {
+  private def hybridRoot(s: SparkSession, d: String): String =
+    fixture(d, "eventsHybrid") { root =>
       val e = Tables.load(s, d, "events")
         .orderBy("event_id")
         .limit(10000)
@@ -370,26 +298,19 @@ object PinotRoundtrip {
       val lo = n / 2
       e.filter(col("event_id") < hi).repartition(2)
         .write.format("pinot").mode("append")
-        .option("timeColumn", "hts").save(offDir.toString)
+        .option("timeColumn", "hts").save(s"$root/eventsHybrid_OFFLINE")
       e.filter(col("event_id") >= lo).repartition(2)
         .write.format("pinot").mode("append")
-        .option("timeColumn", "hts")
-        .save(root.resolve("eventsHybrid_REALTIME").toString)
+        .option("timeColumn", "hts").save(s"$root/eventsHybrid_REALTIME")
     }
-    root.toString
-  }
 
   /** Star-tree fixture: lineitem subset with a pre-aggregated index on
     * (l_returnflag, l_linestatus). Metrics are integer-exact (long sums,
     * double MIN/MAX) so tree pre-aggregation order can never perturb the
     * oracle hash.
     */
-  private def starTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("lineitemStar_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def starTable(s: SparkSession, d: String): String =
+    fixture(d, "lineitemStar_OFFLINE") { tableDir =>
       Tables.load(s, d, "lineitem")
         .orderBy("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
         .limit(30000)
@@ -399,10 +320,8 @@ object PinotRoundtrip {
         .write.format("pinot").mode("append")
         .option("starTree", "l_returnflag,l_linestatus:" +
           "SUM(l_orderkey),SUM(l_linenumber),MIN(l_quantity),MAX(l_quantity)")
-        .save(tableDir.toString)
+        .save(tableDir)
     }
-    tableDir.toString
-  }
 
   /** Single-segment fixture for the pushdown-INTERACTION shapes
     * (q106–q108): only a lone segment takes the COMPLETE paths
@@ -412,12 +331,8 @@ object PinotRoundtrip {
     * aggregate scan, so `distinct().limit(2)` returned every value)
     * shipped undetected because no declared query combined pushdowns.
     */
-  private def singleSegTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("lineitemSingle_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def singleSegTable(s: SparkSession, d: String): String =
+    fixture(d, "lineitemSingle_OFFLINE") { tableDir =>
       Tables.load(s, d, "lineitem")
         .orderBy("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
         .limit(30000)
@@ -427,22 +342,16 @@ object PinotRoundtrip {
           // a 50-ary dict-int group key for the pushed top-N (q116)
           col("l_quantity").cast("int").as("l_qty_i"))
         .repartition(1)
-        .write.format("pinot").mode("append").save(tableDir.toString)
+        .write.format("pinot").mode("append").save(tableDir)
     }
-    tableDir.toString
-  }
 
   /** Sketch fixture: events subset with INGESTION-TIME distinct sketches
     * (a bitmap over user_id, a kmv1024 over the 100-distinct-value props
     * column — both exact at every SF) — see
     * [[graft.pinot.SketchSection]].
     */
-  private def sketchTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("eventsSketch_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def sketchTable(s: SparkSession, d: String): String =
+    fixture(d, "eventsSketch_OFFLINE") { tableDir =>
       Tables.load(s, d, "events")
         .orderBy("event_id")
         .limit(20000)
@@ -450,10 +359,8 @@ object PinotRoundtrip {
         .repartition(3)
         .write.format("pinot").mode("append")
         .option("sketchColumns", "user_id:bitmap,props:kmv1024,value:kll32768")
-        .save(tableDir.toString)
+        .save(tableDir)
     }
-    tableDir.toString
-  }
 
   /** Rollup-sketch fixture: events subset rolled up per event_type with
     * user_id aggregated to a bitmap sketch COLUMN and props to a kmv1024
@@ -461,12 +368,8 @@ object PinotRoundtrip {
     * the model of Pinot's ingestion-time DISTINCT_COUNT_THETA_SKETCH:
     * raw rows are GONE after the rollup, grouped distincts survive.
     */
-  private def rollupSketchTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("eventsRollSk_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def rollupSketchTable(s: SparkSession, d: String): String =
+    fixture(d, "eventsRollSk_OFFLINE") { tableDir =>
       Tables.load(s, d, "events")
         .orderBy("event_id")
         .limit(20000)
@@ -474,13 +377,11 @@ object PinotRoundtrip {
           lit(1).as("cnt"))
         .repartition(3)
         .write.format("pinot").mode("append")
-        .save(tableDir.toString)
-      graft.pinot.PinotCompact.rollup(tableDir.toString,
+        .save(tableDir)
+      graft.pinot.PinotCompact.rollup(tableDir,
         dims = Seq("event_type"), metrics = Seq("cnt"),
         sketchMetrics = Map("user_id" -> "bitmap", "props" -> "kmv1024"))
     }
-    tableDir.toString
-  }
 
   /** Lambda-merge fixture: the COLD 60% of the events subset
     * (event_id % 10 < 6) segment-encoded WITH stored sketch sections on
@@ -489,12 +390,8 @@ object PinotRoundtrip {
     * limit (2^18/4 = 65536) exceeds the 20k subset cap, so the hll leg
     * is in its exact regime at every SF.
     */
-  private def lambdaTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("eventsLambda_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def lambdaTable(s: SparkSession, d: String): String =
+    fixture(d, "eventsLambda_OFFLINE") { tableDir =>
       Tables.load(s, d, "events")
         .orderBy("event_id")
         .limit(20000)
@@ -504,10 +401,8 @@ object PinotRoundtrip {
         .write.format("pinot").mode("append")
         .option("sketchColumns",
           "user_id:bitmap,props:kmv1024,value:kll32768,event_id:hll18")
-        .save(tableDir.toString)
+        .save(tableDir)
     }
-    tableDir.toString
-  }
 
   /** Time-slice fixture: the events subset with a dense integral "time"
     * column (rank of event_id, so the slice constants below hit the same
@@ -515,12 +410,8 @@ object PinotRoundtrip {
     * disjoint time spans — the daily-segment layout the time-sliced
     * stored-sketch read is for. user_id carries a stored bitmap section.
     */
-  private def timeSliceTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("eventsSlice_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def timeSliceTable(s: SparkSession, d: String): String =
+    fixture(d, "eventsSlice_OFFLINE") { tableDir =>
       val w = org.apache.spark.sql.expressions.Window.orderBy("event_id")
       Tables.load(s, d, "events")
         .orderBy("event_id")
@@ -532,10 +423,8 @@ object PinotRoundtrip {
         // kll32768 > the 20k subset cap: the sliced merge stays in its
         // exact nearest-rank regime at every SF
         .option("sketchColumns", "user_id:bitmap,value:kll32768")
-        .save(tableDir.toString)
+        .save(tableDir)
     }
-    tableDir.toString
-  }
 
   /** The lambda DELTA tier as a PINOT table (the un-sketched 40% of the
     * events subset [[lambdaTable]] leaves in parquet): two raw segments
@@ -543,12 +432,8 @@ object PinotRoundtrip {
     * merge, where today's events arrive through readStream("pinot")
     * micro-batches instead of a batch parquet read.
     */
-  private def lambdaDeltaTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("eventsLambdaDelta_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def lambdaDeltaTable(s: SparkSession, d: String): String =
+    fixture(d, "eventsLambdaDelta_OFFLINE") { tableDir =>
       Tables.load(s, d, "events")
         .orderBy("event_id")
         .limit(20000)
@@ -556,10 +441,8 @@ object PinotRoundtrip {
         .select(col("event_id"), col("user_id"), col("props"), col("value"))
         .repartition(2)
         .write.format("pinot").mode("append")
-        .save(tableDir.toString)
+        .save(tableDir)
     }
-    tableDir.toString
-  }
 
   /** Upsert fixture: the events subset as an upsert REALTIME table —
     * every event is a VERSION of its user's row (key user_id, compared
@@ -567,24 +450,18 @@ object PinotRoundtrip {
     * record per user is well-defined at every SF). Three segments so
     * versions of one key span segment boundaries.
     */
-  private def upsertTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("eventsUpsert_REALTIME")
-    if (!Files.exists(tableDir)) {
+  private def upsertTable(s: SparkSession, d: String): String =
+    fixture(d, "eventsUpsert_REALTIME") { tableDir =>
       Tables.load(s, d, "events")
         .orderBy("event_id")
         .limit(20000)
         .select(col("user_id"), col("event_id"), col("event_type"))
         .repartition(3)
         .write.format("pinot").mode("append")
-        .save(tableDir.toString)
+        .save(tableDir)
       graft.sources.pinot.PinotUpsert.configure(
-        tableDir.toString, Seq("user_id"), "event_id")
+        tableDir, Seq("user_id"), "event_id")
     }
-    tableDir.toString
-  }
 
   /** Upsert-with-deletes fixture: like [[upsertTable]] plus a delete
     * marker (Pinot's deleteRecordColumn) — every event whose event_id is
@@ -592,12 +469,8 @@ object PinotRoundtrip {
     * is such a delete disappears from the view; users whose deletes were
     * superseded stay visible.
     */
-  private def upsertDeleteTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("eventsUpsertD_REALTIME")
-    if (!Files.exists(tableDir)) {
+  private def upsertDeleteTable(s: SparkSession, d: String): String =
+    fixture(d, "eventsUpsertD_REALTIME") { tableDir =>
       Tables.load(s, d, "events")
         .orderBy("event_id")
         .limit(20000)
@@ -605,24 +478,18 @@ object PinotRoundtrip {
           (col("event_id") % 7 === 0).as("deleted"))
         .repartition(3)
         .write.format("pinot").mode("append")
-        .save(tableDir.toString)
+        .save(tableDir)
       graft.sources.pinot.PinotUpsert.configure(
-        tableDir.toString, Seq("user_id"), "event_id",
+        tableDir, Seq("user_id"), "event_id",
         deleteCol = Some("deleted"))
     }
-    tableDir.toString
-  }
 
   /** PARTIAL-upsert fixture: like [[upsertTable]] but in PARTIAL mode —
     * non-key columns merge per declared strategies instead of the whole
     * latest row winning (Pinot's partialUpsertStrategies).
     */
-  private def upsertPartialTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("eventsUpsertP_REALTIME")
-    if (!Files.exists(tableDir)) {
+  private def upsertPartialTable(s: SparkSession, d: String): String =
+    fixture(d, "eventsUpsertP_REALTIME") { tableDir =>
       Tables.load(s, d, "events")
         .orderBy("event_id")
         .limit(20000)
@@ -630,14 +497,12 @@ object PinotRoundtrip {
           col("props"), col("value"))
         .repartition(3)
         .write.format("pinot").mode("append")
-        .save(tableDir.toString)
+        .save(tableDir)
       graft.sources.pinot.PinotUpsert.configurePartial(
-        tableDir.toString, Seq("user_id"), "event_id",
+        tableDir, Seq("user_id"), "event_id",
         Map("event_type" -> "OVERWRITE", "props" -> "IGNORE",
           "value" -> "MAX"))
     }
-    tableDir.toString
-  }
 
   /** PARTIAL-upsert-with-deletes fixture: PARTIAL strategies like
     * [[upsertPartialTable]] PLUS a delete marker (every event_id
@@ -649,28 +514,21 @@ object PinotRoundtrip {
     * in the answer.
     */
   private def upsertPartialDeleteTable(s: SparkSession, d: String): String =
-    synchronized {
-      val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-      val root = Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_pinot_rt_v$LayoutVersion$key")
-      val tableDir = root.resolve("eventsUpsertPD_REALTIME")
-      if (!Files.exists(tableDir)) {
-        Tables.load(s, d, "events")
-          .orderBy("event_id")
-          .limit(20000)
-          .select(col("user_id"), col("event_id"), col("event_type"),
-            col("value"), (col("event_id") % 7 === 0).as("deleted"),
-            lit(1).as("cnt"))
-          .repartition(3)
-          .write.format("pinot").mode("append")
-          .save(tableDir.toString)
-        graft.sources.pinot.PinotUpsert.configurePartial(
-          tableDir.toString, Seq("user_id"), "event_id",
-          Map("event_type" -> "OVERWRITE", "value" -> "MAX",
-            "cnt" -> "INCREMENT"),
-          deleteCol = Some("deleted"))
-      }
-      tableDir.toString
+    fixture(d, "eventsUpsertPD_REALTIME") { tableDir =>
+      Tables.load(s, d, "events")
+        .orderBy("event_id")
+        .limit(20000)
+        .select(col("user_id"), col("event_id"), col("event_type"),
+          col("value"), (col("event_id") % 7 === 0).as("deleted"),
+          lit(1).as("cnt"))
+        .repartition(3)
+        .write.format("pinot").mode("append")
+        .save(tableDir)
+      graft.sources.pinot.PinotUpsert.configurePartial(
+        tableDir, Seq("user_id"), "event_id",
+        Map("event_type" -> "OVERWRITE", "value" -> "MAX",
+          "cnt" -> "INCREMENT"),
+        deleteCol = Some("deleted"))
     }
 
   /** Upsert-compaction fixture: the q161 version history COMPACTED
@@ -678,25 +536,19 @@ object PinotRoundtrip {
     * build time: the raw storage holds one winning row per user, the
     * view answers identically to the uncompacted twin.
     */
-  private def upsertCompactTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("eventsUpsertC_REALTIME")
-    if (!Files.exists(tableDir)) {
+  private def upsertCompactTable(s: SparkSession, d: String): String =
+    fixture(d, "eventsUpsertC_REALTIME") { tableDir =>
       Tables.load(s, d, "events")
         .orderBy("event_id")
         .limit(20000)
         .select(col("user_id"), col("event_id"), col("event_type"))
         .repartition(3)
         .write.format("pinot").mode("append")
-        .save(tableDir.toString)
+        .save(tableDir)
       graft.sources.pinot.PinotUpsert.configure(
-        tableDir.toString, Seq("user_id"), "event_id")
-      graft.sources.pinot.PinotUpsert.compact(s, tableDir.toString)
+        tableDir, Seq("user_id"), "event_id")
+      graft.sources.pinot.PinotUpsert.compact(s, tableDir)
     }
-    tableDir.toString
-  }
 
   /** Heavy-hitters fixture: the events subset with an ingestion-time
     * `freq256` (Misra–Gries) section over the ~100-distinct-value props
@@ -705,12 +557,8 @@ object PinotRoundtrip {
     * ≪ 256 at every SF, so no MG decrement ever fires and merged stored
     * counts equal true counts — the DuckDB oracle hash-checks them.
     */
-  private def freqSliceTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("eventsFreq_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def freqSliceTable(s: SparkSession, d: String): String =
+    fixture(d, "eventsFreq_OFFLINE") { tableDir =>
       val w = org.apache.spark.sql.expressions.Window.orderBy("event_id")
       Tables.load(s, d, "events")
         .orderBy("event_id")
@@ -720,10 +568,8 @@ object PinotRoundtrip {
         .repartitionByRange(4, col("ts_ms"))
         .write.format("pinot").mode("append")
         .option("sketchColumns", "props:freq256")
-        .save(tableDir.toString)
+        .save(tableDir)
     }
-    tableDir.toString
-  }
 
   /** Rollup-HLL fixture: events subset rolled up per event_type with
     * user_id aggregated to an hll16 sketch COLUMN — Pinot's
@@ -732,36 +578,26 @@ object PinotRoundtrip {
     * (2^16/4 = 16384) at every test SF, so the merged estimates are
     * EXACT and the DuckDB oracle hash-checks them.
     */
-  private def rollupHllTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("eventsRollHll_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def rollupHllTable(s: SparkSession, d: String): String =
+    fixture(d, "eventsRollHll_OFFLINE") { tableDir =>
       Tables.load(s, d, "events")
         .orderBy("event_id")
         .limit(20000)
         .select(col("event_type"), col("user_id"), lit(1).as("cnt"))
         .repartition(3)
         .write.format("pinot").mode("append")
-        .save(tableDir.toString)
-      graft.pinot.PinotCompact.rollup(tableDir.toString,
+        .save(tableDir)
+      graft.pinot.PinotCompact.rollup(tableDir,
         dims = Seq("event_type"), metrics = Seq("cnt"),
         sketchMetrics = Map("user_id" -> "hll16"))
     }
-    tableDir.toString
-  }
 
   /** Rollup-KLL fixture: integer-cents event values rolled up per
     * event_type with the cents column aggregated to a kll32768 sketch
     * column — Pinot's PERCENTILE_KLL as a MergeRollupTask aggregation.
     */
-  private def rollupKllTable(s: SparkSession, d: String): String = synchronized {
-    val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_pinot_rt_v$LayoutVersion$key")
-    val tableDir = root.resolve("eventsRollKll_OFFLINE")
-    if (!Files.exists(tableDir)) {
+  private def rollupKllTable(s: SparkSession, d: String): String =
+    fixture(d, "eventsRollKll_OFFLINE") { tableDir =>
       Tables.load(s, d, "events")
         .orderBy("event_id")
         .limit(20000)
@@ -770,13 +606,11 @@ object PinotRoundtrip {
           lit(1).as("cnt"))
         .repartition(3)
         .write.format("pinot").mode("append")
-        .save(tableDir.toString)
-      graft.pinot.PinotCompact.rollup(tableDir.toString,
+        .save(tableDir)
+      graft.pinot.PinotCompact.rollup(tableDir,
         dims = Seq("event_type"), metrics = Seq("cnt"),
         sketchMetrics = Map("cents" -> "kll32768"))
     }
-    tableDir.toString
-  }
 
   /** Grouped-time-slice fixture pair — the two-tier layout
     * MergeRollupTask produces in production: COLD buckets (a dense
@@ -786,58 +620,49 @@ object PinotRoundtrip {
     * every row with ts > 600. Constants sit under the 1000-event sf0.001
     * floor so every SF exercises the same outside/inside/raw split.
     */
-  private def groupSliceTables(s: SparkSession, d: String): (String, String) =
-    synchronized {
-      val key = Paths.get(d).toAbsolutePath.toString.replaceAll("[^a-zA-Z0-9]", "_")
-      val root = Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_pinot_rt_v$LayoutVersion$key")
-      val coldDir = root.resolve("eventsGroupCold_OFFLINE")
-      val rawDir = root.resolve("eventsGroupRaw_OFFLINE")
-      if (!Files.exists(coldDir)) {
-        def deleteRec(p: java.nio.file.Path): Unit = {
-          if (Files.isDirectory(p)) Files.list(p).forEach(deleteRec(_))
-          Files.deleteIfExists(p)
-        }
-        val w = org.apache.spark.sql.expressions.Window.orderBy("event_id")
-        val base = Tables.load(s, d, "events")
-          .orderBy("event_id")
-          .limit(20000)
-          .select(col("event_id"), col("event_type"), col("user_id"),
-            col("props"),
-            expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-          .withColumn("ts_ms", row_number().over(w).cast("long"))
-        Files.createDirectories(coldDir)
-        (0 until 6).foreach { b =>
-          val lo = b * 100L + 1
-          val build = root.resolve("eventsGroupBuild_OFFLINE")
-          base.filter(col("ts_ms").between(lo, lo + 99))
-            .select(col("event_type"), lit(lo).as("bucket_start"),
-              col("user_id"), col("props"), col("cents"), lit(1).as("cnt"),
-              // the same base columns under a second name so the rollup
-              // can carry a SECOND sketch kind over them (one spec per
-              // column): bitmap (exact distinct) + kmv (bottom-k theta)
-              col("user_id").as("uid_bm"), col("props").as("props_kmv"))
-            .coalesce(1)
-            .write.format("pinot").mode("append")
-            .save(build.toString)
-          val seg = graft.pinot.PinotCompact.rollup(build.toString,
-            dims = Seq("event_type", "bucket_start"), metrics = Seq("cnt"),
-            sketchMetrics = Map("user_id" -> "hll16", "cents" -> "kll32768",
-              "props" -> "freq256", "uid_bm" -> "bitmap",
-              "props_kmv" -> "kmv1024"))
-          Files.move(seg, coldDir.resolve(s"bucket$b"))
-          deleteRec(build)
-        }
-        base.filter(col("ts_ms") > 600L)
-          .select(col("event_type"), col("ts_ms"), col("user_id"),
-            col("props"), col("cents"),
+  private def groupSliceTables(s: SparkSession, d: String): (String, String) = {
+    val dir = fixture(d, "eventsGroup") { root =>
+      val w = org.apache.spark.sql.expressions.Window.orderBy("event_id")
+      val base = Tables.load(s, d, "events")
+        .orderBy("event_id")
+        .limit(20000)
+        .select(col("event_id"), col("event_type"), col("user_id"),
+          col("props"),
+          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+        .withColumn("ts_ms", row_number().over(w).cast("long"))
+      val coldDir =
+        Files.createDirectories(Paths.get(root, "eventsGroupCold_OFFLINE"))
+      (0 until 6).foreach { b =>
+        val lo = b * 100L + 1
+        val build = Paths.get(root, "eventsGroupBuild_OFFLINE")
+        base.filter(col("ts_ms").between(lo, lo + 99))
+          .select(col("event_type"), lit(lo).as("bucket_start"),
+            col("user_id"), col("props"), col("cents"), lit(1).as("cnt"),
+            // the same base columns under a second name so the rollup
+            // can carry a SECOND sketch kind over them (one spec per
+            // column): bitmap (exact distinct) + kmv (bottom-k theta)
             col("user_id").as("uid_bm"), col("props").as("props_kmv"))
-          .repartitionByRange(2, col("ts_ms"))
+          .coalesce(1)
           .write.format("pinot").mode("append")
-          .save(rawDir.toString)
+          .save(build.toString)
+        val seg = graft.pinot.PinotCompact.rollup(build.toString,
+          dims = Seq("event_type", "bucket_start"), metrics = Seq("cnt"),
+          sketchMetrics = Map("user_id" -> "hll16", "cents" -> "kll32768",
+            "props" -> "freq256", "uid_bm" -> "bitmap",
+            "props_kmv" -> "kmv1024"))
+        Files.move(seg, coldDir.resolve(s"bucket$b"))
+        graft.pinot.PinotCompact.deleteRecursively(build)
       }
-      (coldDir.toString, rawDir.toString)
+      base.filter(col("ts_ms") > 600L)
+        .select(col("event_type"), col("ts_ms"), col("user_id"),
+          col("props"), col("cents"),
+          col("user_id").as("uid_bm"), col("props").as("props_kmv"))
+        .repartitionByRange(2, col("ts_ms"))
+        .write.format("pinot").mode("append")
+        .save(s"$root/eventsGroupRaw_OFFLINE")
     }
+    (s"$dir/eventsGroupCold_OFFLINE", s"$dir/eventsGroupRaw_OFFLINE")
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // GROUPED time-sliced distinct ("distinct users last N days PER

@@ -242,35 +242,22 @@ object SketchDedup {
     * streaming orders files by modification time, so with
     * maxFilesPerTrigger=1 wave k IS batch k deterministically, which is
     * what lets the growing regime (q175) carry a sequential DuckDB
-    * oracle. Reuse is gated on a completion SENTINEL written last (not
-    * on the root dir, which exists from the first write onward): a
-    * crash mid-build leaves no sentinel, and the next run wipes the
-    * partial cache and rebuilds instead of silently under-flagging.
+    * oracle. The fixture is a [[FixtureCache]] entry of `d`, reused
+    * under that cache's one rule.
     */
   private def fixture(s: SparkSession, d: String, docs: DataFrame,
-      incoming: DataFrame): (String, String, String) = synchronized {
-    val key = java.nio.file.Paths.get(d).toAbsolutePath.toString
-      .replaceAll("[^a-zA-Z0-9]", "_")
-    val root = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_neardup_v3$key")
-    val sentinel = root.resolve("_graft_cache_complete")
-    val b = root.resolve("corpus_buckets")
-    val in = root.resolve("incoming")
-    val waves = root.resolve("incoming_waves")
-    if (!java.nio.file.Files.exists(sentinel)) {
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.delete)
-      }
+      incoming: DataFrame): (String, String, String) = {
+    val root = FixtureCache.once("neardup_v3", d) { dir =>
+      val in = dir.resolve("incoming")
+      val waves = dir.resolve("incoming_waves")
       val corpus = docs.filter(col("doc_id") % 10 < 8)
       bandsOver(corpus).write.mode("overwrite")
-        .parquet(b.resolve("ingest_batch=-1").toString)
+        .parquet(dir.resolve("corpus_buckets/ingest_batch=-1").toString)
       incoming.repartition(4).write.mode("overwrite").parquet(in.toString)
       java.nio.file.Files.createDirectories(waves)
       val t0 = java.nio.file.Files.getLastModifiedTime(in).toMillis
       (0 until 4).foreach { k =>
-        val stage = root.resolve(s"wave_stage_$k")
+        val stage = dir.resolve(s"wave_stage_$k")
         incoming.filter(col("doc_id") % 4 === k).coalesce(1)
           .write.mode("overwrite").parquet(stage.toString)
         val part = {
@@ -286,9 +273,9 @@ object SketchDedup {
           java.nio.file.attribute.FileTime.fromMillis(t0 + k * 2000L))
         graft.pinot.PinotCompact.deleteRecursively(stage)
       }
-      java.nio.file.Files.createFile(sentinel)
     }
-    (b.toString, in.toString, waves.toString)
+    def at(sub: String) = root.resolve(sub).toString
+    (at("corpus_buckets"), at("incoming"), at("incoming_waves"))
   }
 
   /** Copy the seed bucket partition into a run-private bucket table —
@@ -372,10 +359,6 @@ object SketchDedup {
     // maintained by ingest) — cache them per source dir like the pinot
     // fixtures, so repeated runs measure the stream dedup itself, not a
     // corpus rebuild; checkpoint + flag output stay fresh per run.
-    // Reuse is gated on a completion SENTINEL written last (not on the
-    // root dir, which exists from the first write onward): a crash
-    // mid-build leaves no sentinel, and the next run wipes the partial
-    // cache and rebuilds instead of silently under-flagging.
     val (bucketRoot, inDir, _) = fixture(s, d, docs, incoming)
     val work = java.nio.file.Files.createTempDirectory("q172_neardup")
     val flaggedDir = work.resolve("flagged").toString

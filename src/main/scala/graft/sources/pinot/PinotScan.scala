@@ -2361,6 +2361,7 @@ class PinotColumnarReader(segmentPath: String, columns: Array[String],
     slice: Option[(Int, Int)] = None,
     jsonEq: Seq[PinotScan.JsonProbe] = Nil)
     extends PartitionReader[ColumnarBatch] {
+  import PinotColumnarReader._
 
   private val BatchSize = 8192
 
@@ -2936,43 +2937,6 @@ class PinotColumnarReader(segmentPath: String, columns: Array[String],
     * exception: Spark's `getBoolean` never consults a dictionary.
     * TIMESTAMP converts millis→micros once at dictionary decode.
     */
-  // Every plan decodes PER WINDOW from a cached compact form (packed id
-  // bits / compressed var-byte sections) — per-task heap is O(window +
-  // dictionaries), not O(segment), which is what lets 1 GB segments scan
-  // under executor memory.
-  private sealed trait ColPlan { def sparkType: org.apache.spark.sql.types.DataType }
-  private final case class DictBacked(tpe: PinotType, dict: Dictionary,
-      idReader: graft.pinot.FixedBitReader) extends ColPlan {
-    def sparkType = tpe.sparkType
-  }
-  private final case class BoolDirect(dictInts: Array[Int],
-      idReader: graft.pinot.FixedBitReader) extends ColPlan {
-    def sparkType = org.apache.spark.sql.types.BooleanType
-  }
-  /** RAW var-byte column: one window of values materializes at a time (a
-    * chunk straddling a window boundary decompresses at most twice).
-    */
-  private final class RawWindowed(val tpe: PinotType,
-      val v4: graft.pinot.VarByteChunkV4) extends ColPlan {
-    def sparkType = tpe.sparkType
-  }
-  /** RAW fixed-byte NUMERIC column (extension — the reference rejects
-    * these): windows bulk-copy straight into the vector's primitive
-    * arrays, no dictionary at all.
-    */
-  private final class NumRawWindowed(val tpe: PinotType,
-      val fb: graft.pinot.FixedByteChunkV4) extends ColPlan {
-    def sparkType = tpe.sparkType
-  }
-  /** Multi-value column: the full offsets array (4 bytes/doc) + windowed
-    * entry-id decode into a dictionary-backed CHILD vector.
-    */
-  private final case class MVBacked(tpe: PinotType, dict: Dictionary,
-      idReader: graft.pinot.FixedBitReader, offsets: Array[Int]) extends ColPlan {
-    def sparkType =
-      org.apache.spark.sql.types.ArrayType(tpe.sparkType, containsNull = false)
-  }
-
   private lazy val decoded: Array[ColPlan] =
     columns.map { name =>
       // SCHEMA EVOLUTION: a column this (older) segment does not carry
@@ -3211,6 +3175,45 @@ class PinotColumnarReader(segmentPath: String, columns: Array[String],
   override def close(): Unit = {
     try reader.close() catch { case _: Throwable => () }
     if (started) batch.close()
+  }
+}
+
+object PinotColumnarReader {
+  // Every plan decodes PER WINDOW from a cached compact form (packed id
+  // bits / compressed var-byte sections) — per-task heap is O(window +
+  // dictionaries), not O(segment), which is what lets 1 GB segments scan
+  // under executor memory.
+  private sealed trait ColPlan { def sparkType: org.apache.spark.sql.types.DataType }
+  private final case class DictBacked(tpe: PinotType, dict: Dictionary,
+      idReader: graft.pinot.FixedBitReader) extends ColPlan {
+    def sparkType = tpe.sparkType
+  }
+  private final case class BoolDirect(dictInts: Array[Int],
+      idReader: graft.pinot.FixedBitReader) extends ColPlan {
+    def sparkType = org.apache.spark.sql.types.BooleanType
+  }
+  /** RAW var-byte column: one window of values materializes at a time (a
+    * chunk straddling a window boundary decompresses at most twice).
+    */
+  private final class RawWindowed(val tpe: PinotType,
+      val v4: graft.pinot.VarByteChunkV4) extends ColPlan {
+    def sparkType = tpe.sparkType
+  }
+  /** RAW fixed-byte NUMERIC column (extension — the reference rejects
+    * these): windows bulk-copy straight into the vector's primitive
+    * arrays, no dictionary at all.
+    */
+  private final class NumRawWindowed(val tpe: PinotType,
+      val fb: graft.pinot.FixedByteChunkV4) extends ColPlan {
+    def sparkType = tpe.sparkType
+  }
+  /** Multi-value column: the full offsets array (4 bytes/doc) + windowed
+    * entry-id decode into a dictionary-backed CHILD vector.
+    */
+  private final case class MVBacked(tpe: PinotType, dict: Dictionary,
+      idReader: graft.pinot.FixedBitReader, offsets: Array[Int]) extends ColPlan {
+    def sparkType =
+      org.apache.spark.sql.types.ArrayType(tpe.sparkType, containsNull = false)
   }
 }
 

@@ -3,7 +3,8 @@ package graft.sources.pinot
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
 
-import graft.pinot.{PinotFormatException, SegmentWriter, StarTree, VarByteChunkV4}
+import graft.pinot.{PinotCompact, PinotFormatException, SegmentWriter, StarTree,
+  VarByteChunkV4}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
@@ -141,7 +142,7 @@ class PinotBatchWrite(path: String, tableName: String, schema: StructType,
         segs.foreach { case (tmp, segName) =>
           val src = Paths.get(tmp)
           val visible = src.resolveSibling(segName)
-          if (Files.exists(visible)) PinotWriteUtil.deleteRecursively(src)
+          if (Files.exists(visible)) PinotCompact.deleteRecursively(src)
           else if (Files.exists(src)) Files.move(src, visible)
           else throw new PinotFormatException(
             s"commit: neither $src nor $visible exists")
@@ -154,16 +155,8 @@ class PinotBatchWrite(path: String, tableName: String, schema: StructType,
     messages.foreach {
       case PinotCommitMessage(segs, _) =>
         segs.foreach { case (t, _) =>
-          PinotWriteUtil.deleteRecursively(Paths.get(t)) }
+          PinotCompact.deleteRecursively(Paths.get(t)) }
       case _ => ()
-    }
-}
-
-object PinotWriteUtil {
-  def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.deleteIfExists(f))
     }
 }
 
@@ -533,7 +526,7 @@ class PinotDataWriter(path: String, tableName: String, schema: StructType,
     // in-progress output; dedup happens at commit on the deterministic
     // seg_ name. Reclaim only THIS attempt's own leftover (re-entry).
     val tmpDir = Paths.get(path, s"tmp_${suffix}_t$taskId")
-    PinotWriteUtil.deleteRecursively(tmpDir)
+    PinotCompact.deleteRecursively(tmpDir)
     val cols = schema.fields.zipWithIndex.map { case (f, i) =>
       def vals[T]: Seq[T] = rows.map(r => buffers(i)(r).asInstanceOf[T])
       // dictionaries pay off only when values repeat; high-cardinality
@@ -630,7 +623,7 @@ class PinotDataWriter(path: String, tableName: String, schema: StructType,
     */
   override def abort(): Unit =
     flushed.foreach { case (t, _) =>
-      PinotWriteUtil.deleteRecursively(Paths.get(t)) }
+      PinotCompact.deleteRecursively(Paths.get(t)) }
 
   override def close(): Unit = ()
 }
