@@ -21,7 +21,9 @@ import graft.pinot.PinotCompact.deleteRecursively
   * relative path, size and mtime). Otherwise the entry is rebuilt in a
   * fresh temp dir under the root, `_SUCCESS` is written last, the invalid
   * entry is deleted and the new one moves in with one atomic rename. A
-  * killed build so leaves only an orphaned temp dir that nothing reads.
+  * killed build so leaves only an orphaned temp dir that nothing reads;
+  * the temp dir's name carries the building JVM's pid, and the next build
+  * in any process deletes the temp dirs whose pid is no longer alive.
   * `synchronized` orders builds within a JVM; across processes the
   * rename arbitrates, and a loser uses the winner's entry once it passes
   * the same rule. A root or entry owned by another user fails loudly.
@@ -49,7 +51,9 @@ object FixtureCache {
     if (reusable(entry, fp)) return entry
     Files.createDirectories(entry.getParent)
     requireOwned(root)
-    val tmp = Files.createTempDirectory(root, s"build_${family}_")
+    reclaimDeadBuilds()
+    val tmp = Files.createTempDirectory(root,
+      s"build_${family}_${ProcessHandle.current().pid()}_")
     try {
       val stage = tmp.resolve(entry.getFileName)
       build(stage)
@@ -62,6 +66,22 @@ object FixtureCache {
       }
       entry
     } finally deleteRecursively(tmp)
+  }
+
+  private val BuildDir = "build_.+_(\\d{1,18})_\\d+".r
+
+  /** Deletes the temp dirs of builds whose JVM is gone: a killed build's
+    * partial output. A temp dir without a pid in its name is kept.
+    */
+  private def reclaimDeadBuilds(): Unit = {
+    val ls = Files.list(root)
+    try ls.iterator().asScala.foreach { p =>
+      p.getFileName.toString match {
+        case BuildDir(pid) if ProcessHandle.of(pid.toLong).isEmpty =>
+          deleteRecursively(p)
+        case _ =>
+      }
+    } finally ls.close()
   }
 
   private def reusable(entry: Path, fp: String): Boolean =

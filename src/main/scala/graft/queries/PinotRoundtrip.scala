@@ -21,7 +21,7 @@ object PinotRoundtrip {
 
   // bump when a fixture's subset or columns change: it names the
   // FixtureCache family, so no entry built under an older layout is reused
-  private val LayoutVersion = 15 // r15: group-slice fixture gains bitmap+kmv
+  private val LayoutVersion = 16 // evolved table: segments only, fresh manifest
 
   /** The cached fixture dir `name` built from sf dir `d` by `build`; see
     * [[FixtureCache]] for when an entry is reused.
@@ -268,12 +268,15 @@ object PinotRoundtrip {
         .select("doc_id", "lang", "n_chars")
         .repartition(1)
         .write.format("pinot").mode("append").save(tableDir)
-      // adopt the pre-evolution segments into the evolved table
+      // adopt the pre-evolution segment dirs (not the old table's own
+      // manifest) and list them in the evolved table's manifest
       val it = Files.list(oldDir).iterator()
       while (it.hasNext) {
         val seg = it.next()
-        Files.move(seg, Paths.get(tableDir, s"old_${seg.getFileName}"))
+        if (Files.isDirectory(seg))
+          Files.move(seg, Paths.get(tableDir, s"old_${seg.getFileName}"))
       }
+      graft.pinot.TableManifest.refresh(Paths.get(tableDir))
     }
 
   /** Hybrid fixture: events under a synthetic strictly-increasing time

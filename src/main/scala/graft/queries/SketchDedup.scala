@@ -1,7 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.Files
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Sketch-based near-duplicate detection: MinHash+LSH and SimHash.
   *
@@ -123,8 +129,9 @@ object SketchDedup {
     * recomputes the family independently), so stream-side bands join
     * corpus-side stored buckets meaningfully. Docs under 3 words have no shingles
     * and produce no bands (same rule as [[graft.functions.ShingleGen]]).
+    * The `carry` columns of `docs` ride along on every band row.
     */
-  private[graft] def bandsOver(docs: DataFrame): DataFrame =
+  private[graft] def bandsOver(docs: DataFrame, carry: String*): DataFrame =
     docs
       .filter(size(split(col("text"), " ")) >= 3)
       .withColumn("shingles", expr(
@@ -140,7 +147,33 @@ object SketchDedup {
       .withColumn("sig", md5(concat_ws(",", expr(
         s"transform(slice(sig_vec, band * $RowsPerBand + 1, $RowsPerBand)," +
           " x -> CAST(x AS STRING))"))))
-      .select(col("doc_id"), col("band"), col("sig"))
+      .select((Seq("doc_id", "band", "sig") ++ carry).map(col): _*)
+
+  private val BandSchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("band", IntegerType), StructField("sig", StringType)))
+  private val FlagSchema = StructType(Seq(StructField("doc_id", LongType)))
+
+  /** Input bytes one near-dup trigger admits when no file cap is given.
+    * The file source admits whole files, so a wave is never split, and
+    * the batch's bands, held on the driver, stay bounded.
+    */
+  private val MaxBytesPerTrigger = 64L << 20
+
+  /** The bucket table as batch `batchId` sees it: the seed partition and
+    * the survivors of earlier batches. The schema is given, so the read
+    * runs no inference job.
+    */
+  private[graft] def bucketsBefore(s: SparkSession, bucketRoot: String,
+      batchId: Long): DataFrame =
+    s.read.schema(BandSchema.add("ingest_batch", IntegerType))
+      .parquet(bucketRoot)
+      .filter(col("ingest_batch") < batchId)
+
+  /** A batch's (doc_id, band, sig) rows, held on the driver, as a local
+    * frame: the broadcast build side of [[flaggedAgainst]].
+    */
+  private[graft] def heldBands(s: SparkSession, rows: Seq[Row]): DataFrame =
+    s.createDataFrame(rows.asJava, BandSchema)
 
   /** The per-batch candidate check, INVERTED so the corpus-sized side
     * never shuffles: the corpus bucket scan (band, sig only — column
@@ -163,15 +196,50 @@ object SketchDedup {
       .select("doc_id")
       .distinct()
 
+  /** One pass over a growing batch's band rows (doc_id, band, sig,
+    * wave_ts, wave_path) in wave order: file mtime, then path, the order
+    * in which the file source admits files. A doc is flagged when the
+    * corpus check hit it (`hits`) or when it shares a (band, sig) pair
+    * with a survivor of an earlier wave of this batch; docs of one wave
+    * never see each other. Returns the flagged ids and the survivors'
+    * (doc_id, band, sig) rows.
+    */
+  private def inWaveOrder(held: Array[Row],
+      hits: Set[Long]): (Set[Long], Seq[Row]) = {
+    val seen = mutable.HashSet.empty[(Int, String)]
+    val flagged = mutable.HashSet.empty[Long] ++= hits
+    val survivors = mutable.ArrayBuffer.empty[Row]
+    held.groupBy(r => (r.getLong(3), r.getString(4))).toSeq.sortBy(_._1)
+      .foreach { case (_, wave) =>
+        val (dups, fresh) = wave.groupBy(_.getLong(0)).partition {
+          case (id, rows) =>
+            hits(id) || rows.exists(r => seen((r.getInt(1), r.getString(2))))
+        }
+        flagged ++= dups.keys
+        fresh.valuesIterator.flatten.foreach { r =>
+          seen += ((r.getInt(1), r.getString(2)))
+          survivors += Row(r.getLong(0), r.getInt(1), r.getString(2))
+        }
+      }
+    (flagged.toSet, survivors.toSeq)
+  }
+
   /** Drains one AvailableNow pass of the near-dup stream: incoming docs
-    * are banded STATELESSLY in the streaming query ([[bandsOver]]);
-    * each micro-batch's bands are checked against the standing bucket
-    * table ([[flaggedAgainst]]) and the flagged ids appended to
-    * `flaggedDir`. With `grow = true` the batch ALSO appends its
-    * non-duplicate docs' bands to the bucket table as an
-    * `ingest_batch=<id>` partition — the corpus grows as the crawl
-    * lands, so later docs dedup against earlier SURVIVORS, not just the
-    * seed corpus. Crash-retry safety: the bucket read prunes to
+    * are banded STATELESSLY in the streaming query ([[bandsOver]]), each
+    * band row tagged with its wave (the file it came from). A trigger
+    * admits at most [[MaxBytesPerTrigger]] of whole files, so a small
+    * backlog drains in one micro-batch. Each batch collects its bands
+    * once, checks them against the standing bucket table in one job
+    * ([[flaggedAgainst]] over [[heldBands]]) and appends the flagged ids
+    * to `flaggedDir`. With `grow = true` the corpus grows as the crawl
+    * lands: [[inWaveOrder]] walks the batch's waves in file order, so
+    * wave k dedups against the seed corpus plus the SURVIVORS of waves
+    * < k (earlier batches through the table, earlier waves of this batch
+    * through a driver-side set), and the batch's survivors are written
+    * once as the `ingest_batch=<id>` partition. The answer is the same at
+    * any batch split; `maxFilesPerTrigger = Some(1)` runs one wave per
+    * batch, the reference shape specs compare against.
+    * Crash-retry safety: the bucket read prunes to
     * `ingest_batch < batchId`, so a half-written partition from a
     * failed attempt of the SAME batch can never flag a doc against its
     * own bands; the partition write is mode-overwrite on a
@@ -184,48 +252,42 @@ object SketchDedup {
     * table) — the read path is layout-agnostic either way.
     */
   private[graft] def runNearDup(s: SparkSession, inDir: String,
-      incomingSchema: org.apache.spark.sql.types.StructType,
+      incomingSchema: StructType,
       bucketRoot: String, ckptDir: String, flaggedDir: String,
       grow: Boolean, timeoutMs: Long = 300000,
       maxFilesPerTrigger: Option[Int] = None): Unit = {
-    // Batch granularity is a THROUGHPUT knob, not a semantics knob,
-    // unless grow = true: growing runs must see one ingest wave per
-    // batch (wave k dedups against survivors of waves < k), so they
-    // pass maxFilesPerTrigger = 1. Non-growing runs flag against a
-    // FIXED corpus — the flag set is identical at any batch split —
-    // so they drain everything available in ONE batch and pay the
-    // micro-batch machinery (offset log, commit log, per-batch planning
-    // + broadcast + parquet commit) once instead of once per file
-    // (guide §1.2: remove passes that compute nothing new).
+    // the file source refuses both caps at once
     val reader = s.readStream.schema(incomingSchema)
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
-    val q = bandsOver(reader.parquet(inDir))
+    maxFilesPerTrigger match {
+      case Some(n) => reader.option("maxFilesPerTrigger", n.toString)
+      case None => reader.option("maxBytesPerTrigger", MaxBytesPerTrigger.toString)
+    }
+    val docs = reader.parquet(inDir)
+      .select(col("doc_id"), col("text"),
+        unix_micros(col("_metadata.file_modification_time")).as("wave_ts"),
+        col("_metadata.file_path").as("wave_path"))
+    def write(rows: Iterable[Row], schema: StructType) =
+      s.createDataFrame(rows.toSeq.asJava, schema).coalesce(1).write
+    val q = bandsOver(docs, "wave_ts", "wave_path")
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", ckptDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (bands0: DataFrame, batchId: Long) =>
-        // Growing batches consume `bands` twice (the broadcast build
-        // and the survivor append) — persist the micro-batch-sized
-        // frame so the shingle→minhash→band projection runs once per
-        // batch, not once per consumer (guide §5: cache only reused
-        // AND expensive-to-recompute frames; a micro-batch is both).
-        val bands = if (grow) bands0.persist() else bands0
-        val buckets = s.read.parquet(bucketRoot)
-          .filter(col("ingest_batch") < batchId)
-        val flagged = flaggedAgainst(buckets, bands).persist()
-        try {
-          flagged.write.mode("append").parquet(flaggedDir)
-          if (grow) {
-            bands.join(flagged, Seq("doc_id"), "left_anti")
-              .select("doc_id", "band", "sig")
-              .write.mode("overwrite")
+      .foreachBatch { (bands: DataFrame, batchId: Long) =>
+        // the broadcast would ship these rows to the driver anyway
+        val held = bands.collect()
+        if (held.nonEmpty) {
+          val hits = flaggedAgainst(bucketsBefore(s, bucketRoot, batchId),
+            heldBands(s, held.toSeq.map(r =>
+              Row(r.getLong(0), r.getInt(1), r.getString(2)))))
+            .collect().map(_.getLong(0)).toSet
+          val (flagged, survivors) =
+            if (grow) inWaveOrder(held, hits) else (hits, Nil)
+          if (flagged.nonEmpty)
+            write(flagged.map(Row(_)), FlagSchema).mode("append").parquet(flaggedDir)
+          if (grow)
+            write(survivors, BandSchema).mode("overwrite")
               .parquet(s"$bucketRoot/ingest_batch=$batchId")
-          }
-        } finally {
-          flagged.unpersist()
-          if (grow) bands.unpersist()
         }
         ()
       }
@@ -238,12 +300,12 @@ object SketchDedup {
     * band buckets as the bucket table's `ingest_batch=-1` seed
     * partition, the incoming docs landed as 4 parquet files (the
     * micro-batch feed), and the SAME incoming docs split into 4 WAVE
-    * files by `doc_id % 4` with strictly increasing mtimes — file-source
-    * streaming orders files by modification time, so with
-    * maxFilesPerTrigger=1 wave k IS batch k deterministically, which is
-    * what lets the growing regime (q175) carry a sequential DuckDB
-    * oracle. The fixture is a [[FixtureCache]] entry of `d`, reused
-    * under that cache's one rule.
+    * files by `doc_id % 4` with strictly increasing mtimes — the file
+    * source admits files in mtime order and [[runNearDup]] checks waves
+    * in that order, so wave k is checked after waves < k
+    * deterministically, which is what lets the growing regime (q175)
+    * carry a sequential DuckDB oracle. The fixture is a [[FixtureCache]]
+    * entry of `d`, reused under that cache's one rule.
     */
   private def fixture(s: SparkSession, d: String, docs: DataFrame,
       incoming: DataFrame): (String, String, String) = {
@@ -254,22 +316,21 @@ object SketchDedup {
       bandsOver(corpus).write.mode("overwrite")
         .parquet(dir.resolve("corpus_buckets/ingest_batch=-1").toString)
       incoming.repartition(4).write.mode("overwrite").parquet(in.toString)
-      java.nio.file.Files.createDirectories(waves)
-      val t0 = java.nio.file.Files.getLastModifiedTime(in).toMillis
+      Files.createDirectories(waves)
+      val t0 = Files.getLastModifiedTime(in).toMillis
       (0 until 4).foreach { k =>
         val stage = dir.resolve(s"wave_stage_$k")
         incoming.filter(col("doc_id") % 4 === k).coalesce(1)
           .write.mode("overwrite").parquet(stage.toString)
         val part = {
-          import scala.jdk.CollectionConverters._
-          val ls = java.nio.file.Files.list(stage)
+          val ls = Files.list(stage)
           try ls.iterator().asScala
             .find(_.getFileName.toString.endsWith(".parquet")).get
           finally ls.close()
         }
         val dest = waves.resolve(f"wave_$k%02d.parquet")
-        java.nio.file.Files.move(part, dest)
-        java.nio.file.Files.setLastModifiedTime(dest,
+        Files.move(part, dest)
+        Files.setLastModifiedTime(dest,
           java.nio.file.attribute.FileTime.fromMillis(t0 + k * 2000L))
         graft.pinot.PinotCompact.deleteRecursively(stage)
       }
@@ -286,71 +347,46 @@ object SketchDedup {
     */
   private def copySeedBuckets(base: String, dest: java.nio.file.Path): Unit = {
     val src = java.nio.file.Paths.get(base)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(src)
+    val walk = Files.walk(src)
     try walk.iterator().asScala.foreach { p =>
       val to = dest.resolve(src.relativize(p).toString)
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(to)
+      if (Files.isDirectory(p))
+        Files.createDirectories(to)
       else
-        try java.nio.file.Files.createLink(to, p)
+        try Files.createLink(to, p)
         catch { case _: java.io.IOException =>
-          java.nio.file.Files.copy(p, to); ()
+          Files.copy(p, to); ()
         }
       ()
     } finally walk.close()
-  }
-
-  /** STREAMING near-dup with the GROWING corpus (the production ingest
-    * regime; q172's fixed-corpus twin): each wave's survivors join the
-    * bucket table before the next wave arrives, so wave k dedups
-    * against the seed corpus PLUS the survivors of waves < k — and
-    * nothing else (flagged docs never enter the table; docs within one
-    * wave never see each other). Wave→batch order is deterministic (see
-    * [[fixture]]), so the DuckDB oracle replays the same four-step
-    * sequence with chained CTEs. The bucket table is copied per run
-    * from the cached seed (the run mutates it); the stream itself is
-    * the same checkpointed AvailableNow pipeline as q172 with
-    * `grow = true`.
-    */
-  private[graft] def streamNearDupGrow(s: SparkSession, d: String): DataFrame = {
-    val docs = graft.Tables.load(s, d, "documents")
-    val incoming = docs.filter(col("doc_id") % 10 >= 8)
-      .select(col("doc_id"), col("text"))
-    val (seedBuckets, _, wavesDir) = fixture(s, d, docs, incoming)
-    val work = java.nio.file.Files.createTempDirectory("q175_neardup")
-    val bucketRoot = work.resolve("buckets")
-    copySeedBuckets(seedBuckets, bucketRoot)
-    val flaggedDir = work.resolve("flagged").toString
-    incoming.select("doc_id").limit(0).write.parquet(flaggedDir) // schema seed
-    runNearDup(s, wavesDir, incoming.schema, bucketRoot.toString,
-      work.resolve("ckpt").toString, flaggedDir, grow = true,
-      maxFilesPerTrigger = Some(1)) // wave k IS batch k — see [[fixture]]
-    val flagged = s.read.parquet(flaggedDir).distinct()
-      .withColumnRenamed("doc_id", "f_id")
-    incoming.select(col("doc_id"))
-      .join(flagged, col("doc_id") === col("f_id"), "left")
-      .select(col("doc_id"), col("f_id").isNotNull.as("near_dup"))
-      .orderBy("doc_id")
   }
 
   /** STREAMING near-dup against a stored corpus — the production
     * LLM-pipeline shape batch q49 does not cover: "flag each INCOMING
     * crawl doc that near-duplicates the EXISTING corpus". The corpus's
     * LSH band buckets are persisted once as the `ingest_batch=-1` seed
-    * partition of the bucket table (and, with [[runNearDup]]'s
-    * `grow = true` ingest mode, grow per-batch as surviving docs land);
-    * each micro-batch of incoming docs computes its bands statelessly
-    * ([[bandsOver]]) and its (band, sig) pairs BROADCAST into a join
-    * the corpus-sized bucket scan streams through ([[flaggedAgainst]])
-    * — a doc sharing any band bucket with the corpus is a candidate
-    * duplicate, and the corpus side crosses no exchange at any scale.
-    * State: NONE (the join is per-batch against the standing table, the
-    * banding per-row) — restart- and grow-proven in StreamNearDupSpec.
-    * This query runs the non-growing regime so the DuckDB oracle
-    * (incoming vs the fixed corpus) stays exact.
+    * partition of the bucket table; each micro-batch of incoming docs
+    * computes its bands statelessly ([[bandsOver]]) and its (band, sig)
+    * pairs BROADCAST into a join the corpus-sized bucket scan streams
+    * through ([[flaggedAgainst]]) — a doc sharing any band bucket with
+    * the corpus is a candidate duplicate, and the corpus side crosses no
+    * exchange at any scale. State: NONE (the join is per-batch against
+    * the standing table, the banding per-row) — restart- and
+    * grow-proven in StreamNearDupSpec.
+    *
+    * `grow = false` (q172) drains the 4 landed incoming files against
+    * the fixed corpus, so the DuckDB oracle (incoming vs the corpus) is
+    * exact. `grow = true` (q175, the production ingest regime) drains
+    * the 4 wave files and each wave's survivors join the bucket table:
+    * wave k dedups against the seed corpus PLUS the survivors of waves
+    * < k — and nothing else (flagged docs never enter the table; docs
+    * within one wave never see each other). The wave order is
+    * deterministic (see [[fixture]]), so the DuckDB oracle replays the
+    * same four-step sequence with chained CTEs; the bucket table is
+    * copied per run from the cached seed, since the run mutates it.
     */
-  private[graft] def streamNearDup(s: SparkSession, d: String): DataFrame = {
+  private[graft] def streamNearDup(s: SparkSession, d: String,
+      grow: Boolean): DataFrame = {
     val docs = graft.Tables.load(s, d, "documents")
     val incoming = docs.filter(col("doc_id") % 10 >= 8)
       .select(col("doc_id"), col("text"))
@@ -359,13 +395,19 @@ object SketchDedup {
     // maintained by ingest) — cache them per source dir like the pinot
     // fixtures, so repeated runs measure the stream dedup itself, not a
     // corpus rebuild; checkpoint + flag output stay fresh per run.
-    val (bucketRoot, inDir, _) = fixture(s, d, docs, incoming)
-    val work = java.nio.file.Files.createTempDirectory("q172_neardup")
-    val flaggedDir = work.resolve("flagged").toString
-    incoming.select("doc_id").limit(0).write.parquet(flaggedDir) // schema seed
-    runNearDup(s, inDir, incoming.schema, bucketRoot,
-      work.resolve("ckpt").toString, flaggedDir, grow = false)
-    val flagged = s.read.parquet(flaggedDir).distinct()
+    val (seedBuckets, inDir, wavesDir) = fixture(s, d, docs, incoming)
+    val work = Files.createTempDirectory(if (grow) "q175_neardup" else "q172_neardup")
+    val bucketRoot =
+      if (!grow) seedBuckets
+      else {
+        val own = work.resolve("buckets")
+        copySeedBuckets(seedBuckets, own)
+        own.toString
+      }
+    val flaggedDir = Files.createDirectories(work.resolve("flagged")).toString
+    runNearDup(s, if (grow) wavesDir else inDir, incoming.schema, bucketRoot,
+      work.resolve("ckpt").toString, flaggedDir, grow)
+    val flagged = s.read.schema(FlagSchema).parquet(flaggedDir).distinct()
       .withColumnRenamed("doc_id", "f_id")
     incoming.select(col("doc_id"))
       .join(flagged, col("doc_id") === col("f_id"), "left")
@@ -381,16 +423,16 @@ object SketchDedup {
     // Streaming near-dup of the incoming crawl (doc_id % 10 >= 8)
     // against the stored corpus bucket table (doc_id % 10 < 8): every
     // incoming doc flagged iff it shares an LSH band bucket with some
-    // corpus doc — stateless banding per micro-batch + a stream-static
-    // left-semi join, drained AvailableNow. The DuckDB oracle recomputes
+    // corpus doc — stateless banding per micro-batch + a per-batch
+    // broadcast join, drained AvailableNow. The DuckDB oracle recomputes
     // the same md5 permutation family over both sides.
-    "q172_stream_neardup_corpus" -> ((s, d) => streamNearDup(s, d)),
+    "q172_stream_neardup_corpus" -> ((s, d) => streamNearDup(s, d, grow = false)),
 
     // The GROWING-corpus regime (production ingest): four deterministic
     // incoming waves drain through the same checkpointed stream with
     // grow = true — wave k is flagged against the seed corpus plus the
     // SURVIVORS of waves < k; the oracle replays the sequence in DuckDB.
-    "q175_stream_neardup_grow" -> ((s, d) => streamNearDupGrow(s, d)),
+    "q175_stream_neardup_grow" -> ((s, d) => streamNearDup(s, d, grow = true)),
 
     // SimHash: 64-bit sign-aggregated token hash; banded bucket join;
     // near-dups = hamming distance <= 7. Token hashes come from the
@@ -484,7 +526,7 @@ object SketchDedup {
     // the growing regime replayed sequentially: wave k (doc_id % 4 = k
     // of the incoming docs) flags against corpus bands ∪ the bands of
     // SURVIVING docs of waves < k — four chained steps, matching the
-    // deterministic wave→batch order of the fixture
+    // deterministic wave order of the fixture
     "q175_stream_neardup_grow" ->
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS words
         |           FROM documents),

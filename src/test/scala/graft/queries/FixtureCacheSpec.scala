@@ -175,4 +175,22 @@ class FixtureCacheSpec extends AnyFunSuite {
       assert(buildDirs("spec_race").isEmpty)
     }
   }
+
+  test("a build reclaims the temp dirs of dead JVMs and keeps a live JVM's") {
+    withFamily("spec_reclaim") { src =>
+      val exited = new ProcessBuilder("true").start()
+      exited.waitFor()
+      val dead = Files.createDirectories(
+        root.resolve(s"build_spec_reclaim_${exited.pid()}_1"))
+      Files.writeString(dead.resolve("partial"), "half")
+      val live = Files.createDirectories(
+        root.resolve(s"build_spec_reclaim_${ProcessHandle.current().pid()}_2"))
+      val n = new AtomicInteger
+      FixtureCache.once("spec_reclaim", src.toString, "t")(counting(n))
+      assert(n.get === 1)
+      assert(!Files.exists(dead))
+      assert(Files.exists(live))
+      assert(buildDirs("spec_reclaim") === Seq(live))
+    }
+  }
 }

@@ -28,6 +28,8 @@ import org.apache.spark.sql.functions._
   *  - With `grow = true` (the production ingest mode) surviving docs'
   *    bands join the bucket table per batch, so wave-2 docs must dedup
   *    against wave-1 SURVIVORS — and only survivors — across a restart.
+  *  - One micro-batch holding several waves gives the answer of one
+  *    wave per batch: the batch's waves are checked in file order.
   */
 class StreamNearDupSpec extends SparkTestBase {
 
@@ -174,5 +176,96 @@ class StreamNearDupSpec extends SparkTestBase {
       .distinct().as[(Long, Long)].collect().toSet
     assert(buckets === Set((-1L, 1L), (0L, 100L), (1L, 201L)),
       s"bucket table partitions diverged: $buckets")
+  }
+
+  test("per-batch join over driver-held bands: broadcast, no exchange " +
+      "under the join, corpus scan pruned") {
+    val work = java.nio.file.Files.createTempDirectory("neardup_held_plan")
+    val bucketRoot = work.resolve("buckets").toString
+    SketchDedup.bandsOver(Seq((1L, "alpha beta gamma delta epsilon zeta"))
+      .toDF("doc_id", "text")).write.parquet(s"$bucketRoot/ingest_batch=-1")
+    // the shape runNearDup builds: the fixed-schema bucket read and the
+    // batch's bands collected once and held as a local frame
+    val held = SketchDedup.bandsOver(
+      Seq((100L, "alpha beta gamma delta epsilon zeta"),
+        (101L, "one two three four five six")).toDF("doc_id", "text"))
+      .collect().toSeq
+    val flagged = SketchDedup.flaggedAgainst(
+      SketchDedup.bucketsBefore(spark, bucketRoot, 0L),
+      SketchDedup.heldBands(spark, held))
+    assert(flagged.as[Long].collect().toSet === Set(100L))
+    val plan = flagged.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val joinSubtree = allNodes(plan).collectFirst {
+      case j: BroadcastHashJoinExec => allNodes(j)
+    }.getOrElse(fail(s"expected a BroadcastHashJoin, got:\n$plan"))
+    assert(!joinSubtree.exists(_.isInstanceOf[ShuffleExchangeLike]),
+      s"corpus bucket side must cross no exchange:\n$plan")
+    val scans = joinSubtree.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.nonEmpty, s"no corpus scan under the join:\n$plan")
+    scans.foreach { s =>
+      val out = s.output.map(_.name).toSet
+      assert(out.subsetOf(Set("band", "sig", "ingest_batch")),
+        s"corpus scan must prune to (band, sig), read: $out")
+    }
+  }
+
+  test("grow mode: waves drained in one batch flag and keep exactly what " +
+      "one wave per batch does") {
+    val corpusText = "alpha beta gamma delta epsilon zeta eta theta"
+    val novelA = "red orange yellow green blue indigo violet pink"
+    val novelB = "sun moon star cloud rain snow wind storm"
+    val novelC = "oak pine birch maple cedar willow elm ash"
+    // wave 0: two identical novel docs (both survive, they never see
+    // each other) and a corpus copy; waves 1 and 2 copy earlier survivors
+    val waves = Seq(
+      Seq((10L, novelA), (11L, novelA), (12L, corpusText)),
+      Seq((20L, novelA), (21L, novelB)),
+      Seq((30L, novelB), (31L, novelC), (32L, novelA)))
+    val work = java.nio.file.Files.createTempDirectory("neardup_waves")
+    val inDir = work.resolve("incoming")
+    java.nio.file.Files.createDirectories(inDir)
+    val t0 = System.currentTimeMillis() - 60000L
+    waves.zipWithIndex.foreach { case (docs, k) =>
+      val stage = work.resolve(s"stage_$k").toString
+      docs.toDF("doc_id", "text").coalesce(1).write.parquet(stage)
+      val part = new java.io.File(stage).listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath
+      val dest = inDir.resolve(f"wave_$k%02d.parquet")
+      java.nio.file.Files.move(part, dest)
+      java.nio.file.Files.setLastModifiedTime(dest,
+        java.nio.file.attribute.FileTime.fromMillis(t0 + k * 2000L))
+    }
+    val schema = Seq((0L, "")).toDF("doc_id", "text").schema
+    /** Flags, and (ingest_batch, doc_id) of the bucket table, of one run. */
+    def run(name: String, maxFiles: Option[Int]) = {
+      val bucketRoot = work.resolve(s"buckets_$name").toString
+      SketchDedup.bandsOver(Seq((1L, corpusText)).toDF("doc_id", "text"))
+        .write.parquet(s"$bucketRoot/ingest_batch=-1")
+      val flaggedDir = work.resolve(s"flagged_$name").toString
+      Seq.empty[Long].toDF("doc_id").write.parquet(flaggedDir)
+      SketchDedup.runNearDup(spark, inDir.toString, schema, bucketRoot,
+        work.resolve(s"ckpt_$name").toString, flaggedDir, grow = true,
+        timeoutMs = 120000, maxFilesPerTrigger = maxFiles)
+      val flagged = spark.read.parquet(flaggedDir).as[Long].collect().toSet
+      val buckets = spark.read.parquet(bucketRoot)
+        .select(col("ingest_batch").cast("long"), col("doc_id"))
+        .distinct().as[(Long, Long)].collect().toSet
+      (flagged, buckets)
+    }
+    val (batchFlags, batchBuckets) = run("batch", None)
+    val (waveFlags, waveBuckets) = run("wave", Some(1))
+    assert(waveFlags === Set(12L, 20L, 30L, 32L),
+      s"one wave per batch flagged $waveFlags")
+    assert(batchFlags === waveFlags)
+    assert(batchBuckets.map(_._2) === waveBuckets.map(_._2))
+    assert(batchBuckets.map(_._2) === Set(1L, 10L, 11L, 21L, 31L))
+    // the batched run drained all three waves in its one batch 0
+    assert(batchBuckets.map(_._1) === Set(-1L, 0L))
+    assert(waveBuckets.map(_._1) === Set(-1L, 0L, 1L, 2L))
   }
 }
