@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types._
 
 /** Loaders for the driver-generated parquet testdata (TESTDATA.md).
   *
@@ -8,11 +9,43 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * parquet DataSource V2 gives column pruning + predicate pushdown for
   * free, mirroring how the reference delegates its scan to DataFusion
   * (reference: datafusion-pinot/src/table.rs:158-170).
+  *
+  * Every table but `events` is read with its declared schema, so a load
+  * plans no schema-merge job (~65 ms a call); SchemaDriftSpec checks
+  * each declared schema against the one Spark infers from the files.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** The schemas Spark infers from the testdata files, in file column
+    * order; `events` is absent (see [[load]]). */
+  val schemas: Map[String, StructType] = {
+    def t(fields: (String, DataType)*) =
+      StructType(fields.map { case (n, dt) => StructField(n, dt) })
+    val (i, l, d, s, ts) =
+      (IntegerType, LongType, DoubleType, StringType, TimestampNTZType)
+    Map(
+      "region" -> t("r_regionkey" -> i, "r_name" -> s),
+      "nation" -> t("n_nationkey" -> i, "n_name" -> s, "n_regionkey" -> i),
+      "customer" -> t("c_custkey" -> l, "c_name" -> s, "c_nationkey" -> i,
+        "c_acctbal" -> d, "c_mktsegment" -> s),
+      "supplier" -> t("s_suppkey" -> l, "s_name" -> s, "s_nationkey" -> i,
+        "s_acctbal" -> d),
+      "part" -> t("p_partkey" -> l, "p_name" -> s, "p_brand" -> s,
+        "p_type" -> s, "p_size" -> i, "p_retailprice" -> d),
+      "orders" -> t("o_orderkey" -> l, "o_custkey" -> l, "o_orderstatus" -> s,
+        "o_totalprice" -> d, "o_orderdate" -> ts, "o_orderpriority" -> s),
+      "lineitem" -> t("l_orderkey" -> l, "l_partkey" -> l, "l_suppkey" -> l,
+        "l_linenumber" -> i, "l_quantity" -> d, "l_extendedprice" -> d,
+        "l_discount" -> d, "l_tax" -> d, "l_returnflag" -> s,
+        "l_linestatus" -> s, "l_shipdate" -> ts),
+      "documents" -> t("doc_id" -> l, "text" -> s, "lang" -> s,
+        "source" -> s, "n_chars" -> l),
+      "embeddings" -> t("vec_id" -> l, "embedding" -> ArrayType(FloatType),
+        "label" -> i))
+  }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") {
@@ -28,7 +61,6 @@ object Tables {
       //    window/watermark code and the DuckDB oracle expect LTZ.
       //  - TimestampType      → already what we want.
       import org.apache.spark.sql.functions.{col, expr}
-      import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$sfDir/$name.parquet")
       raw.schema("ts").dataType match {
@@ -45,7 +77,7 @@ object Tables {
               "vintage; teach Tables.load to normalize it to TimestampType")
       }
     } else {
-      spark.read.parquet(s"$sfDir/$name.parquet")
+      spark.read.schema(schemas(name)).parquet(s"$sfDir/$name.parquet")
     }
   }
 

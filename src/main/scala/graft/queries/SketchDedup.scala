@@ -34,9 +34,10 @@ import org.apache.spark.sql.types._
   *   row per (doc, band);
   * - bucket join: self-join on (band, signature) — only docs sharing a
   *   band signature meet, so the join output is ~candidates, not n²;
-  * - verification: shingle sets are re-joined ONLY for docs that appear
-  *   in some candidate pair (semi-join first), keeping the exact-Jaccard
-  *   check linear in candidates.
+  * - verification: each candidate pair joins its two docs' shingle-set
+  *   rows (collected by the signature aggregate) and intersects them
+  *   ([[TextOps.verified]], shared with q41/q73) — linear in
+  *   candidates, no shingle self-join, no pair-count aggregate.
   */
 object SketchDedup {
 
@@ -44,12 +45,12 @@ object SketchDedup {
   private val Bands = 16 // 16 bands × 4 rows → s-curve threshold ≈ 0.5
   private val RowsPerBand = NumPerms / Bands
 
-  /** Per-doc 64-perm MinHash signature as ONE array row: each shingle
-    * yields its 64 permutation hashes as an array; the custom
-    * element-wise-min aggregate (map-side combinable) folds them — no 64×
-    * posexplode, no (doc, perm) shuffle blowup. `neutral` picks the
-    * md5-derived DuckDB-expressible family (the oracled default) vs the
-    * xxhash64 fast path — identical pipeline shape either way.
+  /** Per-doc 64-perm MinHash signature and shingle set as ONE row
+    * (doc_id, sig_vec, ss, n): each shingle yields its 64 permutation
+    * hashes as an array; the custom element-wise-min aggregate (map-side
+    * combinable) folds them — no 64× posexplode, no (doc, perm) shuffle
+    * blowup. `neutral` picks the md5-derived DuckDB-expressible family
+    * (the oracled default) vs the xxhash64 fast path.
     */
   private[queries] def signatures(s: SparkSession, d: String,
       neutral: Boolean = true): DataFrame =
@@ -63,59 +64,39 @@ object SketchDedup {
           graft.functions.SketchExprs.minhashPerms(col("shingle"), NumPerms))
       .groupBy("doc_id")
       .agg(graft.functions.ArrayLongReduceAgg.arrayMinAgg(col("perms"))
-        .as("sig_vec"))
+        .as("sig_vec"), collect_list(col("shingle")).as("ss"))
+      .withColumn("n", size(col("ss")))
 
   /** The full MinHash+LSH pipeline (banding → bucket join → exact
-    * verification at J>=0.8); `neutral` selects the hash family.
+    * verification at J>=0.8 by [[TextOps.verified]] over the full
+    * shingle sets); `neutral` selects the hash family.
     */
   private[graft] def lshPairs(s: SparkSession, d: String,
       neutral: Boolean): DataFrame = {
-      val bandSigs = signatures(s, d, neutral)
-        .withColumn("band", explode(expr(s"sequence(0, ${Bands - 1})")))
-        // md5 of the comma-joined band slice: engine-neutral (DuckDB:
-        // md5(string_agg(mv, ',' ORDER BY i))), still one small value
-        // per (doc, band)
-        .withColumn("sig", md5(concat_ws(",", expr(
-          s"transform(slice(sig_vec, band * $RowsPerBand + 1, $RowsPerBand)," +
-            " x -> CAST(x AS STRING))"))))
-        .select("doc_id", "band", "sig")
-      // The candidate set is REUSED three times below (both endpoint
-      // projections of candDocs + the final left-semi), and each use
-      // re-ran the banding self-join + distinct (~0.2 s apiece at
-      // sf0.1 — exchange reuse only saves the signature partials, not
-      // the band/md5/join work above them). Candidates are tiny by
-      // construction (LSH survivors), so materialize ONCE and let all
-      // three consumers read the cached blocks; localCheckpoint also
-      // truncates the 40-node lineage the three plans each re-optimized
-      // (guide §5 / §3.3 on materializing reused intermediates).
-      val cand = bandSigs.as("a")
-        .join(bandSigs.as("b"),
-          col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .distinct()
-        .localCheckpoint()
-      // verify candidates with exact Jaccard over shingles of ONLY the
-      // docs that appear in candidates
-      val candDocs = cand.select(col("id_a").as("doc_id"))
-        .union(cand.select(col("id_b").as("doc_id"))).distinct()
-      val sh = TextOps.shingles(s, d)
-        .join(candDocs, Seq("doc_id"), "left_semi")
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      sh.as("a")
-        .join(sh.as("b"),
-          col("a.shingle") === col("b.shingle") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .agg(count(lit(1)).as("inter"))
-        .join(cand, Seq("id_a", "id_b"), "left_semi")
-        .join(sizes.as("za"), col("id_a") === col("za.doc_id"))
-        .join(sizes.as("zb"), col("id_b") === col("zb.doc_id"))
-        .withColumn("un", col("za.n") + col("zb.n") - col("inter"))
-        .filter(col("inter") * 10 >= col("un") * 8)
-        .select(col("id_a"), col("id_b"),
-          round(col("inter").cast("double") / col("un"), 4).as("jaccard"))
-        .orderBy("id_a", "id_b")
+    val sigs = signatures(s, d, neutral)
+    TextOps.verified(lshCandidates(sigs), sigs)
+      .orderBy("id_a", "id_b")
+  }
+
+  /** Candidate pairs (id_a < id_b) of [[signatures]] rows: the pairs
+    * sharing a band signature.
+    */
+  private[queries] def lshCandidates(sigs: DataFrame): DataFrame = {
+    val bandSigs = sigs
+      .withColumn("band", explode(expr(s"sequence(0, ${Bands - 1})")))
+      // md5 of the comma-joined band slice: engine-neutral (DuckDB:
+      // md5(string_agg(mv, ',' ORDER BY i))), still one small value
+      // per (doc, band)
+      .withColumn("sig", md5(concat_ws(",", expr(
+        s"transform(slice(sig_vec, band * $RowsPerBand + 1, $RowsPerBand)," +
+          " x -> CAST(x AS STRING))"))))
+      .select("doc_id", "band", "sig")
+    bandSigs.as("a")
+      .join(bandSigs.as("b"),
+        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .distinct()
   }
 
   /** Per-DOC-ROW band signatures — the STATELESS twin of
@@ -361,6 +342,16 @@ object SketchDedup {
     } finally walk.close()
   }
 
+  /** The per-JVM root of every [[streamNearDup]] call's work dir,
+    * deleted when the JVM exits: a returned frame reads its call's flag
+    * dir lazily, so no call can delete its own work dir.
+    */
+  private lazy val workRoot: java.nio.file.Path = {
+    val root = Files.createTempDirectory("graft_neardup_work")
+    sys.addShutdownHook(graft.pinot.PinotCompact.deleteRecursively(root))
+    root
+  }
+
   /** STREAMING near-dup against a stored corpus — the production
     * LLM-pipeline shape batch q49 does not cover: "flag each INCOMING
     * crawl doc that near-duplicates the EXISTING corpus". The corpus's
@@ -396,7 +387,8 @@ object SketchDedup {
     // fixtures, so repeated runs measure the stream dedup itself, not a
     // corpus rebuild; checkpoint + flag output stay fresh per run.
     val (seedBuckets, inDir, wavesDir) = fixture(s, d, docs, incoming)
-    val work = Files.createTempDirectory(if (grow) "q175_neardup" else "q172_neardup")
+    val work = Files.createTempDirectory(workRoot,
+      if (grow) "q175_neardup" else "q172_neardup")
     val bucketRoot =
       if (!grow) seedBuckets
       else {

@@ -13,11 +13,11 @@ import org.apache.spark.sql.functions._
   * Scale notes (100 TB):
   * - exact dedup is a single hash shuffle on the text digest (not the full
   *   text) — group keys stay 16 bytes regardless of document size;
-  * - n-gram Jaccard explodes shingles and self-joins on the shingle — the
-  *   canonical inverted-index join; the shingle shuffle dominates but
-  *   partitions by shingle hash, so it parallelizes linearly and AQE
-  *   handles hot shingles (stopword runs) via skew-join splitting. The
-  *   `groupBy(shingle)` pair-count is map-side combinable.
+  * - n-gram Jaccard self-joins only each doc's prefix shingles (the
+  *   inverted-index join, pruned); the DF join-back partitions by
+  *   shingle hash, so it parallelizes linearly and AQE handles hot
+  *   shingles (stopword runs) via skew-join splitting. The
+  *   `groupBy(shingle)` DF count is map-side combinable.
   * - thresholds compare as exact integer arithmetic (inter*10 >= union*8)
   *   so engine float rounding can never flip a pair in or out.
   */
@@ -34,88 +34,91 @@ object TextOps {
       .select(col("doc_id"),
         graft.functions.ShingleGen.shingles(col("text")).as(Seq("shingle")))
 
+  /** Exact verification shared by the near-dup pipelines (q41, q73,
+    * q49): each candidate pair (id_a < id_b) joins both endpoints' set
+    * rows (doc_id, ss: shingle array, n = its size) and survives iff
+    * |A∩B|·10 ≥ |A∪B|·8, J ≥ 0.8 in exact integer arithmetic.
+    */
+  private[queries] def verified(cand: DataFrame, sets: DataFrame): DataFrame = {
+    def side(id: String, ss: String, n: String) =
+      sets.select(col("doc_id").as(id), col("ss").as(ss), col("n").as(n))
+    cand
+      .join(side("id_a", "sa", "na"), "id_a")
+      .join(side("id_b", "sb", "nb"), "id_b")
+      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
+      .withColumn("un", col("na") + col("nb") - col("inter"))
+      .filter(col("inter") * 10 >= col("un") * 8)
+      .select(col("id_a"), col("id_b"),
+        round(col("inter").cast("double") / col("un"), 4).as("jaccard"))
+  }
+
   /** Exact n-gram-Jaccard near-dup pairs at J >= 0.8 (shared by q41 and
     * the q73 component builder). See the q41 scale-hardening notes.
     *
-    * CANDIDATE GENERATION IS PREFIX-FILTERED (r17; guide §2.3 "cut the
-    * rows before the exchange"): the full inverted-index self-join
-    * materialized 1.27M (pair, shared-shingle) rows → a 1.13M-key pair
-    * count (~1.2 s, the query's whole residual after r16). The prefix
-    * filtering principle (Chaudhuri et al. SSJoin / Xiao et al. PPJoin)
-    * says two sets A, B sorted by one global token order with
-    * |A∩B| ≥ o must share a token among their first |A|−o+1 / |B|−o+1
-    * tokens. The declared threshold is exact-integer J ≥ 0.8
-    * (inter·10 ≥ un·8 ⟺ 18·inter ≥ 8(nA+nB)), which with inter ≤
-    * min(nA,nB) forces the partner size within [⌈4n/5⌉, ⌊5n/4⌋] and
-    * therefore o ≥ ⌈4n/5⌉ FOR EACH side n — so only the first
-    * n − ⌈4n/5⌉ + 1 = ⌊n/5⌋+1 tokens of each doc can witness a
-    * qualifying pair. Every surviving pair is then verified EXACTLY
-    * (sorted-set intersection over the full filtered shingle sets), so
-    * the candidate superset cannot change the output — pinned by
-    * PrefixFilterDifferentialSpec against the unpruned reference join.
-    * The global token order is ASCENDING DOCUMENT FREQUENCY (rarest
-    * first, the standard prefix-filter ordering): prefixes then hold
-    * each doc's least-shared shingles, which minimizes candidate
-    * collisions.
+    * CANDIDATE GENERATION IS PREFIX-FILTERED: the full inverted-index
+    * self-join counts every co-occurring (pair, shingle) row (1.27M rows
+    * → a 1.13M-key pair count at sf0.1). The prefix filtering principle
+    * (Chaudhuri et al. SSJoin / Xiao et al. PPJoin) says two sets A, B
+    * sorted by one global token order with |A∩B| ≥ o must share a token
+    * among their first |A|−o+1 / |B|−o+1 tokens. The declared threshold
+    * is exact-integer J ≥ 0.8 (inter·10 ≥ un·8 ⟺ 18·inter ≥ 8(nA+nB)),
+    * which with inter ≤ min(nA,nB) forces the partner size within
+    * [⌈4n/5⌉, ⌊5n/4⌋] and therefore o ≥ ⌈4n/5⌉ FOR EACH side n — so
+    * only the first n − ⌈4n/5⌉ + 1 = ⌊n/5⌋+1 tokens of each doc can
+    * witness a qualifying pair, and a pair whose sizes break
+    * min·5 ≥ max·4 (the PPJoin length filter) cannot qualify at all.
+    * Every surviving pair is then verified EXACTLY by [[verified]] over
+    * the full df-filtered shingle sets, so the candidate superset cannot
+    * change the output — pinned by PrefixFilterDifferentialSpec against
+    * the unpruned reference join.
+    * The global token order is (document frequency, shingle): rarest
+    * first, the standard prefix-filter ordering, so prefixes hold each
+    * doc's least-shared shingles, which minimizes candidate collisions.
+    * Both steps read ONE row per doc, built by one aggregate.
     */
   private def jaccardPairs(s: SparkSession, d: String): DataFrame = {
-    val sh0 = shingles(s, d)
-    // tau = max(50, N/10) rides the SAME job as a 1-row count aggregate
-    // crossed into the DF filter (the scalar-subquery idiom, like
-    // q126) — no separate docs.count() driver action, no second pass
-    // over a source without metadata counts
+    val sets = shingleSets(s, d)
+    verified(prefixCandidates(sets), sets)
+  }
+
+  /** One row per doc, (doc_id, ss, n): its shingles of document
+    * frequency at most tau = max(50, N/10), ordered by (df, shingle).
+    */
+  private[queries] def shingleSets(s: SparkSession, d: String): DataFrame = {
+    val sh = shingles(s, d)
+    // tau rides the SAME job as a 1-row count aggregate crossed into the
+    // DF filter (the scalar-subquery idiom, like q126): no count() action
     val nDocs = docs(s, d).agg(count(lit(1)).as("n_docs"))
-    // dense int shingle ids WITHOUT a global window: range-partitioned
-    // by (df, shingle), sorted within partitions (so recomputation is
-    // deterministic — shuffle fetch order is not; range bounds are
-    // sampled once on the driver per RDD instance), then zipWithIndex
-    // (per-partition offsets + position). sid ascending ⇔ document
-    // frequency ascending — the prefix-filter token order. The
-    // dictionary build stays distributed at any vocabulary size.
-    import s.implicits._
-    val keep = sh0.groupBy("shingle").agg(count(lit(1)).as("df"))
+    // the DF is joined back to the shingles rather than computed by a
+    // window on the shingle: AQE splits a hot shingle's rows across
+    // tasks only through a join
+    val df = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))
       .filter(col("df") <= greatest(lit(50L), expr("n_docs div 10")))
       .select(col("shingle"), col("df"))
-      .repartitionByRange(col("df"), col("shingle"))
-      .sortWithinPartitions("df", "shingle")
-      .rdd.map(_.getString(0)).zipWithIndex()
-      .map { case (sh, i) => (sh, Math.toIntExact(i)) }
-      .toDF("shingle", "sid")
-    val sh = sh0.join(keep, "shingle").select(col("doc_id"), col("sid"))
-    // Per-doc SORTED sid set, ONE row per doc (the guide §8 "decide with
-    // small rows" table: every decision below reads these int arrays,
-    // never the shingle strings). Materialized once (localCheckpoint,
-    // the q49 candidate-set precedent): three consumers — the prefix
-    // explode and both verification endpoints — would each re-run the
-    // collect aggregate otherwise.
-    val docSets = sh.groupBy("doc_id")
-      .agg(sort_array(collect_list(col("sid"))).as("sids"))
-      .select(col("doc_id"), col("sids"), size(col("sids")).as("n"))
-      .localCheckpoint()
-    // prefix = the ⌊n/5⌋+1 rarest sids of each doc (n − ⌈4n/5⌉ + 1 with
-    // ⌈4n/5⌉ = (4n+4) div 5 — exact integer arithmetic, no FP rounding)
-    val prefix = docSets.select(col("doc_id"),
-      explode(expr("slice(sids, 1, n - ((4*n + 4) div 5) + 1)")).as("sid"))
-    val cand = prefix.as("a")
+    sh.join(df, "shingle")
+      .groupBy("doc_id")
+      .agg(sort_array(collect_list(struct(col("df"), col("shingle"))))
+        .as("toks"))
+      .select(col("doc_id"), col("toks.shingle").as("ss"),
+        size(col("toks")).as("n"))
+  }
+
+  /** Candidate pairs (id_a < id_b) of [[shingleSets]] rows: the pairs
+    * whose prefixes share a shingle and whose sizes pass the length
+    * filter. The prefix is the ⌊n/5⌋+1 rarest shingles of each doc
+    * (n − ⌈4n/5⌉ + 1 with ⌈4n/5⌉ = (4n+4) div 5 — exact integer
+    * arithmetic).
+    */
+  private[queries] def prefixCandidates(sets: DataFrame): DataFrame = {
+    val prefix = sets.select(col("doc_id"), col("n"),
+      explode(expr("slice(ss, 1, n - ((4*n + 4) div 5) + 1)")).as("tok"))
+    prefix.as("a")
       .join(prefix.as("b"),
-        col("a.sid") === col("b.sid") && col("a.doc_id") < col("b.doc_id"))
+        col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id") &&
+          least(col("a.n"), col("b.n")) * 5 >= greatest(col("a.n"), col("b.n")) * 4)
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    // EXACT verification: |A∩B| by sorted-int-array intersection over
-    // the full (df-filtered) shingle sets of just the candidate pairs —
-    // the 1.13M-key pair-count aggregate is gone; the only remaining
-    // wide exchanges carry (doc_id, sid) ints once and prefix rows once.
-    cand
-      .join(docSets.select(col("doc_id").as("id_a"),
-        col("sids").as("sa"), col("n").as("na")), "id_a")
-      .join(docSets.select(col("doc_id").as("id_b"),
-        col("sids").as("sb"), col("n").as("nb")), "id_b")
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
-      .withColumn("un", col("na") + col("nb") - col("inter"))
-      .filter(col("inter") * 10 >= col("un") * 8) // J >= 0.8, exact
-      .select(col("id_a"), col("id_b"),
-        round(col("inter").cast("double") / col("un"), 4).as("jaccard"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -128,24 +131,18 @@ object TextOps {
         .select("keep_id", "copies")
         .orderBy("keep_id")),
 
-    // N-gram Jaccard near-dup pairs: inverted-index self-join on 3-gram
-    // shingles, exact |A∩B| / |A∪B| >= 0.8 by integer arithmetic.
+    // N-gram Jaccard near-dup pairs: prefix-filtered self-join on 3-gram
+    // shingles, exact |A∩B| / |A∪B| >= 0.8 by integer arithmetic (see
+    // jaccardPairs).
     //
-    // Scale hardening (both deterministic, both mirrored in the oracle /
-    // value-neutral):
-    // 1. DOCUMENT-FREQUENCY CUTOFF: shingles present in more than
-    //    max(50, N/10) documents (stopword runs, boilerplate) carry ~no
-    //    similarity signal at J>=0.8 but dominate the pair blowup —
-    //    dropping them from the shingle universe bounds candidate pairs
-    //    at |shingles|·(N/10)²/2 instead of unbounded. The Jaccard is
-    //    exact over the filtered universe, and the SAME filter runs in
-    //    DuckDB, so the hash check stays authoritative.
-    // 2. DENSE INT SHINGLE IDS: the DF aggregate (needed anyway) doubles
-    //    as a dictionary; the self-join then shuffles (doc_id, sid int)
-    //    rows — ~2.5× fewer shuffle bytes than string shingles. The
-    //    row_number dictionary is fine at this dictionary size; a
-    //    100 TB corpus would zipWithIndex the dictionary instead of a
-    //    global-order window.
+    // Scale hardening (deterministic, mirrored in the oracle):
+    // DOCUMENT-FREQUENCY CUTOFF: shingles present in more than
+    // max(50, N/10) documents (stopword runs, boilerplate) carry ~no
+    // similarity signal at J>=0.8 but dominate the pair blowup —
+    // dropping them from the shingle universe bounds candidate pairs
+    // at |shingles|·(N/10)²/2 instead of unbounded. The Jaccard is
+    // exact over the filtered universe, and the SAME filter runs in
+    // DuckDB, so the hash check stays authoritative.
     "q41_dedup_ngram_jaccard" -> ((s, d) =>
       jaccardPairs(s, d).orderBy("id_a", "id_b")),
 

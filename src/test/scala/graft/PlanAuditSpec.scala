@@ -332,4 +332,41 @@ class PlanAuditSpec extends SparkTestBase {
     assert(!scan.contains("l_extendedprice"),
       s"q02 reads columns it does not project:\n$scan")
   }
+
+  test("q41, q73 and q49 read no RDD: no dictionary round trip, no checkpoint") {
+    import org.apache.spark.sql.execution.{ExternalRDDScanExec, QueryExecution, RDDScanExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = plans.synchronized { plans += qe.executedPlan }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      for (name <- Seq("q41_dedup_ngram_jaccard", "q73_dedup_components",
+          "q49_dedup_minhash_lsh")) {
+        plans.synchronized(plans.clear())
+        SparkEntry.queries(name)(spark, sf).collect()
+        // listener delivery is async: wait until the plan count settles
+        // (q73 runs its pair collect and then its result)
+        var last = -1
+        var stable = 0
+        while (stable < 3) {
+          Thread.sleep(100)
+          val n = plans.synchronized(plans.length)
+          if (n == last && n > 0) stable += 1 else { stable = 0; last = n }
+        }
+        val rddScans = plans.synchronized(plans.toVector).flatMap(allNodes)
+          .filter {
+            case _: RDDScanExec => true
+            case _: ExternalRDDScanExec[_] => true
+            case _ => false
+          }
+        assert(rddScans.isEmpty,
+          s"$name reads an RDD: ${rddScans.map(_.nodeName).mkString(", ")}")
+      }
+    } finally spark.listenerManager.unregister(listener)
+  }
 }

@@ -51,6 +51,20 @@ class SchemaDriftSpec extends SparkTestBase {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  test("every declared table schema equals the one Spark infers, at every sf dir") {
+    val dirs = sfDirs
+    assert(dirs.nonEmpty, s"no sf* dirs under $root")
+    val drift = for {
+      dir <- dirs
+      (name, declared) <- Tables.schemas.toSeq.sortBy(_._1)
+      inferred = spark.read.parquet(s"$dir/$name.parquet").schema
+      if inferred != declared
+    } yield s"$dir/$name: declared ${declared.simpleString}, " +
+      s"inferred ${inferred.simpleString}"
+    assert(drift.isEmpty, drift.mkString("\n"))
+    assert(Tables.schemas.keySet === Tables.names.toSet - "events")
+  }
+
   test("every declared query analyzes at sf0.001") {
     val sf = s"$root/sf0.001"
     Tables.registerAll(spark, sf)

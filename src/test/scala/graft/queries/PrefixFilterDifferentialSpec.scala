@@ -120,4 +120,36 @@ class PrefixFilterDifferentialSpec extends SparkTestBase {
     assert(roots(2L) == 1L && roots(7L) == 6L && roots(5L) == 4L,
       s"component roots diverged: $roots")
   }
+
+  test("length filter: 4 vs 5 shingles kept at its edge, 4 vs 6 cut " +
+      "though the prefixes share a shingle") {
+    val work = java.nio.file.Files.createTempDirectory("length_filter")
+    // 10/11: 4 vs 5 shingles, subset → J = 4/5 = 0.8 and
+    //        min·5 = max·4: the length filter's edge, KEPT
+    // 12/13: 4 vs 6 shingles, subset → J = 4/6, min·5 < max·4: CUT. The
+    //        fillers 14/15 raise the df of 13's two extra shingles, so
+    //        13's prefix (2 tokens) starts with the shingle that is 12's
+    //        whole prefix (1 token): without the length filter the pair
+    //        would be a candidate
+    val docs = Seq(
+      (10L, "a1 a2 a3 a4 a5 a6"), (11L, "a1 a2 a3 a4 a5 a6 a7"),
+      (12L, "b1 b2 b3 b4 b5 b6"), (13L, "b1 b2 b3 b4 b5 b6 b7 b8"),
+      (14L, "b5 b6 b7 b8 c1"), (15L, "b5 b6 b7 b8 c2"))
+      .toDF("doc_id", "text")
+      .withColumn("lang", lit("en"))
+      .withColumn("source", lit("fixture"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+    docs.write.mode("overwrite")
+      .parquet(work.resolve("documents.parquet").toString)
+    val d = work.toString
+
+    val cand = TextOps.prefixCandidates(TextOps.shingleSets(spark, d))
+      .as[(Long, Long)].collect().toSet
+    assert(cand.contains((10L, 11L)), s"edge pair not a candidate: $cand")
+    assert(!cand.contains((12L, 13L)), s"length filter let 4 vs 6 through: $cand")
+    val pruned = pairSet(
+      TextOps.queries("q41_dedup_ngram_jaccard")(spark, d))
+    assert(pruned === pairSet(referencePairs(spark, d)))
+    assert(pruned === Set((10L, 11L, 0.8)))
+  }
 }
