@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -15,37 +15,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * interpreted-HOF fix that took the q46 dot product from 49 s to 3 s
   * (see [[LongDotProduct]]).
   */
-
-/** `minhash_perms(s)` — the 64-permutation MinHash row for one shingle:
-  * perm i = xxhash64 of (s, i) (same two-argument fold Spark's own
-  * `xxhash64(s, i)` computes: bytes at seed 42, then the int), so the
-  * signature family is identical to the declarative original.
-  */
-case class MinHashPerms(child: Expression, numPerms: Int = 64)
-    extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_perms requires string input, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String]
-    val h0 = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
-    val out = new Array[Long](numPerms)
-    var i = 0
-    while (i < numPerms) { out(i) = XXH64.hashInt(i, h0); i += 1 }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashPerms =
-    copy(child = newChild)
-  override def prettyName: String = "minhash_perms"
-}
 
 /** `md5_minhash_perms(s)` — the ENGINE-NEUTRAL permutation family:
   * one md5 per shingle gives x = (a + b) mod p (a/b = the first/second
@@ -62,7 +31,6 @@ case class MinHashPerms(child: Expression, numPerms: Int = 64)
   * LINEAR in i, its band minima were correlated across permutations,
   * and LSH candidates exploded 68× with false positives (17,432 vs 256
   * at sf0.1) — the verify join, not md5, was q49's real cost.
-  * [[MinHashPerms]] (xxhash64) remains the documented fast path.
   */
 case class Md5MinHashPerms(child: Expression, numPerms: Int = 64)
     extends UnaryExpression with CodegenFallback {
@@ -151,8 +119,7 @@ object Md5MinHashPerms {
   * hex chars of md5 as an (unsigned-parsed) long. DuckDB reproduces it
   * as two 32-bit halves (`CAST(concat('0x', substr(md5(s),1,8)) AS
   * BIGINT)` = bits 63..32, next 8 chars = bits 31..0), which is what
-  * lets the SimHash pipeline be hash-oracled; `xxhash64` remains the
-  * fast path.
+  * lets the SimHash pipeline be hash-oracled.
   */
 case class Md5Hash64(child: Expression)
     extends UnaryExpression with CodegenFallback {
@@ -265,8 +232,6 @@ case class SignBitsToLong(child: Expression)
 }
 
 object SketchExprs {
-  def minhashPerms(c: Column, n: Int = 64): Column =
-    GraftSqlBridge.toColumn(MinHashPerms(GraftSqlBridge.toExpression(c), n))
   def md5MinhashPerms(c: Column, n: Int = 64): Column =
     GraftSqlBridge.toColumn(Md5MinHashPerms(GraftSqlBridge.toExpression(c), n))
   def md5Hash64(c: Column): Column =

@@ -12,14 +12,22 @@ import java.nio.charset.StandardCharsets
   */
 sealed trait PinotDictionary {
   def size: Int
+  /** Entry `id`, boxed. */
+  def value(id: Int): Any
 }
 object PinotDictionary {
-  final case class Ints(values: Array[Int]) extends PinotDictionary { def size: Int = values.length }
-  final case class Longs(values: Array[Long]) extends PinotDictionary { def size: Int = values.length }
-  final case class Floats(values: Array[Float]) extends PinotDictionary { def size: Int = values.length }
-  final case class Doubles(values: Array[Double]) extends PinotDictionary { def size: Int = values.length }
-  final case class Strings(values: Array[String]) extends PinotDictionary { def size: Int = values.length }
-  final case class Bytes(values: Array[Array[Byte]]) extends PinotDictionary { def size: Int = values.length }
+  final case class Ints(values: Array[Int]) extends PinotDictionary {
+    def size: Int = values.length; def value(id: Int): Any = values(id) }
+  final case class Longs(values: Array[Long]) extends PinotDictionary {
+    def size: Int = values.length; def value(id: Int): Any = values(id) }
+  final case class Floats(values: Array[Float]) extends PinotDictionary {
+    def size: Int = values.length; def value(id: Int): Any = values(id) }
+  final case class Doubles(values: Array[Double]) extends PinotDictionary {
+    def size: Int = values.length; def value(id: Int): Any = values(id) }
+  final case class Strings(values: Array[String]) extends PinotDictionary {
+    def size: Int = values.length; def value(id: Int): Any = values(id) }
+  final case class Bytes(values: Array[Array[Byte]]) extends PinotDictionary {
+    def size: Int = values.length; def value(id: Int): Any = values(id) }
 
   val MagicMarker: Long = 0xDEADBEEFDEAFBEADL
 

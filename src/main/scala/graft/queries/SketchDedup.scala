@@ -22,9 +22,6 @@ import org.apache.spark.sql.types._
   *   candidate blowup.
   * - q50 (SimHash): md5 token hashes split into two 32-bit halves
   *   ([[graft.functions.Md5Hash64]]).
-  * The xxhash64 families (`MinHashPerms`, `xxhash64`) remain the
-  * documented fast paths; SketchDedupSpec proves both families
-  * reproduce the exact n-gram-Jaccard pair set (q41).
   *
   * Scale notes (100 TB): this is the path that replaces q41's quadratic
   * shingle self-join. Work per stage:
@@ -49,19 +46,14 @@ object SketchDedup {
     * (doc_id, sig_vec, ss, n): each shingle yields its 64 permutation
     * hashes as an array; the custom element-wise-min aggregate (map-side
     * combinable) folds them — no 64× posexplode, no (doc, perm) shuffle
-    * blowup. `neutral` picks the md5-derived DuckDB-expressible family
-    * (the oracled default) vs the xxhash64 fast path.
+    * blowup.
     */
-  private[queries] def signatures(s: SparkSession, d: String,
-      neutral: Boolean = true): DataFrame =
+  private[queries] def signatures(s: SparkSession, d: String): DataFrame =
     TextOps.shingles(s, d)
       // native expression = one call per shingle; the inner loop is
       // plain JVM code, not an interpreted lambda chain
       .withColumn("perms",
-        if (neutral)
-          graft.functions.SketchExprs.md5MinhashPerms(col("shingle"), NumPerms)
-        else
-          graft.functions.SketchExprs.minhashPerms(col("shingle"), NumPerms))
+        graft.functions.SketchExprs.md5MinhashPerms(col("shingle"), NumPerms))
       .groupBy("doc_id")
       .agg(graft.functions.ArrayLongReduceAgg.arrayMinAgg(col("perms"))
         .as("sig_vec"), collect_list(col("shingle")).as("ss"))
@@ -69,11 +61,10 @@ object SketchDedup {
 
   /** The full MinHash+LSH pipeline (banding → bucket join → exact
     * verification at J>=0.8 by [[TextOps.verified]] over the full
-    * shingle sets); `neutral` selects the hash family.
+    * shingle sets).
     */
-  private[graft] def lshPairs(s: SparkSession, d: String,
-      neutral: Boolean): DataFrame = {
-    val sigs = signatures(s, d, neutral)
+  private[graft] def lshPairs(s: SparkSession, d: String): DataFrame = {
+    val sigs = signatures(s, d)
     TextOps.verified(lshCandidates(sigs), sigs)
       .orderBy("id_a", "id_b")
   }
@@ -410,7 +401,7 @@ object SketchDedup {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // MinHash + LSH banding + bucket join + exact verification at J>=0.8,
     // over the md5-derived engine-neutral permutation family (oracled).
-    "q49_dedup_minhash_lsh" -> ((s, d) => lshPairs(s, d, neutral = true)),
+    "q49_dedup_minhash_lsh" -> ((s, d) => lshPairs(s, d)),
 
     // Streaming near-dup of the incoming crawl (doc_id % 10 >= 8)
     // against the stored corpus bucket table (doc_id % 10 < 8): every
@@ -428,14 +419,12 @@ object SketchDedup {
 
     // SimHash: 64-bit sign-aggregated token hash; banded bucket join;
     // near-dups = hamming distance <= 7. Token hashes come from the
-    // md5-derived engine-neutral family (oracled); xxhash64 fast path
-    // via simhashPairs(neutral = false).
-    "q50_dedup_simhash" -> ((s, d) => simhashPairs(s, d, neutral = true))
+    // md5-derived engine-neutral family (oracled).
+    "q50_dedup_simhash" -> ((s, d) => simhashPairs(s, d))
   )
 
-  /** The full SimHash pipeline; `neutral` selects the token-hash family. */
-  private[graft] def simhashPairs(s: SparkSession, d: String,
-      neutral: Boolean): DataFrame = {
+  /** The full SimHash pipeline. */
+  private[graft] def simhashPairs(s: SparkSession, d: String): DataFrame = {
       val docs = graft.Tables.load(s, d, "documents")
       // Weighted-by-count ±1 bit arrays folded by the element-wise-sum
       // aggregate (map-side combinable — replaces a 64× posexplode
@@ -444,9 +433,7 @@ object SketchDedup {
       // per occurrence — 10× fewer lambda evaluations on repetitive text.
       val sims = docs
         .withColumn("word", explode(split(col("text"), " ")))
-        .withColumn("h",
-          if (neutral) graft.functions.SketchExprs.md5Hash64(col("word"))
-          else xxhash64(col("word")))
+        .withColumn("h", graft.functions.SketchExprs.md5Hash64(col("word")))
         .groupBy("doc_id", "h")
         .agg(count(lit(1)).as("c"))
         .withColumn("bits",

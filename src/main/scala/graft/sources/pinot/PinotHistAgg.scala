@@ -127,11 +127,14 @@ class PinotHistAggReaderFactory(groupCols: Array[String],
     kv
   }
 
-  private def fillDoubleKeys(card: Int, counts: Array[Long],
-      acc: Acc): Array[Double] = {
-    val kv = new Array[Double](card)
+  private def fillDoubleRanks(card: Int, counts: Array[Long],
+      acc: Acc): Array[Long] = {
+    val kv = new Array[Long](card)
     var g = 0
-    while (g < card) { if (counts(g) > 0) kv(g) = acc.resultDouble(g); g += 1 }
+    while (g < card) {
+      if (counts(g) > 0) kv(g) = PinotHistAgg.rankDouble(acc.resultDouble(g))
+      g += 1
+    }
     kv
   }
 
@@ -496,12 +499,9 @@ class PinotHistAggReaderFactory(groupCols: Array[String],
             val desc = keys(0).descending
             // key fill extracted into small methods: inline here (the
             // huge createReader body) it would run interpreted
-            if (acc.primKind == 0)
-              PinotHistAgg.selectTopLong(card, counts,
-                fillLongKeys(card, counts, acc), desc, limit)
-            else
-              PinotHistAgg.selectTopDouble(card, counts,
-                fillDoubleKeys(card, counts, acc), desc, limit)
+            PinotHistAgg.selectTopLong(card, counts,
+              if (acc.primKind == 0) fillLongKeys(card, counts, acc)
+              else fillDoubleRanks(card, counts, acc), desc, limit)
           case Some((keys, limit)) =>
             def sortVal(idx: Int, g: Int): Any =
               if (idx < keyArity) {
@@ -573,118 +573,74 @@ object PinotHistAgg {
   def groupSlots(cards: Iterable[Long]): Long =
     cards.foldLeft(1L)((acc, c) => if (acc > GroupCap) acc else acc * math.max(1L, c))
 
-  /** Bounded top-`limit` selection over a PRIMITIVE long key array —
-    * the boxed-comparator selection costs two boxed values + a virtual
+  /** Top-`limit` occupied groups by a PRIMITIVE long key array — the
+    * boxed-comparator selection costs two boxed values + a virtual
     * compareTo + an Integer.valueOf per candidate, which at ~100k
-    * occupied groups dominates the whole aggregate task. Hand-rolled
-    * size-k binary heap with root = WORST KEPT under the pushed order;
-    * a candidate replaces the root only when STRICTLY better (equal
-    * keys keep the incumbent — the boxed path's exact tie behavior,
-    * and ties are free under the partial-push contract anyway).
-    * Emission order is arbitrary: Spark's TakeOrderedAndProject above
-    * re-sorts the ≤ k×partitions survivors.
+    * occupied groups dominates the whole aggregate task.
     */
   private[pinot] def selectTopLong(card: Int, counts: Array[Long],
       keys: Array[Long], desc: Boolean, limit: Int): Iterator[Int] = {
-    val hk = new Array[Long](limit)
-    val hg = new Array[Int](limit)
-    var size = 0
-    // "worse(a, b)": a should be evicted before b under the pushed order
-    def worse(a: Long, b: Long): Boolean = if (desc) a < b else a > b
-    def siftUp(i0: Int): Unit = {
-      var i = i0
-      while (i > 0) {
-        val p = (i - 1) >> 1
-        if (worse(hk(i), hk(p))) {
-          val tk = hk(i); hk(i) = hk(p); hk(p) = tk
-          val tg = hg(i); hg(i) = hg(p); hg(p) = tg
-          i = p
-        } else return
-      }
-    }
-    def siftDown(): Unit = {
-      var i = 0
-      var cont = true
-      while (cont) {
-        val l = 2 * i + 1; val r = l + 1
-        var w = i
-        if (l < size && worse(hk(l), hk(w))) w = l
-        if (r < size && worse(hk(r), hk(w))) w = r
-        if (w == i) cont = false
-        else {
-          val tk = hk(i); hk(i) = hk(w); hk(w) = tk
-          val tg = hg(i); hg(i) = hg(w); hg(w) = tg
-          i = w
-        }
-      }
-    }
+    val top = new LongTopK(limit, desc)
     var g = 0
-    while (g < card) {
-      if (counts(g) > 0) {
-        val kv = keys(g)
-        if (size < limit) {
-          hk(size) = kv; hg(size) = g; size += 1; siftUp(size - 1)
-        } else if (worse(hk(0), kv)) {
-          hk(0) = kv; hg(0) = g; siftDown()
-        }
-      }
-      g += 1
-    }
-    java.util.Arrays.copyOf(hg, size).iterator
+    while (g < card) { if (counts(g) > 0) top.offer(keys(g), g); g += 1 }
+    top.ids.iterator
   }
 
-  /** Double twin — compares via Double.compare, which is exactly boxed
-    * Double.compareTo (NaN largest, -0.0 < 0.0), so selection matches
-    * the boxed path bit for bit.
+  /** The IEEE order embedding: a long ordering exactly like
+    * `java.lang.Double.compare`, which is Spark's order (-Inf < -0.0 <
+    * +0.0 < +Inf < NaN, every NaN equal) — so double and float keys
+    * select through [[LongTopK]].
     */
-  private[pinot] def selectTopDouble(card: Int, counts: Array[Long],
-      keys: Array[Double], desc: Boolean, limit: Int): Iterator[Int] = {
-    val hk = new Array[Double](limit)
-    val hg = new Array[Int](limit)
-    var size = 0
-    def worse(a: Double, b: Double): Boolean =
-      if (desc) java.lang.Double.compare(a, b) < 0
-      else java.lang.Double.compare(a, b) > 0
-    def siftUp(i0: Int): Unit = {
+  private[pinot] def rankDouble(d: Double): Long = {
+    val bits = java.lang.Double.doubleToLongBits(d)
+    bits ^ ((bits >> 63) & 0x7fffffffffffffffL)
+  }
+
+  /** Bounded top-`k` selection over primitive long keys, shared by the
+    * pushed group top-N and the value top-N of a plain scan
+    * ([[PinotValueTopN]]). A size-k binary heap with root = WORST KEPT
+    * under the pushed order; a candidate replaces the root only when
+    * STRICTLY better (equal keys keep the incumbent — the boxed path's
+    * exact tie behavior, and ties are free under the partial-push
+    * contract anyway). `ids` come back in arbitrary order: Spark's
+    * TakeOrderedAndProject above re-sorts the ≤ k×partitions survivors.
+    */
+  private[pinot] final class LongTopK(k: Int, desc: Boolean) {
+    private val keys = new Array[Long](k)
+    private val kept = new Array[Int](k)
+    private var size = 0
+    // "worse(a, b)": a should be evicted before b under the pushed order
+    private def worse(a: Long, b: Long): Boolean = if (desc) a < b else a > b
+    private def swap(i: Int, j: Int): Unit = {
+      val tk = keys(i); keys(i) = keys(j); keys(j) = tk
+      val ti = kept(i); kept(i) = kept(j); kept(j) = ti
+    }
+    private def siftUp(i0: Int): Unit = {
       var i = i0
-      while (i > 0) {
-        val p = (i - 1) >> 1
-        if (worse(hk(i), hk(p))) {
-          val tk = hk(i); hk(i) = hk(p); hk(p) = tk
-          val tg = hg(i); hg(i) = hg(p); hg(p) = tg
-          i = p
-        } else return
+      while (i > 0 && worse(keys(i), keys((i - 1) >> 1))) {
+        swap(i, (i - 1) >> 1)
+        i = (i - 1) >> 1
       }
     }
-    def siftDown(): Unit = {
+    private def siftDown(): Unit = {
       var i = 0
-      var cont = true
-      while (cont) {
+      while (true) {
         val l = 2 * i + 1; val r = l + 1
         var w = i
-        if (l < size && worse(hk(l), hk(w))) w = l
-        if (r < size && worse(hk(r), hk(w))) w = r
-        if (w == i) cont = false
-        else {
-          val tk = hk(i); hk(i) = hk(w); hk(w) = tk
-          val tg = hg(i); hg(i) = hg(w); hg(w) = tg
-          i = w
-        }
+        if (l < size && worse(keys(l), keys(w))) w = l
+        if (r < size && worse(keys(r), keys(w))) w = r
+        if (w == i) return
+        swap(i, w)
+        i = w
       }
     }
-    var g = 0
-    while (g < card) {
-      if (counts(g) > 0) {
-        val kv = keys(g)
-        if (size < limit) {
-          hk(size) = kv; hg(size) = g; size += 1; siftUp(size - 1)
-        } else if (worse(hk(0), kv)) {
-          hk(0) = kv; hg(0) = g; siftDown()
-        }
+    def offer(key: Long, id: Int): Unit =
+      if (size < k) {
+        keys(size) = key; kept(size) = id; size += 1; siftUp(size - 1)
+      } else if (worse(keys(0), key)) {
+        keys(0) = key; kept(0) = id; siftDown()
       }
-      g += 1
-    }
-    java.util.Arrays.copyOf(hg, size).iterator
+    def ids: Array[Int] = java.util.Arrays.copyOf(kept, size)
   }
 
   /** ANSI long add with Spark's own error surface: the unpushed plan's

@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.sql.execution.vectorized.{Dictionary, OnHeapColumnVector}
 import org.apache.spark.unsafe.types.UTF8String
+import org.roaringbitmap.buffer.MutableRoaringBitmap
 
 import scala.util.control.NonFatal
 
@@ -101,14 +102,14 @@ class PinotScanBuilder(segmentPaths: Seq[String], fullSchema: StructType,
 
   override def pushedFilters(): Array[Filter] = skipFilters
 
-  /** Limit pushdown. With no filters in play the limit is FULLY pushed
-    * (`isPartiallyPushed = false` — Spark drops its Limit nodes
-    * entirely): the scan plans ONE partition that chains segments until
-    * the limit fills, so a bare `LIMIT 10` over a 100 TB table is a
-    * single task reading one window of one segment — no per-segment
-    * tasks, no CollectLimit shuffle stage (Pinot's selection
-    * short-circuit). With filters the cap stays per-partition advisory
-    * and Spark's Limit remains authoritative above the residual Filter.
+  /** Limit pushdown, FULLY pushed (`isPartiallyPushed = false` — Spark
+    * drops its Limit nodes entirely): the scan plans ONE partition that
+    * chains segments until the limit fills, so a bare `LIMIT 10` over a
+    * 100 TB table is a single task reading one window of one segment —
+    * no per-segment tasks, no CollectLimit shuffle stage (Pinot's
+    * selection short-circuit). Refused with filters in play: every
+    * pushed filter stays residual, and Spark 4.1 offers a limit only
+    * when no Filter stays above the scan.
     *
     * REFUSED outright when an aggregation was already pushed: Spark
     * 4.1.2's pushDownLimit has no pushedAggregate guard, so accepting
@@ -118,13 +119,13 @@ class PinotScanBuilder(segmentPaths: Seq[String], fullSchema: StructType,
     * pushdown runs before limit pushdown, so `pushed` is final here.
     */
   override def pushLimit(l: Int): Boolean = {
-    if (pushed.isDefined) return false
-    rowCap = if (sawFilters) RowCap.PerRange(l) else RowCap.Budget(0, Some(l))
+    if (pushed.isDefined || sawFilters) return false
+    rowCap = RowCap.Budget(0, Some(l))
     true
   }
 
   // shared by SupportsPushDownLimit and SupportsPushDownTopN: only a
-  // global budget (a limit with no filters in play) is FULLY pushed; a
+  // global budget (a pushed limit) is FULLY pushed; a
   // pushed top-N is ALWAYS partial — each partition emits its local
   // top-k and Spark's TakeOrderedAndProject stays authoritative over
   // ≤ k×partitions rows (correct under sub-segment slicing and ties, and
@@ -695,8 +696,7 @@ class PinotScan(segmentPaths: Seq[String], projected: StructType,
         s"$dir is an upsert table: a raw stream would surface superseded " +
           "versions. Use PinotUpsert.latestStream for the upsert view, " +
           """or .option("upsertView", "raw") for the raw segment tail""")
-    new PinotMicroBatchStream(dir, projected.fieldNames, skipFilters,
-      rowCap.pushedLimit)
+    new PinotMicroBatchStream(dir, projected.fieldNames, skipFilters)
   }
 
   /** Segment-aligned partition column: a projected dict SV column whose
@@ -723,20 +723,13 @@ class PinotScan(segmentPaths: Seq[String], projected: StructType,
         val perSeg = metas.map { m =>
           m.columns.get(cm.name).filter(c =>
             c.minValue.isDefined && c.minValue == c.maxValue)
-            .flatMap(c => typedKey(cm.dataType, c.minValue.get))
+            .flatMap(c => PinotValues.catalystBound(cm.dataType, c.minValue.get))
         }
         if (perSeg.forall(_.isDefined))
           Some(cm.name -> perSeg.map(_.get).toArray)
         else None
       }.headOption
     }
-  }
-
-  private def typedKey(tpe: PinotType, v: String): Option[Any] = tpe match {
-    case PinotType.PInt => v.toIntOption
-    case PinotType.PLong => v.toLongOption
-    case PinotType.PString => Some(UTF8String.fromString(v))
-    case _ => None
   }
 
   override def outputPartitioning()
@@ -790,14 +783,11 @@ class PinotScan(segmentPaths: Seq[String], projected: StructType,
             val distinct = cms.map(_.cardinality.toLong).max
             def fold(pick: graft.pinot.ColumnMetadata => Option[String],
                 wantMin: Boolean): Option[Object] = {
-              val bounds = cms.map(pick)
+              val bounds = cms.map(pick(_).flatMap(PinotValues.bound(tpe, _)))
               if (bounds.exists(_.isEmpty)) None
-              else bounds.flatten.reduceOption { (a, b) =>
-                PinotScan.statCompare(tpe, a, b) match {
-                  case Some(c) => if ((c <= 0) == wantMin) a else b
-                  case None => a
-                }
-              }.flatMap(s => PinotScan.typedStatValue(tpe, s))
+              else bounds.flatten.reduceOption((a, b) =>
+                if ((PinotValues.compare(a, b) <= 0) == wantMin) a else b)
+                .map(PinotValues.catalyst(_).asInstanceOf[Object])
             }
             val minV = fold(_.minValue, wantMin = true)
             val maxV = fold(_.maxValue, wantMin = false)
@@ -1170,12 +1160,6 @@ sealed trait RowCap {
 
 object RowCap {
   case object NoCap extends RowCap
-  /** Advisory, under residual filters: each range's reader stops after
-    * `limit` rows and Spark's Limit above the Filter stays authoritative.
-    */
-  final case class PerRange(limit: Int) extends RowCap {
-    override def pushedLimit: Option[Int] = Some(limit)
-  }
   /** Fully pushed, with no filters: the split emits rows
     * `[offset, limit)` in range order under one global budget; `limit`
     * None is a bare OFFSET.
@@ -1245,12 +1229,7 @@ class PinotAggReaderFactory(funcs: Array[PushedFunc],
       // straight from metadata (min == max, builder-validated)
       val keys: Array[Any] = groupCols.map { c =>
         val cm = reader.metadata.column(c)
-        val v = cm.minValue.get
-        cm.dataType match {
-          case graft.pinot.PinotType.PInt => v.toInt
-          case graft.pinot.PinotType.PLong => v.toLong
-          case _ => UTF8String.fromString(v)
-        }
+        PinotValues.catalystBound(cm.dataType, cm.minValue.get).get
       }
       val values: Array[Any] = funcs.map {
         // COUNT(col) on a nullable column: docs − nullCount (exact)
@@ -1297,12 +1276,11 @@ class PinotAggReaderFactory(funcs: Array[PushedFunc],
       // RAW numeric: writer-recorded metadata bounds answer exactly
       // (String.valueOf → parse is a lossless roundtrip for numerics);
       // a full decode is only the defensive fallback
-      val bound = if (isMin) cm.minValue else cm.maxValue
+      val bound = (if (isMin) cm.minValue else cm.maxValue)
+        .flatMap(PinotValues.bound(cm.dataType, _))
       (bound, cm.dataType) match {
-        case (Some(b), PinotType.PInt) => b.toInt
-        case (Some(b), PinotType.PLong) => b.toLong
-        case (Some(b), PinotType.PFloat) => b.toFloat
-        case (Some(b), PinotType.PDouble) => b.toDouble
+        case (Some(b), PinotType.PInt | PinotType.PLong | PinotType.PFloat |
+            PinotType.PDouble) => b
         case (None, PinotType.PInt) => reduceI(reader.readIntColumn(col))
         case (None, PinotType.PLong) => reduceL(reader.readLongColumn(col))
         case (None, PinotType.PFloat) => reduceF(reader.readFloatColumn(col))
@@ -1465,35 +1443,6 @@ object PinotScan {
       s"unsupported dictionary $other for $col:${t.name}")
   }
 
-  /** Compare a metadata bound (string form) against a filter value.
-    * Some(sign) when comparable; None → cannot prune on this filter.
-    * Primitive == short-circuits first: Float/Double.compare orders
-    * -0.0 < 0.0, but Spark comparison semantics treat them as equal —
-    * a segment whose recorded max is "-0.0" must not be pruned for
-    * `x >= 0.0`.
-    */
-  private[pinot] def cmpBound(bound: String, value: Any): Option[Int] =
-    value match {
-      case x: Int => bound.toIntOption.map(Integer.compare(_, x))
-      case x: Long => bound.toLongOption.map(java.lang.Long.compare(_, x))
-      case x: Float =>
-        bound.toFloatOption.map(b =>
-          if (b == x) 0 else java.lang.Float.compare(b, x))
-      case x: Double =>
-        bound.toDoubleOption.map(b =>
-          if (b == x) 0 else java.lang.Double.compare(b, x))
-      case x: String => Some(bound.compareTo(x))
-      case x: UTF8String => Some(bound.compareTo(x.toString))
-      // TIMESTAMP bounds are epoch millis; compare in MICROS so a
-      // sub-millisecond filter value never rounds across the boundary
-      case _ =>
-        timestampMicros(value).flatMap(us =>
-          bound.toLongOption.map(ms =>
-            java.lang.Long.compare(Math.multiplyExact(ms, 1000L), us)))
-    }
-
-  /** Epoch micros of a pushed timestamp filter value (both the legacy
-    * java.sql.Timestamp and the Java-8 Instant API forms). */
   /** Spark field types → (Pinot storage type, isSingleValue) for
     * schema-evolution defaults (the reverse of PinotType.sparkType).
     * Arrays map to the element's storage type with isSingleValue=false
@@ -1523,63 +1472,6 @@ object PinotScan {
     }.toMap
   }
 
-  private[pinot] def timestampMicros(v: Any): Option[Long] = v match {
-    case t: java.sql.Timestamp =>
-      Some(Math.addExact(Math.multiplyExact(t.getTime, 1000L),
-        (t.getNanos / 1000L) % 1000L))
-    case i: java.time.Instant =>
-      Some(Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L),
-        i.getNano / 1000L))
-    case _ => None
-  }
-
-  /** Catalyst-typed value for a metadata bound string — what CBO column
-    * statistics carry (boxed primitives / UTF8String; timestamps to
-    * epoch micros). None when unparsable or the type has no stat form.
-    */
-  private[pinot] def typedStatValue(tpe: graft.pinot.PinotType,
-      s: String): Option[Object] = tpe match {
-    case graft.pinot.PinotType.PInt => s.toIntOption.map(Int.box)
-    case graft.pinot.PinotType.PLong => s.toLongOption.map(Long.box)
-    case graft.pinot.PinotType.PFloat => s.toFloatOption.map(Float.box)
-    case graft.pinot.PinotType.PDouble => s.toDoubleOption.map(Double.box)
-    case graft.pinot.PinotType.PString => Some(UTF8String.fromString(s))
-    case graft.pinot.PinotType.PTimestamp =>
-      s.toLongOption.map(ms => Long.box(Math.multiplyExact(ms, 1000L)))
-    case _ => None
-  }
-
-  /** Compare two metadata bound strings in the column's own type. */
-  private[pinot] def statCompare(tpe: graft.pinot.PinotType,
-      a: String, b: String): Option[Int] = tpe match {
-    case graft.pinot.PinotType.PString => Some(a.compareTo(b))
-    case graft.pinot.PinotType.PInt | graft.pinot.PinotType.PLong |
-         graft.pinot.PinotType.PTimestamp =>
-      for (x <- a.toLongOption; y <- b.toLongOption)
-        yield java.lang.Long.compare(x, y)
-    case graft.pinot.PinotType.PFloat | graft.pinot.PinotType.PDouble =>
-      for (x <- a.toDoubleOption; y <- b.toDoubleOption)
-        yield (if (x == y) 0 else java.lang.Double.compare(x, y))
-    case _ => None
-  }
-
-  /** Smallest string strictly greater than every string with prefix `p`
-    * (last non-maximal char incremented, suffix dropped); None when all
-    * chars are maximal (no finite upper bound).
-    */
-  private[pinot] def prefixNext(p: String): Option[String] = {
-    val cs = p.toCharArray
-    var i = cs.length - 1
-    while (i >= 0) {
-      if (cs(i) < Char.MaxValue) {
-        cs(i) = (cs(i) + 1).toChar
-        return Some(new String(cs, 0, i + 1))
-      }
-      i -= 1
-    }
-    None
-  }
-
   /** Driver-side may-match from cached metadata min/max ONLY — used by
     * runtime (DPP) filtering, where opening segment dictionaries on the
     * driver for thousands of segments would be a metadata stampede.
@@ -1596,9 +1488,8 @@ object PinotScan {
       v: Any): Boolean =
     meta.columns.get(attr) match {
       case Some(cm) if cm.isSingleValue =>
-        val lo = cm.minValue.flatMap(cmpBound(_, v)).forall(_ <= 0)
-        val hi = cm.maxValue.flatMap(cmpBound(_, v)).forall(_ >= 0)
-        lo && hi
+        PinotValues.probe(cm.dataType, v).forall(p =>
+          PinotValues.boundsAdmit(cm, Some(p), true, Some(p), true))
       case _ => true
     }
 
@@ -1660,15 +1551,6 @@ object PinotScan {
     }
   }
 
-  /** Driver-side BULK metadata fetch for a cold table open: all missing
-    * segments' `metadata.properties` load CONCURRENTLY (bounded pool)
-    * into the plan-time cache, so schema inference and min/max pruning
-    * afterwards hit memory. Cold-opening a 10k-segment object-store
-    * table costs one listing + 10k PARALLEL GETs (~10k/32 round-trip
-    * latencies of wall time) instead of ~20-30k sequential ones.
-    * Fetches run OUTSIDE the cache lock (LruCache serializes computes);
-    * a racing duplicate fetch is harmless (immutable value, last wins).
-    */
   /** Evict a table's segment entries — the table-open path calls this on
     * a catalog-cache fingerprint MISS, where cached per-segment metadata
     * may be stale for an IN-PLACE overwrite (same path, new content).
@@ -1681,6 +1563,15 @@ object PinotScan {
   def cacheMeta(path: String, m: graft.pinot.SegmentMetadata): Unit =
     metaCache.put(path, m)
 
+  /** Driver-side BULK metadata fetch for a cold table open: all missing
+    * segments' `metadata.properties` load CONCURRENTLY (bounded pool)
+    * into the plan-time cache, so schema inference and min/max pruning
+    * afterwards hit memory. Cold-opening a 10k-segment object-store
+    * table costs one listing + 10k PARALLEL GETs (~10k/32 round-trip
+    * latencies of wall time) instead of ~20-30k sequential ones.
+    * Fetches run OUTSIDE the cache lock (LruCache serializes computes);
+    * a racing duplicate fetch is harmless (immutable value, last wins).
+    */
   def prefetchMetas(paths: Seq[String], io: graft.pinot.SegmentIO): Unit = {
     // eviction is the CALLER's decision (PinotSegmentTable.open evicts
     // on a fingerprint miss BEFORE seeding from the manifest) — an
@@ -2046,7 +1937,7 @@ case class PinotKeyedPartition(segmentPath: String,
 
 /** Reads a split through one [[PinotChainReader]] over its ranges. Under
   * a global budget the split's rows `[offset, limit)` come back in range
-  * order; otherwise each range's reader applies the per-range cap or its
+  * order; otherwise each range's reader reads it whole or applies its
   * top-N.
   */
 class PinotReaderFactory(columns: Array[String], skipFilters: Array[Filter],
@@ -2089,7 +1980,6 @@ class PinotReaderFactory(columns: Array[String], skipFilters: Array[Filter],
     */
   private def rangeReader(r: SegmentRange): PartitionReader[ColumnarBatch] =
     rowCap match {
-      case RowCap.PerRange(limit) => plainReader(r, Some(limit))
       case t: ScanTopN =>
         val end =
           if (r.end == Int.MaxValue) PinotScan.segmentDocsStrict(r.path).toInt
@@ -2132,9 +2022,8 @@ object PinotValueTopN {
   }
 
   /** Anything whose Spark ordering embeds into long: int/long/timestamp
-    * directly, boolean as 0/1, float/double via the IEEE total-order
-    * bit trick (sign-flip mapping; NaN maps above +Inf — exactly
-    * java.lang.{Float,Double}.compare, which is Spark's order).
+    * directly, boolean as 0/1, float/double via the IEEE order
+    * embedding ([[PinotHistAgg.rankDouble]]).
     */
   private abstract class LongRankSelector(
       desc: Boolean, k: Int) extends Selector {
@@ -2143,37 +2032,10 @@ object PinotValueTopN {
       */
     protected def read(vec: org.apache.spark.sql.vectorized.ColumnVector,
         i: Int): Long
-    private val heapV = new Array[Long](k)
-    private val heapD = new Array[Int](k)
-    private var size = 0
-    private def worse(a: Long, b: Long): Boolean = if (desc) a < b else a > b
-    private def siftDown(i0: Int): Unit = {
-      var i = i0
-      while (true) {
-        val l = 2 * i + 1; val r = l + 1
-        var w = i
-        if (l < size && worse(heapV(l), heapV(w))) w = l
-        if (r < size && worse(heapV(r), heapV(w))) w = r
-        if (w == i) return
-        val tv = heapV(i); heapV(i) = heapV(w); heapV(w) = tv
-        val td = heapD(i); heapD(i) = heapD(w); heapD(w) = td
-        i = w
-      }
-    }
+    private val top = new PinotHistAgg.LongTopK(k, desc)
     def consider(vec: org.apache.spark.sql.vectorized.ColumnVector,
-        i: Int, doc: Int): Unit = {
-      val v = read(vec, i)
-      if (size < k) {
-        heapV(size) = v; heapD(size) = doc; size += 1
-        if (size == k) { // heapify once full (root = worst kept)
-          var j = size / 2 - 1
-          while (j >= 0) { siftDown(j); j -= 1 }
-        }
-      } else if (worse(heapV(0), v)) {
-        heapV(0) = v; heapD(0) = doc; siftDown(0)
-      }
-    }
-    def docs: Array[Int] = java.util.Arrays.copyOf(heapD, size)
+        i: Int, doc: Int): Unit = top.offer(read(vec, i), doc)
+    def docs: Array[Int] = top.ids
   }
 
   /** Strings: UTF8String.compareTo IS Spark's order; the threshold is
@@ -2244,14 +2106,6 @@ object PinotValueTopN {
     val probe = new PinotColumnarReader(path, Array(topN.column),
       Array.empty, None, expectedTypes, slice = Some((lo, hi)))
     val k = topN.limit
-    // IEEE bits → order-embedded integer (flip the magnitude bits of
-    // negatives): the exact transform inside java.lang.Float.compare /
-    // Double.compare, so the embedded order IS Spark's (-Inf < -0.0 <
-    // +0.0 < +Inf < NaN)
-    def rankF(bits: Int): Long =
-      (bits ^ ((bits >> 31) & 0x7fffffff)).toLong
-    def rankD(bits: Long): Long =
-      bits ^ ((bits >> 63) & 0x7fffffffffffffffL)
     import org.apache.spark.sql.vectorized.ColumnVector
     val sel: Selector = tpe match {
       case PinotType.PInt =>
@@ -2270,12 +2124,12 @@ object PinotValueTopN {
       case PinotType.PFloat =>
         new LongRankSelector(topN.descending, k) {
           protected def read(v: ColumnVector, i: Int): Long =
-            rankF(java.lang.Float.floatToIntBits(v.getFloat(i)))
+            PinotHistAgg.rankDouble(v.getFloat(i).toDouble)
         }
       case PinotType.PDouble =>
         new LongRankSelector(topN.descending, k) {
           protected def read(v: ColumnVector, i: Int): Long =
-            rankD(java.lang.Double.doubleToLongBits(v.getDouble(i)))
+            PinotHistAgg.rankDouble(v.getDouble(i))
         }
       case PinotType.PString => new StringSelector(topN.descending, k)
       case other => throw new graft.pinot.PinotFormatException(
@@ -2299,7 +2153,7 @@ object PinotValueTopN {
   * reader at what remains, after skipping the first `skip` rows (the
   * pushed offset): whole ranges skip on metadata doc counts without
   * opening the segment, and the boundary range starts mid-range. Without
-  * one, each range's reader caps itself.
+  * one, each range's reader reads all it holds.
   */
 final class PinotChainReader(ranges: Seq[SegmentRange],
     open: (SegmentRange, Option[Int]) => PartitionReader[ColumnarBatch],
@@ -2367,57 +2221,176 @@ class PinotColumnarReader(segmentPath: String, columns: Array[String],
 
   private lazy val reader = SegmentReader.open(segmentPath)
 
-  /** Dictionary-based segment pruning: a pushed equality/IN filter on a
-    * dictionary-encoded column whose dictionary lacks every candidate
-    * value proves the segment contributes no rows — skip it without
-    * decoding any forward index (dictionaries are tiny vs columns).
-    */
-  private lazy val segmentCanMatch: Boolean = jsonCanMatch && skipFilters.forall {
-    case EqualTo(attr, value) =>
-      dictMayContain(attr, Seq(value)) &&
-        bloomMayContain(attr, Seq(value)) &&
-        rangeOpen(attr, maxSide = true, value, strict = false) && // max >= v
-        rangeOpen(attr, maxSide = false, value, strict = false) // min <= v
-    case In(attr, values) =>
-      dictMayContain(attr, values.toSeq) &&
-        bloomMayContain(attr, values.toSeq)
-    case GreaterThan(attr, value) =>
-      rangeOpen(attr, maxSide = true, value, strict = true)
-    case GreaterThanOrEqual(attr, value) =>
-      rangeOpen(attr, maxSide = true, value, strict = false)
-    case LessThan(attr, value) =>
-      rangeOpen(attr, maxSide = false, value, strict = true)
-    case LessThanOrEqual(attr, value) =>
-      rangeOpen(attr, maxSide = false, value, strict = false)
-    case StringStartsWith(attr, prefix) =>
-      // every match lies in [prefix, next(prefix)): keep iff max >= prefix
-      // and min < next(prefix); next(prefix) = None means no upper bound
-      rangeOpen(attr, maxSide = true, prefix, strict = false) &&
-        PinotScan.prefixNext(prefix).forall(np =>
-          rangeOpen(attr, maxSide = false, np, strict = true))
-    // null-vector metadata answers IS [NOT] NULL exactly: a column
-    // without a null vector has zero null rows; one whose vector covers
-    // every doc has zero non-null rows
-    case IsNull(attr) => colMeta(attr).forall(cm =>
-      cm.hasNullVector && cm.nullCount > 0)
-    case IsNotNull(attr) => colMeta(attr).forall(cm =>
-      !cm.hasNullVector || cm.nullCount < reader.metadata.totalDocs)
-    case _ => true
-  }
-
   private def colMeta(attr: String): Option[graft.pinot.ColumnMetadata] =
     try Some(reader.metadata.column(attr)) catch { case _: Throwable => None }
 
-  /** JSON-index candidate set (EXTENSION — the capability of Pinot's
-    * `jsonIndexColumns`; see [[graft.pinot.JsonIndexSection]]): AND
-    * across the pushed `get_json_object` probes (equality / IN-list /
-    * IS NOT NULL) the column's index can answer soundly. None when no
-    * probe is index-answerable (no index / refused path / odd probe) —
-    * the scan then decodes normally and the residual filter decides.
+  /** Metadata of a single-value column: a filter on a multi-value column
+    * has array semantics, so only null filters consult one.
     */
-  private lazy val jsonEqBitmap
-      : Option[org.roaringbitmap.buffer.MutableRoaringBitmap] = {
-    var acc: org.roaringbitmap.buffer.MutableRoaringBitmap = null
+  private def svMeta(attr: String): Option[graft.pinot.ColumnMetadata] =
+    colMeta(attr).filter(_.isSingleValue)
+
+  private lazy val hasMV: Boolean =
+    columns.exists(c => colMeta(c).exists(!_.isSingleValue))
+
+  private def all: Cand = Cand(0, reader.totalDocs, None)
+  private def none: Cand = Cand(0, 0, None)
+  private def docs(bm: MutableRoaringBitmap): Cand =
+    Cand(0, reader.totalDocs, Some(bm))
+
+  /** The docs the pushed filters and JSON probes may match: each one's
+    * [[candidate]] set, intersected once (stopping at the first empty
+    * one). Always a superset of the matching docs — every filter stays
+    * residual, so Spark's re-evaluation keeps results exact.
+    */
+  private lazy val candidates: Cand =
+    skipFilters.foldLeft(jsonEqBitmap.fold(all)(docs))(_ & candidate(_))
+
+  /** One pushed filter's candidate docs, from whichever sources answer
+    * it: the dictionary, bloom filter, recorded min/max and null count
+    * can empty the set; the sorted column bounds a doc interval; the
+    * inverted, range, text or null-vector index gives a bitmap (EqualTo
+    * asks the inverted index before the range index).
+    */
+  private def candidate(f: Filter): Cand = f match {
+    case EqualTo(a, v) =>
+      val byValue = valuesCand(a, Seq(v))
+      byValue & spanCand(a, Some(v), true, Some(v), true,
+        rangeIndex = byValue.bits.isEmpty)
+    case In(a, vs) => valuesCand(a, vs.toSeq)
+    case GreaterThan(a, v) => spanCand(a, Some(v), false, None, false)
+    case GreaterThanOrEqual(a, v) => spanCand(a, Some(v), true, None, false)
+    case LessThan(a, v) => spanCand(a, None, false, Some(v), false)
+    case LessThanOrEqual(a, v) => spanCand(a, None, false, Some(v), true)
+    case StringStartsWith(a, p) =>
+      // every match lies in [p, next(p)), and contains p
+      spanCand(a, Some(p), true, PinotValues.prefixNext(p), false) &
+        textCand(a, p)
+    case StringContains(a, p) => textCand(a, p)
+    case StringEndsWith(a, p) => textCand(a, p)
+    case IsNull(a) => nullCand(a, wantNull = true)
+    case IsNotNull(a) => nullCand(a, wantNull = false)
+    case _ => all
+  }
+
+  /** EqualTo / In: a dictionary or bloom filter holding none of the
+    * values empties the set (the bloom is the point-lookup pruning path
+    * for RAW columns, where min/max keeps any in-range probe; see
+    * [[graft.pinot.BloomSection]]), and an inverted index gives the docs
+    * of the matching dictionary ids.
+    */
+  private def valuesCand(attr: String, values: Seq[Any]): Cand =
+    svMeta(attr).fold(all) { cm =>
+      val ps = values.map(PinotValues.probe(cm.dataType, _))
+      if (ps.contains(None)) all
+      else {
+        val probes = ps.flatten
+        val ids =
+          if (cm.hasDictionary) Some(equalIds(attr, cm.dataType, probes))
+          else None
+        def bloomMiss = (try reader.bloomFilter(attr)
+          catch { case _: Throwable => None }).exists(b => !probes.exists(p =>
+            b.mightContain(PinotValues.bloomKey(cm.dataType, p))))
+        if (ids.exists(_.isEmpty) || bloomMiss) none
+        else ids.filter(_ => cm.hasInvertedIndex).flatMap(ids =>
+          reader.invertedIndex(attr).map { postings =>
+            val acc = new MutableRoaringBitmap
+            ids.foreach(id => acc.or(postings(id)))
+            acc
+          }).fold(all)(docs)
+      }
+    }
+
+  /** Ids of the dictionary entries Spark-equal to any of `probes`. */
+  private def equalIds(attr: String, tpe: PinotType,
+      probes: Seq[Any]): Seq[Int] = {
+    val dict = reader.dictionary(attr)
+    (0 until dict.size).filter { id =>
+      val v = PinotValues.stored(tpe, dict.value(id))
+      probes.exists(PinotValues.compare(v, _) == 0)
+    }
+  }
+
+  /** A range, point or prefix interval from `lo` to `hi` (None:
+    * unbounded): the recorded [min, max] can rule it out, the sorted
+    * column bounds its doc interval, and a range index (when asked) gives
+    * the buckets that may hold it.
+    */
+  private def spanCand(attr: String, lo: Option[Any], loInc: Boolean,
+      hi: Option[Any], hiInc: Boolean, rangeIndex: Boolean = true): Cand =
+    svMeta(attr).fold(all) { cm =>
+      val l = lo.map(PinotValues.probe(cm.dataType, _))
+      val h = hi.map(PinotValues.probe(cm.dataType, _))
+      if (l.contains(None) || h.contains(None)) all
+      else {
+        val (pl, ph) = (l.flatten, h.flatten)
+        if (!PinotValues.boundsAdmit(cm, pl, loInc, ph, hiInc)) none
+        else sortedCand(attr, pl, loInc, ph, hiInc) &
+          (if (rangeIndex && cm.hasRangeIndex)
+             rangeCand(attr, cm.dataType, pl, loInc, ph, hiInc)
+           else all)
+      }
+    }
+
+  /** Range-index candidates (see [[graft.pinot.RangeSection]]): the OR
+    * of the doc buckets whose exact [min, max] meets the probe interval.
+    */
+  private def rangeCand(attr: String, tpe: PinotType, lo: Option[Any],
+      loInc: Boolean, hi: Option[Any], hiInc: Boolean): Cand = {
+    val l = lo.map(PinotValues.rangeKey(tpe, _, loInc, lower = true))
+    val h = hi.map(PinotValues.rangeKey(tpe, _, hiInc, lower = false))
+    if (l.contains(None) || h.contains(None)) all
+    else (try reader.rangeIndex(attr) catch { case _: Throwable => None })
+      .fold(all) { idx =>
+        val (kl, kh) = (l.flatten, h.flatten)
+        docs(idx.matchBitmap(kl.map(_._1), kl.exists(_._2),
+          kh.map(_._1), kh.exists(_._2)))
+      }
+  }
+
+  /** Text-index candidates (EXTENSION — Pinot's `textIndexColumns`
+    * capability; see [[graft.pinot.TextIndexSection]]) of a contains /
+    * startsWith / endsWith probe: the OR of the postings of every
+    * vocabulary token containing it. Sound because a whitespace-free
+    * substring of the text lies inside one token; a probe with
+    * whitespace never consults the index.
+    */
+  private def textCand(attr: String, v: Any): Cand =
+    svMeta(attr).filter(_.hasTextIndex)
+      .flatMap(cm => PinotValues.probe(cm.dataType, v))
+      .collect { case p: String => p }
+      .flatMap { p =>
+        (try reader.textIndex(attr) catch { case _: Throwable => None })
+          .flatMap(_.matchBitmap(p))
+      }.fold(all)(docs)
+
+  /** IS [NOT] NULL: the null count answers exactly whether any doc
+    * matches (a column without a null vector has no null rows), and the
+    * null vector, or its complement, gives the docs.
+    */
+  private def nullCand(attr: String, wantNull: Boolean): Cand =
+    colMeta(attr) match {
+      case None => all
+      case Some(cm) if !cm.hasNullVector => if (wantNull) none else all
+      case Some(cm) if (if (wantNull) cm.nullCount <= 0
+                         else cm.nullCount >= reader.metadata.totalDocs) => none
+      case Some(_) => reader.nullVector(attr).fold(all) { nv =>
+        val m = new MutableRoaringBitmap
+        m.or(nv)
+        if (!wantNull) m.flip(0L, reader.totalDocs.toLong)
+        docs(m)
+      }
+    }
+
+  /** JSON-index candidates (EXTENSION — the capability of Pinot's
+    * `jsonIndexColumns`; see [[graft.pinot.JsonIndexSection]]): AND
+    * across the pushed `get_json_object` probes the column's index can
+    * answer soundly. None when no probe is index-answerable (no index /
+    * refused path / odd probe) — the scan then decodes normally and the
+    * residual filter decides.
+    */
+  private lazy val jsonEqBitmap: Option[MutableRoaringBitmap] = {
+    var acc: MutableRoaringBitmap = null
     jsonEq.foreach { probe =>
       if (colMeta(probe.col).exists(m => m.isSingleValue && m.hasJsonIndex)) {
         val ji = try reader.jsonIndex(probe.col)
@@ -2443,376 +2416,23 @@ class PinotColumnarReader(segmentPath: String, columns: Array[String],
     Option(acc)
   }
 
-  /** Empty JSON candidate set proves the segment contributes no rows. */
-  private lazy val jsonCanMatch: Boolean = jsonEqBitmap.forall(!_.isEmpty)
-
-  /** `col > v` can match only if segment max > v (maxSide), `col < v`
-    * only if segment min < v. Unknown metadata or unsupported types →
-    * never prune. Comparisons are exact (BigDecimal for numerics; string
-    * compare is sound because recorded min/max are ASCII-only).
+  /** The one sorted column that ranges the scan (extension; the reference
+    * parses `isSorted` and drops it, metadata.rs:166-168): the first
+    * filtered sorted single-value column of a numeric type, or a sorted
+    * dictionary STRING column (RAW strings lack a cheap per-doc
+    * accessor). None with a multi-value column projected.
     */
-  private def rangeOpen(attr: String, maxSide: Boolean, value: Any,
-      strict: Boolean): Boolean = {
-    val cm = try reader.metadata.column(attr)
-      catch { case _: Throwable => return true }
-    if (!cm.isSingleValue) return true
-    val bound = if (maxSide) cm.maxValue else cm.minValue
-    bound match {
-      case Some(b) => cmp(b, value) match {
-        case Some(c) =>
-          if (maxSide) { if (strict) c > 0 else c >= 0 }
-          else { if (strict) c < 0 else c <= 0 }
-        case None => true
-      }
-      case None => true
+  private lazy val sortedCol: Option[String] =
+    if (hasMV) None
+    else skipFilters.iterator.flatMap(filterAttr).distinct.find { c =>
+      colMeta(c).exists(cm => cm.isSorted && cm.isSingleValue &&
+        (cm.dataType match {
+          case PinotType.PInt | PinotType.PLong | PinotType.PFloat |
+               PinotType.PDouble | PinotType.PTimestamp => true
+          case PinotType.PString => cm.hasDictionary
+          case _ => false
+        }))
     }
-  }
-
-  /** Compare a metadata bound (string form) against a pushed filter value.
-    * Some(sign) when comparable; None → cannot prune on this filter.
-    * (Shared with driver-side runtime pruning — see PinotScan.cmpBound.)
-    */
-  private def cmp(bound: String, value: Any): Option[Int] =
-    PinotScan.cmpBound(bound, value)
-
-  private def dictMayContain(attr: String, values: Seq[Any]): Boolean = {
-    val cm = try reader.metadata.column(attr)
-      catch { case _: Throwable => return true }
-    if (!cm.hasDictionary) return true // RAW column: cannot prune
-    if (!cm.isSingleValue) return true // MV equality has array semantics
-    val dict = reader.dictionary(attr)
-    values.exists(v => dictContains(dict, v))
-  }
-
-  private def dictContains(dict: PinotDictionary, v: Any): Boolean =
-    (dict, v) match {
-      case (PinotDictionary.Ints(a), x: Int) => a.contains(x)
-      case (PinotDictionary.Longs(a), x: Long) => a.contains(x)
-      // NaN needs an explicit probe (primitive NaN != NaN would always
-      // prune, while Spark's EqualTo treats NaN = NaN as true); plain ==
-      // also makes -0.0 match 0.0, aligning with Spark equality
-      case (PinotDictionary.Floats(a), x: Float) =>
-        if (x.isNaN) a.exists(_.isNaN) else a.exists(_ == x)
-      case (PinotDictionary.Doubles(a), x: Double) =>
-        if (x.isNaN) a.exists(_.isNaN) else a.exists(_ == x)
-      case (PinotDictionary.Strings(a), x: String) => a.contains(x)
-      case (PinotDictionary.Strings(a), x: UTF8String) => a.contains(x.toString)
-      // TIMESTAMP equality: dict holds epoch millis, probe in micros
-      case (PinotDictionary.Longs(a), x)
-          if PinotScan.timestampMicros(x).isDefined =>
-        val us = PinotScan.timestampMicros(x).get
-        a.exists(ms => Math.multiplyExact(ms, 1000L) == us)
-      case _ => true // unexpected type pairing: never prune on a guess
-    }
-
-  /** Bloom-filter pruning (EXTENSION — Pinot's `bloomFilterColumns`):
-    * EqualTo/In where the bloom answers "definitely absent" for EVERY
-    * candidate value proves the segment contributes no rows — the point-
-    * lookup pruning path for RAW (no-dictionary) columns, where
-    * [[dictMayContain]] cannot decide and min/max keeps any in-range
-    * probe. False positives only keep the segment (residual filter
-    * decides); "absent" is exact under Spark equality because writer and
-    * probe share one canonical spelling (see [[graft.pinot.BloomSection]]).
-    */
-  private def bloomMayContain(attr: String, values: Seq[Any]): Boolean = {
-    val cm = colMeta(attr) match {
-      case Some(m) if m.isSingleValue => m
-      case _ => return true
-    }
-    val bf = try reader.bloomFilter(attr) catch { case _: Throwable => None }
-    bf match {
-      case None => true
-      case Some(b) => values.exists(v => bloomProbe(cm.dataType.name, v) match {
-        case Some(c) => b.mightContain(c)
-        case None => true // type pairing we can't canonicalize: never prune
-      })
-    }
-  }
-
-  /** Probe value → the writer's canonical spelling, ONLY when the
-    * probe's runtime type matches the column's stored type (a cross-
-    * typed literal — e.g. a double probe against a FLOAT column — can
-    * be Spark-equal under widening while spelling differently, so it
-    * must never reach the bloom). TIMESTAMP columns store epoch millis;
-    * a sub-millisecond probe can equal no stored value, so it maps to a
-    * spelling no TIMESTAMP writer emits (digit strings only) and prunes.
-    */
-  private def bloomProbe(dataType: String, v: Any): Option[String] =
-    (dataType, v) match {
-      case (_, null) => None
-      case ("INT", x: Int) => Some(String.valueOf(x))
-      case ("LONG", x: Long) => Some(String.valueOf(x))
-      case ("STRING" | "JSON", x: String) => Some(x)
-      case ("STRING" | "JSON", x: UTF8String) => Some(x.toString)
-      case ("FLOAT", x: Float) =>
-        Some(graft.pinot.BloomSection.canonicalFloat(x))
-      case ("DOUBLE", x: Double) =>
-        Some(graft.pinot.BloomSection.canonicalDouble(x))
-      case ("BOOLEAN", x: Boolean) => Some(String.valueOf(x))
-      case ("TIMESTAMP", x) if PinotScan.timestampMicros(x).isDefined =>
-        val us = PinotScan.timestampMicros(x).get
-        if (us % 1000L == 0) Some(String.valueOf(us / 1000L))
-        else Some("ts:sub-milli") // not a digit string → definitely absent
-      case _ => None
-    }
-
-  /** Bitmap inverted-index match set (EXTENSION — Pinot's
-    * `invertedIndexColumns`; the reference ignores secondary indexes):
-    * for pushed EqualTo/In filters on single-value dict columns carrying
-    * an `inverted_index` section, OR the posting bitmaps of the matching
-    * dictIds per filter and AND across filters. The result is EXACTLY
-    * the matching doc set for those filters — used to (a) prune the
-    * segment when empty, (b) clamp the scan doc range, and (c) skip
-    * 8,192-row windows containing no match. Always a superset of the
-    * final rows (other filters stay residual), so Spark's re-evaluation
-    * keeps correctness.
-    */
-  private lazy val invBitmap
-      : Option[org.roaringbitmap.buffer.MutableRoaringBitmap] = {
-    // limit pushdown only happens with no residual filters, so the two
-    // never coexist — but skipping docs under a limit cap would change
-    // WHICH rows count toward it, so guard anyway
-    if (limit.isDefined || (skipFilters.isEmpty && jsonEq.isEmpty)) None
-    else {
-      var acc: org.roaringbitmap.buffer.MutableRoaringBitmap = null
-      skipFilters.foreach { f =>
-        val fb = f match {
-          case EqualTo(a, v) => filterBitmap(a, Seq(v))
-            .orElse(rangeIdxBitmap(a, Some(v), loInc = true, Some(v), hiInc = true))
-          case In(a, vs) => filterBitmap(a, vs.toSeq)
-          // null-value vectors are exact doc sets too: IS NULL matches
-          // the bitmap, IS NOT NULL its complement over [0, totalDocs)
-          case IsNull(a) => nullFilterBitmap(a, wantNull = true)
-          case IsNotNull(a) => nullFilterBitmap(a, wantNull = false)
-          // text index: substring predicates → token-posting OR
-          case StringContains(a, v) => textBitmap(a, v)
-          case StringStartsWith(a, v) => textBitmap(a, v)
-          case StringEndsWith(a, v) => textBitmap(a, v)
-          // range index (unsorted numeric columns): candidate-bucket OR
-          case GreaterThan(a, v) =>
-            rangeIdxBitmap(a, Some(v), loInc = false, None, hiInc = false)
-          case GreaterThanOrEqual(a, v) =>
-            rangeIdxBitmap(a, Some(v), loInc = true, None, hiInc = false)
-          case LessThan(a, v) =>
-            rangeIdxBitmap(a, None, loInc = false, Some(v), hiInc = false)
-          case LessThanOrEqual(a, v) =>
-            rangeIdxBitmap(a, None, loInc = false, Some(v), hiInc = true)
-          case _ => None
-        }
-        fb.foreach { m => if (acc == null) acc = m else acc.and(m) }
-      }
-      // pushed get_json_object equality probes: json-index candidate AND
-      jsonEqBitmap.foreach { m =>
-        if (acc == null) acc = m.clone() else acc.and(m)
-      }
-      Option(acc)
-    }
-  }
-
-  /** Text-index match superset (EXTENSION — Pinot's `textIndexColumns`
-    * capability; see [[graft.pinot.TextIndexSection]]): for a pushed
-    * contains/startsWith/endsWith probe, the OR of the postings of every
-    * vocabulary token containing the probe. Sound because a
-    * whitespace-free substring of the text must lie inside one token; a
-    * probe with whitespace never consults the index. startsWith/endsWith
-    * matches are contains matches, so one candidate set covers all
-    * three. Residual filters keep exactness.
-    */
-  private def textBitmap(attr: String, probe: Any)
-      : Option[org.roaringbitmap.buffer.MutableRoaringBitmap] = {
-    val ok = colMeta(attr).exists(m => m.isSingleValue && m.hasTextIndex)
-    if (!ok) return None
-    val p = probe match {
-      case s: String => s
-      case s: UTF8String => s.toString
-      case _ => return None
-    }
-    val ti = try reader.textIndex(attr) catch { case _: Throwable => None }
-    ti.flatMap(_.matchBitmap(p))
-  }
-
-  /** Range-index match superset (EXTENSION — Pinot's `rangeIndexColumns`;
-    * see [[graft.pinot.RangeSection]]): OR of the doc buckets whose
-    * exact [min, max] intersects the probe interval. Bounds compare in
-    * the column's stored domain — LONG for INT/LONG, canonical-double
-    * bits for FLOAT/DOUBLE (Double.compare ≙ Spark's NaN-high ordering),
-    * and for TIMESTAMP the micros probe maps onto the stored-millis grid
-    * with floor-division inclusivity so no representable match is lost.
-    * A cross-typed probe never consults the index.
-    */
-  private def rangeIdxBitmap(attr: String, lo: Option[Any], loInc: Boolean,
-      hi: Option[Any], hiInc: Boolean)
-      : Option[org.roaringbitmap.buffer.MutableRoaringBitmap] = {
-    val cm = colMeta(attr) match {
-      case Some(m) if m.isSingleValue && m.hasRangeIndex => m
-      case _ => return None
-    }
-    val ri = try reader.rangeIndex(attr) catch { case _: Throwable => None }
-    ri.flatMap { idx =>
-      val tpe = cm.dataType.name
-      def plain(v: Any): Option[Long] = (tpe, v) match {
-        case ("INT", x: Int) => Some(x.toLong)
-        case ("LONG", x: Long) => Some(x)
-        case ("FLOAT", x: Float) =>
-          Some(graft.pinot.RangeSection.doubleBits(x.toDouble))
-        case ("DOUBLE", x: Double) =>
-          Some(graft.pinot.RangeSection.doubleBits(x))
-        case _ => None
-      }
-      // per-bound conversion; Left = unconvertible (do not use index)
-      def loBound: Either[Unit, (Option[Long], Boolean)] = lo match {
-        case None => Right((None, false))
-        case Some(v) if tpe == "TIMESTAMP" =>
-          PinotScan.timestampMicros(v) match {
-            case Some(us) =>
-              if (us % 1000L == 0) Right((Some(us / 1000L), loInc))
-              else Right((Some(Math.floorDiv(us, 1000L)), false)) // strict
-            case None => Left(())
-          }
-        case Some(v) => plain(v) match {
-          case Some(b) => Right((Some(b), loInc))
-          case None => Left(())
-        }
-      }
-      def hiBound: Either[Unit, (Option[Long], Boolean)] = hi match {
-        case None => Right((None, false))
-        case Some(v) if tpe == "TIMESTAMP" =>
-          PinotScan.timestampMicros(v) match {
-            case Some(us) =>
-              if (us % 1000L == 0) Right((Some(us / 1000L), hiInc))
-              else Right((Some(Math.floorDiv(us, 1000L)), true)) // inclusive
-            case None => Left(())
-          }
-        case Some(v) => plain(v) match {
-          case Some(b) => Right((Some(b), hiInc))
-          case None => Left(())
-        }
-      }
-      (loBound, hiBound) match {
-        case (Right((lb, li)), Right((hb, hi2))) =>
-          Some(idx.matchBitmap(lb, li, hb, hi2))
-        case _ => None
-      }
-    }
-  }
-
-  private def nullFilterBitmap(attr: String, wantNull: Boolean)
-      : Option[org.roaringbitmap.buffer.MutableRoaringBitmap] = {
-    val cm = try reader.metadata.column(attr)
-      catch { case _: Throwable => return None }
-    if (!cm.hasNullVector) return None // no nulls: IsNotNull is all-docs
-    reader.nullVector(attr).map { nv =>
-      val m = new org.roaringbitmap.buffer.MutableRoaringBitmap
-      m.or(nv)
-      if (!wantNull) m.flip(0L, reader.totalDocs.toLong)
-      m
-    }
-  }
-
-  private def filterBitmap(attr: String, values: Seq[Any])
-      : Option[org.roaringbitmap.buffer.MutableRoaringBitmap] = {
-    val cm = try reader.metadata.column(attr)
-      catch { case _: Throwable => return None }
-    if (!cm.hasDictionary || !cm.isSingleValue || !cm.hasInvertedIndex)
-      return None
-    reader.invertedIndex(attr).flatMap { postings =>
-      matchingDictIds(reader.dictionary(attr), values).map { ids =>
-        val acc = new org.roaringbitmap.buffer.MutableRoaringBitmap
-        ids.foreach(id => acc.or(postings(id)))
-        acc
-      }
-    }
-  }
-
-  /** DictIds equal to any candidate value under SPARK equality (-0.0 ==
-    * 0.0, NaN = NaN true — same care as [[dictContains]]). None when any
-    * value has an unexpected type pairing: the index must then not be
-    * used for this filter at all (a wrong "no matches" would drop rows).
-    */
-  private def matchingDictIds(dict: PinotDictionary, values: Seq[Any])
-      : Option[Seq[Int]] = {
-    val perValue = values.map { v =>
-      (dict, v) match {
-        case (PinotDictionary.Ints(a), x: Int) =>
-          Some(a.indices.filter(a(_) == x))
-        case (PinotDictionary.Longs(a), x: Long) =>
-          Some(a.indices.filter(a(_) == x))
-        case (PinotDictionary.Floats(a), x: Float) =>
-          Some(if (x.isNaN) a.indices.filter(a(_).isNaN)
-               else a.indices.filter(a(_) == x))
-        case (PinotDictionary.Doubles(a), x: Double) =>
-          Some(if (x.isNaN) a.indices.filter(a(_).isNaN)
-               else a.indices.filter(a(_) == x))
-        case (PinotDictionary.Strings(a), x: String) =>
-          Some(a.indices.filter(a(_) == x))
-        case (PinotDictionary.Strings(a), x: UTF8String) =>
-          val s = x.toString
-          Some(a.indices.filter(a(_) == s))
-        case (PinotDictionary.Longs(a), x)
-            if PinotScan.timestampMicros(x).isDefined =>
-          val us = PinotScan.timestampMicros(x).get
-          Some(a.indices.filter(i => Math.multiplyExact(a(i), 1000L) == us))
-        case _ => None
-      }
-    }
-    if (perValue.exists(_.isEmpty)) None
-    else Some(perValue.flatMap(_.get).distinct)
-  }
-
-  /** Sub-segment range for SORTED columns (extension; the reference
-    * parses `isSorted` and drops it, metadata.rs:166-168): when a pushed
-    * range/equality filter targets a sorted numeric dict column, binary
-    * search bounds the matching doc interval and ONLY that slice of every
-    * projected column decodes (fixed-bit ids and VarByte chunks are both
-    * position-addressable). Always a superset of the matching rows —
-    * Spark's residual filter stays authoritative. The inverted-index
-    * match set (when present) clamps the range further.
-    */
-  private lazy val docRange: (Int, Int) = {
-    val n = if (segmentCanMatch) reader.totalDocs else 0
-    if (n == 0) (0, 0)
-    else {
-      val hasMV = columns.exists { c =>
-        try !reader.metadata.column(c).isSingleValue
-        catch { case _: Throwable => false }
-      }
-      val sortedCol =
-        if (hasMV || skipFilters.isEmpty) None
-        else skipFilters.iterator.flatMap(filterAttr).distinct.find { c =>
-          val cm = try reader.metadata.column(c) catch { case _: Throwable => null }
-          cm != null && cm.isSorted && cm.isSingleValue &&
-            (cm.dataType match {
-              case PinotType.PInt | PinotType.PLong | PinotType.PFloat |
-                   PinotType.PDouble | PinotType.PTimestamp => true
-              // sorted STRING columns (e.g. time-ordered ids) range the
-              // same way via the dictionary; RAW strings lack a cheap
-              // per-doc accessor, so dict-encoded only
-              case PinotType.PString => cm.hasDictionary
-              case _ => false
-            })
-        }
-      val base = sortedCol.fold((0, n))(sortedDocRange)
-      val ranged = invBitmap match {
-        case Some(bm) =>
-          if (bm.isEmpty) (0, 0)
-          // MV window skipping in next() still applies (it advances pos
-          // relative to docStart; decode indexes offsets absolutely)
-          else if (hasMV) base
-          else {
-            val lo = math.max(base._1, bm.first())
-            val hi = math.min(base._2, bm.last() + 1)
-            if (lo >= hi) (0, 0) else (lo, hi)
-          }
-        case None => base
-      }
-      // sub-segment slice: intersect with this task's doc window
-      slice.fold(ranged) { case (s, e) =>
-        val lo = math.max(ranged._1, s)
-        val hi = math.min(ranged._2, math.min(e, n))
-        if (lo >= hi) (0, 0) else (lo, hi)
-      }
-    }
-  }
 
   private def filterAttr(f: Filter): Option[String] = f match {
     case GreaterThan(a, _) => Some(a)
@@ -2824,95 +2444,71 @@ class PinotColumnarReader(segmentPath: String, columns: Array[String],
     case _ => None
   }
 
-  private def sortedDocRange(c: String): (Int, Int) = {
-    val n = reader.totalDocs
+  /** [[sortedCol]]'s value at a doc, in its domain: dictionary columns
+    * random-access the packed id stream, RAW numerics the fixed-byte
+    * index — a binary search reads O(log n) values, never the column.
+    */
+  private lazy val sortedValue: Int => Any = {
+    val c = sortedCol.get
     val cm = reader.metadata.column(c)
-    // value accessor: dict columns random-access the packed id stream
-    // per binary-search probe (O(log n) bit reads — a full id-stream
-    // decode per task would defeat sub-segment slicing); RAW numerics
-    // random-access the fixed-byte index the same way
-    val valueAt: Int => Any =
+    val raw: Int => Any =
       if (cm.hasDictionary) {
-        val fbr = reader.dictIdReader(c)
-        reader.dictionary(c) match {
-          case PinotDictionary.Ints(d) => doc => d(fbr.get(doc))
-          case PinotDictionary.Longs(d) => doc => d(fbr.get(doc))
-          case PinotDictionary.Floats(d) => doc => d(fbr.get(doc))
-          case PinotDictionary.Doubles(d) => doc => d(fbr.get(doc))
-          case PinotDictionary.Strings(d) => doc => d(fbr.get(doc))
-          case _ => _ => null
-        }
+        val (fbr, dict) = (reader.dictIdReader(c), reader.dictionary(c))
+        doc => dict.value(fbr.get(doc))
       } else {
         val fb = reader.fixedByteReader(c)
         cm.dataType match {
           case PinotType.PInt => doc => fb.readRangeInts(doc, 1)(0)
-          case PinotType.PLong | PinotType.PTimestamp =>
-            doc => fb.readRangeLongs(doc, 1)(0)
           case PinotType.PFloat => doc => fb.readRangeFloats(doc, 1)(0)
           case PinotType.PDouble => doc => fb.readRangeDoubles(doc, 1)(0)
-          case _ => _ => null
+          case _ => doc => fb.readRangeLongs(doc, 1)(0) // LONG, TIMESTAMP
         }
       }
-    // ±0.0 compares equal (Spark semantics); NaN == NaN and sorts last —
-    // both match the writer's total order, keeping the predicate monotone
-    def valCmp(doc: Int, v: Any): Option[Int] = (valueAt(doc), v) match {
-      case (a: Int, x: Int) => Some(Integer.compare(a, x))
-      case (a: Long, x: Long) => Some(java.lang.Long.compare(a, x))
-      case (a: Float, x: Float) =>
-        Some(if (a == x) 0 else java.lang.Float.compare(a, x))
-      case (a: Double, x: Double) =>
-        Some(if (a == x) 0 else java.lang.Double.compare(a, x))
-      // sound only for ASCII bounds/probes (UTF-16 order == UTF-8 byte
-      // order there); non-ASCII probes fall back to no ranging
-      case (a: String, x: String)
-          if x.forall(ch => ch >= 0x20 && ch < 0x7f) =>
-        Some(a.compareTo(x))
-      case (a: String, x: UTF8String) =>
-        val s = x.toString
-        if (s.forall(ch => ch >= 0x20 && ch < 0x7f)) Some(a.compareTo(s))
-        else None
-      // sorted TIMESTAMP column: doc value is epoch millis (Long from
-      // the dict/raw accessor), probe converts to micros
-      case (a: Long, x) if PinotScan.timestampMicros(x).isDefined =>
-        Some(java.lang.Long.compare(Math.multiplyExact(a, 1000L),
-          PinotScan.timestampMicros(x).get))
-      case _ => None
-    }
-    // first doc where the monotone predicate flips false→true
-    def firstWhere(p: Int => Boolean): Int = {
-      var lo = 0
-      var hi = n
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (p(mid)) hi = mid else lo = mid + 1
-      }
-      lo
-    }
-    var lo = 0
-    var hi = n
-    def comparable(v: Any): Boolean = valCmp(0, v).isDefined
-    skipFilters.foreach {
-      case GreaterThan(a, v) if a == c && comparable(v) =>
-        lo = math.max(lo, firstWhere(d => valCmp(d, v).exists(_ > 0)))
-      case GreaterThanOrEqual(a, v) if a == c && comparable(v) =>
-        lo = math.max(lo, firstWhere(d => valCmp(d, v).exists(_ >= 0)))
-      case EqualTo(a, v) if a == c && comparable(v) =>
-        lo = math.max(lo, firstWhere(d => valCmp(d, v).exists(_ >= 0)))
-        hi = math.min(hi, firstWhere(d => valCmp(d, v).exists(_ > 0)))
-      case LessThan(a, v) if a == c && comparable(v) =>
-        hi = math.min(hi, firstWhere(d => valCmp(d, v).exists(_ >= 0)))
-      case LessThanOrEqual(a, v) if a == c && comparable(v) =>
-        hi = math.min(hi, firstWhere(d => valCmp(d, v).exists(_ > 0)))
-      case StringStartsWith(a, prefix) if a == c && comparable(prefix) =>
-        // matches live in [prefix, next(prefix)) of the sorted order
-        lo = math.max(lo, firstWhere(d => valCmp(d, prefix).exists(_ >= 0)))
-        PinotScan.prefixNext(prefix).foreach { np =>
-          if (comparable(np))
-            hi = math.min(hi, firstWhere(d => valCmp(d, np).exists(_ >= 0)))
+    doc => PinotValues.stored(cm.dataType, raw(doc))
+  }
+
+  /** The doc interval of [[sortedCol]] between `lo` and `hi`, by binary
+    * search: only that slice of every projected column decodes. The
+    * writer's order keeps ±0.0 adjacent and NaN last, so the predicate
+    * stays monotone under Spark comparison.
+    */
+  private def sortedCand(attr: String, lo: Option[Any], loInc: Boolean,
+      hi: Option[Any], hiInc: Boolean): Cand =
+    if (!sortedCol.contains(attr)) all
+    else {
+      val n = reader.totalDocs
+      // first doc above p (at or above p unless strict)
+      def firstAbove(p: Any, strict: Boolean): Int = {
+        var (a, b) = (0, n)
+        while (a < b) {
+          val mid = (a + b) >>> 1
+          val c = PinotValues.compare(sortedValue(mid), p)
+          if (c > 0 || !strict && c == 0) b = mid else a = mid + 1
         }
-      case _ => ()
+        a
+      }
+      Cand(
+        lo.filter(PinotValues.rangesSorted).fold(0)(firstAbove(_, !loInc)),
+        hi.filter(PinotValues.rangesSorted).fold(n)(firstAbove(_, hiInc)),
+        None)
     }
-    if (lo >= hi) (0, 0) else (lo, hi)
+
+  /** The doc interval this reader decodes: the candidates' interval,
+    * clamped to the first and last doc of their bitmap unless a
+    * multi-value column is projected (window skipping in next() still
+    * applies), then to this task's slice.
+    */
+  private lazy val docRange: (Int, Int) = {
+    val c = candidates
+    val (lo, hi) = c.bits match {
+      case _ if c.isEmpty => (0, 0)
+      case Some(bm) if !hasMV =>
+        (math.max(c.lo, bm.first()), math.min(c.hi, bm.last() + 1))
+      case _ => (c.lo, c.hi)
+    }
+    val (s, e) = slice.getOrElse((0, Int.MaxValue))
+    if (math.max(lo, s) >= math.min(hi, e)) (0, 0)
+    else (math.max(lo, s), math.min(hi, e))
   }
 
   private lazy val docStart: Int = docRange._1
@@ -3076,10 +2672,10 @@ class PinotColumnarReader(segmentPath: String, columns: Array[String],
 
   override def next(): Boolean = {
     if (pos >= totalDocs) return false
-    // inverted-index window skip: jump straight to the next matching doc
-    // (windows are relative to pos, so the next batch STARTS at a match;
-    // runs of non-matching windows never decode)
-    invBitmap.foreach { bm =>
+    // candidate-bitmap window skip: jump straight to the next candidate
+    // doc (windows are relative to pos, so the next batch STARTS at a
+    // candidate; runs of non-candidate windows never decode)
+    candidates.bits.foreach { bm =>
       val nxt = bm.nextValue(docStart + pos)
       if (nxt < 0 || nxt >= docStart + totalDocs) { pos = totalDocs; return false }
       pos = math.max(pos, (nxt - docStart).toInt)
@@ -3179,6 +2775,22 @@ class PinotColumnarReader(segmentPath: String, columns: Array[String],
 }
 
 object PinotColumnarReader {
+  /** Docs of a segment that pushed filters may match: `[lo, hi)`, and
+    * within it only the docs of `bits` when defined.
+    */
+  private final case class Cand(lo: Int, hi: Int,
+      bits: Option[MutableRoaringBitmap]) {
+    def isEmpty: Boolean = lo >= hi || bits.exists(_.isEmpty)
+    /** The intersection; `o` is not evaluated when this set is empty. */
+    def &(o: => Cand): Cand =
+      if (isEmpty) this
+      else {
+        val c = o
+        Cand(math.max(lo, c.lo), math.min(hi, c.hi), (bits ++ c.bits)
+          .reduceOption[MutableRoaringBitmap](MutableRoaringBitmap.and(_, _)))
+      }
+  }
+
   // Every plan decodes PER WINDOW from a cached compact form (packed id
   // bits / compressed var-byte sections) — per-task heap is O(window +
   // dictionaries), not O(segment), which is what lets 1 GB segments scan

@@ -59,7 +59,7 @@ object PinotStreamOffset {
   * NEW data only, never to table size.
   */
 class PinotMicroBatchStream(tableDir: String, columns: Array[String],
-    skipFilters: Array[Filter], limit: Option[Int])
+    skipFilters: Array[Filter])
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   private def discover(): Seq[String] =
@@ -104,8 +104,7 @@ class PinotMicroBatchStream(tableDir: String, columns: Array[String],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PinotReaderFactory(columns, skipFilters,
-      limit.fold[RowCap](RowCap.NoCap)(RowCap.PerRange))
+    new PinotReaderFactory(columns, skipFilters)
 
   override def commit(end: Offset): Unit = () // checkpoint holds the state
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -15,7 +14,7 @@ import org.apache.spark.sql.functions._
 class BucketedJoinSpec extends SparkTestBase {
 
   test("bucketed fact-fact join runs with zero shuffle exchanges") {
-    val wh = Files.createTempDirectory("graft_warehouse").toString
+    val wh = graft.TestDirs.create("graft_warehouse").toString
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.sources.bucketing.enabled", "true")
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ

@@ -12,7 +12,7 @@ class CurationOpsSpec extends SparkTestBase {
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 
   test("q85/q89 prefix sums handle an EMPTY corpus (no NPE on null bounds)") {
-    val dir = java.nio.file.Files.createTempDirectory("empty_docs")
+    val dir = graft.TestDirs.create("empty_docs")
     spark.range(0).selectExpr("id AS doc_id", "'x' AS text",
       "'en' AS lang", "'web' AS source", "id AS n_chars")
       .write.parquet(s"$dir/documents.parquet")

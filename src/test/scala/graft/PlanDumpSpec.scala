@@ -6,7 +6,7 @@ import java.nio.file.Files
 class PlanDumpSpec extends SparkTestBase {
 
   test("per-query mode writes <q>_<suffix>.txt for a Pinot and a parquet query") {
-    val out = Files.createTempDirectory("plandump_spec")
+    val out = graft.TestDirs.create("plandump_spec")
     val names = Seq("q65_pinot_roundtrip", "q01_count_star")
     PlanDump.writePerQuery(spark, sfDir, out, "before", names)
     for (name <- names) {

@@ -13,7 +13,7 @@ class CompactSpec extends SparkTestBase {
 
   test("compact merges segments preserving data, nulls, indexes, time column") {
     import spark.implicits._
-    val root = Files.createTempDirectory("pinot_compact")
+    val root = graft.TestDirs.create("pinot_compact")
     val tdir = root.resolve("c_OFFLINE")
     (0 until 4000).map { i =>
       (i.toLong,
@@ -55,7 +55,7 @@ class CompactSpec extends SparkTestBase {
 
   test("rollup compacts segments while SUM-aggregating shared dim tuples") {
     import spark.implicits._
-    val root = Files.createTempDirectory("pinot_rollup")
+    val root = graft.TestDirs.create("pinot_rollup")
     val tdir = root.resolve("r_OFFLINE")
     // raw events: (tenant, hour-bucket ts) dims; (hits, amount) metrics.
     // 40 distinct dim tuples across 6000 rows in 3 segments.
@@ -99,7 +99,7 @@ class CompactSpec extends SparkTestBase {
   }
 
   test("maintenance ops handle v1-layout segments (no v3 subdir)") {
-    val root = Files.createTempDirectory("pinot_compact_v1")
+    val root = graft.TestDirs.create("pinot_compact_v1")
     val tdir = root.resolve("v1t_OFFLINE")
     def seg(name: String, from: Int, to: Int): Unit =
       SegmentWriter.write(tdir.resolve(name), "v1t", name, Seq(
@@ -139,7 +139,7 @@ class CompactSpec extends SparkTestBase {
 
   test("rollup rebuilds bloom/range/text indexes present on every dim") {
     import spark.implicits._
-    val root = Files.createTempDirectory("pinot_rollup_idx")
+    val root = graft.TestDirs.create("pinot_rollup_idx")
     val tdir = root.resolve("ri_OFFLINE")
     (0 until 3000).map(i => (s"host${i % 6}", (i % 50).toLong, 1L))
       .toDF("host", "shard", "hits")
@@ -166,7 +166,7 @@ class CompactSpec extends SparkTestBase {
 
   test("retention purge drops fully-expired segments from metadata alone") {
     import spark.implicits._
-    val root = Files.createTempDirectory("pinot_retention")
+    val root = graft.TestDirs.create("pinot_retention")
     val tdir = root.resolve("ret_OFFLINE")
     val day = 86400000L
     val t0 = 1700000000000L

@@ -172,7 +172,7 @@ class DecoderSpec extends AnyFunSuite {
   // --- whole-segment round trip through SegmentReader ---
 
   test("full segment write→read round-trip for every readable type") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_seg")
+    val dir = graft.TestDirs.create("graft_seg")
     val n = 1000
     val rnd = new scala.util.Random(42)
     val ints = Array.fill(n)(rnd.nextInt(250))
@@ -221,7 +221,7 @@ class DecoderSpec extends AnyFunSuite {
     val blobsR = Array.fill(n) {
       val b = new Array[Byte](rnd.nextInt(64)); rnd.nextBytes(b); b
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_seg_ext")
+    val dir = graft.TestDirs.create("graft_seg_ext")
     SegmentWriter.write(dir, "t", "s", Seq(
       SegmentWriter.BoolCol("b", bools),
       SegmentWriter.TimestampCol("ts", millis),
@@ -281,7 +281,7 @@ class DecoderSpec extends AnyFunSuite {
     val longs = Array.fill(n)(rnd.nextLong())
     val floats = Array.fill(n)(rnd.nextFloat() * 1000 - 500)
     val doubles = Array.fill(n)(rnd.nextDouble() * 1e6 - 5e5)
-    val dir = java.nio.file.Files.createTempDirectory("graft_seg_rawnum")
+    val dir = graft.TestDirs.create("graft_seg_rawnum")
     SegmentWriter.write(dir, "t", "s", Seq(
       SegmentWriter.IntRawCol("i", ints, VarByteChunkV4.Lz4LengthPrefixed, 512),
       SegmentWriter.LongRawCol("l", longs, VarByteChunkV4.Zstandard, 1024),
@@ -314,7 +314,7 @@ class DecoderSpec extends AnyFunSuite {
     val longs = Array.fill(n)(Array.fill(rnd.nextInt(3))(rnd.nextLong() % 1000))
     val strs = Array.fill(n)(Array.fill(rnd.nextInt(4))(s"tag${rnd.nextInt(20)}"))
     ints(0) = Array.empty; strs(1) = Array.empty // explicit empty-array docs
-    val dir = java.nio.file.Files.createTempDirectory("graft_seg_mv")
+    val dir = graft.TestDirs.create("graft_seg_mv")
     SegmentWriter.write(dir, "t", "s", Seq(
       SegmentWriter.IntMVCol("mi", ints),
       SegmentWriter.LongMVCol("ml", longs),
@@ -338,7 +338,7 @@ class DecoderSpec extends AnyFunSuite {
       val card = 1 + rnd.nextInt(20)
       val vals = Array.fill(n)(s"v${rnd.nextInt(card)}")
       val nullDocs = (0 until n).filter(_ => rnd.nextInt(10) == 0).toArray
-      val dir = java.nio.file.Files.createTempDirectory(s"inv_rt_$trial")
+      val dir = graft.TestDirs.create(s"inv_rt_$trial")
       SegmentWriter.write(dir, "t", "s0", Seq(
         SegmentWriter.StringDictCol("c", vals),
         SegmentWriter.IntCol("k", Array.tabulate(n)(identity))),
@@ -373,7 +373,7 @@ class DecoderSpec extends AnyFunSuite {
   }
 
   test("type mismatches and RAW numeric columns are rejected") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_seg2")
+    val dir = graft.TestDirs.create("graft_seg2")
     SegmentWriter.write(dir, "t", "s", Seq(
       SegmentWriter.IntCol("i", Array(1, 2, 3))))
     val r = SegmentReader.open(dir)
@@ -402,7 +402,7 @@ class DecoderSpec extends AnyFunSuite {
     v4.putLong(0xCAFEBABEDEADBEEFL) // wrong magic → header misparse path
     intercept[Exception](new VarByteChunkV4(v4.array(), 1).readAllStrings())
     // forward index too small for the magic marker
-    val dir = java.nio.file.Files.createTempDirectory("graft_seg3")
+    val dir = graft.TestDirs.create("graft_seg3")
     SegmentWriter.write(dir, "t", "s", Seq(
       SegmentWriter.IntCol("i", Array(1))))
     val reader = SegmentReader.open(dir)

@@ -13,7 +13,7 @@ class PinotUpsertSpec extends SparkTestBase {
   import graft.sources.pinot.PinotUpsert
 
   private def freshTable(name: String): String =
-    java.nio.file.Files.createTempDirectory("upsert")
+    graft.TestDirs.create("upsert")
       .resolve(s"${name}_REALTIME").toString
 
   test("latest record per key wins across segments; superseded versions vanish") {

@@ -116,7 +116,7 @@ class SegmentIOSpec extends SparkTestBase {
   test("whole TABLE reads through a file:// URI: DSv2 discovery, schema, " +
       "pushdowns — identical to the local read") {
     import org.apache.spark.sql.functions._
-    val root = Files.createTempDirectory("segio_table")
+    val root = graft.TestDirs.create("segio_table")
     val tableDir = root.resolve("iot_OFFLINE")
     // mixed layouts: v3 + v1 segment in one table, both indexed
     writeSeg(tableDir.resolve("seg0"), 3)
@@ -158,7 +158,7 @@ class SegmentIOSpec extends SparkTestBase {
   }
 
   test("filesystem catalog over a file:// data_dir: discovery + SQL") {
-    val root = Files.createTempDirectory("segio_catalog")
+    val root = graft.TestDirs.create("segio_catalog")
     writeSeg(root.resolve("iot_OFFLINE").resolve("seg0"), 3)
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.catalog.pinot_uri",
@@ -176,7 +176,7 @@ class SegmentIOSpec extends SparkTestBase {
 
   test("cold DSv2 table open budget: ONE listing + one parallel GET per " +
       "segment, zero per-segment stat probes") {
-    val root = Files.createTempDirectory("segio_budget")
+    val root = graft.TestDirs.create("segio_budget")
     val tableDir = root.resolve("bud_OFFLINE")
     val nSegs = 12
     (0 until nSegs).foreach { s =>
@@ -225,7 +225,7 @@ class SegmentIOSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.col
     // the DSv2 writer rebuilds `_graft_manifest.v1` at commit
     import spark.implicits._
-    val root = Files.createTempDirectory("segio_manifest")
+    val root = graft.TestDirs.create("segio_manifest")
     val dir = root.resolve("m_OFFLINE").toString
     (0 until 4).foreach { s =>
       (s * 100 until (s + 1) * 100).map(i => (i.toLong, i % 7))
@@ -284,7 +284,7 @@ class SegmentIOSpec extends SparkTestBase {
 
   test("scheme-less path discovers through HadoopSegmentIO " +
       "(fs.defaultFS routing qualifies the root like the listing)") {
-    val root = Files.createTempDirectory("segio_noscheme")
+    val root = graft.TestDirs.create("segio_noscheme")
     val tableDir = root.resolve("iot_OFFLINE")
     writeSeg(tableDir.resolve("seg0"), 3)
     val hio = new HadoopSegmentIO(spark.sparkContext.hadoopConfiguration)
@@ -299,7 +299,7 @@ class SegmentIOSpec extends SparkTestBase {
 
   for (version <- Seq(3, 1))
     test(s"v$version segment decodes byte-identically through Hadoop file:// IO") {
-      val root = Files.createTempDirectory(s"segio_h_v$version")
+      val root = graft.TestDirs.create(s"segio_h_v$version")
       val seg = root.resolve("seg0")
       writeSeg(seg, version)
       val local = SegmentReader.open(seg)
@@ -312,7 +312,7 @@ class SegmentIOSpec extends SparkTestBase {
   for (version <- Seq(3, 1))
     test(s"v$version segment decodes from a pure in-memory SegmentIO " +
         "(directory deleted after capture)") {
-      val root = Files.createTempDirectory(s"segio_m_v$version")
+      val root = graft.TestDirs.create(s"segio_m_v$version")
       val seg = root.resolve("seg0")
       writeSeg(seg, version)
       val local = SegmentReader.open(seg)
@@ -343,7 +343,7 @@ class SegmentIOSpec extends SparkTestBase {
   test("hybrid cold open budget: one manifest GET per side, zero " +
       "per-segment probes (controller/hybrid budget, r10)") {
     import spark.implicits._
-    val root = Files.createTempDirectory("segio_hybrid")
+    val root = graft.TestDirs.create("segio_hybrid")
     def mk(ids: Range) = ids.map(i =>
       (i.toLong, new java.sql.Timestamp(1704067200000L + i * 1000L)))
       .toDF("id", "ts")

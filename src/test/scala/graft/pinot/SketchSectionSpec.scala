@@ -52,8 +52,7 @@ class SketchSectionSpec extends SparkTestBase {
   }
 
   private def writeFixture(): (String, Long, Long) = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("sketch_tbl").resolve("ev_OFFLINE").toString
+    val dir = graft.TestDirs.create("sketch_tbl").resolve("ev_OFFLINE").toString
     import spark.implicits._
     val df = (0 until 5000).map { i =>
       (i.toLong, (i % 137).toLong, s"tag_${i % 41}")
@@ -154,8 +153,7 @@ class SketchSectionSpec extends SparkTestBase {
       KmvMergeAgg, SketchBuildAgg}
     // cold: 3 segments carrying all four sketch kinds; delta: fresh rows
     // that exist only as a DataFrame (the un-sketched "today")
-    val dir = java.nio.file.Files
-      .createTempDirectory("lambda_tbl").resolve("lam_OFFLINE").toString
+    val dir = graft.TestDirs.create("lambda_tbl").resolve("lam_OFFLINE").toString
     def mk(lo: Int, hi: Int) = (lo until hi).map { i =>
       (i.toLong, (i % 113).toLong, s"t${i % 29}", (i % 500).toDouble)
     }.toDF("event_id", "uid", "tag", "v")
@@ -234,8 +232,7 @@ class SketchSectionSpec extends SparkTestBase {
     import spark.implicits._
     // 4 range segments over ts 1..4000; slice [1500, 3500] classifies
     // them as outside / boundary / inside / boundary respectively
-    val dir = java.nio.file.Files
-      .createTempDirectory("slice_tbl").resolve("sl_OFFLINE").toString
+    val dir = graft.TestDirs.create("slice_tbl").resolve("sl_OFFLINE").toString
     val df = (1 to 4000).map(t => (t.toLong, (t % 97).toLong))
       .toDF("ts_ms", "uid")
     df.repartitionByRange(4, col("ts_ms"))
@@ -297,8 +294,7 @@ class SketchSectionSpec extends SparkTestBase {
 
   test("rollup sketchMetrics: grouped distincts survive the rollup exactly") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("roll_sk").resolve("rs_OFFLINE").toString
+    val dir = graft.TestDirs.create("roll_sk").resolve("rs_OFFLINE").toString
     val df = (0 until 4000).map { i =>
       (s"g${i % 5}", (i % (37 + i % 5)).toLong, s"p${i % 23}", 1)
     }.toDF("g", "uid", "p", "cnt")
@@ -336,8 +332,7 @@ class SketchSectionSpec extends SparkTestBase {
 
   test("time-slice classification runs on cached metadata: one parallel sweep cold, zero fetches warm, outside segments untouched") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("slice_meta").resolve("sm_OFFLINE").toString
+    val dir = graft.TestDirs.create("slice_meta").resolve("sm_OFFLINE").toString
     val df = (1 to 4000).map(t => (t.toLong, (t % 89).toLong))
       .toDF("ts_ms", "uid")
     df.repartitionByRange(4, col("ts_ms"))
@@ -411,8 +406,7 @@ class SketchSectionSpec extends SparkTestBase {
 
   test("nullable slice column is rejected loudly (metadata totalDocs would over-count)") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("slice_null").resolve("sn_OFFLINE").toString
+    val dir = graft.TestDirs.create("slice_null").resolve("sn_OFFLINE").toString
     val df = (1 to 1000).map { t =>
       (if (t % 50 == 0) None else Some(t.toLong), (t % 31).toLong)
     }.toDF("ts_ms", "uid")
@@ -433,8 +427,7 @@ class SketchSectionSpec extends SparkTestBase {
     // string sketch column: the stored bitmap holds xxhash64 values —
     // the read-side delta must make the same trade (a raw string column
     // would fail sketch_build's bigint requirement)
-    val dir = java.nio.file.Files
-      .createTempDirectory("slice_str").resolve("ss_OFFLINE").toString
+    val dir = graft.TestDirs.create("slice_str").resolve("ss_OFFLINE").toString
     val df = (1 to 3000).map { t =>
       (t.toLong, s"tag_${t % 61}",
         new java.sql.Timestamp(86400000L + t * 1000L))
@@ -461,8 +454,7 @@ class SketchSectionSpec extends SparkTestBase {
 
   test("boundary segments are scanned exactly once (payload + row count in one aggregate)") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("slice_once").resolve("so_OFFLINE").toString
+    val dir = graft.TestDirs.create("slice_once").resolve("so_OFFLINE").toString
     val df = (1 to 4000).map(t => (t.toLong, (t % 97).toLong))
       .toDF("ts_ms", "uid")
     df.repartitionByRange(4, col("ts_ms"))
@@ -509,8 +501,7 @@ class SketchSectionSpec extends SparkTestBase {
     val base = (1 to 4000).map(t => (t.toLong, (t % 113).toLong))
     val df = base.toDF("ts_ms", "uid")
     def mkTable(layout: String): String = {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"slice_adv_$layout").resolve("sa_OFFLINE").toString
+      val dir = graft.TestDirs.create(s"slice_adv_$layout").resolve("sa_OFFLINE").toString
       val w = layout match {
         case "range4" => df.repartitionByRange(4, col("ts_ms"))
         case "single" => df.coalesce(1)
@@ -564,7 +555,7 @@ class SketchSectionSpec extends SparkTestBase {
         java.nio.file.Files.list(p).forEach(deleteRec(_))
       java.nio.file.Files.deleteIfExists(p)
     }
-    val root = java.nio.file.Files.createTempDirectory("group_slice")
+    val root = graft.TestDirs.create("group_slice")
     val coldDir = root.resolve("gsCold_OFFLINE")
     val rawDir = root.resolve("gsRaw_OFFLINE").toString
     java.nio.file.Files.createDirectories(coldDir)
@@ -634,7 +625,7 @@ class SketchSectionSpec extends SparkTestBase {
         java.nio.file.Files.list(p).forEach(deleteRec(_))
       java.nio.file.Files.deleteIfExists(p)
     }
-    val root = java.nio.file.Files.createTempDirectory("group_freq")
+    val root = graft.TestDirs.create("group_freq")
     val coldDir = root.resolve("gfCold_OFFLINE")
     val rawDir = root.resolve("gfRaw_OFFLINE").toString
     java.nio.file.Files.createDirectories(coldDir)
@@ -694,7 +685,7 @@ class SketchSectionSpec extends SparkTestBase {
         java.nio.file.Files.list(p).forEach(deleteRec(_))
       java.nio.file.Files.deleteIfExists(p)
     }
-    val root = java.nio.file.Files.createTempDirectory("group_bmkmv")
+    val root = graft.TestDirs.create("group_bmkmv")
     val coldDir = root.resolve("gbCold_OFFLINE")
     val rawDir = root.resolve("gbRaw_OFFLINE").toString
     java.nio.file.Files.createDirectories(coldDir)
@@ -766,8 +757,7 @@ class SketchSectionSpec extends SparkTestBase {
 
   test("freq sections: stored Misra–Gries summaries merge to exact counts; payload bytes are insertion-order-free") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("freq_tbl").resolve("fq_OFFLINE").toString
+    val dir = graft.TestDirs.create("freq_tbl").resolve("fq_OFFLINE").toString
     val rows = (0 until 6000).map(i => (i.toLong, s"page_${i % 37}"))
     rows.toDF("ts_ms", "page")
       .repartitionByRange(3, col("ts_ms"))
@@ -794,8 +784,7 @@ class SketchSectionSpec extends SparkTestBase {
 
   test("time-sliced freq: stored sections + boundary query-time payload match the raw twin; low capacity keeps the MG bound") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("freq_slice").resolve("fs_OFFLINE").toString
+    val dir = graft.TestDirs.create("freq_slice").resolve("fs_OFFLINE").toString
     // zipf-ish skew so heavy hitters exist
     val rows = (1 to 8000).map { t =>
       val r = (t * 2654435761L) >>> 40
@@ -828,8 +817,7 @@ class SketchSectionSpec extends SparkTestBase {
 
   test("time-sliced hll distinct matches the bitmap twin and the raw truth") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("hll_slice").resolve("hs_OFFLINE").toString
+    val dir = graft.TestDirs.create("hll_slice").resolve("hs_OFFLINE").toString
     // uid and uid_h carry IDENTICAL values; uid stores a bitmap section,
     // uid_h an hll14 one (sparse limit 4096 > 911 distinct: exact regime)
     val rows = (1 to 5000).map { t =>
@@ -855,8 +843,7 @@ class SketchSectionSpec extends SparkTestBase {
 
   test("rollup freq metric: grouped heavy hitters survive the rollup exactly") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("freq_roll").resolve("fr_OFFLINE").toString
+    val dir = graft.TestDirs.create("freq_roll").resolve("fr_OFFLINE").toString
     val rows = (0 until 4000).map { i =>
       (s"t${i % 3}", s"page_${i % 29}", 1)
     }
@@ -925,7 +912,7 @@ class SketchSectionSpec extends SparkTestBase {
     r0.close()
     // convert the segment dir (parent of v3) to v1 layout and re-read
     val src = java.nio.file.Paths.get(seg0).getParent.toString
-    val dst = java.nio.file.Files.createTempDirectory("sketch_v1").toString
+    val dst = graft.TestDirs.create("sketch_v1").toString
     PinotCompact.convert(src, dst, formatVersion = 1)
     val r1 = SegmentReader.open(dst, SegmentIO.forPath(dst))
     try {

@@ -15,7 +15,7 @@ class UpsertCompactSpec extends SparkTestBase {
   import spark.implicits._
 
   private def freshTable(name: String): String =
-    java.nio.file.Files.createTempDirectory("upsert_compact")
+    graft.TestDirs.create("upsert_compact")
       .resolve(s"${name}_REALTIME").toString
 
   private def rawCount(dir: String): Long =
@@ -68,7 +68,7 @@ class UpsertCompactSpec extends SparkTestBase {
     // path the spec can inspect with plain filesystem calls.
     val day = 86400000L
     val t0 = 1700000000000L
-    val dir = java.nio.file.Files.createTempDirectory("remote_maint")
+    val dir = graft.TestDirs.create("remote_maint")
       .resolve("rm_OFFLINE").toString
     (0 until 3).foreach { dayN =>
       (0 until 200).map(i => (dayN * 200L + i, s"tag${i % 5}",
@@ -100,7 +100,7 @@ class UpsertCompactSpec extends SparkTestBase {
 
     // remote rollup: the same seam — 600 rows roll up to the 5 distinct
     // tags with exact summed ids; indexes on the dim survive
-    val dirR = java.nio.file.Files.createTempDirectory("remote_rollup")
+    val dirR = graft.TestDirs.create("remote_rollup")
       .resolve("rr_OFFLINE").toString
     (0 until 2).foreach { seg =>
       (0 until 100).map(i => (s"tag${i % 5}", 1L))
@@ -120,7 +120,7 @@ class UpsertCompactSpec extends SparkTestBase {
     finally rr.close()
 
     // remote retention purge: rebuild the 3-day shape, expire day 0
-    val dir2 = java.nio.file.Files.createTempDirectory("remote_purge")
+    val dir2 = graft.TestDirs.create("remote_purge")
       .resolve("rp_OFFLINE").toString
     (0 until 3).foreach { dayN =>
       (0 until 100).map(i => (dayN * 100L + i,

@@ -69,7 +69,7 @@ class UpsertDifferentialSpec extends SparkTestBase {
     }
 
   private def freshTable(name: String): String =
-    java.nio.file.Files.createTempDirectory("upsert_diff")
+    graft.TestDirs.create("upsert_diff")
       .resolve(s"${name}_REALTIME").toString
 
   private def readView(dir: String): Map[Long, (Long, String, Long)] =
@@ -82,7 +82,7 @@ class UpsertDifferentialSpec extends SparkTestBase {
       rows: Seq[V]): Map[Long, (Long, String, Long)] = {
     // drain the already-landed table through latestStream and take the
     // last emission per key (AvailableNow: segments landed in ver order)
-    val work = java.nio.file.Files.createTempDirectory("upsert_diff_s")
+    val work = graft.TestDirs.create("upsert_diff_s")
     val out = work.resolve("out").toString
     var seq = 0L
     val q = PinotUpsert.latestStream(spark, dir)
@@ -182,7 +182,7 @@ class UpsertDifferentialSpec extends SparkTestBase {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[(Long, Long, Seq[String])]
     ms.addData(rows: _*)
-    val work = java.nio.file.Files.createTempDirectory("upsert_diff_mv")
+    val work = graft.TestDirs.create("upsert_diff_mv")
     val q = PinotUpsert.latestStreamOver(
       ms.toDF().toDF("k", "ver", "mv"), "mem", cfg)
       .writeStream.format("memory").queryName("ud_mv_nulls")

@@ -36,7 +36,7 @@ class V1SegmentSpec extends SparkTestBase {
       formatVersion = version)
 
   test("v1 writer emits per-index files, no v3 dir, no psf") {
-    val root = Files.createTempDirectory("v1seg")
+    val root = graft.TestDirs.create("v1seg")
     val seg = root.resolve("seg0")
     writeSeg(seg, "seg0", 0, 100, version = 1)
     assert(!Files.exists(seg.resolve("v3")))
@@ -54,7 +54,7 @@ class V1SegmentSpec extends SparkTestBase {
   }
 
   test("v1 read-back is byte-identical to v3: values AND index sections") {
-    val root = Files.createTempDirectory("v1seg_cmp")
+    val root = graft.TestDirs.create("v1seg_cmp")
     writeSeg(root.resolve("s1"), "s", 0, 500, version = 1)
     writeSeg(root.resolve("s3"), "s", 0, 500, version = 3)
     val r1 = SegmentReader.open(root.resolve("s1"))
@@ -75,7 +75,7 @@ class V1SegmentSpec extends SparkTestBase {
   }
 
   test("DSv2 reads a MIXED v1 + v3 table transparently") {
-    val root = Files.createTempDirectory("v1seg_mixed")
+    val root = graft.TestDirs.create("v1seg_mixed")
     val tableDir = root.resolve("stats_OFFLINE")
     writeSeg(tableDir.resolve("seg0"), "seg0", 0, 1500, version = 1)
     writeSeg(tableDir.resolve("seg1"), "seg1", 1500, n, version = 3)

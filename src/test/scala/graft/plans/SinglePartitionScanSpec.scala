@@ -1,6 +1,5 @@
 package graft.plans
 
-import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -42,7 +41,7 @@ class SinglePartitionScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper
         Seq("desktop", "mobile", "tablet", "tv")(rnd.nextInt(4)),
         rnd.nextInt(100), 2L * rnd.nextInt(1000000000), body, 1000L + i * 10L)
     }
-    val dir = Files.createTempDirectory("single_part")
+    val dir = graft.TestDirs.create("single_part")
       .resolve("events_OFFLINE").toString
     spark.sparkContext.parallelize(rows, segments)
       .toDF("user_id", "country", "device", "clicks", "metric", "body", "ts")
@@ -170,7 +169,7 @@ class SinglePartitionScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper
 
   /** One segment, k in [0, 1000) and x = k % 7. */
   private lazy val factDir: String = {
-    val dir = Files.createTempDirectory("single_fact").resolve("fact_OFFLINE")
+    val dir = graft.TestDirs.create("single_fact").resolve("fact_OFFLINE")
     SegmentWriter.write(dir.resolve("seg0"), "fact", "seg0", Seq(
       SegmentWriter.IntCol("k", Array.tabulate(1000)(identity)),
       SegmentWriter.IntCol("x", Array.tabulate(1000)(_ % 7))))
@@ -179,7 +178,7 @@ class SinglePartitionScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper
 
   for (aqe <- Seq("true", "false")) {
     test(s"runtime filter dropping the only split still answers one row (AQE $aqe)") {
-      val dimDir = Files.createTempDirectory("single_dim")
+      val dimDir = graft.TestDirs.create("single_dim")
         .resolve("dim.parquet").toString
       Seq((5000, "keep"), (5001, "keep"), (7, "drop")).toDF("dk", "tag")
         .write.parquet(dimDir)
@@ -203,7 +202,7 @@ class SinglePartitionScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper
   }
 
   test("storage-partitioned join of small key-grouped tables is never wrapped") {
-    val root = Files.createTempDirectory("single_spj")
+    val root = graft.TestDirs.create("single_spj")
     def writeTable(table: String, rows: Int): Unit =
       (0 until 4).foreach { r =>
         SegmentWriter.write(root.resolve(s"${table}_OFFLINE").resolve(s"seg$r"),
@@ -233,7 +232,7 @@ class SinglePartitionScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper
   }
 
   test("a union of single-partition scans still merges across its inputs") {
-    val root = Files.createTempDirectory("single_union")
+    val root = graft.TestDirs.create("single_union")
     def table(name: String, from: Int): String = {
       val dir = root.resolve(s"${name}_OFFLINE")
       SegmentWriter.write(dir.resolve("seg0"), name, "seg0", Seq(
@@ -250,7 +249,7 @@ class SinglePartitionScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper
   }
 
   test("a readStream of a small Pinot table is never wrapped") {
-    val root = Files.createTempDirectory("single_stream")
+    val root = graft.TestDirs.create("single_stream")
     val table = root.resolve("s_OFFLINE")
     SegmentWriter.write(table.resolve("seg0"), "s", "seg0", Seq(
       SegmentWriter.IntCol("v", Array.tabulate(100)(identity))))
@@ -283,7 +282,7 @@ class SinglePartitionScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper
       val block = segments - 1 - s
       (block * per until (block + 1) * per).map(i => (10L * i + 3, i % 97))
     }
-    val root = Files.createTempDirectory("single_desc")
+    val root = graft.TestDirs.create("single_desc")
     val pinot = root.resolve("desc_OFFLINE").toString
     spark.sparkContext.parallelize(rows, segments).toDF("ts", "v")
       .write.format("pinot").mode("append").option("sortedColumn", "ts")

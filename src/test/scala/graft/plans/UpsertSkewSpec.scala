@@ -21,7 +21,7 @@ class UpsertSkewSpec extends SparkTestBase {
   test("upsert view under 50% key skew: the hot key shuffles O(map partitions) rows, reducers stay even") {
     val nRows = 40000
     val nCold = 1000 // cold keys 1..1000, ~20 versions each
-    val dir = java.nio.file.Files.createTempDirectory("upsert_skew")
+    val dir = graft.TestDirs.create("upsert_skew")
       .resolve("skew_REALTIME").toString
     // every EVEN row versions the hot key 0 (50% of the table)
     (0 until nRows).map { i =>

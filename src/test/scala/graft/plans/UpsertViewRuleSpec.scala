@@ -17,7 +17,7 @@ class UpsertViewRuleSpec extends SparkTestBase {
   import spark.implicits._
 
   private def freshTable(name: String): String =
-    java.nio.file.Files.createTempDirectory("upsert_rule")
+    graft.TestDirs.create("upsert_rule")
       .resolve(s"${name}_REALTIME").toString
 
   private def writeVersions(dir: String): Unit = {
@@ -296,7 +296,7 @@ class UpsertViewRuleSpec extends SparkTestBase {
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e =>
         Option(e.getMessage).toSeq ++ messages(e.getCause))
-    val work = java.nio.file.Files.createTempDirectory("tvstream_ck")
+    val work = graft.TestDirs.create("tvstream_ck")
     val ex = intercept[Exception] {
       val q = spark.readStream.format("pinot").load(dir)
         .writeStream.format("noop")

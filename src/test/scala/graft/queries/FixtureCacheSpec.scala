@@ -21,7 +21,7 @@ class FixtureCacheSpec extends AnyFunSuite {
 
   /** A fresh source dir of two single-file tables. */
   private def source(): Path = {
-    val src = Files.createTempDirectory("fixture_src")
+    val src = graft.TestDirs.create("fixture_src")
     Files.writeString(src.resolve("a.parquet"), "aaaa")
     Files.writeString(src.resolve("b.parquet"), "bb")
     src

@@ -18,7 +18,7 @@ class FunnelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   /** Events table shaped like the real one, from (user, ts, type). */
   private def mkEvents(rows: Seq[(Long, String, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("funnel").toString
+    val dir = graft.TestDirs.create("funnel").toString
     rows.zipWithIndex
       .map { case ((u, t, ty), i) =>
         (i.toLong, ts(t), u, ty, 1.0, """{"k": 1}""") }

@@ -58,7 +58,7 @@ class LshVerifyDifferentialSpec extends SparkTestBase {
   }
 
   test("constructed corpus: J = 0.8 exactly, identical docs, J just below") {
-    val work = java.nio.file.Files.createTempDirectory("lsh_verify_diff")
+    val work = graft.TestDirs.create("lsh_verify_diff")
     val w = (1 to 10).map(i => s"w$i").mkString(" ")
     // 1/2: 9 shingles each, 8 shared → J = 8/10 = 0.8 exactly (kept)
     // 3/4: identical → J = 1.0

@@ -21,7 +21,7 @@ class PqAnnSpec extends SparkTestBase {
     // 80 synthetic vectors < the fetch floor of 100: every candidate
     // survives the ADC cut, so the exact re-rank IS q47
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pq").toString
+    val dir = graft.TestDirs.create("pq").toString
     (0 until 80).map { v =>
       (v.toLong,
         Array.tabulate(64)(i =>

@@ -63,7 +63,7 @@ class PrefixFilterDifferentialSpec extends SparkTestBase {
 
   test("boundary corpus: exact J=0.8 pairs, prefix-length edges, " +
       "active df cutoff") {
-    val work = java.nio.file.Files.createTempDirectory("prefix_diff")
+    val work = graft.TestDirs.create("prefix_diff")
     // --- constructed docs ---
     // 1/2: 11 words, last word differs → 9 shingles each, 8 shared →
     //      J = 8/10 = 0.8 EXACTLY (inter*10 == un*8, must be INCLUDED)
@@ -123,7 +123,7 @@ class PrefixFilterDifferentialSpec extends SparkTestBase {
 
   test("length filter: 4 vs 5 shingles kept at its edge, 4 vs 6 cut " +
       "though the prefixes share a shingle") {
-    val work = java.nio.file.Files.createTempDirectory("length_filter")
+    val work = graft.TestDirs.create("length_filter")
     // 10/11: 4 vs 5 shingles, subset → J = 4/5 = 0.8 and
     //        min·5 = max·4: the length filter's edge, KEPT
     // 12/13: 4 vs 6 shingles, subset → J = 4/6, min·5 < max·4: CUT. The

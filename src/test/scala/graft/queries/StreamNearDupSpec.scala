@@ -45,7 +45,7 @@ class StreamNearDupSpec extends SparkTestBase {
   }
 
   test("stream-side bands are bit-identical to the batch signature path") {
-    val batch = SketchDedup.signatures(spark, sfDir, neutral = true)
+    val batch = SketchDedup.signatures(spark, sfDir)
       .withColumn("band", explode(expr("sequence(0, 15)")))
       .withColumn("sig", md5(concat_ws(",", expr(
         "transform(slice(sig_vec, band * 4 + 1, 4), x -> CAST(x AS STRING))"))))
@@ -60,7 +60,7 @@ class StreamNearDupSpec extends SparkTestBase {
 
   test("per-batch join: corpus bucket side crosses NO exchange; " +
       "the micro-batch bands broadcast") {
-    val work = java.nio.file.Files.createTempDirectory("neardup_plan")
+    val work = graft.TestDirs.create("neardup_plan")
     val bucketRoot = work.resolve("buckets").toString
     val corpus = Seq((1L, "alpha beta gamma delta epsilon zeta"))
       .toDF("doc_id", "text")
@@ -108,7 +108,7 @@ class StreamNearDupSpec extends SparkTestBase {
     val corpus = docs.filter(col("doc_id") % 10 < 8)
     val incoming = docs.filter(col("doc_id") % 10 >= 8)
       .select(col("doc_id"), col("text"))
-    val work = java.nio.file.Files.createTempDirectory("neardup_restart")
+    val work = graft.TestDirs.create("neardup_restart")
     val bucketRoot = work.resolve("buckets").toString
     SketchDedup.bandsOver(corpus).write
       .parquet(s"$bucketRoot/ingest_batch=-1")
@@ -140,7 +140,7 @@ class StreamNearDupSpec extends SparkTestBase {
 
   test("grow mode: wave-2 docs dedup against wave-1 SURVIVORS across a " +
       "restart; flagged docs never join the bucket table") {
-    val work = java.nio.file.Files.createTempDirectory("neardup_grow")
+    val work = graft.TestDirs.create("neardup_grow")
     val bucketRoot = work.resolve("buckets").toString
     val corpusText = "alpha beta gamma delta epsilon zeta eta theta"
     val noveltyText = "red orange yellow green blue indigo violet pink"
@@ -180,7 +180,7 @@ class StreamNearDupSpec extends SparkTestBase {
 
   test("per-batch join over driver-held bands: broadcast, no exchange " +
       "under the join, corpus scan pruned") {
-    val work = java.nio.file.Files.createTempDirectory("neardup_held_plan")
+    val work = graft.TestDirs.create("neardup_held_plan")
     val bucketRoot = work.resolve("buckets").toString
     SketchDedup.bandsOver(Seq((1L, "alpha beta gamma delta epsilon zeta"))
       .toDF("doc_id", "text")).write.parquet(s"$bucketRoot/ingest_batch=-1")
@@ -226,7 +226,7 @@ class StreamNearDupSpec extends SparkTestBase {
       Seq((10L, novelA), (11L, novelA), (12L, corpusText)),
       Seq((20L, novelA), (21L, novelB)),
       Seq((30L, novelB), (31L, novelC), (32L, novelA)))
-    val work = java.nio.file.Files.createTempDirectory("neardup_waves")
+    val work = graft.TestDirs.create("neardup_waves")
     val inDir = work.resolve("incoming")
     java.nio.file.Files.createDirectories(inDir)
     val t0 = System.currentTimeMillis() - 60000L

@@ -22,7 +22,7 @@ class BloomFilterSpec extends SparkTestBase {
   private val millis = Array.tabulate(n)(i => 1700000000000L + i * 1000L)
 
   private lazy val segDir: String = {
-    val root = Files.createTempDirectory("pinot_bloom")
+    val root = graft.TestDirs.create("pinot_bloom")
     SegmentWriter.write(root.resolve("seg0"), "t", "seg0", Seq(
       SegmentWriter.StringRawCol("uid", ids,
         VarByteChunkV4.Lz4LengthPrefixed, 1024),
@@ -96,7 +96,7 @@ class BloomFilterSpec extends SparkTestBase {
   }
 
   test("DSv2 write option + read path end-to-end") {
-    val root = Files.createTempDirectory("pinot_bloom_e2e")
+    val root = graft.TestDirs.create("pinot_bloom_e2e")
     val dir = root.resolve("events_OFFLINE").toString
     val df = spark.range(0, 10000).toDF("id")
       .withColumn("tag", concat(lit("tag"), (col("id") % 997).cast("string")))

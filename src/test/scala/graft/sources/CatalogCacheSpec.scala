@@ -24,7 +24,7 @@ class CatalogCacheSpec extends SparkTestBase {
   }
 
   test("same-millisecond in-place overwrite invalidates the cached table") {
-    val root = Files.createTempDirectory("pinot_cachestale")
+    val root = graft.TestDirs.create("pinot_cachestale")
     val tdir = root.resolve("c_OFFLINE")
     SegmentWriter.write(tdir.resolve("seg0"), "c", "seg0", Seq(
       SegmentWriter.LongCol("a", Array(1L, 2L, 3L))))
@@ -45,7 +45,7 @@ class CatalogCacheSpec extends SparkTestBase {
   }
 
   test("in-flight tmp_* output does not churn the file:// URI fingerprint") {
-    val root = Files.createTempDirectory("pinot_cachetmp")
+    val root = graft.TestDirs.create("pinot_cachetmp")
     val tdir = root.resolve("t_OFFLINE")
     SegmentWriter.write(tdir.resolve("seg0"), "t", "seg0", Seq(
       SegmentWriter.LongCol("a", Array(1L, 2L, 3L))))
@@ -68,7 +68,7 @@ class CatalogCacheSpec extends SparkTestBase {
   }
 
   test("cache is LRU-bounded: cold entries evict, hot entries persist") {
-    val root = Files.createTempDirectory("pinot_cachelru")
+    val root = graft.TestDirs.create("pinot_cachelru")
     def mk(i: Int): String = {
       val tdir = root.resolve(f"t$i%03d_OFFLINE")
       SegmentWriter.write(tdir.resolve("seg0"), f"t$i%03d", "seg0", Seq(

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.pinot.SegmentWriter
@@ -24,7 +23,7 @@ class HistAggSpec extends SparkTestBase {
   private val temp = Array.fill(n)(rnd.nextFloat() * 40 - 10)  // dict float
 
   private lazy val tdir: String = {
-    val root = Files.createTempDirectory("pinot_hist")
+    val root = graft.TestDirs.create("pinot_hist")
     val t = root.resolve("h_OFFLINE")
     val per = n / 3
     (0 until 3).foreach { s =>
@@ -106,7 +105,7 @@ class HistAggSpec extends SparkTestBase {
     assert(r.getLong(4) === n.toLong)
 
     // single segment: COMPLETE — no HashAggregate at all, AVG whole
-    val root = Files.createTempDirectory("pinot_hist_g1")
+    val root = graft.TestDirs.create("pinot_hist_g1")
     val t1 = root.resolve("g_OFFLINE")
     SegmentWriter.write(t1.resolve("seg0"), "g", "seg0", Seq(
       SegmentWriter.IntCol("hits", hits.take(4000)),
@@ -126,7 +125,7 @@ class HistAggSpec extends SparkTestBase {
   }
 
   test("single-segment complete pushdown: no final aggregate, AVG pushed whole") {
-    val root = Files.createTempDirectory("pinot_hist_one")
+    val root = graft.TestDirs.create("pinot_hist_one")
     val t1 = root.resolve("o_OFFLINE")
     SegmentWriter.write(t1.resolve("seg0"), "o", "seg0", Seq(
       SegmentWriter.StringDictCol("team", team.take(3000)),
@@ -151,7 +150,7 @@ class HistAggSpec extends SparkTestBase {
   }
 
   test("RAW string group column: slot-map histogram, single- and multi-segment") {
-    val root = Files.createTempDirectory("pinot_hist_raw")
+    val root = graft.TestDirs.create("pinot_hist_raw")
     val t1 = root.resolve("r_OFFLINE")
     val m = 4000
     val player = Array.tabulate(m)(i => f"p${i % 700}%04d") // repeats
@@ -197,7 +196,7 @@ class HistAggSpec extends SparkTestBase {
   }
 
   test("mixed dict + RAW group keys compose slots into composite ids") {
-    val root = Files.createTempDirectory("pinot_hist_mixed")
+    val root = graft.TestDirs.create("pinot_hist_mixed")
     val t = root.resolve("mx_OFFLINE")
     val m = 6000
     val player = Array.tabulate(m)(i => f"p${i % 97}%03d") // RAW string
@@ -255,7 +254,7 @@ class HistAggSpec extends SparkTestBase {
   }
 
   test("global aggregate over an empty single segment returns its mandatory row") {
-    val root = Files.createTempDirectory("pinot_hist_empty")
+    val root = graft.TestDirs.create("pinot_hist_empty")
     val t1 = root.resolve("e_OFFLINE")
     SegmentWriter.write(t1.resolve("seg0"), "e", "seg0", Seq(
       SegmentWriter.IntCol("v", Array.empty[Int])))
@@ -284,7 +283,7 @@ class HistAggSpec extends SparkTestBase {
   }
 
   test("BOOLEAN and TIMESTAMP group keys translate through the histogram") {
-    val root = Files.createTempDirectory("pinot_hist_bt")
+    val root = graft.TestDirs.create("pinot_hist_bt")
     val t1 = root.resolve("bt_OFFLINE")
     val m = 3000
     val flag = Array.tabulate(m)(i => i % 3 == 0)
@@ -325,7 +324,7 @@ class HistAggSpec extends SparkTestBase {
     // pushLimit accepted with isPartiallyPushed=false Spark would DELETE
     // its Limit node while the agg scan ignores the limit — so pushLimit
     // must refuse whenever an aggregation was pushed.
-    val root = Files.createTempDirectory("pinot_hist_lim")
+    val root = graft.TestDirs.create("pinot_hist_lim")
     val t1 = root.resolve("l_OFFLINE")
     SegmentWriter.write(t1.resolve("seg0"), "l", "seg0", Seq(
       SegmentWriter.StringDictCol("team", Array("a", "b", "c", "d", "e", "a", "b")),
@@ -362,7 +361,7 @@ class HistAggSpec extends SparkTestBase {
     val tm = Array.fill(m)(s"T${rnd2.nextInt(13)}")
     val city = Array.fill(m)(s"c${rnd2.nextInt(29)}") // RAW string key
     val h = Array.fill(m)(rnd2.nextInt(501))
-    val root = Files.createTempDirectory("pinot_hist_slice")
+    val root = graft.TestDirs.create("pinot_hist_slice")
     val t = root.resolve("s_OFFLINE")
     SegmentWriter.write(t.resolve("seg0"), "s", "seg0", Seq(
       SegmentWriter.StringDictCol("team", tm),
@@ -424,7 +423,7 @@ class HistAggSpec extends SparkTestBase {
 
   test("refusals: nullable metric, string metric, filters, high card stay engine-side") {
     // nullable metric: stored defaults must not enter partials
-    val root = Files.createTempDirectory("pinot_hist_nul")
+    val root = graft.TestDirs.create("pinot_hist_nul")
     val t2 = root.resolve("n_OFFLINE")
     SegmentWriter.write(t2.resolve("seg0"), "n", "seg0", Seq(
       SegmentWriter.StringDictCol("k", Array("a", "a", "b")),
@@ -452,7 +451,7 @@ class HistAggSpec extends SparkTestBase {
     // every key distinct (cardinality == totalDocs) → the no-merge
     // invariant must hold across slice boundaries: exactly one output
     // row per input row, no duplicates, no drops, values exact.
-    val root = Files.createTempDirectory("pinot_hist_unique")
+    val root = graft.TestDirs.create("pinot_hist_unique")
     val t1 = root.resolve("u_OFFLINE")
     val m = 60000
     val ids = Array.tabulate(m)(i => f"id$i%06d")

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.pinot.{JsonIndexSection, SegmentWriter, VarByteChunkV4}
@@ -257,7 +256,7 @@ class JsonIndexSpec extends SparkTestBase {
   }
 
   test("json equality probes decode only windows holding candidates") {
-    val root = Files.createTempDirectory("pinot_json")
+    val root = graft.TestDirs.create("pinot_json")
     val tdir = root.resolve("docs_OFFLINE")
     val docs = 40000
     val needleAt = Set(3, 20001, 39998)
@@ -365,7 +364,7 @@ class JsonIndexSpec extends SparkTestBase {
   }
 
   test("index absent: probes route but never prune (full decode, exact)") {
-    val root = Files.createTempDirectory("pinot_json_plain")
+    val root = graft.TestDirs.create("pinot_json_plain")
     val tdir = root.resolve("docs_OFFLINE")
     val js = Array.tabulate(1000)(i => s"""{"k": ${i % 10}}""")
     SegmentWriter.write(tdir.resolve("seg0"), "docs", "seg0", Seq(

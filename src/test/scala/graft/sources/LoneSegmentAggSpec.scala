@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import org.apache.spark.sql.DataFrame
@@ -26,7 +25,7 @@ class LoneSegmentAggSpec extends SparkTestBase {
   }
 
   private lazy val pinotDir: String = {
-    val dir = Files.createTempDirectory("lone_seg_agg").resolve("facts_OFFLINE")
+    val dir = graft.TestDirs.create("lone_seg_agg").resolve("facts_OFFLINE")
     data.coalesce(1).write.format("pinot").mode("append")
       .option("starTree", "team,year:SUM(hits),MIN(score),MAX(score)")
       .save(dir.toString)
@@ -34,7 +33,7 @@ class LoneSegmentAggSpec extends SparkTestBase {
   }
 
   private lazy val parquetDir: String = {
-    val dir = Files.createTempDirectory("lone_seg_agg_pq").resolve("facts")
+    val dir = graft.TestDirs.create("lone_seg_agg_pq").resolve("facts")
     data.write.parquet(dir.toString)
     dir.toString
   }

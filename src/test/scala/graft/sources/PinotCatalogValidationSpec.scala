@@ -35,7 +35,7 @@ class PinotCatalogValidationSpec extends SparkTestBase {
   }
 
   test("unknown table raises NoSuchTableException") {
-    val dir = java.nio.file.Files.createTempDirectory("empty_pinot")
+    val dir = graft.TestDirs.create("empty_pinot")
     val c = catalog(Map("data_dir" -> dir.toString))
     intercept[org.apache.spark.sql.catalyst.analysis.NoSuchTableException](
       c.loadTable(org.apache.spark.sql.connector.catalog.Identifier

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.net.InetSocketAddress
-import java.nio.file.Files
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.SparkTestBase
@@ -95,7 +94,7 @@ class PinotControllerSpec extends SparkTestBase with BeforeAndAfterAll {
 
   test("end-to-end: catalog in controller mode answers SQL") {
     // local segments for the table the controller advertises
-    val root = Files.createTempDirectory("pinot_ctrl")
+    val root = graft.TestDirs.create("pinot_ctrl")
     val tableDir = root.resolve("ctrlStats_OFFLINE")
     val hits = Array.tabulate(300)(i => i % 50)
     (0 until 2).foreach { s =>
@@ -127,7 +126,7 @@ class PinotControllerSpec extends SparkTestBase with BeforeAndAfterAll {
   }
 
   test("controller mode REALTIME fallback when OFFLINE empty") {
-    val root = Files.createTempDirectory("pinot_ctrl_rt")
+    val root = graft.TestDirs.create("pinot_ctrl_rt")
     val tableDir = root.resolve("rtStats_REALTIME")
     SegmentWriter.write(tableDir.resolve("seg0"), "rtStats", "seg0",
       Seq(SegmentWriter.IntCol("v", Array(1, 2, 3))))
@@ -144,7 +143,7 @@ class PinotControllerSpec extends SparkTestBase with BeforeAndAfterAll {
   test("controller cold open budget: per open, ONE listing + ONE manifest " +
       "GET, zero per-segment probes") {
     import graft.pinot.{CountingSegmentIO, LocalSegmentIO, SegmentIO, TableManifest}
-    val root = Files.createTempDirectory("pinot_ctrl_budget")
+    val root = graft.TestDirs.create("pinot_ctrl_budget")
     val tableDir = root.resolve("budStats_OFFLINE")
     (0 until 5).foreach { s =>
       SegmentWriter.write(tableDir.resolve(s"seg$s"), "budStats", s"seg$s",

@@ -41,7 +41,7 @@ class PinotDifferentialSpec extends SparkTestBase {
   private val segSizes = Seq(9000, 4000, 120)
 
   private lazy val (pinotDir, parquetDir) = {
-    val root = Files.createTempDirectory("pinot_diff")
+    val root = graft.TestDirs.create("pinot_diff")
     val pdir = root.resolve("d_OFFLINE")
     var base = 0
     val rows = scala.collection.mutable.ArrayBuffer
@@ -114,7 +114,7 @@ class PinotDifferentialSpec extends SparkTestBase {
   // with attributes; tags g37..g41 exist here but NOT in the fact table
   // (and g36 only in the fact) so outer/semi/anti shapes have bite
   private lazy val (dimPinotDir, dimParquetDir) = {
-    val root = Files.createTempDirectory("pinot_diff_dim")
+    val root = graft.TestDirs.create("pinot_diff_dim")
     val pdir = root.resolve("t_OFFLINE")
     val nTags = 42
     val tag = Array.tabulate(nTags)(i => s"g$i")

@@ -22,7 +22,7 @@ class PinotSourceSpec extends SparkTestBase {
 
   /** A 3-segment table dir <tmp>/baseballStats_OFFLINE/{seg0,seg1,seg2}/v3. */
   private lazy val dataDir: String = {
-    val root = Files.createTempDirectory("pinot_data")
+    val root = graft.TestDirs.create("pinot_data")
     val tableDir = root.resolve("baseballStats_OFFLINE")
     val per = n / 3
     (0 until 3).foreach { s =>
@@ -114,7 +114,7 @@ class PinotSourceSpec extends SparkTestBase {
     // (another writer, or bounds dropped by the properties `safe()`
     // filter): the per-segment dictionary-row partial path must carry
     import java.nio.file.{Files => JFiles, Paths => JPaths}
-    val root = JFiles.createTempDirectory("pinot_nobounds")
+    val root = graft.TestDirs.create("pinot_nobounds")
     val src = JPaths.get(tablePath)
     val dst = root.resolve("nb_OFFLINE")
     JFiles.createDirectory(dst)
@@ -169,7 +169,7 @@ class PinotSourceSpec extends SparkTestBase {
   }
 
   test("MIN/MAX on RAW numerics answers from recorded metadata bounds") {
-    val root = Files.createTempDirectory("pinot_rawmm")
+    val root = graft.TestDirs.create("pinot_rawmm")
     val tdir = root.resolve("metrics_OFFLINE")
     val vals = Array.tabulate(3000)(i => (i * 37) % 2999) // high-card ints
     SegmentWriter.write(tdir.resolve("seg0"), "metrics", "seg0", Seq(
@@ -188,7 +188,7 @@ class PinotSourceSpec extends SparkTestBase {
 
   test("GROUP BY on a key-pure column pushes down: metadata-only rows") {
     // partitionBy-shaped table: each segment holds exactly one tenant
-    val root = Files.createTempDirectory("pinot_gby")
+    val root = graft.TestDirs.create("pinot_gby")
     val tdir = root.resolve("tenants_OFFLINE")
     val perTenant = Map("acme" -> 1200, "bix" -> 800, "cori" -> 500)
     perTenant.toSeq.sortBy(_._1).zipWithIndex.foreach { case ((t, cnt), i) =>
@@ -425,7 +425,7 @@ class PinotSourceSpec extends SparkTestBase {
 
   test("prefix filters prune segments and range sorted string columns") {
     import org.apache.spark.sql.sources.StringStartsWith
-    val root = Files.createTempDirectory("pinot_sorted_str")
+    val root = graft.TestDirs.create("pinot_sorted_str")
     val tdir = root.resolve("sortedids_OFFLINE")
     // sorted dict string column (time-ordered-id shape) + a payload col
     val ids = Array.tabulate(5000)(i => f"id$i%05d")
@@ -463,7 +463,7 @@ class PinotSourceSpec extends SparkTestBase {
 
   test("TIMESTAMP columns prune and range like the time series they are") {
     import org.apache.spark.sql.sources.{GreaterThan, LessThan}
-    val root = Files.createTempDirectory("pinot_tscol")
+    val root = graft.TestDirs.create("pinot_tscol")
     val tdir = root.resolve("tsev_OFFLINE")
     val base = 1704067200000L // 2024-01-01 00:00 UTC
     // ascending event times, 1 minute apart → isSorted recorded
@@ -500,7 +500,7 @@ class PinotSourceSpec extends SparkTestBase {
 
   test("inverted index: EqualTo/In decode only windows holding matches") {
     import org.apache.spark.sql.sources.{EqualTo, In}
-    val root = Files.createTempDirectory("pinot_inv")
+    val root = graft.TestDirs.create("pinot_inv")
     val tdir = root.resolve("tagged_OFFLINE")
     val docs = 40000
     // 'needle' appears at three scattered docs; everything else 'common'
@@ -556,7 +556,7 @@ class PinotSourceSpec extends SparkTestBase {
 
   test("nullable columns: null-value vector roundtrip, IS NULL pruning") {
     import spark.implicits._
-    val root = Files.createTempDirectory("pinot_null")
+    val root = graft.TestDirs.create("pinot_null")
     val tdir = root.resolve("nully_OFFLINE")
     // score is null for every 7th row; name never null
     (0 until 5000).map(i =>
@@ -620,7 +620,7 @@ class PinotSourceSpec extends SparkTestBase {
 
   test("hybrid OFFLINE+REALTIME read dedups at the time boundary") {
     import spark.implicits._
-    val root = Files.createTempDirectory("pinot_hybrid")
+    val root = graft.TestDirs.create("pinot_hybrid")
     def mk(ids: Range) = ids.map(i =>
       (i.toLong, new java.sql.Timestamp(1704067200000L + i * 1000L)))
       .toDF("id", "ts")
@@ -644,7 +644,7 @@ class PinotSourceSpec extends SparkTestBase {
     import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual}
     // a segment whose recorded max is -0.0: Spark treats -0.0 = 0.0, so
     // x >= 0.0 and x = 0.0 must NOT prune it (Double.compare alone would)
-    val root = Files.createTempDirectory("pinot_zero")
+    val root = graft.TestDirs.create("pinot_zero")
     val tdir = root.resolve("zeroes_OFFLINE")
     SegmentWriter.write(tdir.resolve("seg0"), "zeroes", "seg0", Seq(
       SegmentWriter.IntCol("k", Array(1, 2)),
@@ -676,7 +676,7 @@ class PinotSourceSpec extends SparkTestBase {
 
   test("storage-partitioned join: co-partitioned tables join with no Exchange") {
     import graft.pinot.SegmentWriter
-    val root = Files.createTempDirectory("pinot_spj")
+    val root = graft.TestDirs.create("pinot_spj")
     val rnd2 = new scala.util.Random(5)
     // two tables, both with one segment per region_id value 0..3
     def writeTable(table: String, rows: Int, valCol: String): Unit = {
@@ -738,7 +738,7 @@ class PinotSourceSpec extends SparkTestBase {
   test("sorted-column range filters decode only the matching doc slice") {
     import graft.pinot.{SegmentWriter, VarByteChunkV4 => V4}
     import org.apache.spark.sql.sources.{GreaterThan, LessThanOrEqual}
-    val root = Files.createTempDirectory("pinot_sorted")
+    val root = graft.TestDirs.create("pinot_sorted")
     val dir = root.resolve("ts_OFFLINE")
     val nrows = 20000
     val ts = Array.tabulate(nrows)(i => 1700000000L + i * 10L) // sorted

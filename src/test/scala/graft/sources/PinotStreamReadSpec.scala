@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.pinot.SegmentWriter
@@ -19,7 +18,7 @@ class PinotStreamReadSpec extends SparkTestBase {
       SegmentWriter.StringDictCol("k", Array.tabulate(to - from)(i => s"k${(from + i) % 5}"))))
 
   test("micro-batch tail reads only newly committed segments, exactly once") {
-    val root = Files.createTempDirectory("pinot_stream")
+    val root = graft.TestDirs.create("pinot_stream")
     val tableDir = root.resolve("events_OFFLINE")
     val ckpt = root.resolve("ckpt").toString
     writeSeg(tableDir, "seg0", 0, 100)

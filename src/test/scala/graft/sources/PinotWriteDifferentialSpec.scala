@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import org.apache.spark.sql.DataFrame
@@ -53,7 +52,7 @@ class PinotWriteDifferentialSpec extends SparkTestBase {
       // sortedColumn option asks for it
       df = df.orderBy(md5(col("k").cast("string"))).cache()
 
-      val dir = Files.createTempDirectory("pinot_wdiff")
+      val dir = graft.TestDirs.create("pinot_wdiff")
         .resolve(s"wdiff${draw}_OFFLINE").toString
       var w = df.write.format("pinot").mode("append")
       if (rnd.nextBoolean()) w = w.option("sortedColumn", "k")
@@ -120,7 +119,7 @@ class PinotWriteDifferentialSpec extends SparkTestBase {
           concat(lit("w"), (col("id") % 3).cast("string"))).as("text"))
         .orderBy(md5(col("k").cast("string"))).cache()
 
-      val dir = Files.createTempDirectory("pinot_idiff")
+      val dir = graft.TestDirs.create("pinot_idiff")
         .resolve(s"idiff${draw}_OFFLINE").toString
       var w = df.write.format("pinot").mode("append")
         .option("jsonColumns", "doc")
@@ -210,7 +209,7 @@ class PinotWriteDifferentialSpec extends SparkTestBase {
         (col("id") % 13).as("m_long"),
         (col("id") % 7).cast("double").as("m_double"))
         .cache()
-      val dir = Files.createTempDirectory("pinot_rdiff")
+      val dir = graft.TestDirs.create("pinot_rdiff")
         .resolve(s"rdiff${draw}_OFFLINE").toString
       df.write.format("pinot").mode("append").save(dir)
       graft.pinot.PinotCompact.rollup(dir,

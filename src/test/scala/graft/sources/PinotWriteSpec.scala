@@ -13,7 +13,7 @@ class PinotWriteSpec extends SparkTestBase {
 
   test("write + read round-trip across all supported types") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("pinot_write")
+    val dir = graft.TestDirs.create("pinot_write")
       .resolve("roundTrip_OFFLINE").toString
     val df = spark.range(0, 5000, 1, 3).select(
       col("id").as("k"),
@@ -37,7 +37,7 @@ class PinotWriteSpec extends SparkTestBase {
   }
 
   test("JSON + BIG_DECIMAL columns: write, read back, query") {
-    val dir = Files.createTempDirectory("pinot_jsondec")
+    val dir = graft.TestDirs.create("pinot_jsondec")
       .resolve("jsondec_OFFLINE").toString
     val df = spark.range(0, 3000, 1, 2).select(
       col("id").as("k"),
@@ -86,7 +86,7 @@ class PinotWriteSpec extends SparkTestBase {
 
   test("decoder-level JSON dict/raw + BigDecimal serialization roundtrip") {
     import graft.pinot._
-    val dir = Files.createTempDirectory("pinot_jd2").resolve("seg0")
+    val dir = graft.TestDirs.create("pinot_jd2").resolve("seg0")
     val decs = Array(
       new java.math.BigDecimal("0"),
       new java.math.BigDecimal("-12345.6789"),
@@ -117,7 +117,7 @@ class PinotWriteSpec extends SparkTestBase {
 
   test("append adds segments; in-flight tmp dirs are never read") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("pinot_write2")
+    val dir = graft.TestDirs.create("pinot_write2")
       .resolve("appendable_OFFLINE").toString
     val mk = (from: Int, to: Int) => spark.range(from, to, 1, 1)
       .select(col("id").as("k"), (col("id") % 5).cast("int").as("v"))
@@ -135,7 +135,7 @@ class PinotWriteSpec extends SparkTestBase {
 
   test("large partitions roll into multiple segments (bounded memory)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("pinot_roll")
+    val dir = graft.TestDirs.create("pinot_roll")
       .resolve("rolled_OFFLINE").toString
     // 1 partition × 2.5M rows > MaxRowsPerSegment (1M) → 3 segments
     spark.range(0, 2500000, 1, 1)
@@ -154,9 +154,9 @@ class PinotWriteSpec extends SparkTestBase {
   test("streaming sink: micro-batch epochs become readable segments") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("pinot_stream")
+    val dir = graft.TestDirs.create("pinot_stream")
       .resolve("streamed_REALTIME").toString
-    val ckpt = Files.createTempDirectory("pinot_stream_ckpt").toString
+    val ckpt = graft.TestDirs.create("pinot_stream_ckpt").toString
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
     val q = mem.toDF().toDF("k", "s")
@@ -178,7 +178,7 @@ class PinotWriteSpec extends SparkTestBase {
 
   test("BOOLEAN/TIMESTAMP/BINARY columns round-trip through the DSv2") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("pinot_write_ext")
+    val dir = graft.TestDirs.create("pinot_write_ext")
       .resolve("extTypes_OFFLINE").toString
     val df = spark.range(0, 2000, 1, 2).select(
       col("id").as("k"),
@@ -206,7 +206,7 @@ class PinotWriteSpec extends SparkTestBase {
 
   test("multi-value (array) columns round-trip through the DSv2 + explode") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("pinot_write_mv")
+    val dir = graft.TestDirs.create("pinot_write_mv")
       .resolve("mvTypes_OFFLINE").toString
     // 10k docs × ~4 entries: flattened entries cross the 8192 batch size
     // several times over (regression: child vectors must be reserved to
@@ -242,7 +242,7 @@ class PinotWriteSpec extends SparkTestBase {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.unsafe.types.UTF8String
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("pinot_idem")
+    val dir = graft.TestDirs.create("pinot_idem")
       .resolve("idem_OFFLINE")
     Files.createDirectories(dir)
     val schema = StructType(Seq(StructField("k", LongType, nullable = false),
@@ -283,7 +283,7 @@ class PinotWriteSpec extends SparkTestBase {
 
   test("partitionBy write yields key-pure segments that drive SPJ reads") {
     import org.apache.spark.sql.execution.SparkPlan
-    val root = Files.createTempDirectory("pinot_pb")
+    val root = graft.TestDirs.create("pinot_pb")
     def writeTable(table: String, rows: Int, valCol: String): String = {
       val dir = root.resolve(s"${table}_OFFLINE").toString
       spark.range(0, rows, 1, 2).select(
@@ -334,7 +334,7 @@ class PinotWriteSpec extends SparkTestBase {
 
   test("unsupported column types fail cleanly") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("pinot_write3")
+    val dir = graft.TestDirs.create("pinot_write3")
       .resolve("bad_OFFLINE").toString
     val df = Seq((1L, Map("a" -> 1))).toDF("k", "m")
     val e = intercept[Exception](
@@ -345,7 +345,7 @@ class PinotWriteSpec extends SparkTestBase {
 
   test("nulls are rejected (pinot columns are non-nullable)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("pinot_write4")
+    val dir = graft.TestDirs.create("pinot_write4")
       .resolve("nulls_OFFLINE").toString
     val df = Seq(Some(1L), None).toDF("k")
     intercept[Exception](df.write.format("pinot").mode("append").save(dir))
@@ -353,7 +353,7 @@ class PinotWriteSpec extends SparkTestBase {
 
   test("sortedColumn physically orders segments and enables ranging") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("pinot_write5")
+    val dir = graft.TestDirs.create("pinot_write5")
       .resolve("sorted_OFFLINE").toString
     // deliberately SHUFFLED ingest order — without the option, isSorted
     // would be false and sorted ranging could never apply

@@ -45,7 +45,7 @@ class RangeIndexSpec extends SparkTestBase {
   }
 
   test("range filters decode only windows holding candidates") {
-    val root = Files.createTempDirectory("pinot_range")
+    val root = graft.TestDirs.create("pinot_range")
     val tdir = root.resolve("metrics_OFFLINE")
     // the shape a range index exists for: an UNSORTED metric whose
     // extreme values cluster in DOC order (a latency incident) inside a
@@ -86,7 +86,7 @@ class RangeIndexSpec extends SparkTestBase {
   }
 
   test("DSv2 write option + v1 layout + compaction carry the index") {
-    val root = Files.createTempDirectory("pinot_range_e2e")
+    val root = graft.TestDirs.create("pinot_range_e2e")
     val dir = root.resolve("m_OFFLINE").toString
     import spark.implicits._
     (0 until 20000).map(i => (i.toLong * 37 % 20000, i))

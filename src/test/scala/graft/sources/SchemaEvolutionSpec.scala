@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.pinot.SegmentWriter
@@ -15,7 +14,7 @@ import org.apache.spark.sql.functions._
 class SchemaEvolutionSpec extends SparkTestBase {
 
   private def mixedTable(): String = {
-    val root = Files.createTempDirectory("pinot_evo")
+    val root = graft.TestDirs.create("pinot_evo")
     val tdir = root.resolve("players_OFFLINE")
     // old segment: written before `score`/`team` existed
     SegmentWriter.write(tdir.resolve("seg0"), "players", "seg0", Seq(
@@ -55,7 +54,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
   }
 
   test("evolved MV and decimal columns serve defaults from old segments") {
-    val root = Files.createTempDirectory("pinot_evo_mv")
+    val root = graft.TestDirs.create("pinot_evo_mv")
     val tdir = root.resolve("docs_OFFLINE")
     // old segment: scalar columns only
     SegmentWriter.write(tdir.resolve("seg0"), "docs", "seg0", Seq(
@@ -83,7 +82,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
   }
 
   test("conflicting types across segments fail loudly") {
-    val root = Files.createTempDirectory("pinot_evo_bad")
+    val root = graft.TestDirs.create("pinot_evo_bad")
     val tdir = root.resolve("bad_OFFLINE")
     SegmentWriter.write(tdir.resolve("seg0"), "bad", "seg0", Seq(
       SegmentWriter.LongCol("k", Array(1L))))

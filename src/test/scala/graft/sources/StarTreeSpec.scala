@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.pinot.{SegmentReader, SegmentWriter, StarTree}
@@ -26,7 +25,7 @@ class StarTreeSpec extends SparkTestBase {
     }
 
   test("writer section round-trips and pre-aggregates exactly") {
-    val dir = Files.createTempDirectory("startree_rt")
+    val dir = graft.TestDirs.create("startree_rt")
     SegmentWriter.write(dir, "t", "s0", Seq(
       SegmentWriter.StringDictCol("team", team),
       SegmentWriter.IntCol("year", year),
@@ -65,7 +64,7 @@ class StarTreeSpec extends SparkTestBase {
   }
 
   private lazy val treeTable: String = {
-    val root = Files.createTempDirectory("startree_dsv2")
+    val root = graft.TestDirs.create("startree_dsv2")
     val tdir = root.resolve("facts_OFFLINE")
     import spark.implicits._
     (0 until n).map(i => (team(i), year(i), hits(i), score(i)))
@@ -161,7 +160,7 @@ class StarTreeSpec extends SparkTestBase {
 
   test("writer rejects nullable or non-numeric star-tree columns") {
     import spark.implicits._
-    val root = Files.createTempDirectory("startree_rej")
+    val root = graft.TestDirs.create("startree_rej")
     val df = (0 until 10).map(i => (s"k$i", i)).toDF("k", "v")
     val e = intercept[Exception] {
       df.write.format("pinot").mode("append")

@@ -88,7 +88,7 @@ class TextIndexSpec extends SparkTestBase {
   }
 
   test("substring filters decode only windows holding candidate tokens") {
-    val root = Files.createTempDirectory("pinot_text")
+    val root = graft.TestDirs.create("pinot_text")
     val tdir = root.resolve("docs_OFFLINE")
     val docs = 40000
     val needleAt = Set(3, 20001, 39998)
@@ -123,7 +123,7 @@ class TextIndexSpec extends SparkTestBase {
   }
 
   test("DSv2 option + metadata flag + v1 file + compaction carry it") {
-    val root = Files.createTempDirectory("pinot_text_e2e")
+    val root = graft.TestDirs.create("pinot_text_e2e")
     val dir = root.resolve("d_OFFLINE").toString
     import spark.implicits._
     (0 until 5000).map(i =>
@@ -194,7 +194,7 @@ class TextIndexSpec extends SparkTestBase {
   }
 
   test("stop analyzer end-to-end: DSv2 write option, pushdown stays exact") {
-    val root = Files.createTempDirectory("pinot_text_stop")
+    val root = graft.TestDirs.create("pinot_text_stop")
     val dir = root.resolve("d_OFFLINE").toString
     import spark.implicits._
     val rows = (0 until 3000).map(i =>

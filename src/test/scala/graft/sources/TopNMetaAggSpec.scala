@@ -33,7 +33,7 @@ class TopNMetaAggSpec extends SparkTestBase {
 
   /** Single segment — the histFinal (complete histogram) shape. */
   private lazy val oneSeg: String = {
-    val root = Files.createTempDirectory("pinot_topn")
+    val root = graft.TestDirs.create("pinot_topn")
     val t = root.resolve("one_OFFLINE")
     SegmentWriter.write(t.resolve("seg0"), "one", "seg0", Seq(
       SegmentWriter.StringDictCol("team", team),
@@ -47,7 +47,7 @@ class TopNMetaAggSpec extends SparkTestBase {
 
   /** Three segments — partial histogram, top-N must refuse. */
   private lazy val threeSeg: String = {
-    val root = Files.createTempDirectory("pinot_topn3")
+    val root = graft.TestDirs.create("pinot_topn3")
     val t = root.resolve("three_OFFLINE")
     val per = n / 3
     (0 until 3).foreach { s =>
@@ -161,7 +161,7 @@ class TopNMetaAggSpec extends SparkTestBase {
     * the cross-segment merge matters), plus a deliberately unsorted `v`.
     */
   private lazy val sortedSeg: String = {
-    val root = Files.createTempDirectory("pinot_sorted")
+    val root = graft.TestDirs.create("pinot_sorted")
     val t = root.resolve("s_OFFLINE")
     (0 until 2).foreach { s =>
       val ts = Array.tabulate(3000)(i => (i * 2 + s).toLong) // sorted, unique
@@ -245,7 +245,7 @@ class TopNMetaAggSpec extends SparkTestBase {
   }
 
   test("value-mode top-N orders float/double like Spark (NaN, ±0.0)") {
-    val root = Files.createTempDirectory("pinot_topn_f")
+    val root = graft.TestDirs.create("pinot_topn_f")
     val t = root.resolve("f_OFFLINE")
     val f = Array(1.5f, -2.25f, Float.NaN, 0.0f, -0.0f,
       Float.PositiveInfinity, Float.NegativeInfinity, 3.75f)
@@ -382,7 +382,7 @@ class TopNMetaAggSpec extends SparkTestBase {
   }
 
   test("nullable column refuses the metadata sum and stays exact") {
-    val root = Files.createTempDirectory("pinot_nullsum")
+    val root = graft.TestDirs.create("pinot_nullsum")
     val t = root.resolve("ns_OFFLINE")
     val v = Array.tabulate(100)(i => i)
     SegmentWriter.write(t.resolve("seg0"), "ns", "seg0", Seq(
@@ -402,7 +402,7 @@ class TopNMetaAggSpec extends SparkTestBase {
     // reproduce the session's ANSI overflow error, not a silent wrap
     assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
     val big = Array.fill(4)(Long.MaxValue / 2 + 17)
-    val root = Files.createTempDirectory("pinot_wrap")
+    val root = graft.TestDirs.create("pinot_wrap")
     val t = root.resolve("w_OFFLINE")
     (0 until 2).foreach(s =>
       SegmentWriter.write(t.resolve(s"seg$s"), "w", s"seg$s", Seq(
@@ -436,7 +436,7 @@ class TopNMetaAggSpec extends SparkTestBase {
     // survivors into an extra stage — single task is strictly faster
     // multi-window fixture: 20k rows (> 2 windows) so slicing is even
     // possible — `one` at 8k rows fits a single 8192-row window
-    val root = Files.createTempDirectory("pinot_topn_slice")
+    val root = graft.TestDirs.create("pinot_topn_slice")
     val t = root.resolve("sl_OFFLINE")
     val m = 20000
     SegmentWriter.write(t.resolve("seg0"), "sl", "seg0", Seq(
@@ -492,7 +492,7 @@ class TopNMetaAggSpec extends SparkTestBase {
   }
 
   test("unparsable foreign bounds refuse the complete MIN/MAX push") {
-    val root = Files.createTempDirectory("pinot_badbounds")
+    val root = graft.TestDirs.create("pinot_badbounds")
     val t = root.resolve("bb_OFFLINE")
     val v = Array(5, 2, 9, 4)
     SegmentWriter.write(t.resolve("seg0"), "bb", "seg0", Seq(
@@ -516,7 +516,7 @@ class TopNMetaAggSpec extends SparkTestBase {
 
   test("large in-range totals stay metaComplete and exact") {
     val big = Array.fill(4)(Long.MaxValue / 8)
-    val root = Files.createTempDirectory("pinot_bigok")
+    val root = graft.TestDirs.create("pinot_bigok")
     val t = root.resolve("b_OFFLINE")
     (0 until 2).foreach(s =>
       SegmentWriter.write(t.resolve(s"seg$s"), "b", s"seg$s", Seq(
@@ -528,7 +528,7 @@ class TopNMetaAggSpec extends SparkTestBase {
   }
 
   test("float/double/timestamp MIN/MAX answer from metadata bounds") {
-    val root = Files.createTempDirectory("pinot_fbounds")
+    val root = graft.TestDirs.create("pinot_fbounds")
     val t = root.resolve("fb_OFFLINE")
     val f = Array(3.5f, -0.25f, Float.NaN, 7.125f)
     val dd = Array(2.5, -17.75, 1e300, -1e300)
@@ -558,7 +558,7 @@ class TopNMetaAggSpec extends SparkTestBase {
   test("key-pure segments push partial SUM from metadata") {
     // one tag per segment (partitionBy-written ingest shape): SUM per
     // tag comes straight from each segment's recorded sum
-    val root = Files.createTempDirectory("pinot_keypure")
+    val root = graft.TestDirs.create("pinot_keypure")
     val t = root.resolve("kp_OFFLINE")
     val tags = Seq("a", "b", "c")
     val vals = Map("a" -> Array(1, 2, 3), "b" -> Array(10, 20),

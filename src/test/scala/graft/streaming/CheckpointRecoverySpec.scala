@@ -23,7 +23,7 @@ class CheckpointRecoverySpec extends SparkTestBase {
     new Timestamp(1704067200000L + minutes * 60000L)
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    graft.TestDirs.create(prefix).toString
 
   test("statefulSessionize: an open session survives a stop/restart") {
     import spark.implicits._

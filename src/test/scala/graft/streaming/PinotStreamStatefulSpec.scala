@@ -29,7 +29,7 @@ class PinotStreamStatefulSpec extends SparkTestBase {
 
   test("Pinot tail -> statefulFunnel -> sink: offsets and funnel state survive restarts") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("pinot_sf")
+    val root = graft.TestDirs.create("pinot_sf")
     val tableDir = root.resolve("events_OFFLINE").toString
     val ckpt = root.resolve("ckpt").toString
     val out = root.resolve("out").toString
@@ -69,7 +69,7 @@ class PinotStreamStatefulSpec extends SparkTestBase {
   test("Pinot tail -> sketch_build delta -> stored-section merge: the streaming lambda merge survives restarts") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("pinot_lambda")
+    val root = graft.TestDirs.create("pinot_lambda")
     val coldDir = root.resolve("cold_OFFLINE").toString
     val tailDir = root.resolve("tail_OFFLINE").toString
     val ckpt = root.resolve("ckpt").toString
@@ -131,7 +131,7 @@ class PinotStreamStatefulSpec extends SparkTestBase {
 
   test("Pinot tail -> statefulSessionize -> sink: an open session survives restarts") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("pinot_ss")
+    val root = graft.TestDirs.create("pinot_ss")
     val tableDir = root.resolve("events_OFFLINE").toString
     val ckpt = root.resolve("ckpt").toString
     val out = root.resolve("out").toString
@@ -169,7 +169,7 @@ class PinotStreamStatefulSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     import graft.sources.pinot.PinotUpsert
-    val root = java.nio.file.Files.createTempDirectory("pinot_upstream")
+    val root = graft.TestDirs.create("pinot_upstream")
     val tableDir = root.resolve("ups_REALTIME").toString
     val ckpt = root.resolve("ckpt").toString
     val out = root.resolve("out").toString
@@ -237,7 +237,7 @@ class PinotStreamStatefulSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     import graft.sources.pinot.PinotUpsert
-    val root = java.nio.file.Files.createTempDirectory("pinot_upstreamp")
+    val root = graft.TestDirs.create("pinot_upstreamp")
     val tableDir = root.resolve("upsp_REALTIME").toString
     val ckpt = root.resolve("ckpt").toString
     val out = root.resolve("out").toString
