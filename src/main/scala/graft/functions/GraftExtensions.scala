@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
+import graft.pinot.SketchSection
+
 /** Registers graft's native expressions with the SQL function registry so
   * plain SQL can call them:
   *
@@ -91,108 +93,28 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         ArrayLongReduceAgg(args.head, ArrayLongReduceAgg.SumOp)
           .toAggregateExpression()
       }))
-    ext.injectFunction((
-      FunctionIdentifier("freq_items"),
-      new ExpressionInfo(classOf[FreqItemsAgg].getName, "freq_items"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "freq_items(col, capacity) takes exactly 2 arguments")
-        FreqItemsAgg(args.head, foldableInt(args(1), "freq_items capacity"))
-          .toAggregateExpression()
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("bitmap_distinct"),
-      new ExpressionInfo(classOf[BitmapDistinctAgg].getName, "bitmap_distinct"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1,
-          "bitmap_distinct(col) takes exactly 1 argument")
-        BitmapDistinctAgg(args.head).toAggregateExpression()
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("bitmap_merge_distinct"),
-      new ExpressionInfo(classOf[BitmapMergeAgg].getName, "bitmap_merge_distinct"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1,
-          "bitmap_merge_distinct(sketch_bytes) takes exactly 1 argument")
-        BitmapMergeAgg(args.head).toAggregateExpression()
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("kll_quantiles"),
-      new ExpressionInfo(classOf[KllSketchAgg].getName, "kll_quantiles"),
-      (args: Seq[Expression]) => {
-        require(args.length >= 3,
-          "kll_quantiles(col, k, q1[, q2, ...]) takes a column, k, and " +
-            "at least one fraction")
-        KllSketchAgg(args.head, foldableInt(args(1), "kll_quantiles k"),
-          args.drop(2).map(foldableDouble(_, "kll_quantiles fraction")))
-          .toAggregateExpression()
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("kll_merge_quantiles"),
-      new ExpressionInfo(classOf[KllMergeAgg].getName, "kll_merge_quantiles"),
-      (args: Seq[Expression]) => {
-        require(args.length >= 3,
-          "kll_merge_quantiles(sketch_bytes, k, q1[, ...]) takes a binary " +
-            "column, k, and at least one fraction")
-        KllMergeAgg(args.head, foldableInt(args(1), "kll_merge_quantiles k"),
-          args.drop(2).map(foldableDouble(_, "kll_merge_quantiles fraction")))
-          .toAggregateExpression()
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("kmv_merge_estimate"),
-      new ExpressionInfo(classOf[KmvMergeAgg].getName, "kmv_merge_estimate"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "kmv_merge_estimate(sketch_bytes, k) takes exactly 2 arguments")
-        KmvMergeAgg(args.head, foldableInt(args(1), "kmv_merge_estimate k"))
-          .toAggregateExpression()
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("kmv_sketch"),
-      new ExpressionInfo(classOf[KmvSketchAgg].getName, "kmv_sketch"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "kmv_sketch(hashed_col, k) takes exactly 2 arguments")
-        KmvSketchAgg(args.head, foldableInt(args(1), "kmv_sketch k"))
-          .toAggregateExpression()
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("hll_distinct"),
-      new ExpressionInfo(classOf[HllDistinctAgg].getName, "hll_distinct"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "hll_distinct(hashed_col, p) takes exactly 2 arguments")
-        HllDistinctAgg(args.head, foldableInt(args(1), "hll_distinct p"))
-          .toAggregateExpression()
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("hll_merge_estimate"),
-      new ExpressionInfo(classOf[HllMergeAgg].getName, "hll_merge_estimate"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "hll_merge_estimate(sketch_bytes, p) takes exactly 2 arguments")
-        HllMergeAgg(args.head, foldableInt(args(1), "hll_merge_estimate p"))
-          .toAggregateExpression()
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("sketch_build"),
-      new ExpressionInfo(classOf[SketchBuildAgg].getName, "sketch_build"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "sketch_build(col, 'bitmap'|'kmv<k>'|'kll<k>'|'hll<p>'|'freq<c>') " +
-            "takes exactly 2 arguments")
-        SketchBuildAgg(args.head, foldableString(args(1), "sketch_build spec"))
-          .toAggregateExpression()
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("freq_merge_items"),
-      new ExpressionInfo(classOf[FreqMergeAgg].getName, "freq_merge_items"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "freq_merge_items(sketch_bytes, capacity) takes exactly 2 arguments")
-        FreqMergeAgg(args.head, foldableInt(args(1), "freq_merge_items capacity"))
-          .toAggregateExpression()
-      }))
+    SketchAgg.Functions.foreach { case (name, (usage, kind, payloadsIn, out)) =>
+      ext.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo(classOf[SketchAgg].getName, name),
+        (args: Seq[Expression]) => {
+          val arity = kind match {
+            case "bitmap" => args.length == 1
+            case "kll" => args.length >= 3
+            case _ => args.length == 2
+          }
+          require(arity, s"$usage: wrong number of arguments")
+          val spec = kind match {
+            case "" => foldableString(args(1), s"$name spec")
+            case "bitmap" => kind
+            case _ => kind + foldableInt(args(1), s"$name $kind parameter")
+          }
+          val qs = if (kind == "kll")
+            args.drop(2).map(foldableDouble(_, s"$name fraction")) else Nil
+          SketchAgg(args.head, SketchSection.parseSpec(spec), payloadsIn, out,
+            qs).toAggregateExpression()
+        }))
+    }
   }
 
   private def foldableString(e: Expression, what: String): String = {
@@ -205,7 +127,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
   }
 
-  /** Evaluates a foldable int argument (capacity/k) at registration. */
+  /** Evaluates a foldable numeric argument (a fraction) at registration. */
   private def foldableDouble(e: Expression, what: String): Double = {
     require(e.foldable, s"$what must be a literal")
     e.eval() match {

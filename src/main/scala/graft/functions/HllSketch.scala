@@ -2,12 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.types.{DataType, LongType}
+import graft.pinot.SketchSection
 
 /** HyperLogLog distinct-count sketch — the Spark-native analog of Pinot's
   * DISTINCT_COUNT_HLL aggregation (Pinot's most commonly used approximate
@@ -39,8 +34,14 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * partition crosses the wire (map-side combine), vs count(distinct)'s
   * every-(group,value)-pair shuffle.
   */
-final class HllSketch(val p: Int) {
+final class HllSketch(val p: Int) extends Sketch {
   require(p >= 4 && p <= 18, s"hll p must be in [4, 18], got $p")
+
+  def spec: SketchSection.Spec = SketchSection.HllSpec(p)
+  def add(v: Any): Unit = addHash(v.asInstanceOf[Long])
+  def merge(o: Sketch): Unit = mergeIn(o.asInstanceOf[HllSketch])
+  def payload: Array[Byte] = SketchSection.frame(spec, serializeBody())
+  def result(qs: Seq[Double]): Any = estimate
 
   val m: Int = 1 << p
   private val sparseLimit: Int = m / 4
@@ -236,151 +237,4 @@ object HllSketch {
     }
     h
   }
-}
-
-/** DISTINCT_COUNT_HLL over a pre-hashed bigint column (feed
-  * `xxhash64(col)` — seed 42, the repo-wide sketch hash contract).
-  * Exact while every merged buffer stays sparse (≤ 2^p/4 distinct).
-  */
-case class HllDistinctAgg(
-    child: Expression,
-    p: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[HllSketch] {
-
-  require(p >= 4 && p <= 18, s"hll_distinct p must be in [4, 18], got $p")
-
-  override def children: Seq[Expression] = Seq(child)
-
-  override def nullable: Boolean = false
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"hll_distinct requires a pre-hashed bigint input, got ${other.simpleString}")
-  }
-
-  override def createAggregationBuffer(): HllSketch = new HllSketch(p)
-
-  override def update(buf: HllSketch, input: InternalRow): HllSketch = {
-    val v = child.eval(input)
-    if (v != null) buf.addHash(v.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(a: HllSketch, b: HllSketch): HllSketch = {
-    a.mergeIn(b)
-    a
-  }
-
-  override def eval(buf: HllSketch): Any = buf.estimate
-
-  override def serialize(buf: HllSketch): Array[Byte] = buf.serializeBody()
-
-  override def deserialize(bytes: Array[Byte]): HllSketch =
-    HllSketch.deserializeBody(p, bytes)
-
-  override def withNewMutableAggBufferOffset(offset: Int): HllDistinctAgg =
-    copy(mutableAggBufferOffset = offset)
-
-  override def withNewInputAggBufferOffset(offset: Int): HllDistinctAgg =
-    copy(inputAggBufferOffset = offset)
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren.head)
-
-  override def prettyName: String = "hll_distinct"
-}
-
-object HllDistinctAgg {
-
-  /** HLL distinct estimate of a pre-hashed bigint column (use
-    * `xxhash64(col)`); exact while sparse (≤ 2^p/4 distinct).
-    */
-  def hllDistinct(c: Column, p: Int): Column =
-    GraftSqlBridge.toColumn(
-      HllDistinctAgg(GraftSqlBridge.toExpression(c), p)
-        .toAggregateExpression())
-}
-
-/** Merge of PRE-BUILT HLL sketches (binary [[graft.pinot.SketchSection]]
-  * payloads of kind `hll<p>` — per-segment stored sections, rollup sketch
-  * metrics, or [[SketchBuildAgg]] query-time payloads) into a distinct
-  * estimate: the DISTINCT_COUNT_HLL-over-stored-sketches path. Exact
-  * while every input and the merged result stay sparse.
-  */
-case class HllMergeAgg(
-    child: Expression,
-    p: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[HllSketch] {
-
-  require(p >= 4 && p <= 18, s"hll_merge_estimate p must be in [4, 18], got $p")
-
-  override def children: Seq[Expression] = Seq(child)
-
-  override def nullable: Boolean = false
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"hll_merge_estimate requires binary sketch payloads, got ${other.simpleString}")
-  }
-
-  override def createAggregationBuffer(): HllSketch = new HllSketch(p)
-
-  override def update(buf: HllSketch, input: InternalRow): HllSketch = {
-    val v = child.eval(input)
-    if (v != null) {
-      val sk = graft.pinot.SketchSection.deserialize(v.asInstanceOf[Array[Byte]])
-      sk.spec match {
-        case graft.pinot.SketchSection.HllSpec(p2) =>
-          require(p2 == p, s"hll_merge_estimate(p=$p) fed an hll$p2 sketch")
-          buf.mergeIn(sk.hll)
-        case _ => throw new IllegalArgumentException(
-          "hll_merge_estimate: section is not an hll sketch")
-      }
-    }
-    buf
-  }
-
-  override def merge(a: HllSketch, b: HllSketch): HllSketch = {
-    a.mergeIn(b)
-    a
-  }
-
-  override def eval(buf: HllSketch): Any = buf.estimate
-
-  override def serialize(buf: HllSketch): Array[Byte] = buf.serializeBody()
-
-  override def deserialize(bytes: Array[Byte]): HllSketch =
-    HllSketch.deserializeBody(p, bytes)
-
-  override def withNewMutableAggBufferOffset(offset: Int): HllMergeAgg =
-    copy(mutableAggBufferOffset = offset)
-
-  override def withNewInputAggBufferOffset(offset: Int): HllMergeAgg =
-    copy(inputAggBufferOffset = offset)
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren.head)
-
-  override def prettyName: String = "hll_merge_estimate"
-}
-
-object HllMergeAgg {
-
-  /** Distinct estimate from pre-built hll<p> sketch payloads. */
-  def hllMergeEstimate(c: Column, p: Int): Column =
-    GraftSqlBridge.toColumn(
-      HllMergeAgg(GraftSqlBridge.toExpression(c), p)
-        .toAggregateExpression())
 }

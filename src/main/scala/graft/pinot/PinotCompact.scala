@@ -338,7 +338,8 @@ object PinotCompact {
     * the named columns roll up to ONE serialized [[SketchSection]]
     * per group, stored as a BYTES column — a `bitmap` keeps the group's
     * exact distinct raw long values (strings keep xxhash64 values), a
-    * `kmv<k>` keeps the bottom-k of the group's Spark-xxhash64 values.
+    * `kmv<k>` keeps the bottom-k of the group's Spark-xxhash64 values
+    * (the writer's value rule, [[graft.functions.Sketch.values]]).
     * Query time merges the per-group sketches (`bitmap_merge_distinct` /
     * `kmv_merge_estimate`) — grouped DISTINCT answers survive the
     * rollup even though the raw rows are gone.
@@ -380,30 +381,6 @@ object PinotCompact {
       case other => throw new PinotFormatException(
         s"rollup: unsupported dim column kind for ${other.name}")
     }
-    def groupSketch(nm: String,
-        order: Array[scala.collection.mutable.ArrayBuffer[Int]],
-        longOf: Int => Long, hashOf: Int => Long,
-        dblOf: Int => Double = null,
-        strOf: Int => String = null): SegmentWriter.ColumnData =
-      SegmentWriter.BytesRawCol(nm, order.map { g =>
-        SketchSection.parseSpec(sketchMetrics(nm)) match {
-          case SketchSection.KmvSpec(k) =>
-            SketchSection.buildKmv(g.iterator.map(hashOf), k)
-          case SketchSection.BitmapSpec =>
-            SketchSection.buildBitmap(g.iterator.map(longOf))
-          case SketchSection.KllSpec(k) =>
-            if (dblOf == null) throw new PinotFormatException(
-              s"rollup sketch metric $nm: kll needs a NUMERIC column")
-            SketchSection.buildKll(g.iterator.map(dblOf), k)
-          case SketchSection.HllSpec(p) =>
-            SketchSection.buildHll(g.iterator.map(hashOf), p)
-          case SketchSection.FreqSpec(c) =>
-            if (strOf == null) throw new PinotFormatException(
-              s"rollup sketch metric $nm: freq needs a STRING column")
-            SketchSection.buildFreq(g.iterator.map(strOf), c)
-        }
-      })
-
     // group doc ids by dim tuple, FIRST-SEEN order (deterministic: doc order)
     val groups = scala.collection.mutable.LinkedHashMap
       .empty[Seq[Any], scala.collection.mutable.ArrayBuffer[Int]]
@@ -431,44 +408,10 @@ object PinotCompact {
       case SegmentWriter.TimestampCol(nm, v) if dims.contains(nm) =>
         SegmentWriter.TimestampCol(nm, order.map(g => v(g.head)))
       // sketch metrics: one serialized SketchSection per group
-      case SegmentWriter.IntCol(nm, v) if sketchMetrics.contains(nm) =>
-        groupSketch(nm, order, i => v(i).toLong,
-          i => SketchSection.xxhash(v(i)), i => v(i).toDouble)
-      case SegmentWriter.LongCol(nm, v) if sketchMetrics.contains(nm) =>
-        groupSketch(nm, order, i => v(i),
-          i => SketchSection.xxhash(v(i)), i => v(i).toDouble)
-      case SegmentWriter.IntRawCol(nm, v, _, _) if sketchMetrics.contains(nm) =>
-        groupSketch(nm, order, i => v(i).toLong,
-          i => SketchSection.xxhash(v(i)), i => v(i).toDouble)
-      case SegmentWriter.LongRawCol(nm, v, _, _) if sketchMetrics.contains(nm) =>
-        groupSketch(nm, order, i => v(i),
-          i => SketchSection.xxhash(v(i)), i => v(i).toDouble)
-      case SegmentWriter.DoubleCol(nm, v) if sketchMetrics.contains(nm) =>
-        groupSketch(nm, order,
-          i => throw new PinotFormatException(
-            s"rollup sketch metric $nm: bitmap needs an integral column"),
-          i => throw new PinotFormatException(
-            s"rollup sketch metric $nm: kmv needs an integral/string column"),
-          i => v(i))
-      case SegmentWriter.DoubleRawCol(nm, v, _, _) if sketchMetrics.contains(nm) =>
-        groupSketch(nm, order,
-          i => throw new PinotFormatException(
-            s"rollup sketch metric $nm: bitmap needs an integral column"),
-          i => throw new PinotFormatException(
-            s"rollup sketch metric $nm: kmv needs an integral/string column"),
-          i => v(i))
-      case SegmentWriter.TimestampCol(nm, v) if sketchMetrics.contains(nm) =>
-        // bitmap keeps raw millis; kmv hashes Spark's MICROsecond long
-        groupSketch(nm, order, i => v(i),
-          i => SketchSection.xxhash(v(i) * 1000L), i => v(i).toDouble)
-      case SegmentWriter.StringDictCol(nm, v, _) if sketchMetrics.contains(nm) =>
-        // strings have no natural long: distinct kinds keep xxhash64
-        // values; freq keeps the values themselves
-        groupSketch(nm, order, i => SketchSection.xxhash(v(i)),
-          i => SketchSection.xxhash(v(i)), strOf = i => v(i))
-      case SegmentWriter.StringRawCol(nm, v, _, _, _) if sketchMetrics.contains(nm) =>
-        groupSketch(nm, order, i => SketchSection.xxhash(v(i)),
-          i => SketchSection.xxhash(v(i)), strOf = i => v(i))
+      case c if sketchMetrics.contains(c.name) =>
+        val spec = SketchSection.parseSpec(sketchMetrics(c.name))
+        SegmentWriter.BytesRawCol(c.name,
+          order.map(g => graft.functions.Sketch.build(spec, c, g.iterator)))
       // metrics: exact SUM per group (int widens to long-safe via math)
       case SegmentWriter.IntCol(nm, v) =>
         SegmentWriter.IntCol(nm, order.map(g =>

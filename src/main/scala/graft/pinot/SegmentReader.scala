@@ -354,14 +354,11 @@ final class SegmentReader private (
   def jsonIndex(name: String): Option[JsonIndexSection] =
     sectionOpt(name, JsonIndexSection.IndexType).map(JsonIndexSection.deserialize)
 
-  /** Stored distinct sketch (EXTENSION — the capability of Pinot's
+  /** Stored sketch payload (EXTENSION — the capability of Pinot's
     * ingestion-time THETA_SKETCH/BITMAP columns; see [[SketchSection]]):
-    * a few-KB summary merged across segments WITHOUT forward-index IO.
+    * a few-KB summary merged across segments WITHOUT forward-index IO;
+    * the scan-side merge ships these bytes whole.
     */
-  def sketch(name: String): Option[SketchSection.Sketch] =
-    sectionOpt(name, SketchSection.IndexType).map(SketchSection.deserialize)
-
-  /** Raw stored sketch bytes (the scan-side merge ships these whole). */
   def sketchBytes(name: String): Option[Array[Byte]] =
     sectionOpt(name, SketchSection.IndexType)
 

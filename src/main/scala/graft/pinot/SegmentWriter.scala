@@ -588,87 +588,16 @@ object SegmentWriter {
       props ++= s"column.$jc.hasJsonIndex=true\n"
     }
 
-    // Ingestion-time distinct sketches (the capability of Pinot's
-    // pre-aggregated THETA_SKETCH/BITMAP columns): per-column KMV or
-    // Roaring64 summaries merged at query time WITHOUT re-reading the
-    // forward index — see [[SketchSection]]
-    // Hashes use Spark's xxhash64 semantics (seed 42) so stored sketches
-    // compose with query-time KmvSketchAgg sketches over the same values.
-    def xx(v: Any): Long = SketchSection.xxhash(v)
-    def sketchHashes(cd: ColumnData): Option[Iterator[Long]] = cd match {
-      case IntCol(_, v) => Some(v.iterator.map(xx))
-      case LongCol(_, v) => Some(v.iterator.map(xx))
-      case IntRawCol(_, v, _, _) => Some(v.iterator.map(xx))
-      case LongRawCol(_, v, _, _) => Some(v.iterator.map(xx))
-      case StringDictCol(_, v, _) => Some(v.iterator.map(xx))
-      case StringRawCol(_, v, _, _, _) => Some(v.iterator.map(xx))
-      // Spark's xxhash64(timestamp) hashes the internal MICROsecond long
-      case TimestampCol(_, ms) => Some(ms.iterator.map(m => xx(m * 1000L)))
-      case _ => None
-    }
-    def sketchLongs(cd: ColumnData): Option[Iterator[Long]] = cd match {
-      case IntCol(_, v) => Some(v.iterator.map(_.toLong))
-      case LongCol(_, v) => Some(v.iterator)
-      case IntRawCol(_, v, _, _) => Some(v.iterator.map(_.toLong))
-      case LongRawCol(_, v, _, _) => Some(v.iterator)
-      case TimestampCol(_, ms) => Some(ms.iterator)
-      // strings have no natural long: the bitmap stores xxhash64 values
-      // (exact modulo 64-bit collisions — the DISTINCT_COUNT_BITMAP trade)
-      case StringDictCol(_, v, _) => Some(v.iterator.map(xx))
-      case StringRawCol(_, v, _, _, _) => Some(v.iterator.map(xx))
-      case _ => None
-    }
-    def sketchDoubles(cd: ColumnData): Option[Iterator[Double]] = cd match {
-      case IntCol(_, v) => Some(v.iterator.map(_.toDouble))
-      case LongCol(_, v) => Some(v.iterator.map(_.toDouble))
-      case FloatCol(_, v) => Some(v.iterator.map(_.toDouble))
-      case DoubleCol(_, v) => Some(v.iterator)
-      case IntRawCol(_, v, _, _) => Some(v.iterator.map(_.toDouble))
-      case LongRawCol(_, v, _, _) => Some(v.iterator.map(_.toDouble))
-      case FloatRawCol(_, v, _, _) => Some(v.iterator.map(_.toDouble))
-      case DoubleRawCol(_, v, _, _) => Some(v.iterator)
-      case TimestampCol(_, ms) => Some(ms.iterator.map(_.toDouble))
-      case _ => None
-    }
-    // freq<c> heavy hitters report the VALUES themselves — string
-    // columns only (hashing would lose the items)
-    def sketchStrings(cd: ColumnData): Option[Iterator[String]] = cd match {
-      case StringDictCol(_, v, _) => Some(v.iterator)
-      case StringRawCol(_, v, _, _, _) => Some(v.iterator)
-      case _ => None
-    }
+    // Ingestion-time sketches (the capability of Pinot's pre-aggregated
+    // THETA_SKETCH/BITMAP columns): per-column summaries merged at query
+    // time WITHOUT re-reading the forward index — see [[SketchSection]];
+    // what each kind stores of a value is graft.functions.Sketch.values
     sketchCols.foreach { case (sc, specStr) =>
       val spec = SketchSection.parseSpec(specStr)
       val cd = columns.find(_.name == sc).getOrElse(
         throw new PinotFormatException(s"sketchColumns: unknown column $sc"))
-      val bytes = spec match {
-        case SketchSection.KmvSpec(k) =>
-          val vals = sketchHashes(cd).getOrElse(
-            throw new PinotFormatException(
-              s"sketchColumns entry $sc: single-value scalar required"))
-          SketchSection.buildKmv(vals, k)
-        case SketchSection.BitmapSpec =>
-          val vals = sketchLongs(cd).getOrElse(
-            throw new PinotFormatException(
-              s"sketchColumns entry $sc: single-value scalar required"))
-          SketchSection.buildBitmap(vals)
-        case SketchSection.KllSpec(k) =>
-          val vals = sketchDoubles(cd).getOrElse(
-            throw new PinotFormatException(
-              s"sketchColumns entry $sc: kll needs a single-value NUMERIC column"))
-          SketchSection.buildKll(vals, k)
-        case SketchSection.HllSpec(p) =>
-          val vals = sketchHashes(cd).getOrElse(
-            throw new PinotFormatException(
-              s"sketchColumns entry $sc: single-value scalar required"))
-          SketchSection.buildHll(vals, p)
-        case SketchSection.FreqSpec(c) =>
-          val vals = sketchStrings(cd).getOrElse(
-            throw new PinotFormatException(
-              s"sketchColumns entry $sc: freq needs a single-value STRING column"))
-          SketchSection.buildFreq(vals, c)
-      }
-      addSection(sc, SketchSection.IndexType, bytes)
+      addSection(sc, SketchSection.IndexType,
+        graft.functions.Sketch.build(spec, cd, Iterator.range(0, totalDocs)))
       props ++= s"column.$sc.sketch=${spec.render}\n"
     }
 

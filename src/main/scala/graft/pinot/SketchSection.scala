@@ -1,9 +1,7 @@
 package graft.pinot
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.io.{ByteArrayInputStream, DataInputStream}
 import java.nio.ByteBuffer
-
-import org.roaringbitmap.longlong.Roaring64Bitmap
 
 /** Ingestion-time distinct sketch stored per segment (EXTENSION — the
   * capability of Pinot's ingestion-time THETA_SKETCH / BITMAP columns:
@@ -12,23 +10,28 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
   * re-scanning raw rows; the reference reads no secondary structures at
   * all, table.rs:162).
   *
-  * Three kinds, mirroring the repo's query-time aggregates so stored
-  * and query-time sketches COMPOSE:
+  * Five kinds, each a [[graft.functions.Sketch]] that the query-time
+  * aggregate ([[graft.functions.SketchAgg]]) builds and merges too, so
+  * stored and query-time sketches COMPOSE:
   *
   *  - `kmv<k>`: bottom-k of the column's xxhash64 values (seed 42 —
   *    exactly Spark's `xxhash64(col)`, so a stored sketch unions /
-  *    intersects with a query-time [[graft.functions.KmvSketchAgg]]
-  *    sketch built over the same logical values). Exact below k
-  *    distinct values; ~1/√(k−2) relative error saturated.
+  *    intersects with a query-time `kmv_sketch` built over the same
+  *    logical values). Exact below k distinct values; ~1/√(k−2)
+  *    relative error saturated.
   *  - `bitmap`: Roaring64 bitmap of the column's raw long values
   *    (int/long/timestamp-millis) — EXACT at any cardinality; STRING
   *    columns store xxhash64 hashes instead (exact modulo 64-bit hash
   *    collisions, the same trade Pinot's DISTINCT_COUNT_BITMAP makes on
   *    dictionary ids vs values).
-  *  - `kll<k>`: a [[graft.functions.KllSketchAgg]] quantile sketch over
+  *  - `kll<k>`: a [[graft.functions.KllSketch]] quantile sketch over
   *    the column's numeric values (Pinot's PERCENTILE_KLL as an
   *    ingestion-time aggregation) — percentile answers survive rollups
   *    and merge across segments; exact nearest-rank below k.
+  *  - `hll<p>`: a [[graft.functions.HllSketch]] over the column's
+  *    xxhash64 values (Pinot's DISTINCT_COUNT_HLL as an ingestion-time
+  *    aggregation) — exact while sparse (≤ 2^p/4 distinct), ~1.04/√2^p
+  *    standard error dense.
   *  - `freq<c>`: a Misra–Gries heavy-hitters summary of a STRING
   *    column's values with `c` counters (Pinot's
   *    FREQUENT_STRINGS_SKETCH as an ingestion-time aggregation) —
@@ -49,7 +52,7 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
   * bitmap; p for hll; c for freq), then a count int whose meaning is
   * per-kind — kmv: the number of hash longs that follow; bitmap / kll /
   * hll: the byte length of the serialized body that follows (Roaring64
-  * portable bytes, a [[graft.functions.KllSketchAgg.Buf]], or a
+  * portable bytes, a [[graft.functions.KllSketch]], or a
   * [[graft.functions.HllSketch]] body respectively); freq: the number
   * of (int len, UTF-8 item bytes, long count) entries that follow,
   * item-sorted so equal summaries serialize to equal bytes.
@@ -101,7 +104,9 @@ object SketchSection {
       s"sketch hash: unsupported value class ${other.getClass}")
   }
 
-  /** Parse a spec string: `kmv<k>`, `kll<k>`, `hll<p>`, or `bitmap`. */
+  /** Parse a spec string: `kmv<k>`, `kll<k>`, `hll<p>`, `freq<c>`, or
+    * `bitmap`.
+    */
   def parseSpec(s: String): Spec = s.trim match {
     case "bitmap" => BitmapSpec
     case kll if kll.startsWith("kll") =>
@@ -126,176 +131,67 @@ object SketchSection {
           "freq<c>, or bitmap)")
   }
 
-  /** Deserialized section: exactly one of the payloads is set. */
-  final case class Sketch(spec: Spec, kmvHashes: Array[Long],
-      bitmap: Roaring64Bitmap,
-      kll: graft.functions.KllSketchAgg.Buf = null,
-      hll: graft.functions.HllSketch = null,
-      freq: Array[(String, Long)] = null)
-
-  /** Bottom-k of DISTINCT pre-hashed values, sorted signed-ascending —
-    * the same summary [[graft.functions.KmvSketchAgg]] emits.
+  /** Frame a payload: the header for `spec`, the per-kind `count`, then
+    * `bodyLen` bytes that `body` writes.
     */
-  def buildKmv(hashes: Iterator[Long], k: Int): Array[Byte] = {
-    val buf = new java.util.TreeSet[java.lang.Long]()
-    while (hashes.hasNext) {
-      val h = hashes.next()
-      if (buf.size < k) { buf.add(h); () }
-      else if (h < buf.last()) { if (buf.add(h)) buf.pollLast(); () }
+  def frame(spec: Spec, count: Int, bodyLen: Int)(
+      body: ByteBuffer => Unit): Array[Byte] = {
+    val (kind, param) = spec match {
+      case KmvSpec(k) => (KindKmv, k)
+      case BitmapSpec => (KindBitmap, 0)
+      case KllSpec(k) => (KindKll, k)
+      case HllSpec(p) => (KindHll, p)
+      case FreqSpec(c) => (KindFreq, c)
     }
-    serializeKmv(buf, k)
-  }
-
-  /** Frame an already-built bottom-k hash set as a kmv<k> payload. */
-  def serializeKmv(buf: java.util.TreeSet[java.lang.Long], k: Int): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 + 1 + 1 + 4 + 4 + 8 * buf.size)
-    bb.putLong(Magic).put(Version).put(KindKmv).putInt(k).putInt(buf.size)
-    val it = buf.iterator()
-    while (it.hasNext) bb.putLong(it.next())
+    val bb = ByteBuffer.allocate(8 + 1 + 1 + 4 + 4 + bodyLen)
+    bb.putLong(Magic).put(Version).put(kind).putInt(param).putInt(count)
+    body(bb)
     bb.array()
   }
 
-  /** Exact Roaring64 bitmap of the column's long values. */
-  def buildBitmap(values: Iterator[Long]): Array[Byte] = {
-    val bm = new Roaring64Bitmap()
-    while (values.hasNext) bm.addLong(values.next())
-    serializeBitmap(bm)
-  }
+  /** Frame a serialized body whose byte length is the count. */
+  def frame(spec: Spec, body: Array[Byte]): Array[Byte] =
+    frame(spec, body.length, body.length)(_.put(body))
 
-  /** Frame an already-built Roaring64 bitmap as a bitmap payload. */
-  def serializeBitmap(bm: Roaring64Bitmap): Array[Byte] = {
-    bm.runOptimize()
-    val bos = new ByteArrayOutputStream()
-    val dos = new DataOutputStream(bos)
-    bm.serialize(dos)
-    dos.flush()
-    val body = bos.toByteArray
-    val bb = ByteBuffer.allocate(8 + 1 + 1 + 4 + 4 + body.length)
-    bb.putLong(Magic).put(Version).put(KindBitmap).putInt(0)
-      .putInt(body.length).put(body)
-    bb.array()
-  }
-
-  /** KLL quantile sketch over the column's numeric values (see
-    * [[graft.functions.KllSketchAgg]]) — percentile answers survive a
-    * rollup / merge across segments; exact nearest-rank below k.
-    */
-  def buildKll(values: Iterator[Double], k: Int): Array[Byte] = {
-    val buf = new graft.functions.KllSketchAgg.Buf(k)
-    while (values.hasNext) buf.insert(values.next())
-    serializeKll(buf)
-  }
-
-  /** Frame an already-built KLL compactor stack as a kll<k> payload. */
-  def serializeKll(buf: graft.functions.KllSketchAgg.Buf): Array[Byte] = {
-    val body = buf.serialize()
-    val bb = ByteBuffer.allocate(8 + 1 + 1 + 4 + 4 + body.length)
-    bb.putLong(Magic).put(Version).put(KindKll).putInt(buf.k)
-      .putInt(body.length).put(body)
-    bb.array()
-  }
-
-  /** HLL distinct sketch over the column's pre-hashed values (see
-    * [[graft.functions.HllSketch]] — exact while sparse, ≤ 2^p/4
-    * distinct; ~1.04/√2^p standard error dense).
-    */
-  def buildHll(hashes: Iterator[Long], p: Int): Array[Byte] = {
-    val h = new graft.functions.HllSketch(p)
-    while (hashes.hasNext) h.addHash(hashes.next())
-    serializeHll(h)
-  }
-
-  /** Frame an already-built HLL sketch as an hll<p> payload. */
-  def serializeHll(h: graft.functions.HllSketch): Array[Byte] = {
-    val body = h.serializeBody()
-    val bb = ByteBuffer.allocate(8 + 1 + 1 + 4 + 4 + body.length)
-    bb.putLong(Magic).put(Version).put(KindHll).putInt(h.p)
-      .putInt(body.length).put(body)
-    bb.array()
-  }
-
-  /** Misra–Gries heavy-hitters summary of a string column's values —
-    * the SAME update step [[graft.functions.FreqItemsAgg]] runs query-
-    * time, so stored and query-time summaries merge under one error
-    * bound. Exact counts while distinct values ≤ capacity.
-    */
-  def buildFreq(values: Iterator[String], capacity: Int): Array[Byte] = {
-    val buf = scala.collection.mutable.HashMap.empty[String, Long]
-    while (values.hasNext)
-      graft.functions.FreqItemsAgg.mgAdd(buf, values.next(), capacity)
-    serializeFreq(buf, capacity)
-  }
-
-  /** Frame an already-built MG counter map as a freq<c> payload —
-    * entries item-sorted, so equal summaries serialize to equal bytes
-    * (in the exact regime the summary itself is insertion-order-free).
-    */
-  def serializeFreq(buf: scala.collection.mutable.HashMap[String, Long],
-      capacity: Int): Array[Byte] = {
-    val entries = buf.toArray.sortBy(_._1)
-    val payload = entries.map { case (k, _) =>
-      k.getBytes(java.nio.charset.StandardCharsets.UTF_8) }
-    val bb = ByteBuffer.allocate(
-      8 + 1 + 1 + 4 + 4 + payload.map(_.length + 12).sum)
-    bb.putLong(Magic).put(Version).put(KindFreq).putInt(capacity)
-      .putInt(entries.length)
-    entries.zip(payload).foreach { case ((_, c), kb) =>
-      bb.putInt(kb.length); bb.put(kb); bb.putLong(c)
-    }
-    bb.array()
-  }
-
-  def deserialize(bytes: Array[Byte]): Sketch = {
+  /** The typed sketch a framed payload holds. */
+  def deserialize(bytes: Array[Byte]): graft.functions.Sketch = {
     val bb = ByteBuffer.wrap(bytes)
     if (bb.getLong != Magic)
       throw new PinotFormatException("sketch section: bad magic")
     val v = bb.get()
     if (v != Version)
       throw new PinotFormatException(s"sketch section: unknown version $v")
-    bb.get() match {
+    val kind = bb.get()
+    val param = bb.getInt
+    val count = bb.getInt
+    def body: Array[Byte] = {
+      val b = new Array[Byte](count)
+      bb.get(b)
+      b
+    }
+    kind match {
       case KindKmv =>
-        val k = bb.getInt
-        val n = bb.getInt
-        val hs = new Array[Long](n)
+        val sk = new graft.functions.KmvSketch(param)
         var i = 0
-        while (i < n) { hs(i) = bb.getLong; i += 1 }
-        Sketch(KmvSpec(k), hs, null)
+        while (i < count) { sk.add(bb.getLong); i += 1 }
+        sk
       case KindBitmap =>
-        bb.getInt // k slot, unused
-        val len = bb.getInt
-        val body = new Array[Byte](len)
-        bb.get(body)
-        val bm = new Roaring64Bitmap()
-        bm.deserialize(new DataInputStream(new ByteArrayInputStream(body)))
-        Sketch(BitmapSpec, null, bm)
-      case KindKll =>
-        val k = bb.getInt
-        val len = bb.getInt
-        val body = new Array[Byte](len)
-        bb.get(body)
-        Sketch(KllSpec(k), null, null,
-          graft.functions.KllSketchAgg.Buf.deserialize(body))
-      case KindHll =>
-        val p = bb.getInt
-        val len = bb.getInt
-        val body = new Array[Byte](len)
-        bb.get(body)
-        Sketch(HllSpec(p), null, null, null,
-          graft.functions.HllSketch.deserializeBody(p, body))
+        val sk = new graft.functions.BitmapSketch
+        sk.bitmap.deserialize(new DataInputStream(new ByteArrayInputStream(body)))
+        sk
+      case KindKll => graft.functions.KllSketch.deserialize(body)
+      case KindHll => graft.functions.HllSketch.deserializeBody(param, body)
       case KindFreq =>
-        val c = bb.getInt
-        val n = bb.getInt
-        val entries = new Array[(String, Long)](n)
+        val sk = new graft.functions.FreqSketch(param)
         var i = 0
-        while (i < n) {
+        while (i < count) {
           val kb = new Array[Byte](bb.getInt)
           bb.get(kb)
-          entries(i) =
-            (new String(kb, java.nio.charset.StandardCharsets.UTF_8),
-              bb.getLong)
+          sk.counts.update(
+            new String(kb, java.nio.charset.StandardCharsets.UTF_8), bb.getLong)
           i += 1
         }
-        Sketch(FreqSpec(c), null, null, freq = entries)
+        sk
       case other =>
         throw new PinotFormatException(s"sketch section: unknown kind $other")
     }

@@ -680,8 +680,8 @@ object PinotRoundtrip {
     // truth over the original parquet hash-gates the whole composition.
     "q155_pinot_group_timeslice" -> ((s, d) => {
       val (coldDir, rawDir) = groupSliceTables(s, d)
-      graft.sources.pinot.PinotSketches.groupedTimeSlicedHllDistinct(
-        s, coldDir, rawDir, "event_type", "user_id", 16,
+      graft.sources.pinot.PinotSketches.groupedTimeSliced(
+        s, coldDir, rawDir, "event_type", "user_id", "hll16",
         "bucket_start", 100L, "cnt", "ts_ms", 201L, 850L,
         as = "distinct_users", rowsAs = "slice_rows")
         .orderBy("event_type")
@@ -697,8 +697,8 @@ object PinotRoundtrip {
     // and unlike hll, no sparse-regime caveat is needed.
     "q173_pinot_group_bitmap_timeslice" -> ((s, d) => {
       val (coldDir, rawDir) = groupSliceTables(s, d)
-      graft.sources.pinot.PinotSketches.groupedTimeSlicedBitmapDistinct(
-        s, coldDir, rawDir, "event_type", "uid_bm",
+      graft.sources.pinot.PinotSketches.groupedTimeSliced(
+        s, coldDir, rawDir, "event_type", "uid_bm", "bitmap",
         "bucket_start", 100L, "cnt", "ts_ms", 201L, 850L,
         as = "distinct_users", rowsAs = "slice_rows")
         .orderBy("event_type")
@@ -712,8 +712,8 @@ object PinotRoundtrip {
     // original parquet hash-gates the whole composition.
     "q174_pinot_group_kmv_timeslice" -> ((s, d) => {
       val (coldDir, rawDir) = groupSliceTables(s, d)
-      graft.sources.pinot.PinotSketches.groupedTimeSlicedKmvDistinct(
-        s, coldDir, rawDir, "event_type", "props_kmv", 1024,
+      graft.sources.pinot.PinotSketches.groupedTimeSliced(
+        s, coldDir, rawDir, "event_type", "props_kmv", "kmv1024",
         "bucket_start", 100L, "cnt", "ts_ms", 201L, 850L,
         as = "distinct_props", rowsAs = "slice_rows")
         .orderBy("event_type")
@@ -726,9 +726,9 @@ object PinotRoundtrip {
     // the DuckDB truth over the original parquet hash-gates the split.
     "q157_pinot_group_kll_timeslice" -> ((s, d) => {
       val (coldDir, rawDir) = groupSliceTables(s, d)
-      graft.sources.pinot.PinotSketches.groupedTimeSlicedKllQuantiles(
-        s, coldDir, rawDir, "event_type", "cents", 32768, Seq(0.5, 0.9),
-        "bucket_start", 100L, "cnt", "ts_ms", 201L, 850L,
+      graft.sources.pinot.PinotSketches.groupedTimeSliced(
+        s, coldDir, rawDir, "event_type", "cents", "kll32768",
+        "bucket_start", 100L, "cnt", "ts_ms", 201L, 850L, Seq(0.5, 0.9),
         as = "qarr", rowsAs = "slice_rows")
         .select(col("event_type"),
           element_at(col("qarr"), 1).cast("long").as("p50_cents"),
@@ -749,8 +749,8 @@ object PinotRoundtrip {
     // rollup/boundary/merge composition.
     "q167_pinot_group_freq_timeslice" -> ((s, d) => {
       val (coldDir, rawDir) = groupSliceTables(s, d)
-      graft.sources.pinot.PinotSketches.groupedTimeSlicedFreqItems(
-        s, coldDir, rawDir, "event_type", "props", 256,
+      graft.sources.pinot.PinotSketches.groupedTimeSliced(
+        s, coldDir, rawDir, "event_type", "props", "freq256",
         "bucket_start", 100L, "cnt", "ts_ms", 201L, 850L,
         as = "sk", rowsAs = "slice_rows")
         .select(col("event_type"), explode(col("sk")).as("e"),
@@ -768,8 +768,8 @@ object PinotRoundtrip {
     // so the DuckDB truth over the original parquet hash-gates it.
     "q158_pinot_freq_stored" -> ((s, d) => {
       val dir = freqSliceTable(s, d)
-      graft.sources.pinot.PinotSketches.freqItems(s, dir, "props", 256,
-        as = "sk")
+      graft.sources.pinot.PinotSketches.wholeTable(s, dir, "props",
+        "freq256", as = "sk")
         .select(explode(col("sk")).as("e"))
         .select(col("e.item").as("item"), col("e.cnt").as("cnt"))
         .orderBy(desc("cnt"), asc("item"))
@@ -786,8 +786,8 @@ object PinotRoundtrip {
       // [300, 800]: non-empty at EVERY SF (sf0.001's events table has
       // only 1000 rows, where [3000, 8000] would slice nothing and the
       // exploded top-items list would be empty)
-      graft.sources.pinot.PinotSketches.timeSlicedFreqItems(
-        s, dir, "props", "ts_ms", 300L, 800L, 256,
+      graft.sources.pinot.PinotSketches.timeSliced(
+        s, dir, "props", "freq256", "ts_ms", 300L, 800L,
         as = "sk", rowsAs = "slice_rows")
         .select(explode(col("sk")).as("e"), col("slice_rows"))
         .select(col("e.item").as("item"), col("e.cnt").as("cnt"),
@@ -822,7 +822,7 @@ object PinotRoundtrip {
     // keyed on the micro-batch id.
     "q166_pinot_upsert_stream" -> ((s, d) => {
       val dir = upsertTable(s, d)
-      val work = Files.createTempDirectory("q166_upsert_stream")
+      val work = graft.QueryWorkDirs.create("q166_upsert_stream")
       val updatesOut = work.resolve("updates").toString
       val q = graft.sources.pinot.PinotUpsert.latestStream(s, dir)
         .writeStream
@@ -949,10 +949,10 @@ object PinotRoundtrip {
     "q160_pinot_stream_lambda" -> ((s, d) => {
       val coldDir = lambdaTable(s, d)
       val deltaDir = lambdaDeltaTable(s, d)
-      val work = Files.createTempDirectory("q160_lambda")
+      val work = graft.QueryWorkDirs.create("q160_lambda")
       val payloadOut = work.resolve("delta_payload").toString
       val q = s.readStream.format("pinot").load(deltaDir)
-        .agg(graft.functions.SketchBuildAgg.sketchBuild(
+        .agg(graft.functions.SketchAgg.build(
           when(col("event_id").isNotNull, xxhash64(col("event_id"))),
           "hll18").as("sketch"))
         .writeStream
@@ -968,8 +968,8 @@ object PinotRoundtrip {
       graft.sources.pinot.PinotSketches
         .segmentSketches(s, coldDir, "event_id").select(col("sketch"))
         .union(s.read.parquet(payloadOut).select(col("sketch")))
-        .agg(graft.functions.HllMergeAgg
-          .hllMergeEstimate(col("sketch"), 18).as("distinct_events"))
+        .agg(graft.functions.SketchAgg.merge(col("sketch"), "hll18")
+          .as("distinct_events"))
     }),
 
     // The stored-sketch read path exposed to a SQL-ONLY user: the
@@ -1016,8 +1016,7 @@ object PinotRoundtrip {
     // 20k event_ids < 2^18/4 sparse limit), so the DuckDB truth over
     // cold ∪ delta hash-checks the whole composition.
     "q150_pinot_lambda_sketch" -> ((s, d) => {
-      import graft.functions.{BitmapMergeAgg, HllMergeAgg, KllMergeAgg,
-        KmvMergeAgg, SketchBuildAgg}
+      import graft.functions.SketchAgg
       val dir = lambdaTable(s, d)
       val delta = Tables.load(s, d, "events")
         .orderBy("event_id").limit(20000)
@@ -1025,26 +1024,26 @@ object PinotRoundtrip {
       def cold(column: String) = graft.sources.pinot.PinotSketches
         .segmentSketches(s, dir, column).select(col("sketch"))
       val users = cold("user_id")
-        .union(delta.agg(SketchBuildAgg
-          .sketchBuild(col("user_id"), "bitmap").as("sketch")))
-        .agg(BitmapMergeAgg.bitmapMergeDistinct(col("sketch"))
+        .union(delta.agg(SketchAgg
+          .build(col("user_id"), "bitmap").as("sketch")))
+        .agg(SketchAgg.merge(col("sketch"), "bitmap")
           .as("distinct_users"))
       val props = cold("props")
-        .union(delta.agg(SketchBuildAgg
-          .sketchBuild(when(col("props").isNotNull,
+        .union(delta.agg(SketchAgg
+          .build(when(col("props").isNotNull,
             xxhash64(col("props"))), "kmv1024").as("sketch")))
-        .agg(KmvMergeAgg.kmvMergeEstimate(col("sketch"), 1024)
+        .agg(SketchAgg.merge(col("sketch"), "kmv1024")
           .as("distinct_props"))
       val eventIds = cold("event_id")
-        .union(delta.agg(SketchBuildAgg
-          .sketchBuild(when(col("event_id").isNotNull,
+        .union(delta.agg(SketchAgg
+          .build(when(col("event_id").isNotNull,
             xxhash64(col("event_id"))), "hll18").as("sketch")))
-        .agg(HllMergeAgg.hllMergeEstimate(col("sketch"), 18)
+        .agg(SketchAgg.merge(col("sketch"), "hll18")
           .as("distinct_events"))
       val vals = cold("value")
-        .union(delta.agg(SketchBuildAgg
-          .sketchBuild(col("value"), "kll32768").as("sketch")))
-        .agg(KllMergeAgg.kllMergeQuantiles(col("sketch"), 32768,
+        .union(delta.agg(SketchAgg
+          .build(col("value"), "kll32768").as("sketch")))
+        .agg(SketchAgg.merge(col("sketch"), "kll32768",
           Seq(0.5, 0.9)).as("qv"))
         .select(element_at(col("qv"), 1).as("p50_value"),
           element_at(col("qv"), 2).as("p90_value"))
@@ -1061,8 +1060,8 @@ object PinotRoundtrip {
     // the true distinct + row count over the slice from parquet.
     "q153_pinot_sketch_timeslice" -> ((s, d) => {
       val dir = timeSliceTable(s, d)
-      graft.sources.pinot.PinotSketches.timeSlicedBitmapDistinct(
-        s, dir, "user_id", "ts_ms", 3000L, 8000L,
+      graft.sources.pinot.PinotSketches.timeSliced(
+        s, dir, "user_id", "bitmap", "ts_ms", 3000L, 8000L,
         as = "distinct_users", rowsAs = "slice_rows")
     }),
 
@@ -1073,8 +1072,8 @@ object PinotRoundtrip {
     // DuckDB truth over the sliced rows hash-gates the whole split.
     "q154_pinot_kll_timeslice" -> ((s, d) => {
       val dir = timeSliceTable(s, d)
-      graft.sources.pinot.PinotSketches.timeSlicedKllQuantiles(
-        s, dir, "value", "ts_ms", 3000L, 8000L, 32768,
+      graft.sources.pinot.PinotSketches.timeSliced(
+        s, dir, "value", "kll32768", "ts_ms", 3000L, 8000L,
         Seq(0.5, 0.9, 0.99), as = "qv")
         .select(
           element_at(col("qv"), 1).as("p50_value"),
@@ -1092,7 +1091,7 @@ object PinotRoundtrip {
       s.read.format("pinot").load(dir)
         .groupBy("event_type")
         .agg(
-          graft.functions.HllMergeAgg.hllMergeEstimate(col("user_id"), 16)
+          graft.functions.SketchAgg.merge(col("user_id"), "hll16")
             .as("distinct_users"),
           sum("cnt").as("events"))
         .orderBy("event_type")
@@ -1108,8 +1107,8 @@ object PinotRoundtrip {
       s.read.format("pinot").load(dir)
         .groupBy("event_type")
         .agg(
-          graft.functions.KllMergeAgg.kllMergeQuantiles(
-            col("cents"), 32768, Seq(0.5, 0.9, 0.99)).as("qarr"),
+          graft.functions.SketchAgg.merge(
+            col("cents"), "kll32768", Seq(0.5, 0.9, 0.99)).as("qarr"),
           sum("cnt").as("n_events"))
         .select(col("event_type"),
           element_at(col("qarr"), 1).cast("long").as("p50_cents"),
@@ -1131,9 +1130,9 @@ object PinotRoundtrip {
       s.read.format("pinot").load(dir)
         .groupBy("event_type")
         .agg(
-          graft.functions.BitmapMergeAgg.bitmapMergeDistinct(col("user_id"))
+          graft.functions.SketchAgg.merge(col("user_id"), "bitmap")
             .as("distinct_users"),
-          graft.functions.KmvMergeAgg.kmvMergeEstimate(col("props"), 1024)
+          graft.functions.SketchAgg.merge(col("props"), "kmv1024")
             .as("distinct_props"),
           sum("cnt").as("events"))
         .orderBy("event_type")
@@ -1150,13 +1149,13 @@ object PinotRoundtrip {
     "q145_pinot_sketch_distinct" -> ((s, d) => {
       val dir = sketchTable(s, d)
       graft.sources.pinot.PinotSketches
-        .bitmapDistinct(s, dir, "user_id", "distinct_users")
+        .wholeTable(s, dir, "user_id", "bitmap", as = "distinct_users")
         .crossJoin(graft.sources.pinot.PinotSketches
-          .kmvDistinct(s, dir, "props", 1024, "distinct_props"))
+          .wholeTable(s, dir, "props", "kmv1024", as = "distinct_props"))
         // stored KLL sections (k=32768 > the 20k fixture rows: exact
         // nearest-rank) merged across the 3 segments
         .crossJoin(graft.sources.pinot.PinotSketches
-          .kllQuantiles(s, dir, "value", 32768, Seq(0.5, 0.9), "qv")
+          .wholeTable(s, dir, "value", "kll32768", Seq(0.5, 0.9), "qv")
           .select(element_at(col("qv"), 1).as("p50_value"),
             element_at(col("qv"), 2).as("p90_value")))
     }),

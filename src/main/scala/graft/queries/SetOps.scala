@@ -130,7 +130,7 @@ object SetOps {
     // the raw rows, and the plan is a single distinct pass — mixing
     // countDistinct with the sketch in one aggregate would force an
     // Expand-based multi-distinct plan (measured 8× slower at sf0.1).
-    // The sketch is the repo's own [[graft.functions.HllDistinctAgg]] at
+    // The sketch is the repo's own [[graft.functions.HllSketch]] at
     // p=14 — the SAME 2^14 = 16,384 registers Spark's
     // approx_count_distinct(rsd=0.01) picks (m = next power of two with
     // 1.04/√m ≤ rsd), i.e. the same HLL register-count/accuracy class —
@@ -147,8 +147,8 @@ object SetOps {
         .groupBy("l_returnflag")
         .agg(
           count(lit(1)).as("exact_parts"),
-          graft.functions.HllDistinctAgg.hllDistinct(
-            xxhash64(col("l_partkey")), 14).as("approx"))
+          graft.functions.SketchAgg.result(
+            xxhash64(col("l_partkey")), "hll14").as("approx"))
         .select(col("l_returnflag"), col("exact_parts"),
           (abs(col("approx") - col("exact_parts")) * 20 <= col("exact_parts"))
             .as("approx_within_5pct"))

@@ -333,16 +333,6 @@ object SketchDedup {
     } finally walk.close()
   }
 
-  /** The per-JVM root of every [[streamNearDup]] call's work dir,
-    * deleted when the JVM exits: a returned frame reads its call's flag
-    * dir lazily, so no call can delete its own work dir.
-    */
-  private lazy val workRoot: java.nio.file.Path = {
-    val root = Files.createTempDirectory("graft_neardup_work")
-    sys.addShutdownHook(graft.pinot.PinotCompact.deleteRecursively(root))
-    root
-  }
-
   /** STREAMING near-dup against a stored corpus — the production
     * LLM-pipeline shape batch q49 does not cover: "flag each INCOMING
     * crawl doc that near-duplicates the EXISTING corpus". The corpus's
@@ -378,7 +368,7 @@ object SketchDedup {
     // fixtures, so repeated runs measure the stream dedup itself, not a
     // corpus rebuild; checkpoint + flag output stay fresh per run.
     val (seedBuckets, inDir, wavesDir) = fixture(s, d, docs, incoming)
-    val work = Files.createTempDirectory(workRoot,
+    val work = graft.QueryWorkDirs.create(
       if (grow) "q175_neardup" else "q172_neardup")
     val bucketRoot =
       if (!grow) seedBuckets

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.{BitmapDistinctAgg, FreqItemsAgg, HllDistinctAgg, KmvSketchAgg}
+import graft.functions.{KmvSketch, SketchAgg}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,7 +36,7 @@ object Sketches {
     // leaves each partition regardless of key cardinality.
     "q135_frequent_strings" -> ((s, d) =>
       ev(s, d)
-        .agg(FreqItemsAgg.freqItems(col("props"), freqCapacity).as("sk"))
+        .agg(SketchAgg.result(col("props"), s"freq$freqCapacity").as("sk"))
         .select(explode(col("sk")).as("e"))
         .select(col("e.item").as("item"), col("e.cnt").as("cnt"))
         .orderBy(desc("cnt"), asc("item"))
@@ -66,15 +66,15 @@ object Sketches {
     "q136_theta_distinct" -> ((s, d) => {
       val sk = ev(s, d)
         .groupBy("event_type")
-        .agg(KmvSketchAgg.kmvSketch(
+        .agg(SketchAgg.kmvSketch(
           xxhash64(col("user_id"), to_date(col("ts"))), kmvK).as("sk"))
       val v = sk.filter(col("event_type") === "view").select(col("sk").as("sk_v"))
       val p = sk.filter(col("event_type") === "purchase").select(col("sk").as("sk_p"))
       v.crossJoin(p).select(
-        KmvSketchAgg.distinctEstimate(col("sk_v"), kmvK).as("view_userdays"),
-        KmvSketchAgg.distinctEstimate(col("sk_p"), kmvK).as("purchase_userdays"),
-        KmvSketchAgg.unionEstimate(col("sk_v"), col("sk_p"), kmvK).as("either_userdays"),
-        KmvSketchAgg.intersectEstimate(col("sk_v"), col("sk_p"), kmvK).as("both_userdays"))
+        KmvSketch.distinctEstimate(col("sk_v"), kmvK).as("view_userdays"),
+        KmvSketch.distinctEstimate(col("sk_p"), kmvK).as("purchase_userdays"),
+        KmvSketch.unionEstimate(col("sk_v"), col("sk_p"), kmvK).as("either_userdays"),
+        KmvSketch.intersectEstimate(col("sk_v"), col("sk_p"), kmvK).as("both_userdays"))
     }),
 
     // Exact distinct via Roaring64 bitmaps (Pinot DISTINCT_COUNT_BITMAP):
@@ -84,10 +84,10 @@ object Sketches {
       ev(s, d)
         .groupBy("event_type")
         .agg(
-          BitmapDistinctAgg.bitmapDistinct(col("user_id")).as("users"),
-          BitmapDistinctAgg.bitmapDistinct(
+          SketchAgg.result(col("user_id"), "bitmap").as("users"),
+          SketchAgg.result(
             col("user_id") * lit(100000L) + datediff(
-              to_date(col("ts")), lit("1970-01-01").cast("date")))
+              to_date(col("ts")), lit("1970-01-01").cast("date")), "bitmap")
             .as("user_days"),
           count(lit(1)).as("n_events"))
         .orderBy("event_type")),
@@ -108,11 +108,11 @@ object Sketches {
       ev(s, d)
         .groupBy("event_type")
         .agg(
-          HllDistinctAgg.hllDistinct(
-            when(col("user_id").isNotNull, xxhash64(col("user_id"))), 16)
+          SketchAgg.result(
+            when(col("user_id").isNotNull, xxhash64(col("user_id"))), "hll16")
             .as("users"),
-          HllDistinctAgg.hllDistinct(
-            when(col("props").isNotNull, xxhash64(col("props"))), 12)
+          SketchAgg.result(
+            when(col("props").isNotNull, xxhash64(col("props"))), "hll12")
             .as("props_vals"),
           count(lit(1)).as("n_events"))
         .orderBy("event_type")),
@@ -131,8 +131,8 @@ object Sketches {
         .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
       perUser
         .groupBy("event_type")
-        .agg(graft.functions.KllSketchAgg.kllQuantiles(
-          col("cents").cast("double"), 1 << 17,
+        .agg(SketchAgg.result(
+          col("cents").cast("double"), s"kll${1 << 17}",
           Seq(0.1, 0.5, 0.9, 0.99)).as("qarr"),
           count(lit(1)).as("n_users"))
         .select(col("event_type"),

@@ -360,13 +360,18 @@ object PinotSegmentTable {
   // (examples/benchmark.rs:43-45) — this is the DSv2 counterpart, and at
   // 100 TB it keeps per-query planning from re-walking tens of thousands
   // of segment dirs. Invalidation key = dir mtime PLUS a fingerprint of
-  // the visible segment-dir names AND each segment's metadata.properties
-  // (size, mtime): table-dir mtime alone has millisecond granularity and
-  // only tracks direct children, so a same-millisecond IN-PLACE segment
-  // overwrite (same dir name, new content) was previously invisible. Two
-  // stats per segment per open — still orders cheaper than re-walking
-  // discovery + schema inference. LRU-bounded so long-lived sessions
-  // over many ephemeral table dirs don't grow it without bound.
+  // (path, size, mtime) of EVERY file in the one recursive listing:
+  // table-dir mtime alone only tracks direct children, so a same-
+  // millisecond IN-PLACE segment overwrite (same dir name, new content)
+  // was invisible, and file mtimes come from a coarse clock, so two
+  // rewrites a few ms apart share a stamp — a rewrite then shows in the
+  // size of some file (forward index, dictionary, index map) even when
+  // metadata.properties keeps its size. Reading file bytes for recently
+  // modified entries would close the last gap (every file's size kept
+  // within one clock tick) but costs a metadata GET per open of a fresh
+  // table, which the cold-open IO budget does not allow. LRU-bounded so
+  // long-lived sessions over many ephemeral table dirs don't grow it
+  // without bound.
   private val cache = new LruCache[String, ((Long, Int), PinotSegmentTable)](256)
 
   def open(path: String, partitionCols: Seq[String] = Seq.empty): PinotSegmentTable = {
@@ -394,12 +399,10 @@ object PinotSegmentTable {
         def inTmp(p: String): Boolean =
           p.startsWith(prefix) &&
             p.substring(prefix.length).takeWhile(_ != '/').startsWith("tmp")
+        // upsert.properties participates too: reconfiguring the upsert
+        // view must invalidate the cached table (its upsertConfig is
+        // resolved once per open)
         entries
-          // upsert.properties participates: reconfiguring the upsert
-          // view must invalidate the cached table (its upsertConfig is
-          // resolved once per open)
-          .filter(e => io.fileName(e.path) == "metadata.properties" ||
-            io.fileName(e.path) == "upsert.properties")
           .sortBy(_.path)
           .foreach { e =>
             if (!inTmp(e.path)) {

@@ -1,24 +1,36 @@
 package graft.sources.pinot
 
-import graft.functions.{BitmapMergeAgg, KmvSketchAgg}
+import graft.functions.{Sketch, SketchAgg}
 import graft.pinot.{PinotFormatException, SegmentIO, SegmentMetadata, SegmentReader, SketchSection}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, TimestampType}
+import org.apache.spark.sql.types.LongType
 
-/** Query-time merge of SEGMENT-STORED distinct sketches (written via
-  * `.option("sketchColumns", ...)` — see [[graft.pinot.SketchSection]]):
-  * the analog of Pinot answering DISTINCT_COUNT_THETA_SKETCH /
-  * DISTINCT_COUNT_BITMAP from ingestion-time sketches by merging stored
-  * summaries, never re-scanning raw rows.
+/** Query-time merge of SEGMENT-STORED sketches (written via
+  * `.option("sketchColumns", ...)` or a rollup's `sketchMetrics` — see
+  * [[graft.pinot.SketchSection]]): the analog of Pinot answering
+  * DISTINCT_COUNT_THETA_SKETCH / DISTINCT_COUNT_BITMAP / DISTINCT_COUNT_HLL
+  * / PERCENTILE_KLL / FREQUENT_STRINGS from ingestion-time sketches by
+  * merging stored summaries, never re-scanning raw rows. One reader per
+  * shape — whole table, time slice, grouped two-tier time slice — each
+  * taking the sketch `spec` (`bitmap`, `kmv<k>`, `hll<p>`, `kll<k>` with
+  * fractions `qs`, `freq<c>`) and answering with that kind's merge
+  * aggregate ([[graft.functions.SketchAgg.merge]]): a distinct count,
+  * an `array<double>` of quantiles, or an `array<struct<item, cnt>>` of
+  * heavy hitters (cnt desc, item asc). Distinct kinds are exact while
+  * unsaturated (bitmap always; kmv below k; hll while sparse, ≤ 2^p/4),
+  * kll is exact nearest-rank below k, and freq counts are exact while
+  * the distinct cardinality stays ≤ c (the Agarwal et al.
+  * mergeable-summaries bound, estimate ∈ [true − n/(c+1), true], holds
+  * beyond it).
   *
   * Plan shape at 100 TB: ONE task per segment opens the segment's
   * metadata + index map and range-reads ONLY the few-KB sketch section
   * (the forward index — the petabyte part — is never touched;
   * SketchSectionSpec counts the IO to prove it), then a single partial
-  * aggregate merges: one bitmap / one ≤k hash array per partition
-  * crosses the wire. Against a year of segments this is KBs of IO per
-  * segment instead of a full-column scan.
+  * aggregate merges: one bounded summary per partition crosses the
+  * wire. Against a year of segments this is KBs of IO per segment
+  * instead of a full-column scan.
   */
 object PinotSketches {
 
@@ -129,178 +141,80 @@ object PinotSketches {
     (inside.result(), boundary.result(), insideDocs)
   }
 
-  /** The query-time [[graft.functions.SketchBuildAgg]] input for
-    * `column` of `df` under `spec`, matching the WRITER's trade
-    * (SegmentWriter sketchLongs/sketchHashes/sketchDoubles) so a delta
-    * payload composes exactly with stored sections:
-    *
-    *  - `bitmap`: integral columns keep the raw long; timestamps their
-    *    epoch millis; strings trade to xxhash64 (seed 42) like the
-    *    stored section does;
-    *  - `kmv<k>` / `hll<p>`: xxhash64 of the value — Spark's xxhash64
-    *    hashes each type exactly as the writer does (timestamps hash
-    *    their internal MICROsecond long), so no per-type casework;
-    *  - `kll<k>`: doubles; timestamps their epoch millis as double.
-    *
-    * Hashes are NULL-GATED (`xxhash64(NULL)` returns the seed, not NULL
-    * — it would count one phantom distinct); NULL inputs then skip
-    * through the aggregate's null path, matching count(DISTINCT)'s
-    * NULL-ignoring semantics.
+  /** `spec`'s merge result over every segment's stored payload of
+    * `column`, one row `as`. Fails loudly if a segment lacks the sketch.
     */
-  private def deltaInput(df: DataFrame, column: String,
-      spec: String): Column = {
-    val dt = df.schema(column).dataType
-    val c = col(column)
-    def hashed = when(c.isNotNull, xxhash64(c))
-    SketchSection.parseSpec(spec) match {
-      case SketchSection.KllSpec(_) => dt match {
-        case TimestampType => unix_millis(c).cast(DoubleType)
-        case _ => c.cast(DoubleType)
-      }
-      case SketchSection.BitmapSpec => dt match {
-        case StringType => hashed
-        case TimestampType => unix_millis(c)
-        case _ => c.cast(LongType)
-      }
-      case SketchSection.FreqSpec(_) => dt match {
-        // heavy hitters report the values themselves — strings only,
-        // mirroring the writer's sketchStrings trade
-        case StringType => c
-        case other => throw new PinotFormatException(
-          s"freq sketch over $column: string column required, " +
-            s"got ${other.simpleString}")
-      }
-      case _ => hashed // kmv / hll
-    }
-  }
+  def wholeTable(s: SparkSession, tableDir: String, column: String,
+      spec: String, qs: Seq[Double] = Nil, as: String = "result"): DataFrame =
+    segmentSketches(s, tableDir, column)
+      .agg(SketchAgg.merge(col("sketch"), spec, qs).as(as))
 
-  /** TIME-SLICED lambda merge (the production read path for "DISTINCT
-    * over the last N days" against a year of segments): exact distinct
-    * count of `column` over rows with `timeCol` ∈ [loMs, hiMs], where
+  /** TIME-SLICED lambda merge (the production read path for "DISTINCT /
+    * p99 / top pages over the last N days" against a year of segments):
+    * `spec`'s result over rows of `column` with `timeCol` ∈ [loMs, hiMs],
+    * where
     *
-    *  - segments fully INSIDE the slice answer from their stored BITMAP
-    *    sketch sections (KB-scale reads, zero forward-index IO — the
-    *    q145/q150 path) and contribute their metadata `totalDocs` to the
-    *    row count without any IO at all;
+    *  - segments fully INSIDE the slice answer from their stored sketch
+    *    sections (KB-scale reads, zero forward-index IO — the q145/q150
+    *    path) and contribute their metadata `totalDocs` to the row count
+    *    without any IO at all;
     *  - segments fully OUTSIDE prune from min/max metadata alone;
     *  - only BOUNDARY segments scan rows — ONCE, through the normal DSv2
     *    read with the time filter PUSHED (min/max + sorted pruning apply
     *    inside the segment), folded into a single aggregate producing
-    *    both the [[graft.functions.SketchBuildAgg]] payload and the
-    *    slice row count.
+    *    both the query-time `sketch_build` payload and the slice row
+    *    count.
     *
     * One merge aggregate folds stored and query-time payloads (the
-    * xxhash64-seed-42 contract); output: (`as`, `rowsAs`) — exact
-    * distinct + exact row count over the slice. At 100 TB with daily
-    * segments, a 30-day slice reads 30 sketch sections, scans at most
-    * 2 boundary segments, and never touches the other 335 days.
+    * xxhash64-seed-42 contract); output: (`as`, `rowsAs` — the exact row
+    * count over the slice). An all-pruned slice merges zero payloads:
+    * 0 distinct, NULL quantiles, no heavy hitters, 0 rows. At 100 TB
+    * with daily segments, a 30-day slice reads 30 sketch sections, scans
+    * at most 2 boundary segments, and never touches the other 335 days.
     */
-  def timeSlicedBitmapDistinct(s: SparkSession, tableDir: String,
-      column: String, timeCol: String, loMs: Long, hiMs: Long,
-      as: String = "distinct_count", rowsAs: String = "slice_rows"): DataFrame = {
-    val (payloads, insideDocs) = timeSlicedPayloads(
-      s, tableDir, column, "bitmap", timeCol, loMs, hiMs)
-    payloads match {
-      case None =>
-        // every segment pruned from metadata: the slice is empty — the
-        // EXACT answer is zero of each, no IO at all
-        s.range(1).select(lit(0L).as(as), lit(0L).as(rowsAs))
-      case Some(p) =>
-        p.agg(
-          BitmapMergeAgg.bitmapMergeDistinct(col("sketch")).as(as),
-          (sum(col("cnt")) + lit(insideDocs)).as(rowsAs))
-    }
-  }
-
-  /** Time-sliced DISTINCT_COUNT_HLL: like [[timeSlicedBitmapDistinct]]
-    * but merging stored `hll<p>` sections with the boundary query-time
-    * payload — the memory-bounded variant for columns whose bitmap
-    * sections would be large (exact while everything stays sparse,
-    * ≤ 2^p/4 distinct; ~1.04/√2^p error dense). Same classification,
-    * same single-scan boundary, same (`as`, `rowsAs`) output.
-    */
-  def timeSlicedHllDistinct(s: SparkSession, tableDir: String,
-      column: String, timeCol: String, loMs: Long, hiMs: Long, p: Int,
-      as: String = "distinct_count", rowsAs: String = "slice_rows"): DataFrame = {
-    val (payloads, insideDocs) = timeSlicedPayloads(
-      s, tableDir, column, s"hll$p", timeCol, loMs, hiMs)
-    payloads match {
-      case None =>
-        s.range(1).select(lit(0L).as(as), lit(0L).as(rowsAs))
-      case Some(pp) =>
-        pp.agg(
-          graft.functions.HllMergeAgg
-            .hllMergeEstimate(col("sketch"), p).as(as),
-          (sum(col("cnt")) + lit(insideDocs)).as(rowsAs))
-    }
-  }
-
-  /** Time-sliced PERCENTILE_KLL ("p99 over the last N days"): quantiles
-    * of `column` over rows with `timeCol` ∈ [loMs, hiMs], through the
-    * same inside-sections / metadata-prune / boundary-scan split as
-    * [[timeSlicedBitmapDistinct]]. Exact nearest-rank while the merged
-    * sketch (inside sections + the boundary query-time sketch) stays
-    * below k. NULL quantile elements when the slice is empty.
-    */
-  def timeSlicedKllQuantiles(s: SparkSession, tableDir: String,
-      column: String, timeCol: String, loMs: Long, hiMs: Long,
-      k: Int, qs: Seq[Double], as: String = "quantiles"): DataFrame = {
-    val (payloads, _) = timeSlicedPayloads(
-      s, tableDir, column, s"kll$k", timeCol, loMs, hiMs)
-    payloads
-      // an all-pruned slice still answers (NULL elements) through the
-      // same aggregate over zero payload rows
-      .map(_.select(col("sketch")))
-      .getOrElse(s.range(0).select(lit(Array.empty[Byte]).as("sketch")))
-      .agg(graft.functions.KllMergeAgg
-        .kllMergeQuantiles(col("sketch"), k, qs).as(as))
-  }
-
-  /** The time-sliced payload stream shared by the public readers —
-    * rows of (sketch BINARY, cnt BIGINT): stored sections of
-    * fully-inside segments (cnt 0; their docs are counted from metadata,
-    * returned separately) ∪ ONE aggregate row over the boundary
-    * segments' sliced rows carrying both the query-time
-    * [[graft.functions.SketchBuildAgg]] payload and the boundary row
-    * count — each boundary segment is read exactly once. Returns
-    * (payloads — None when the slice matches nothing, inside-docs count).
-    */
-  private def timeSlicedPayloads(s: SparkSession, tableDir: String,
-      column: String, spec: String, timeCol: String, loMs: Long,
-      hiMs: Long): (Option[DataFrame], Long) = {
+  def timeSliced(s: SparkSession, tableDir: String, column: String,
+      spec: String, timeCol: String, loMs: Long, hiMs: Long,
+      qs: Seq[Double] = Nil, as: String = "result",
+      rowsAs: String = "slice_rows"): DataFrame = {
     require(loMs <= hiMs, s"time slice: lo $loMs > hi $hiMs")
     val (inside, boundary, insideDocs) = classifyByTime(
       tableDir, timeCol, loMs, hiMs)
-    val storedPayloads =
-      if (inside.isEmpty) None
-      else Some(sketchesOf(s, inside, column)
-        .select(col("sketch"), lit(0L).as("cnt")))
-    val deltaPayload = boundary
+    // stored rows carry cnt 0 (their docs are counted from metadata);
+    // an all-pruned slice keeps the empty stored input, so the merge
+    // answers over zero payloads
+    val stored = Option.when(inside.nonEmpty || boundary.isEmpty)(
+      sketchesOf(s, inside, column).select(col("sketch"), lit(0L).as("cnt")))
+    val delta = boundary
       .map(d => s.read.format("pinot").load(d)
         .filter(col(timeCol) >= loMs && col(timeCol) <= hiMs))
       .reduceOption(_ union _)
-      .map { rows =>
-        rows.agg(
-          graft.functions.SketchBuildAgg
-            .sketchBuild(deltaInput(rows, column, spec), spec).as("sketch"),
-          count(lit(1)).as("cnt"))
-      }
-    val payloads = (storedPayloads, deltaPayload) match {
-      case (Some(a), Some(b)) => Some(a.union(b))
-      case (a, b) => a.orElse(b)
-    }
-    (payloads, insideDocs)
+      .map(rows => rows.agg(build(rows, column, spec).as("sketch"),
+        count(lit(1)).as("cnt")))
+    (stored ++ delta).reduce(_ union _).agg(
+      SketchAgg.merge(col("sketch"), spec, qs).as(as),
+      (coalesce(sum(col("cnt")), lit(0L)) + lit(insideDocs)).as(rowsAs))
   }
 
-  /** GROUPED time-sliced distinct ("distinct users over the last N days
-    * PER event_type") composing a ROLLED-UP cold table with a RAW hot
-    * table — the two-tier layout MergeRollupTask produces in production
-    * (raw segments roll up per time bucket as they age, then retire):
+  /** The query-time `sketch_build` of `column` of `df` under `spec`, fed
+    * the writer's value rule ([[graft.functions.Sketch.input]]) so the
+    * payload composes exactly with stored sections.
+    */
+  private def build(df: DataFrame, column: String, spec: String) = {
+    val parsed = SketchSection.parseSpec(spec)
+    SketchAgg.build(
+      Sketch.input(parsed, col(column), df.schema(column).dataType), spec)
+  }
+
+  /** GROUPED time-sliced merge ("distinct users / p99 of spend / top
+    * pages over the last N days PER event_type") composing a ROLLED-UP
+    * cold table with a RAW hot table — the two-tier layout
+    * MergeRollupTask produces in production (raw segments roll up per
+    * time bucket as they age, then retire):
     *
     *  - `rollupDir`: per-bucket rolled segments (q146/q151 shape —
     *    [[graft.pinot.PinotCompact.rollup]] with dims (`groupCol`,
     *    `bucketCol`), a summed `cntCol`, and `column` aggregated to one
-    *    `hll<p>` payload per group per bucket). `bucketCol` holds each
+    *    `spec` payload per group per bucket). `bucketCol` holds each
     *    bucket's START in the raw time unit; a bucket spans
     *    [start, start + bucketWidth). Segments fully outside the slice
     *    PRUNE from min/max metadata through the pushed bucket filter
@@ -309,11 +223,10 @@ object PinotSketches {
     *  - `rawDir`: raw event segments covering everything NEWER than the
     *    rolled range; outside segments prune from metadata, the rest
     *    scan with the time filter pushed into a per-group query-time
-    *    [[graft.functions.SketchBuildAgg]] payload.
+    *    `sketch_build` payload.
     *
-    * One union + ONE hash exchange on `groupCol` merges both tiers
-    * (`hll_merge_estimate`); output (`groupCol`, `as`, `rowsAs`), exact
-    * while each group's distinct count stays in the hll sparse regime.
+    * One union + ONE hash exchange on `groupCol` merges both tiers;
+    * output (`groupCol`, `as`, `rowsAs`).
     *
     * Loud-failure contracts (validated from CACHED metadata before any
     * row IO): slice edges falling strictly inside the rolled range must
@@ -323,148 +236,11 @@ object PinotSketches {
     * exactly one unit after it (no coverage gap); the tiers must not
     * overlap (double count).
     */
-  def groupedTimeSlicedHllDistinct(s: SparkSession, rollupDir: String,
-      rawDir: String, groupCol: String, column: String, p: Int,
-      bucketCol: String, bucketWidth: Long, cntCol: String,
-      rawTimeCol: String, loMs: Long, hiMs: Long,
-      as: String = "distinct_count", rowsAs: String = "slice_rows"): DataFrame = {
-    val merged = groupedTimeSlicedPayloads(s, rollupDir, rawDir, groupCol,
-      column, s"hll$p", bucketCol, bucketWidth, cntCol, rawTimeCol,
-      loMs, hiMs)
-    merged
-      .groupBy("g")
-      .agg(
-        graft.functions.HllMergeAgg.hllMergeEstimate(col("sketch"), p).as(as),
-        sum(col("cnt")).as(rowsAs))
-      .withColumnRenamed("g", groupCol)
-  }
-
-  /** GROUPED time-sliced percentiles ("p99 of spend over the last N
-    * days PER event_type") over the same two-tier layout as
-    * [[groupedTimeSlicedHllDistinct]]: the rolled cold tier carries one
-    * `kll<k>` payload per group per bucket, the raw hot tier folds its
-    * sliced rows into per-group query-time KLL payloads, and ONE hash
-    * exchange on `groupCol` merges both. Exact nearest-rank while each
-    * group's merged sketch stays below k. Output: (`groupCol`, `as`
-    * ARRAY<DOUBLE> — one element per requested fraction, `rowsAs`).
-    * Same loud mid-bucket / coverage-gap / tier-overlap contracts.
-    */
-  def groupedTimeSlicedKllQuantiles(s: SparkSession, rollupDir: String,
-      rawDir: String, groupCol: String, column: String, k: Int,
-      qs: Seq[Double], bucketCol: String, bucketWidth: Long, cntCol: String,
-      rawTimeCol: String, loMs: Long, hiMs: Long,
-      as: String = "quantiles", rowsAs: String = "slice_rows"): DataFrame = {
-    val merged = groupedTimeSlicedPayloads(s, rollupDir, rawDir, groupCol,
-      column, s"kll$k", bucketCol, bucketWidth, cntCol, rawTimeCol,
-      loMs, hiMs)
-    merged
-      .groupBy("g")
-      .agg(
-        graft.functions.KllMergeAgg
-          .kllMergeQuantiles(col("sketch"), k, qs).as(as),
-        sum(col("cnt")).as(rowsAs))
-      .withColumnRenamed("g", groupCol)
-  }
-
-  /** GROUPED time-sliced heavy hitters ("top pages over the last N days
-    * PER country") over the same two-tier layout as
-    * [[groupedTimeSlicedHllDistinct]]: the rolled cold tier carries one
-    * `freq<capacity>` (Misra–Gries) payload per group per bucket, the
-    * raw hot tier folds its sliced rows into per-group query-time freq
-    * payloads, and ONE hash exchange on `groupCol` merges both. Counts
-    * are EXACT while each group's distinct `column` cardinality stays
-    * ≤ capacity; beyond it the Agarwal et al. mergeable-summaries bound
-    * (estimate ∈ [true − n/(capacity+1), true]) holds per group. Output:
-    * (`groupCol`, `as` = ARRAY<STRUCT<item, cnt>> sorted (cnt desc, item
-    * asc), `rowsAs`). Same loud mid-bucket / coverage-gap / tier-overlap
-    * contracts, validated from cached metadata before any row IO.
-    */
-  def groupedTimeSlicedFreqItems(s: SparkSession, rollupDir: String,
-      rawDir: String, groupCol: String, column: String, capacity: Int,
-      bucketCol: String, bucketWidth: Long, cntCol: String,
-      rawTimeCol: String, loMs: Long, hiMs: Long,
-      as: String = "top_items", rowsAs: String = "slice_rows"): DataFrame = {
-    val merged = groupedTimeSlicedPayloads(s, rollupDir, rawDir, groupCol,
-      column, s"freq$capacity", bucketCol, bucketWidth, cntCol, rawTimeCol,
-      loMs, hiMs)
-    merged
-      .groupBy("g")
-      .agg(
-        graft.functions.FreqMergeAgg
-          .freqMergeItems(col("sketch"), capacity).as(as),
-        sum(col("cnt")).as(rowsAs))
-      .withColumnRenamed("g", groupCol)
-  }
-
-  /** GROUPED time-sliced EXACT distinct over the same two-tier layout as
-    * [[groupedTimeSlicedHllDistinct]], with `bitmap` payloads — Pinot's
-    * DISTINCT_COUNT_BITMAP as a rollup aggregation: the rolled cold tier
-    * carries one Roaring64 bitmap per group per bucket (exact at ANY
-    * cardinality, unlike hll; sized O(distincts)), the raw hot tier
-    * folds its sliced rows into per-group query-time bitmaps, ONE hash
-    * exchange on `groupCol` merges both. Integral columns keep raw
-    * values; strings keep xxhash64 values (both exact modulo the
-    * documented hash-collision caveat of the stored-sketch contract).
-    * Output (`groupCol`, `as`, `rowsAs`); same loud mid-bucket /
-    * coverage-gap / tier-overlap contracts from cached metadata.
-    */
-  def groupedTimeSlicedBitmapDistinct(s: SparkSession, rollupDir: String,
-      rawDir: String, groupCol: String, column: String,
-      bucketCol: String, bucketWidth: Long, cntCol: String,
-      rawTimeCol: String, loMs: Long, hiMs: Long,
-      as: String = "distinct_count", rowsAs: String = "slice_rows"): DataFrame = {
-    val merged = groupedTimeSlicedPayloads(s, rollupDir, rawDir, groupCol,
-      column, "bitmap", bucketCol, bucketWidth, cntCol, rawTimeCol,
-      loMs, hiMs)
-    merged
-      .groupBy("g")
-      .agg(
-        BitmapMergeAgg.bitmapMergeDistinct(col("sketch")).as(as),
-        sum(col("cnt")).as(rowsAs))
-      .withColumnRenamed("g", groupCol)
-  }
-
-  /** GROUPED time-sliced KMV (theta-sketch) distinct over the same
-    * two-tier layout — Pinot's DISTINCT_COUNT_THETA_SKETCH as a rollup
-    * aggregation: one bottom-k summary per group per bucket in the cold
-    * tier (fixed K·8 bytes per group regardless of cardinality — the
-    * middle ground between bitmap's exactness and hll's fixed 2^p), a
-    * per-group query-time kmv over the raw tier's sliced rows, ONE hash
-    * exchange merging both. Exact while each group's merged distinct
-    * count stays ≤ k (the bottom-k IS the full hash set); ~1/√k relative
-    * error beyond. Output (`groupCol`, `as`, `rowsAs`); same loud
-    * tier contracts.
-    */
-  def groupedTimeSlicedKmvDistinct(s: SparkSession, rollupDir: String,
-      rawDir: String, groupCol: String, column: String, k: Int,
-      bucketCol: String, bucketWidth: Long, cntCol: String,
-      rawTimeCol: String, loMs: Long, hiMs: Long,
-      as: String = "distinct_count", rowsAs: String = "slice_rows"): DataFrame = {
-    val merged = groupedTimeSlicedPayloads(s, rollupDir, rawDir, groupCol,
-      column, s"kmv$k", bucketCol, bucketWidth, cntCol, rawTimeCol,
-      loMs, hiMs)
-    merged
-      .groupBy("g")
-      .agg(
-        graft.functions.KmvMergeAgg
-          .kmvMergeEstimate(col("sketch"), k).as(as),
-        sum(col("cnt")).as(rowsAs))
-      .withColumnRenamed("g", groupCol)
-  }
-
-  /** The grouped two-tier payload stream shared by the grouped readers —
-    * rows of (g, sketch BINARY, cnt BIGINT): the rolled cold tier's
-    * per-(group, bucket) stored payload rows for buckets fully inside
-    * the slice (outside segments prune from min/max metadata through
-    * the pushed bucket filter), ∪ the raw hot tier's per-group
-    * query-time [[graft.functions.SketchBuildAgg]] payloads over its
-    * sliced rows. Validates the tier contracts from CACHED metadata
-    * before any row IO (see [[groupedTimeSlicedHllDistinct]]).
-    */
-  private def groupedTimeSlicedPayloads(s: SparkSession, rollupDir: String,
+  def groupedTimeSliced(s: SparkSession, rollupDir: String,
       rawDir: String, groupCol: String, column: String, spec: String,
       bucketCol: String, bucketWidth: Long, cntCol: String,
-      rawTimeCol: String, loMs: Long, hiMs: Long): DataFrame = {
+      rawTimeCol: String, loMs: Long, hiMs: Long, qs: Seq[Double] = Nil,
+      as: String = "result", rowsAs: String = "slice_rows"): DataFrame = {
     require(loMs <= hiMs, s"time slice: lo $loMs > hi $hiMs")
     require(bucketWidth > 0, s"bucketWidth must be positive, got $bucketWidth")
     val bucketBounds = metasOf(rollupDir).map { case (dir, m) =>
@@ -506,132 +282,19 @@ object PinotSketches {
         col(bucketCol) <= hiMs - bucketWidth + 1)
       .select(col(groupCol).as("g"), col(column).as("sketch"),
         col(cntCol).cast(LongType).as("cnt"))
-    if (!needRaw) rolled
-    else {
-      val raw = s.read.format("pinot").load(rawDir)
-        .filter(col(rawTimeCol) >= loMs && col(rawTimeCol) <= hiMs)
-      val rawPayload = raw
-        .groupBy(col(groupCol).as("g"))
-        .agg(
-          graft.functions.SketchBuildAgg
-            .sketchBuild(deltaInput(raw, column, spec), spec)
-            .as("sketch"),
-          count(lit(1)).as("cnt"))
-      rolled.union(rawPayload)
-    }
-  }
-
-  /** Heavy hitters of `column` from stored FREQ (Misra–Gries) sketches:
-    * one summary merge over per-segment ≤capacity-entry sections — the
-    * FREQUENT_STRINGS-over-stored-sketches path; the raw column never
-    * re-reads. Counts are EXACT while the column's global distinct
-    * cardinality stays ≤ capacity; the Agarwal et al. mergeable-
-    * summaries bound (estimate ∈ [true − n/(capacity+1), true]) holds
-    * beyond it. Output: one row, `as` = ARRAY<STRUCT<item, cnt>> sorted
-    * (cnt desc, item asc).
-    */
-  def freqItems(s: SparkSession, tableDir: String, column: String,
-      capacity: Int, as: String = "top_items"): DataFrame =
-    segmentSketches(s, tableDir, column)
-      .agg(graft.functions.FreqMergeAgg
-        .freqMergeItems(col("sketch"), capacity).as(as))
-
-  /** Time-sliced heavy hitters ("top pages over the last N days"):
-    * frequent values of `column` over rows with `timeCol` ∈ [loMs,
-    * hiMs], through the same inside-sections / metadata-prune /
-    * boundary-scan split as [[timeSlicedBitmapDistinct]]. Counts exact
-    * while the column's global distinct cardinality stays ≤ capacity.
-    * Output: (`as` ARRAY<STRUCT<item, cnt>>, `rowsAs` slice row count).
-    */
-  def timeSlicedFreqItems(s: SparkSession, tableDir: String,
-      column: String, timeCol: String, loMs: Long, hiMs: Long,
-      capacity: Int, as: String = "top_items",
-      rowsAs: String = "slice_rows"): DataFrame = {
-    val (payloads, insideDocs) = timeSlicedPayloads(
-      s, tableDir, column, s"freq$capacity", timeCol, loMs, hiMs)
-    payloads match {
-      case None =>
-        // every segment pruned from metadata: the slice is empty — the
-        // same aggregate over zero payload rows answers (empty list, 0)
-        s.range(0).select(lit(Array.empty[Byte]).as("sketch"))
-          .agg(graft.functions.FreqMergeAgg
-            .freqMergeItems(col("sketch"), capacity).as(as))
-          .select(col(as), lit(0L).as(rowsAs))
-      case Some(p) =>
-        p.agg(
-          graft.functions.FreqMergeAgg
-            .freqMergeItems(col("sketch"), capacity).as(as),
-          (sum(col("cnt")) + lit(insideDocs)).as(rowsAs))
-    }
-  }
-
-  /** Exact distinct count of `column` from stored BITMAP sketches: one
-    * OR-merge over per-segment Roaring64 bitmaps.
-    */
-  def bitmapDistinct(s: SparkSession, tableDir: String, column: String,
-      as: String = "distinct_count"): DataFrame =
-    segmentSketches(s, tableDir, column)
-      .agg(BitmapMergeAgg.bitmapMergeDistinct(col("sketch")).as(as))
-
-  /** Quantile estimates of `column` from stored KLL sketches (exact
-    * nearest-rank while the merged sketch is unsaturated): per-segment
-    * summaries merge through [[graft.functions.KllMergeAgg]] — the
-    * PERCENTILE_KLL-over-stored-sketches path; the raw column never
-    * re-reads.
-    */
-  def kllQuantiles(s: SparkSession, tableDir: String, column: String,
-      k: Int, qs: Seq[Double], as: String = "quantiles"): DataFrame =
-    segmentSketches(s, tableDir, column)
-      .agg(graft.functions.KllMergeAgg
-        .kllMergeQuantiles(col("sketch"), k, qs).as(as))
-
-  /** Distinct count of `column` from stored HLL sketches (exact while
-    * every section and the merged result stay SPARSE — ≤ 2^p/4 distinct;
-    * ~1.04/√2^p standard error dense): the DISTINCT_COUNT_HLL stored-
-    * sketch path, same hash contract as the query-time
-    * [[graft.functions.HllDistinctAgg]], so stored and delta sketches
-    * compose (the lambda merge).
-    */
-  def hllDistinct(s: SparkSession, tableDir: String, column: String, p: Int,
-      as: String = "distinct_count"): DataFrame =
-    segmentSketches(s, tableDir, column)
-      .agg(graft.functions.HllMergeAgg
-        .hllMergeEstimate(col("sketch"), p).as(as))
-
-  /** Distinct count of `column` from stored KMV sketches (exact while
-    * every segment's sketch is unsaturated — the bottom-k of a union of
-    * bottom-k summaries is the union's bottom-k): stored hash arrays
-    * re-aggregate through the SAME query-time [[KmvSketchAgg]], so
-    * stored sketches also compose with ad-hoc `kmv_sketch(xxhash64(x))`
-    * cohorts for union/intersection estimates.
-    */
-  def kmvDistinct(s: SparkSession, tableDir: String, column: String, k: Int,
-      as: String = "distinct_count"): DataFrame = {
-    import s.implicits._
-    val dirs = segDirs(tableDir)
-    val slices = math.max(1, math.min(dirs.size,
-      4 * s.sparkContext.defaultParallelism))
-    val hashes = s.sparkContext.parallelize(dirs, slices)
-      .flatMap { dir =>
-        val r = SegmentReader.open(dir, SegmentIO.forPath(dir))
-        try {
-          val bytes = r.sketchBytes(column).getOrElse(
-            throw new PinotFormatException(
-              s"segment $dir has no stored sketch for column $column"))
-          val sk = SketchSection.deserialize(bytes)
-          sk.spec match {
-            case SketchSection.KmvSpec(sk2) if sk2 == k => sk.kmvHashes
-            case SketchSection.KmvSpec(other) =>
-              throw new PinotFormatException(
-                s"segment $dir stores kmv$other for $column, expected kmv$k")
-            case _ => throw new PinotFormatException(
-              s"segment $dir stores a bitmap sketch for $column, expected kmv$k")
-          }
-        } finally r.close()
+    val merged =
+      if (!needRaw) rolled
+      else {
+        val raw = s.read.format("pinot").load(rawDir)
+          .filter(col(rawTimeCol) >= loMs && col(rawTimeCol) <= hiMs)
+        rolled.union(raw.groupBy(col(groupCol).as("g")).agg(
+          build(raw, column, spec).as("sketch"), count(lit(1)).as("cnt")))
       }
-      .toDF("hash")
-    hashes
-      .agg(KmvSketchAgg.kmvSketch(col("hash"), k).as("sk"))
-      .select(KmvSketchAgg.distinctEstimate(col("sk"), k).as(as))
+    merged
+      .groupBy("g")
+      .agg(
+        SketchAgg.merge(col("sketch"), spec, qs).as(as),
+        sum(col("cnt")).as(rowsAs))
+      .withColumnRenamed("g", groupCol)
   }
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** HLL distinct sketch: sparse-regime exactness, dense-regime error
   * bounds, merge determinism (register maxima make merge order
-  * irrelevant), payload composition through [[SketchBuildAgg]] /
-  * [[HllMergeAgg]] (the lambda path), serde round-trips, and SQL
+  * irrelevant), payload composition through `sketch_build` /
+  * `hll_merge_estimate` (the lambda path), serde round-trips, and SQL
   * registration.
   */
 class HllSketchSpec extends SparkTestBase {
@@ -75,11 +75,11 @@ class HllSketchSpec extends SparkTestBase {
     assert(d2.estimate === dense.estimate)
     assert(java.util.Arrays.equals(d2.serializeBody(), dense.serializeBody()))
 
-    val framed = SketchSection.buildHll(
-      Seq.fill(300)(rnd.nextLong()).iterator, 12)
-    val sk = SketchSection.deserialize(framed)
+    val built = new HllSketch(12)
+    Seq.fill(300)(rnd.nextLong()).foreach(built.addHash)
+    val sk = SketchSection.deserialize(built.payload)
     assert(sk.spec === SketchSection.HllSpec(12))
-    assert(sk.hll.estimate === 300L) // random longs: collision-free in practice
+    assert(sk.asInstanceOf[HllSketch].estimate === 300L) // random longs: collision-free in practice
   }
 
   test("hll_distinct agg: sparse-exact over partitioned data; SQL-registered") {
@@ -88,7 +88,7 @@ class HllSketchSpec extends SparkTestBase {
     val vals = Seq.fill(4000)(rnd.nextInt(900).toLong)
     val df = vals.toDF("v").repartition(8)
     val got = df.agg(
-      HllDistinctAgg.hllDistinct(xxhash64(col("v")), 14).as("d"))
+      SketchAgg.result(xxhash64(col("v")), "hll14").as("d"))
       .head().getLong(0)
     assert(got === vals.distinct.size.toLong)
     df.createOrReplaceTempView("hll_vals")
@@ -104,16 +104,16 @@ class HllSketchSpec extends SparkTestBase {
       val vals = Seq.fill(9000)(rnd.nextInt(card).toLong)
       val df = vals.toDF("v").repartition(6)
       val direct = df
-        .agg(HllDistinctAgg.hllDistinct(xxhash64(col("v")), p))
+        .agg(SketchAgg.result(xxhash64(col("v")), s"hll$p"))
         .head().getLong(0)
       // two cohort payloads (the stored-section shape) merged at query time
       val payloads = df
         .withColumn("cohort", col("v") % 2)
         .groupBy("cohort")
-        .agg(SketchBuildAgg.sketchBuild(xxhash64(col("v")), s"hll$p")
+        .agg(SketchAgg.build(xxhash64(col("v")), s"hll$p")
           .as("sketch"))
       val viaMerge = payloads
-        .agg(HllMergeAgg.hllMergeEstimate(col("sketch"), p))
+        .agg(SketchAgg.merge(col("sketch"), s"hll$p"))
         .head().getLong(0)
       assert(viaMerge === direct, s"p=$p")
       if (p == 14) assert(direct === vals.distinct.size.toLong)

@@ -22,7 +22,7 @@ class KllSketchSpec extends SparkTestBase {
     val rnd = new scala.util.Random(42)
     val vals = Seq.fill(3000)(rnd.nextInt(500).toDouble) // heavy ties
     val got = vals.toDF("v").repartition(8)
-      .agg(KllSketchAgg.kllQuantiles(col("v"), 4096, qs).as("q"))
+      .agg(SketchAgg.result(col("v"), "kll4096", qs).as("q"))
       .head().getSeq[Double](0)
     val sorted = vals.sorted
     val want = qs.map(q => truthNearestRank(sorted, q))
@@ -36,7 +36,7 @@ class KllSketchSpec extends SparkTestBase {
     val rnd = new scala.util.Random(20260815L)
     val vals = Seq.fill(n)(rnd.nextDouble() * 1e6)
     val got = vals.toDF("v").repartition(16) // force cross-partition merge
-      .agg(KllSketchAgg.kllQuantiles(col("v"), k, qs).as("q"))
+      .agg(SketchAgg.result(col("v"), s"kll$k", qs).as("q"))
       .head().getSeq[Double](0)
     val sorted = vals.sorted.toIndexedSeq
     qs.zip(got).foreach { case (q, est) =>
@@ -51,12 +51,12 @@ class KllSketchSpec extends SparkTestBase {
   test("empty and single-value groups") {
     import spark.implicits._
     val one = Seq(7.5).toDF("v")
-      .agg(KllSketchAgg.kllQuantiles(col("v"), 64, Seq(0.0, 0.5, 1.0)))
+      .agg(SketchAgg.result(col("v"), "kll64", Seq(0.0, 0.5, 1.0)))
       .head().getSeq[Double](0)
     assert(one === Seq(7.5, 7.5, 7.5))
     // nulls are skipped; an all-null group yields null elements
     val nulls = Seq[Option[Double]](None, None).toDF("v")
-      .agg(KllSketchAgg.kllQuantiles(col("v"), 64, Seq(0.5)))
+      .agg(SketchAgg.result(col("v"), "kll64", Seq(0.5)))
       .head().getSeq[java.lang.Double](0)
     assert(nulls === Seq(null))
   }
@@ -76,7 +76,7 @@ class KllSketchSpec extends SparkTestBase {
     val rows = (0 until 5000).map(i => (s"g${i % 7}", rnd.nextInt(1000).toDouble))
     val got = rows.toDF("g", "v").repartition(8)
       .groupBy("g")
-      .agg(KllSketchAgg.kllQuantiles(col("v"), 2048, Seq(0.5, 0.9)).as("q"))
+      .agg(SketchAgg.result(col("v"), "kll2048", Seq(0.5, 0.9)).as("q"))
       .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
     rows.groupBy(_._1).foreach { case (g, vs) =>
       val sorted = vs.map(_._2).sorted

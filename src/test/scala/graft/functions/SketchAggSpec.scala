@@ -11,12 +11,12 @@ import org.apache.spark.sql.functions._
   */
 class SketchAggSpec extends SparkTestBase {
 
-  // ---------- FreqItemsAgg ----------
+  // ---------- freq_items ----------
 
   test("freq_items exact regime: counts equal groupBy when distinct <= capacity") {
     val d = spark.range(0, 5000, 1, 8)
       .select((col("id") % 37).cast("string").as("s"))
-    val sketch = d.agg(FreqItemsAgg.freqItems(col("s"), 64).as("sk"))
+    val sketch = d.agg(SketchAgg.result(col("s"), "freq64").as("sk"))
       .select(explode(col("sk")).as("e"))
       .select(col("e.item"), col("e.cnt"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -28,7 +28,7 @@ class SketchAggSpec extends SparkTestBase {
   test("freq_items eval is ranked (cnt desc, item asc)") {
     import spark.implicits._
     val d = Seq("b", "b", "a", "a", "c").toDF("s")
-    val rows = d.agg(FreqItemsAgg.freqItems(col("s"), 8).as("sk"))
+    val rows = d.agg(SketchAgg.result(col("s"), "freq8").as("sk"))
       .select(explode(col("sk")).as("e"))
       .select(col("e.item"), col("e.cnt"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toList
@@ -45,7 +45,7 @@ class SketchAggSpec extends SparkTestBase {
       .select(concat(lit("item"), format_string("%03d", col("id"))).as("s"))
     val n = (0L until 200L).map(trueCnt).sum
     val cap = 32
-    val sketch = d.agg(FreqItemsAgg.freqItems(col("s"), cap).as("sk"))
+    val sketch = d.agg(SketchAgg.result(col("s"), s"freq$cap").as("sk"))
       .select(explode(col("sk")).as("e"))
       .select(col("e.item"), col("e.cnt"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -67,7 +67,7 @@ class SketchAggSpec extends SparkTestBase {
   test("freq_items nulls are ignored and capacity is enforced per buffer") {
     import spark.implicits._
     val d = Seq(Some("x"), None, Some("x"), None, Some("y")).toDF("s")
-    val m = d.agg(FreqItemsAgg.freqItems(col("s"), 4).as("sk"))
+    val m = d.agg(SketchAgg.result(col("s"), "freq4").as("sk"))
       .select(explode(col("sk")).as("e"))
       .select(col("e.item"), col("e.cnt"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -87,17 +87,17 @@ class SketchAggSpec extends SparkTestBase {
       val exactDistinct = d.select(countDistinct("kl")).head().getLong(0)
       // kmv is exact below saturation
       if (exactDistinct <= cap) {
-        val est = d.agg(KmvSketchAgg.kmvSketch(xxhash64(col("kl")), cap).as("sk"))
-          .select(KmvSketchAgg.distinctEstimate(col("sk"), cap))
+        val est = d.agg(SketchAgg.kmvSketch(xxhash64(col("kl")), cap).as("sk"))
+          .select(KmvSketch.distinctEstimate(col("sk"), cap))
           .head().getLong(0)
         assert(est === exactDistinct, s"draw $i kmv")
       }
       // bitmap is always exact
-      val bm = d.agg(BitmapDistinctAgg.bitmapDistinct(col("kl")))
+      val bm = d.agg(SketchAgg.result(col("kl"), "bitmap"))
         .head().getLong(0)
       assert(bm === exactDistinct, s"draw $i bitmap")
       // freq_items: exact below capacity, MG-bounded above
-      val sketch = d.agg(FreqItemsAgg.freqItems(col("s"), cap).as("sk"))
+      val sketch = d.agg(SketchAgg.result(col("s"), s"freq$cap").as("sk"))
         .select(explode(col("sk")).as("e"))
         .select(col("e.item"), col("e.cnt"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -115,7 +115,7 @@ class SketchAggSpec extends SparkTestBase {
     }
   }
 
-  // ---------- BitmapDistinctAgg ----------
+  // ---------- bitmap_distinct ----------
 
   test("bitmap_distinct is exact across partitions and groups") {
     val d = spark.range(0, 100000, 1, 16)
@@ -123,7 +123,7 @@ class SketchAggSpec extends SparkTestBase {
         // duplicated, clustered, and gap-ridden key space
         ((col("id") % 4096) * 3L + (col("id") % 5)).as("k"))
     val got = d.groupBy("g")
-      .agg(BitmapDistinctAgg.bitmapDistinct(col("k")).as("n"))
+      .agg(SketchAgg.result(col("k"), "bitmap").as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val exact = d.groupBy("g").agg(countDistinct("k").as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -135,12 +135,12 @@ class SketchAggSpec extends SparkTestBase {
     val d = Seq((1L, Some(-5L)), (1L, Some(-5L)), (1L, Some(Long.MinValue)),
       (1L, None), (2L, None)).toDF("g", "k")
     val got = d.groupBy("g")
-      .agg(BitmapDistinctAgg.bitmapDistinct(col("k")).as("n"))
+      .agg(SketchAgg.result(col("k"), "bitmap").as("n"))
       .orderBy("g").collect().map(_.getLong(1)).toList
     assert(got === List(2L, 0L))
   }
 
-  // ---------- KmvSketchAgg ----------
+  // ---------- kmv_sketch ----------
 
   private val k = 1024
 
@@ -149,14 +149,14 @@ class SketchAggSpec extends SparkTestBase {
     val a = spark.range(0, 300, 1, 8).select(lit("a").as("g"), col("id"))
     val b = spark.range(200, 500, 1, 8).select(lit("b").as("g"), col("id"))
     val sk = a.union(b).groupBy("g")
-      .agg(KmvSketchAgg.kmvSketch(xxhash64(col("id")), k).as("sk"))
+      .agg(SketchAgg.kmvSketch(xxhash64(col("id")), k).as("sk"))
     val row = sk.filter(col("g") === "a").select(col("sk").as("sa"))
       .crossJoin(sk.filter(col("g") === "b").select(col("sk").as("sb")))
       .select(
-        KmvSketchAgg.distinctEstimate(col("sa"), k).as("da"),
-        KmvSketchAgg.distinctEstimate(col("sb"), k).as("db"),
-        KmvSketchAgg.unionEstimate(col("sa"), col("sb"), k).as("u"),
-        KmvSketchAgg.intersectEstimate(col("sa"), col("sb"), k).as("i"))
+        KmvSketch.distinctEstimate(col("sa"), k).as("da"),
+        KmvSketch.distinctEstimate(col("sb"), k).as("db"),
+        KmvSketch.unionEstimate(col("sa"), col("sb"), k).as("u"),
+        KmvSketch.intersectEstimate(col("sa"), col("sb"), k).as("i"))
       .head()
     assert(row.getLong(0) === 300L)
     assert(row.getLong(1) === 300L)
@@ -167,8 +167,8 @@ class SketchAggSpec extends SparkTestBase {
   test("kmv saturated regime: estimates within 5 sigma of truth") {
     // 50k distinct against k=1024: relative sigma ~ 1/sqrt(k-2) ~ 3.1%
     val d = spark.range(0, 50000, 1, 16)
-    val est = d.agg(KmvSketchAgg.kmvSketch(xxhash64(col("id")), k).as("sk"))
-      .select(KmvSketchAgg.distinctEstimate(col("sk"), k).as("e"))
+    val est = d.agg(SketchAgg.kmvSketch(xxhash64(col("id")), k).as("sk"))
+      .select(KmvSketch.distinctEstimate(col("sk"), k).as("e"))
       .head().getLong(0)
     val sigma = 50000.0 / math.sqrt(k - 2.0)
     assert(math.abs(est - 50000.0) <= 5 * sigma,
@@ -178,7 +178,7 @@ class SketchAggSpec extends SparkTestBase {
   test("kmv sketch is duplicate-insensitive and keeps signed-ascending order") {
     val d = spark.range(0, 100, 1, 8)
       .select(explode(expr("sequence(1, 5)")).as("rep"), col("id"))
-    val arr = d.agg(KmvSketchAgg.kmvSketch(xxhash64(col("id")), k).as("sk"))
+    val arr = d.agg(SketchAgg.kmvSketch(xxhash64(col("id")), k).as("sk"))
       .head().getSeq[Long](0)
     assert(arr.length === 100)
     assert(arr === arr.sorted)
@@ -193,9 +193,9 @@ class SketchAggSpec extends SparkTestBase {
     val kk = 8 // size 3 < k: exact regime, every value must count
     val row = spark.range(1)
       .select(
-        KmvSketchAgg.distinctEstimate(sk, kk).as("d"),
-        KmvSketchAgg.unionEstimate(sk, array(lit(7L)), kk).as("u"),
-        KmvSketchAgg.intersectEstimate(sk, sk, kk).as("i"))
+        KmvSketch.distinctEstimate(sk, kk).as("d"),
+        KmvSketch.unionEstimate(sk, array(lit(7L)), kk).as("u"),
+        KmvSketch.intersectEstimate(sk, sk, kk).as("i"))
       .head()
     assert(row.getLong(0) === 3L)
     assert(row.getLong(1) === 3L)
@@ -203,7 +203,7 @@ class SketchAggSpec extends SparkTestBase {
     // saturated with the same pathological cut value: theta clamps to
     // nextDown(1.0) instead of collapsing, estimate stays finite/sane
     val sat = spark.range(1)
-      .select(KmvSketchAgg.distinctEstimate(sk, 3).as("d")).head().getLong(0)
+      .select(KmvSketch.distinctEstimate(sk, 3).as("d")).head().getLong(0)
     assert(sat === 2L) // k-1 below the k-th value, theta ~ 1.0
   }
 
@@ -212,12 +212,12 @@ class SketchAggSpec extends SparkTestBase {
     val a = spark.range(0, 20000, 1, 8).select(lit("a").as("g"), col("id"))
     val b = spark.range(10000, 30000, 1, 8).select(lit("b").as("g"), col("id"))
     val sk = a.union(b).groupBy("g")
-      .agg(KmvSketchAgg.kmvSketch(xxhash64(col("id")), k).as("sk"))
+      .agg(SketchAgg.kmvSketch(xxhash64(col("id")), k).as("sk"))
     val row = sk.filter(col("g") === "a").select(col("sk").as("sa"))
       .crossJoin(sk.filter(col("g") === "b").select(col("sk").as("sb")))
       .select(
-        KmvSketchAgg.unionEstimate(col("sa"), col("sb"), k).as("u"),
-        KmvSketchAgg.intersectEstimate(col("sa"), col("sb"), k).as("i"))
+        KmvSketch.unionEstimate(col("sa"), col("sb"), k).as("u"),
+        KmvSketch.intersectEstimate(col("sa"), col("sb"), k).as("i"))
       .head()
     val sigmaU = 30000.0 / math.sqrt(k - 2.0)
     assert(math.abs(row.getLong(0) - 30000.0) <= 5 * sigmaU)

@@ -51,6 +51,12 @@ class SketchSectionSpec extends SparkTestBase {
     }
   }
 
+  private def freqPayload(vals: Iterator[String], capacity: Int) = {
+    val sk = new graft.functions.FreqSketch(capacity)
+    vals.foreach(sk.add)
+    sk.payload
+  }
+
   private def writeFixture(): (String, Long, Long) = {
     val dir = graft.TestDirs.create("sketch_tbl").resolve("ev_OFFLINE").toString
     import spark.implicits._
@@ -71,7 +77,8 @@ class SketchSectionSpec extends SparkTestBase {
         dir, SegmentIO.forPath(dir))
       .flatMap { d =>
         val r = SegmentReader.open(d, SegmentIO.forPath(d))
-        try SketchSection.deserialize(r.sketchBytes("tag").get).kmvHashes.toSeq
+        try SketchSection.deserialize(r.sketchBytes("tag").get)
+          .asInstanceOf[graft.functions.KmvSketch].sorted.toSeq
         finally r.close()
       }.toSet
     val sparkHashes = (0 until 41).map(i => s"tag_$i").toDF("tag")
@@ -101,9 +108,9 @@ class SketchSectionSpec extends SparkTestBase {
       // hide IO instead of proving its absence
       SegmentReader.clearSectionCacheForTests()
       (graft.sources.pinot.PinotSketches
-        .bitmapDistinct(spark, dir, "uid").head().getLong(0),
+        .wholeTable(spark, dir, "uid", "bitmap").head().getLong(0),
         graft.sources.pinot.PinotSketches
-          .kmvDistinct(spark, dir, "tag", 64).head().getLong(0))
+          .wholeTable(spark, dir, "tag", "kmv64").head().getLong(0))
     }
     assert(users === nUsers)
     assert(tags === nTags)
@@ -131,17 +138,18 @@ class SketchSectionSpec extends SparkTestBase {
         dir, SegmentIO.forPath(dir))
       .flatMap { d =>
         val r = SegmentReader.open(d, SegmentIO.forPath(d))
-        try SketchSection.deserialize(r.sketchBytes("tag").get).kmvHashes.toSeq
+        try SketchSection.deserialize(r.sketchBytes("tag").get)
+          .asInstanceOf[graft.functions.KmvSketch].sorted.toSeq
         finally r.close()
       }
     val storedSk = stored.toDF("hash")
-      .agg(graft.functions.KmvSketchAgg.kmvSketch(col("hash"), 64).as("sa"))
+      .agg(graft.functions.SketchAgg.kmvSketch(col("hash"), 64).as("sa"))
     val cohort = (0 until 10).map(i => s"other_$i")
       .toDF("tag") // 10 new tags, 0 overlap
-      .agg(graft.functions.KmvSketchAgg.kmvSketch(
+      .agg(graft.functions.SketchAgg.kmvSketch(
         xxhash64(col("tag")), 64).as("sb"))
     val u = storedSk.crossJoin(cohort)
-      .select(graft.functions.KmvSketchAgg
+      .select(graft.functions.KmvSketch
         .unionEstimate(col("sa"), col("sb"), 64).as("u"))
       .head().getLong(0)
     assert(u === 51L) // 41 stored + 10 new, exact (both unsaturated)
@@ -149,8 +157,7 @@ class SketchSectionSpec extends SparkTestBase {
 
   test("lambda merge: stored sections ∪ query-time delta payloads answer exactly; cold IO stays sketch-only") {
     import spark.implicits._
-    import graft.functions.{BitmapMergeAgg, HllMergeAgg, KllMergeAgg,
-      KmvMergeAgg, SketchBuildAgg}
+    import graft.functions.SketchAgg
     // cold: 3 segments carrying all four sketch kinds; delta: fresh rows
     // that exist only as a DataFrame (the un-sketched "today")
     val dir = graft.TestDirs.create("lambda_tbl").resolve("lam_OFFLINE").toString
@@ -181,24 +188,24 @@ class SketchSectionSpec extends SparkTestBase {
           java.nio.file.Paths.get(dir).getParent.toString), rec) {
         SegmentReader.clearSectionCacheForTests()
         (coldSk("uid")
-          .union(delta.agg(SketchBuildAgg
-            .sketchBuild(col("uid"), "bitmap").as("sketch")))
-          .agg(BitmapMergeAgg.bitmapMergeDistinct(col("sketch")))
+          .union(delta.agg(SketchAgg
+            .build(col("uid"), "bitmap").as("sketch")))
+          .agg(SketchAgg.merge(col("sketch"), "bitmap"))
           .head().getLong(0),
           coldSk("tag")
-            .union(delta.agg(SketchBuildAgg
-              .sketchBuild(xxhash64(col("tag")), "kmv64").as("sketch")))
-            .agg(KmvMergeAgg.kmvMergeEstimate(col("sketch"), 64))
+            .union(delta.agg(SketchAgg
+              .build(xxhash64(col("tag")), "kmv64").as("sketch")))
+            .agg(SketchAgg.merge(col("sketch"), "kmv64"))
             .head().getLong(0),
           coldSk("event_id")
-            .union(delta.agg(SketchBuildAgg
-              .sketchBuild(xxhash64(col("event_id")), "hll16").as("sketch")))
-            .agg(HllMergeAgg.hllMergeEstimate(col("sketch"), 16))
+            .union(delta.agg(SketchAgg
+              .build(xxhash64(col("event_id")), "hll16").as("sketch")))
+            .agg(SketchAgg.merge(col("sketch"), "hll16"))
             .head().getLong(0),
           coldSk("v")
-            .union(delta.agg(SketchBuildAgg
-              .sketchBuild(col("v"), "kll8192").as("sketch")))
-            .agg(KllMergeAgg.kllMergeQuantiles(col("sketch"), 8192,
+            .union(delta.agg(SketchAgg
+              .build(col("v"), "kll8192").as("sketch")))
+            .agg(SketchAgg.merge(col("sketch"), "kll8192",
               Seq(0.5, 0.9)))
             .head().getSeq[Double](0))
       }
@@ -264,8 +271,8 @@ class SketchSectionSpec extends SparkTestBase {
     val got = SegmentIO.withOverride(_.startsWith(
         java.nio.file.Paths.get(dir).getParent.toString), rec) {
       SegmentReader.clearSectionCacheForTests()
-      graft.sources.pinot.PinotSketches.timeSlicedBitmapDistinct(
-        spark, dir, "uid", "ts_ms", 1500L, 3500L).head()
+      graft.sources.pinot.PinotSketches.timeSliced(
+        spark, dir, "uid", "bitmap", "ts_ms", 1500L, 3500L).head()
     }
     // exactness: distinct uid and row count over exactly the slice
     val want = df.filter(col("ts_ms").between(1500, 3500))
@@ -304,9 +311,9 @@ class SketchSectionSpec extends SparkTestBase {
     val back = spark.read.format("pinot").load(dir)
       .groupBy("g")
       .agg(
-        graft.functions.BitmapMergeAgg.bitmapMergeDistinct(col("uid"))
+        graft.functions.SketchAgg.merge(col("uid"), "bitmap")
           .as("du"),
-        graft.functions.KmvMergeAgg.kmvMergeEstimate(col("p"), 64).as("dp"),
+        graft.functions.SketchAgg.merge(col("p"), "kmv64").as("dp"),
         sum("cnt").as("n"))
       .orderBy("g").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -367,8 +374,8 @@ class SketchSectionSpec extends SparkTestBase {
       // (the 32-way parallel prefetch path; the recorder is a non-local
       // SegmentIO, so the pooled branch is the one under test)
       graft.sources.pinot.PinotScan.invalidateMetas(segDirs)
-      val got = graft.sources.pinot.PinotSketches.timeSlicedBitmapDistinct(
-        spark, dir, "uid", "ts_ms", 1500L, 3500L).head()
+      val got = graft.sources.pinot.PinotSketches.timeSliced(
+        spark, dir, "uid", "bitmap", "ts_ms", 1500L, 3500L).head()
       assert(got.getLong(0) === wantDistinct)
       assert(got.getLong(1) === wantRows)
       // the OUTSIDE segment is classified and pruned: its metadata is
@@ -394,8 +401,8 @@ class SketchSectionSpec extends SparkTestBase {
       // WARM: a second read classifies from the cache — zero metadata
       // fetches anywhere, the outside segment is never touched at all
       rec.resetFullReads()
-      val got2 = graft.sources.pinot.PinotSketches.timeSlicedBitmapDistinct(
-        spark, dir, "uid", "ts_ms", 1500L, 3500L).head()
+      val got2 = graft.sources.pinot.PinotSketches.timeSliced(
+        spark, dir, "uid", "bitmap", "ts_ms", 1500L, 3500L).head()
       assert(got2.getLong(0) === wantDistinct)
       segDirs.foreach { d =>
         assert(rec.fullReadCount(metaFile(d)) === 0,
@@ -415,8 +422,8 @@ class SketchSectionSpec extends SparkTestBase {
       .option("sketchColumns", "uid:bitmap")
       .save(dir)
     val ex = intercept[PinotFormatException] {
-      graft.sources.pinot.PinotSketches.timeSlicedBitmapDistinct(
-        spark, dir, "uid", "ts_ms", 100L, 900L).head()
+      graft.sources.pinot.PinotSketches.timeSliced(
+        spark, dir, "uid", "bitmap", "ts_ms", 100L, 900L).head()
     }
     assert(ex.getMessage.contains("null"),
       s"expected a null-column rejection, got: ${ex.getMessage}")
@@ -436,15 +443,15 @@ class SketchSectionSpec extends SparkTestBase {
       .write.format("pinot").mode("append")
       .option("sketchColumns", "tag:bitmap,seen:kll8192")
       .save(dir)
-    val got = graft.sources.pinot.PinotSketches.timeSlicedBitmapDistinct(
-      spark, dir, "tag", "ts_ms", 500L, 2600L).head()
+    val got = graft.sources.pinot.PinotSketches.timeSliced(
+      spark, dir, "tag", "bitmap", "ts_ms", 500L, 2600L).head()
     val want = df.filter(col("ts_ms").between(500, 2600))
     assert(got.getLong(0) === want.select("tag").distinct().count())
     assert(got.getLong(1) === want.count())
     // timestamp KLL column: stored sections hold epoch-millis doubles;
     // the delta must cast the same way (not Spark's seconds-cast)
-    val gotQ = graft.sources.pinot.PinotSketches.timeSlicedKllQuantiles(
-      spark, dir, "seen", "ts_ms", 500L, 2600L, 8192, Seq(0.5)).head()
+    val gotQ = graft.sources.pinot.PinotSketches.timeSliced(
+      spark, dir, "seen", "kll8192", "ts_ms", 500L, 2600L, Seq(0.5)).head()
       .getSeq[Double](0)
     val sortedMs = want.select(unix_millis(col("seen")))
       .collect().map(_.getLong(0).toDouble).sorted
@@ -476,8 +483,8 @@ class SketchSectionSpec extends SparkTestBase {
     val got = SegmentIO.withOverride(_.startsWith(
         java.nio.file.Paths.get(dir).getParent.toString), rec) {
       SegmentReader.clearSectionCacheForTests()
-      graft.sources.pinot.PinotSketches.timeSlicedBitmapDistinct(
-        spark, dir, "uid", "ts_ms", 1500L, 3500L).head()
+      graft.sources.pinot.PinotSketches.timeSliced(
+        spark, dir, "uid", "bitmap", "ts_ms", 1500L, 3500L).head()
     }
     val want = df.filter(col("ts_ms").between(1500, 3500))
     assert(got.getLong(0) === want.select("uid").distinct().count())
@@ -515,8 +522,8 @@ class SketchSectionSpec extends SparkTestBase {
       dir
     }
     def check(dir: String, lo: Long, hi: Long): Unit = {
-      val got = graft.sources.pinot.PinotSketches.timeSlicedBitmapDistinct(
-        spark, dir, "uid", "ts_ms", lo, hi).head()
+      val got = graft.sources.pinot.PinotSketches.timeSliced(
+        spark, dir, "uid", "bitmap", "ts_ms", lo, hi).head()
       val want = df.filter(col("ts_ms").between(lo, hi))
       assert(got.getLong(0) === want.select("uid").distinct().count(),
         s"distinct diverged on [$lo,$hi] over $dir")
@@ -590,8 +597,8 @@ class SketchSectionSpec extends SparkTestBase {
     val rec = new RecordingSegmentIO(LocalSegmentIO)
     val got = SegmentIO.withOverride(_.startsWith(root.toString), rec) {
       SegmentReader.clearSectionCacheForTests()
-      graft.sources.pinot.PinotSketches.groupedTimeSlicedHllDistinct(
-        spark, coldDir.toString, rawDir, "g", "uid", 12,
+      graft.sources.pinot.PinotSketches.groupedTimeSliced(
+        spark, coldDir.toString, rawDir, "g", "uid", "hll12",
         "bucket_start", 1000L, "cnt", "ts_ms", 1001L, 4200L,
         as = "du", rowsAs = "rows").orderBy("g").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
@@ -611,8 +618,8 @@ class SketchSectionSpec extends SparkTestBase {
     // mid-bucket slice edges in the rolled range fail LOUDLY — raw rows
     // are gone, a truncated bucket would silently under-count
     val ex = intercept[IllegalArgumentException] {
-      graft.sources.pinot.PinotSketches.groupedTimeSlicedHllDistinct(
-        spark, coldDir.toString, rawDir, "g", "uid", 12,
+      graft.sources.pinot.PinotSketches.groupedTimeSliced(
+        spark, coldDir.toString, rawDir, "g", "uid", "hll12",
         "bucket_start", 1000L, "cnt", "ts_ms", 1500L, 4200L)
     }
     assert(ex.getMessage.contains("mid-bucket"))
@@ -656,8 +663,8 @@ class SketchSectionSpec extends SparkTestBase {
     val rec = new RecordingSegmentIO(LocalSegmentIO)
     val got = SegmentIO.withOverride(_.startsWith(root.toString), rec) {
       SegmentReader.clearSectionCacheForTests()
-      graft.sources.pinot.PinotSketches.groupedTimeSlicedFreqItems(
-        spark, coldDir.toString, rawDir, "g", "page", 64,
+      graft.sources.pinot.PinotSketches.groupedTimeSliced(
+        spark, coldDir.toString, rawDir, "g", "page", "freq64",
         "bucket_start", 1000L, "cnt", "ts_ms", 1001L, 4200L,
         as = "sk", rowsAs = "rows")
         .select(col("g"), explode(col("sk")).as("e"), col("rows"))
@@ -721,14 +728,14 @@ class SketchSectionSpec extends SparkTestBase {
       SegmentIO.withOverride(_.startsWith(root.toString), rec) {
         SegmentReader.clearSectionCacheForTests()
         val bm = graft.sources.pinot.PinotSketches
-          .groupedTimeSlicedBitmapDistinct(
-            spark, coldDir.toString, rawDir, "g", "uid",
+          .groupedTimeSliced(
+            spark, coldDir.toString, rawDir, "g", "uid", "bitmap",
             "bucket_start", 1000L, "cnt", "ts_ms", 1001L, 4200L,
             as = "du", rowsAs = "rows").orderBy("g").collect()
           .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
         val kv = graft.sources.pinot.PinotSketches
-          .groupedTimeSlicedKmvDistinct(
-            spark, coldDir.toString, rawDir, "g", "page", 256,
+          .groupedTimeSliced(
+            spark, coldDir.toString, rawDir, "g", "page", "kmv256",
             "bucket_start", 1000L, "cnt", "ts_ms", 1001L, 4200L,
             as = "dp", rowsAs = "rows").orderBy("g").collect()
           .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
@@ -766,7 +773,7 @@ class SketchSectionSpec extends SparkTestBase {
       .save(dir)
     // exact regime (37 distinct < 64): merged stored counts = truth
     val got = graft.sources.pinot.PinotSketches
-      .freqItems(spark, dir, "page", 64)
+      .wholeTable(spark, dir, "page", "freq64", as = "top_items")
       .select(explode(col("top_items")).as("e"))
       .select(col("e.item"), col("e.cnt"))
       .as[(String, Long)].collect().toMap
@@ -775,11 +782,11 @@ class SketchSectionSpec extends SparkTestBase {
     // a section's bytes are a pure function of the summary, not of
     // insertion order (exact regime: the summary itself is order-free)
     val fwd = SketchSection.deserialize(
-      SketchSection.buildFreq(rows.iterator.map(_._2), 64))
-    val rev = SketchSection.buildFreq(rows.reverseIterator.map(_._2), 64)
-    assert(SketchSection.buildFreq(rows.iterator.map(_._2), 64)
+      freqPayload(rows.iterator.map(_._2), 64))
+    val rev = freqPayload(rows.reverseIterator.map(_._2), 64)
+    assert(freqPayload(rows.iterator.map(_._2), 64)
       .sameElements(rev))
-    assert(fwd.freq.toMap === want)
+    assert(fwd.asInstanceOf[graft.functions.FreqSketch].counts.toMap === want)
   }
 
   test("time-sliced freq: stored sections + boundary query-time payload match the raw twin; low capacity keeps the MG bound") {
@@ -801,7 +808,7 @@ class SketchSectionSpec extends SparkTestBase {
     val truth = sliced.groupBy(_._2).view.mapValues(_.size.toLong).toMap
     // capacity 256 > 100 distinct: exact through the whole split
     val got = graft.sources.pinot.PinotSketches
-      .timeSlicedFreqItems(spark, dir, "page", "ts_ms", lo, hi, 256)
+      .timeSliced(spark, dir, "page", "freq256", "ts_ms", lo, hi)
     val row = got.head()
     val items = row.getSeq[org.apache.spark.sql.Row](0)
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -809,7 +816,7 @@ class SketchSectionSpec extends SparkTestBase {
     assert(row.getLong(1) === sliced.size.toLong)
     // all-pruned slice answers (empty, 0) with no IO
     val empty = graft.sources.pinot.PinotSketches
-      .timeSlicedFreqItems(spark, dir, "page", "ts_ms", 50000L, 60000L, 256)
+      .timeSliced(spark, dir, "page", "freq256", "ts_ms", 50000L, 60000L)
       .head()
     assert(empty.getSeq[org.apache.spark.sql.Row](0).isEmpty)
     assert(empty.getLong(1) === 0L)
@@ -830,9 +837,9 @@ class SketchSectionSpec extends SparkTestBase {
       .save(dir)
     for ((lo, hi) <- Seq((700L, 3900L), (1L, 5000L), (9000L, 9900L))) {
       val bm = graft.sources.pinot.PinotSketches
-        .timeSlicedBitmapDistinct(spark, dir, "uid", "ts_ms", lo, hi).head()
+        .timeSliced(spark, dir, "uid", "bitmap", "ts_ms", lo, hi).head()
       val hl = graft.sources.pinot.PinotSketches
-        .timeSlicedHllDistinct(spark, dir, "uid_h", "ts_ms", lo, hi, 14).head()
+        .timeSliced(spark, dir, "uid_h", "hll14", "ts_ms", lo, hi).head()
       val want = rows.filter { case (t, _, _) => t >= lo && t <= hi }
       assert(hl.getLong(0) === bm.getLong(0))
       assert(hl.getLong(0) === want.map(_._2).distinct.size.toLong)
@@ -856,8 +863,7 @@ class SketchSectionSpec extends SparkTestBase {
     val rolled = spark.read.format("pinot").load(dir)
     val got = rolled
       .groupBy("typ")
-      .agg(graft.functions.FreqMergeAgg
-        .freqMergeItems(col("page"), 64).as("sk"))
+      .agg(graft.functions.SketchAgg.merge(col("page"), "freq64").as("sk"))
       .select(col("typ"), explode(col("sk")).as("e"))
       .select(col("typ"), col("e.item"), col("e.cnt"))
       .as[(String, String, Long)].collect()
@@ -881,11 +887,12 @@ class SketchSectionSpec extends SparkTestBase {
     }
     val parts = vals.grouped(n / 7).toSeq
     val sections = parts.map(p =>
-      SketchSection.buildFreq(p.iterator, cap))
+      freqPayload(p.iterator, cap))
     val merged = scala.collection.mutable.HashMap.empty[String, Long]
     sections.foreach { bytes =>
       val sk = SketchSection.deserialize(bytes)
-      graft.functions.FreqItemsAgg.mgMergeInto(merged, sk.freq, cap)
+      graft.functions.FreqSketch.mgMergeInto(merged,
+        sk.asInstanceOf[graft.functions.FreqSketch].counts, cap)
     }
     val truth = vals.groupBy(identity).view.mapValues(_.size.toLong).toMap
     val slack = n.toLong / (cap + 1)
@@ -908,7 +915,7 @@ class SketchSectionSpec extends SparkTestBase {
     assert(r0.metadata.column("uid").sketchSpec === Some("bitmap"))
     assert(r0.metadata.column("tag").sketchSpec === Some("kmv64"))
     val origCard = SketchSection.deserialize(r0.sketchBytes("uid").get)
-      .bitmap.getLongCardinality
+      .asInstanceOf[graft.functions.BitmapSketch].bitmap.getLongCardinality
     r0.close()
     // convert the segment dir (parent of v3) to v1 layout and re-read
     val src = java.nio.file.Paths.get(seg0).getParent.toString
@@ -918,7 +925,8 @@ class SketchSectionSpec extends SparkTestBase {
     try {
       assert(r1.metadata.column("uid").sketchSpec === Some("bitmap"))
       val sk = SketchSection.deserialize(r1.sketchBytes("uid").get)
-      assert(sk.bitmap.getLongCardinality === origCard)
+      assert(sk.asInstanceOf[graft.functions.BitmapSketch].bitmap
+        .getLongCardinality === origCard)
       assert(origCard <= nUsers)
     } finally r1.close()
   }

@@ -31,6 +31,9 @@ class CatalogCacheSpec extends SparkTestBase {
     val t1 = PinotSegmentTable.open(tdir.toString)
     assert(t1.schema().fieldNames.toSeq === Seq("a"))
     val mt = Files.getLastModifiedTime(tdir)
+    val meta = tdir.resolve("seg0").resolve("v3").resolve("metadata.properties")
+    val metaMt = Files.getLastModifiedTime(meta)
+    val metaSize = Files.size(meta)
 
     // replace the segment CONTENT under the same dir name, then pin the
     // table dir's mtime back — the worst case for mtime-only keys
@@ -38,6 +41,10 @@ class CatalogCacheSpec extends SparkTestBase {
     SegmentWriter.write(tdir.resolve("seg0"), "c", "seg0", Seq(
       SegmentWriter.LongCol("b", Array(9L))))
     Files.setLastModifiedTime(tdir, mt)
+    // a coarse file clock stamps two quick rewrites alike: the new
+    // metadata.properties has the old one's size and gets its mtime
+    assert(Files.size(meta) === metaSize)
+    Files.setLastModifiedTime(meta, metaMt)
 
     val t2 = PinotSegmentTable.open(tdir.toString)
     assert(t2.schema().fieldNames.toSeq === Seq("b"),

@@ -162,19 +162,19 @@ class PinotWriteDifferentialSpec extends SparkTestBase {
           col("dict_str") === s"cat${draw % dictCard}"))
         if (sketched) {
           assert(graft.sources.pinot.PinotSketches
-            .bitmapDistinct(spark, dir, "k").head().getLong(0) ===
+            .wholeTable(spark, dir, "k", "bitmap").head().getLong(0) ===
             df.select("k").distinct().count(),
             s"draw $draw ($stage) bitmap sketch distinct diverged")
           assert(graft.sources.pinot.PinotSketches
-            .kmvDistinct(spark, dir, "dict_str", 64).head().getLong(0) ===
+            .wholeTable(spark, dir, "dict_str", "kmv64").head().getLong(0) ===
             df.select("dict_str").distinct().count(),
             s"draw $draw ($stage) kmv sketch distinct diverged")
           assert(graft.sources.pinot.PinotSketches
-            .hllDistinct(spark, dir, "raw_str", 14).head().getLong(0) ===
+            .wholeTable(spark, dir, "raw_str", "hll14").head().getLong(0) ===
             df.select("raw_str").distinct().count(),
             s"draw $draw ($stage) hll sketch distinct diverged")
           val gotQ = graft.sources.pinot.PinotSketches
-            .kllQuantiles(spark, dir, "i32", 4096, Seq(0.25, 0.5, 0.9))
+            .wholeTable(spark, dir, "i32", "kll4096", Seq(0.25, 0.5, 0.9))
             .head().getSeq[Double](0)
           val sortedVals = df.select("i32").collect()
             .map(_.getInt(0).toDouble).sorted

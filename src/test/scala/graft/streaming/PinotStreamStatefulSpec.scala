@@ -85,13 +85,13 @@ class PinotStreamStatefulSpec extends SparkTestBase {
       uids.map(u => (u.toLong * 7, u.toLong)).toDF("event_id", "uid")
         .repartition(1).write.format("pinot").mode("append").save(tailDir)
     // the DELTA half as a STREAM: the micro-batch tail folds every row
-    // it has ever seen into ONE SketchBuildAgg payload (complete-mode
+    // it has ever seen into ONE sketch_build payload (complete-mode
     // global aggregate — the buffer lives in the state store, so a
     // restart that loses it under-counts and the assertion below reds)
     def runOnce(): Unit = {
       val src = spark.readStream.format("pinot").load(tailDir)
       val q = src
-        .agg(graft.functions.SketchBuildAgg.sketchBuild(
+        .agg(graft.functions.SketchAgg.build(
           when(col("uid").isNotNull, xxhash64(col("uid"))), "hll16")
           .as("sketch"))
         .writeStream
@@ -117,7 +117,7 @@ class PinotStreamStatefulSpec extends SparkTestBase {
     val merged = graft.sources.pinot.PinotSketches
       .segmentSketches(spark, coldDir, "uid").select(col("sketch"))
       .union(spark.read.parquet(payloadOut).select(col("sketch")))
-      .agg(graft.functions.HllMergeAgg.hllMergeEstimate(col("sketch"), 16))
+      .agg(graft.functions.SketchAgg.merge(col("sketch"), "hll16"))
       .head().getLong(0)
     // batch twin over the same physical tables (cold ∪ tail raw rows)
     val twin = spark.read.format("pinot").load(coldDir).select("uid")

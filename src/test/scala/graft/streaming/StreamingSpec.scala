@@ -715,10 +715,10 @@ class StreamingSpec extends SparkTestBase {
     val mem = MemoryStream[Event]
     val agg = (df: org.apache.spark.sql.DataFrame) => df
       .groupBy("event_type")
-      .agg(graft.functions.KmvSketchAgg.kmvSketch(
+      .agg(graft.functions.SketchAgg.kmvSketch(
         xxhash64(col("user_id")), 64).as("sk"))
       .select(col("event_type"),
-        graft.functions.KmvSketchAgg.distinctEstimate(col("sk"), 64).as("d"))
+        graft.functions.KmvSketch.distinctEstimate(col("sk"), 64).as("d"))
     val q = agg(mem.toDF())
       .writeStream.format("memory").queryName("kmv_stream")
       .outputMode("complete").start()
