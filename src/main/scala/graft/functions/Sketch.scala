@@ -4,7 +4,7 @@ import java.io.{ByteArrayOutputStream, DataOutputStream}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{unix_millis, when, xxhash64}
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, TimestampType}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType, StringType, TimestampType}
 import org.roaringbitmap.longlong.Roaring64Bitmap
 
 import graft.pinot.{PinotFormatException, SketchSection}
@@ -46,6 +46,27 @@ object Sketch {
     case SketchSection.HllSpec(p) => new HllSketch(p)
     case SketchSection.FreqSpec(c) => new FreqSketch(c)
   }
+
+  /** The type rule of [[values]] over a Spark column type: kmv / hll /
+    * bitmap take INT / LONG / STRING / TIMESTAMP, kll a numeric or
+    * TIMESTAMP, freq a STRING. The writer checks it on the driver, so a
+    * spec [[values]] would refuse never reaches a write task.
+    */
+  def accepts(spec: SketchSection.Spec, dt: DataType): Boolean = spec match {
+    case SketchSection.KllSpec(_) => dt match {
+      case IntegerType | LongType | FloatType | DoubleType | TimestampType => true
+      case _ => false
+    }
+    case SketchSection.FreqSpec(_) => dt == StringType
+    case _ => dt match { // kmv, hll, bitmap
+      case IntegerType | LongType | StringType | TimestampType => true
+      case _ => false
+    }
+  }
+
+  private[graft] val TypeRule = "kmv / hll / bitmap take a " +
+    "single-value INT / LONG / STRING / TIMESTAMP column, kll a " +
+    "numeric or TIMESTAMP one, freq a STRING one"
 
   /** The value rule: what a `spec` sketch stores of doc `i` of a written
     * column — kmv / hll the Spark `xxhash64` of the value (a TIMESTAMP
@@ -105,9 +126,7 @@ object Sketch {
       docs: Iterator[Int]): Array[Byte] = {
     val value = values(spec, cd).getOrElse(throw new PinotFormatException(
       s"a ${spec.render} sketch cannot take column ${cd.name} " +
-        s"(${cd.getClass.getSimpleName}): kmv / hll / bitmap take a " +
-        "single-value INT / LONG / STRING / TIMESTAMP column, kll a " +
-        "numeric or TIMESTAMP one, freq a STRING one"))
+        s"(${cd.getClass.getSimpleName}): $TypeRule"))
     val sk = Sketch(spec)
     docs.foreach(d => sk.add(value(d)))
     sk.payload

@@ -11,52 +11,40 @@ import org.apache.spark.sql.types._
 
 /** Sketch-based near-duplicate detection: MinHash+LSH and SimHash.
   *
-  * BOTH pipelines are hash-oracled end-to-end in DuckDB via
-  * engine-neutral md5-derived hash families:
-  * - q49 (MinHash+LSH): one md5 per shingle → x mod p (p = 2^31−1),
-  *   then the Carter–Wegman affine family h_i = (A_i·x + B_i) mod p
-  *   ([[graft.functions.Md5MinHashPerms]] documents the constants and
-  *   the overflow-safety argument) and an md5 band signature. The
-  *   permutations are INDEPENDENT — an earlier linear-in-i family
-  *   (a·(2i+3)+b) produced correlated band minima and a 68× LSH
-  *   candidate blowup.
-  * - q50 (SimHash): md5 token hashes split into two 32-bit halves
-  *   ([[graft.functions.Md5Hash64]]).
+  * BOTH pipelines are hash-oracled end-to-end in DuckDB via the
+  * engine-neutral md5-derived hash families of
+  * [[graft.functions.DocSketch]], which documents the constants and the
+  * overflow-safety argument: q49/q172/q175 band the 64-permutation
+  * MinHash signature, q50 the 64-bit SimHash.
   *
   * Scale notes (100 TB): this is the path that replaces q41's quadratic
   * shingle self-join. Work per stage:
-  * - signatures: explode(shingle × 64 perms) → groupBy(doc, perm).min —
-  *   map-side combinable, shuffles (doc, perm) pairs only;
-  * - banding: groupBy(doc, band) with a sorted-struct hash → one small
-  *   row per (doc, band);
+  * - sketches: one map-only row per document (`minhash_sig`,
+  *   `shingle_set` or `simhash` over its text) — no per-shingle or
+  *   per-token rows, no aggregate, no shuffle;
+  * - banding: 16 (or 8) small rows per document, each a band hash;
   * - bucket join: self-join on (band, signature) — only docs sharing a
   *   band signature meet, so the join output is ~candidates, not n²;
   * - verification: each candidate pair joins its two docs' shingle-set
-  *   rows (collected by the signature aggregate) and intersects them
-  *   ([[TextOps.verified]], shared with q41/q73) — linear in
-  *   candidates, no shingle self-join, no pair-count aggregate.
+  *   rows and intersects them ([[TextOps.verified]], shared with
+  *   q41/q73) — linear in candidates, no shingle self-join, no
+  *   pair-count aggregate.
   */
 object SketchDedup {
 
-  private val NumPerms = 64
-  private val Bands = 16 // 16 bands × 4 rows → s-curve threshold ≈ 0.5
-  private val RowsPerBand = NumPerms / Bands
+  import graft.functions.SketchExprs.{minhashSig, shingleSet, simhash}
 
-  /** Per-doc 64-perm MinHash signature and shingle set as ONE row
-    * (doc_id, sig_vec, ss, n): each shingle yields its 64 permutation
-    * hashes as an array; the custom element-wise-min aggregate (map-side
-    * combinable) folds them — no 64× posexplode, no (doc, perm) shuffle
-    * blowup.
+  private val Bands = 16 // 16 bands × 4 rows → s-curve threshold ≈ 0.5
+  private val RowsPerBand = graft.functions.DocSketch.NumPerms / Bands
+
+  /** One map-only row per document: (doc_id, sig_vec, ss, n) — its
+    * MinHash signature, its distinct shingles and their number. A doc
+    * under 3 words has no shingles, a NULL `sig_vec` and no bands.
     */
   private[queries] def signatures(s: SparkSession, d: String): DataFrame =
-    TextOps.shingles(s, d)
-      // native expression = one call per shingle; the inner loop is
-      // plain JVM code, not an interpreted lambda chain
-      .withColumn("perms",
-        graft.functions.SketchExprs.md5MinhashPerms(col("shingle"), NumPerms))
-      .groupBy("doc_id")
-      .agg(graft.functions.ArrayLongReduceAgg.arrayMinAgg(col("perms"))
-        .as("sig_vec"), collect_list(col("shingle")).as("ss"))
+    graft.Tables.load(s, d, "documents")
+      .select(col("doc_id"), minhashSig(col("text")).as("sig_vec"),
+        shingleSet(col("text")).as("ss"))
       .withColumn("n", size(col("ss")))
 
   /** The full MinHash+LSH pipeline (banding → bucket join → exact
@@ -73,15 +61,7 @@ object SketchDedup {
     * sharing a band signature.
     */
   private[queries] def lshCandidates(sigs: DataFrame): DataFrame = {
-    val bandSigs = sigs
-      .withColumn("band", explode(expr(s"sequence(0, ${Bands - 1})")))
-      // md5 of the comma-joined band slice: engine-neutral (DuckDB:
-      // md5(string_agg(mv, ',' ORDER BY i))), still one small value
-      // per (doc, band)
-      .withColumn("sig", md5(concat_ws(",", expr(
-        s"transform(slice(sig_vec, band * $RowsPerBand + 1, $RowsPerBand)," +
-          " x -> CAST(x AS STRING))"))))
-      .select("doc_id", "band", "sig")
+    val bandSigs = bands(sigs)
     bandSigs.as("a")
       .join(bandSigs.as("b"),
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
@@ -90,36 +70,32 @@ object SketchDedup {
       .distinct()
   }
 
-  /** Per-DOC-ROW band signatures — the STATELESS twin of
-    * [[signatures]]+banding: the whole shingle→minhash→band pipeline
-    * runs inside one projection over each doc row (shingle array,
-    * element-wise min-fold of the md5 permutation family, 16 band md5s),
-    * so a STREAM of documents computes its bands with no stateful
-    * aggregation, no watermark, and no shuffle. Values are bit-identical
-    * to the batch path (the min over a doc's shingles is the same fold;
-    * StreamNearDupSpec pins the equality, and the q172 DuckDB oracle
-    * recomputes the family independently), so stream-side bands join
-    * corpus-side stored buckets meaningfully. Docs under 3 words have no shingles
-    * and produce no bands (same rule as [[graft.functions.ShingleGen]]).
-    * The `carry` columns of `docs` ride along on every band row.
+  /** The (doc_id, band, sig, carry…) rows of rows holding a `sig_vec`:
+    * sig is the md5 of the band's 4 minima joined by commas
+    * (engine-neutral; DuckDB: md5(string_agg(mv, ',' ORDER BY i))). A
+    * NULL `sig_vec` explodes to no band. The band is a generator output,
+    * so no filter on it is pushed below the generator into the
+    * signature's projection, which would evaluate the signature twice.
+    */
+  private def bands(sigs: DataFrame, carry: String*): DataFrame =
+    sigs
+      .withColumn("band", explode(when(col("sig_vec").isNotNull,
+        sequence(lit(0), lit(Bands - 1)))))
+      .withColumn("sig", md5(concat_ws(",", (0 until RowsPerBand).map(r =>
+        col("sig_vec")(col("band") * RowsPerBand + r).cast(StringType)): _*)))
+      .select((Seq("doc_id", "band", "sig") ++ carry).map(col): _*)
+
+  /** Per-DOC-ROW band signatures: the whole shingle → minhash → band
+    * pipeline runs inside one projection over each doc row, so a STREAM
+    * of documents computes its bands with no stateful aggregation, no
+    * watermark, and no shuffle — the same kernel and banding as q49
+    * ([[signatures]] + [[lshCandidates]]), so stream-side bands join
+    * corpus-side stored buckets meaningfully (the q172 DuckDB oracle
+    * recomputes the family independently). Docs under 3 words produce no
+    * bands. The `carry` columns of `docs` ride along on every band row.
     */
   private[graft] def bandsOver(docs: DataFrame, carry: String*): DataFrame =
-    docs
-      .filter(size(split(col("text"), " ")) >= 3)
-      .withColumn("shingles", expr(
-        "transform(sequence(0, size(split(text, ' ')) - 3), " +
-          "i -> concat_ws(' ', slice(split(text, ' '), i + 1, 3)))"))
-      .withColumn("sig_vec", aggregate(
-        col("shingles"),
-        array_repeat(lit(Long.MaxValue), NumPerms),
-        (acc, sh) => zip_with(acc,
-          graft.functions.SketchExprs.md5MinhashPerms(sh, NumPerms),
-          (a, b) => least(a, b))))
-      .withColumn("band", explode(expr(s"sequence(0, ${Bands - 1})")))
-      .withColumn("sig", md5(concat_ws(",", expr(
-        s"transform(slice(sig_vec, band * $RowsPerBand + 1, $RowsPerBand)," +
-          " x -> CAST(x AS STRING))"))))
-      .select((Seq("doc_id", "band", "sig") ++ carry).map(col): _*)
+    bands(docs.withColumn("sig_vec", minhashSig(col("text"))), carry: _*)
 
   private val BandSchema = StructType(Seq(StructField("doc_id", LongType),
     StructField("band", IntegerType), StructField("sig", StringType)))
@@ -413,25 +389,13 @@ object SketchDedup {
     "q50_dedup_simhash" -> ((s, d) => simhashPairs(s, d))
   )
 
-  /** The full SimHash pipeline. */
+  /** The full SimHash pipeline: one map-only 64-bit SimHash per
+    * document, banded bucket join, hamming filter.
+    */
   private[graft] def simhashPairs(s: SparkSession, d: String): DataFrame = {
-      val docs = graft.Tables.load(s, d, "documents")
-      // Weighted-by-count ±1 bit arrays folded by the element-wise-sum
-      // aggregate (map-side combinable — replaces a 64× posexplode
-      // shuffle). Tokens collapse to (doc, hash, count) FIRST so the
-      // 64-element bit expansion runs once per distinct token, not once
-      // per occurrence — 10× fewer lambda evaluations on repetitive text.
-      val sims = docs
-        .withColumn("word", explode(split(col("text"), " ")))
-        .withColumn("h", graft.functions.SketchExprs.md5Hash64(col("word")))
-        .groupBy("doc_id", "h")
-        .agg(count(lit(1)).as("c"))
-        .withColumn("bits",
-          graft.functions.SketchExprs.simhashContrib(col("h"), col("c")))
-        .groupBy("doc_id")
-        .agg(graft.functions.ArrayLongReduceAgg.arraySumAgg(col("bits"))
-          .as("tally"))
-        .withColumn("simhash", graft.functions.SketchExprs.signBits(col("tally")))
+      val sims = graft.Tables.load(s, d, "documents")
+        .filter(col("text").isNotNull)
+        .select(col("doc_id"), simhash(col("text")).as("simhash"))
       // 8 bands × 8 bits: by pigeonhole, any pair within hamming 7 shares
       // at least one clean band → banding loses nothing below threshold.
       val banded = sims

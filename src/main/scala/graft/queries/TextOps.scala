@@ -27,7 +27,7 @@ object TextOps {
 
   /** doc_id + distinct word-3-gram shingle set, one row per shingle.
     * Generated by the [[graft.functions.ShingleGen]] UDTF — one pass,
-    * no interpreted lambda chain (q41/q49/q50 all scan through this).
+    * no interpreted lambda chain (q41/q73 scan through this).
     */
   private[queries] def shingles(s: SparkSession, d: String): DataFrame =
     docs(s, d)

@@ -5,9 +5,13 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.sources.Filter
 
 /** Offset for the Pinot streaming read: the sorted set of segment paths
-  * already visible. Segments are immutable and only ever ADDED (the
-  * writer's tmp→seg rename is the commit point), so set difference
-  * between two offsets is exactly the new data — replays are exact.
+  * already visible. Appends only ADD immutable segments (the writer's
+  * tmp→seg rename is the commit point), and then set difference between
+  * two offsets is exactly the new data — replays are exact. Table
+  * maintenance (compaction, rollup, upsert compaction) REPLACES segments
+  * under new or reused paths, which no path set can follow: a stream
+  * whose start offset names a vanished path fails (see
+  * [[PinotMicroBatchStream.planInputPartitions]]).
   */
 case class PinotStreamOffset(segments: Seq[String]) extends Offset {
   override def json(): String =
@@ -54,9 +58,10 @@ object PinotStreamOffset {
   * each batch scans only the segments added since the previous offset,
   * through the same vectorized columnar reader as the batch path.
   *
-  * Scale note: per batch the driver lists one directory and each new
-  * segment becomes one input partition — the work is proportional to
-  * NEW data only, never to table size.
+  * Scale note: each new segment becomes one input partition, so the
+  * scan work is proportional to new data, but the driver lists the whole
+  * table on every trigger and each offset in the log holds every
+  * segment's path, both growing with the segment count.
   */
 class PinotMicroBatchStream(tableDir: String, columns: Array[String],
     skipFilters: Array[Filter])
@@ -94,10 +99,21 @@ class PinotMicroBatchStream(tableDir: String, columns: Array[String],
   override def deserializeOffset(json: String): Offset =
     PinotStreamOffset.fromJson(json)
 
+  /** The segments of `end` not in `start`. Fails when a segment of
+    * `start` is gone from `end`: the table was rewritten under the stream
+    * (compaction), so the difference would re-read merged rows or skip
+    * rows landing under a reused path.
+    */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val seen = start.asInstanceOf[PinotStreamOffset].segments.toSet
-    end.asInstanceOf[PinotStreamOffset].segments
-      .filterNot(seen)
+    val seen = start.asInstanceOf[PinotStreamOffset].segments
+    val now = end.asInstanceOf[PinotStreamOffset].segments
+    val vanished = seen.filterNot(now.toSet)
+    if (vanished.nonEmpty) throw new graft.pinot.PinotFormatException(
+      s"pinot stream over $tableDir: segments of the committed offset are " +
+        s"gone (table maintenance rewrote the table under the stream): " +
+        vanished.sorted.mkString(", "))
+    now
+      .filterNot(seen.toSet)
       .sorted
       .map(p => PinotSplit.wholeSegments(Seq(p)): InputPartition)
       .toArray

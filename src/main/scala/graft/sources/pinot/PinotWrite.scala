@@ -296,26 +296,15 @@ class PinotWriterFactory(path: String, tableName: String, schema: StructType,
       s"jsonIndexColumns entry $jc must be an existing STRING column")
   }
   // stored sketches: the spec string must parse (kmv<k> / kll<k> /
-  // hll<p> / bitmap); kmv/hll/bitmap take int/long/string/timestamp,
-  // kll any numeric
+  // hll<p> / bitmap / freq<c>) and the kind must take the column's type
+  // (Sketch.accepts, the type rule of the writer's value rule)
   sketchCols.foreach { case (sc, spec) =>
     val parsed = graft.pinot.SketchSection.parseSpec(spec)
-    val dt = if (schema.fieldNames.contains(sc)) Some(schema(sc).dataType)
-      else None
-    val ok = parsed match {
-      case graft.pinot.SketchSection.KllSpec(_) => dt.exists {
-        case IntegerType | LongType | FloatType | DoubleType |
-             TimestampType => true
-        case _ => false
-      }
-      case _ => dt.exists {
-        case IntegerType | LongType | StringType | TimestampType => true
-        case _ => false
-      }
-    }
+    val ok = schema.fieldNames.contains(sc) &&
+      graft.functions.Sketch.accepts(parsed, schema(sc).dataType)
     if (!ok) throw new PinotFormatException(
-      s"sketchColumns entry $sc ($spec) must be an existing " +
-        "INT/LONG/STRING/TIMESTAMP column (kll: any numeric)")
+      s"sketchColumns entry $sc ($spec) must be an existing column whose " +
+        s"type the sketch takes: ${graft.functions.Sketch.TypeRule}")
   }
   // sorted column (Pinot's sortedColumn table config): rows are SORTED
   // by it at write time, so every segment records isSorted=true and the

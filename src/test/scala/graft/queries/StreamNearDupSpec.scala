@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
 /** The streaming near-dup path (q172): incoming docs' LSH bands against
   * the persisted corpus bucket table.
   *
-  *  - The per-ROW band computation ([[SketchDedup.bandsOver]]) must be
-  *    bit-identical to the batch signature path ([[SketchDedup]]'s
-  *    aggregate-based `signatures` + banding) — otherwise stream-side
+  *  - The per-ROW band computation ([[SketchDedup.bandsOver]]) and the
+  *    batch path (`signatures` + banding) must both be bit-identical to
+  *    the md5-hex reference of the DuckDB oracles — otherwise stream-side
   *    bands silently never match corpus-side stored buckets and every
   *    incoming doc reads as unique.
   *  - The per-batch join must keep the corpus-sized bucket side
@@ -45,17 +45,27 @@ class StreamNearDupSpec extends SparkTestBase {
   }
 
   test("stream-side bands are bit-identical to the batch signature path") {
-    val batch = SketchDedup.signatures(spark, sfDir)
-      .withColumn("band", explode(expr("sequence(0, 15)")))
-      .withColumn("sig", md5(concat_ws(",", expr(
-        "transform(slice(sig_vec, band * 4 + 1, 4), x -> CAST(x AS STRING))"))))
-      .select("doc_id", "band", "sig")
+    // the batch path and the stream share one kernel, so both are held
+    // to the independent md5-hex reference the DuckDB oracles use
+    val docs = graft.Tables.load(spark, sfDir, "documents")
+    val reference = graft.functions.DocSketchReference.bands(docs)
       .as[(Long, Int, String)].collect().toSet
-    val perRow = SketchDedup.bandsOver(
-      graft.Tables.load(spark, sfDir, "documents"))
+    val perRow = SketchDedup.bandsOver(docs)
       .as[(Long, Int, String)].collect().toSet
-    assert(perRow === batch,
-      "per-row banding diverged from the batch signature path")
+    assert(perRow.diff(reference).isEmpty && reference.diff(perRow).isEmpty,
+      s"per-row banding diverged from the md5-hex reference: only per-row " +
+        s"${perRow.diff(reference).take(5)}, only reference ${reference.diff(perRow).take(5)}")
+    val batch = SketchDedup.lshCandidates(SketchDedup.signatures(spark, sfDir))
+    val refPairs = {
+      val b = graft.functions.DocSketchReference.bands(docs)
+      b.as("a").join(b.as("b"), col("a.band") === col("b.band") &&
+          col("a.sig") === col("b.sig") && col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id"), col("b.doc_id")).distinct()
+        .as[(Long, Long)].collect().toSet
+    }
+    val batchPairs = batch.as[(Long, Long)].collect().toSet
+    assert(batchPairs === refPairs,
+      "batch LSH candidates diverged from the md5-hex reference bands")
   }
 
   test("per-batch join: corpus bucket side crosses NO exchange; " +

@@ -1,6 +1,8 @@
 package graft.sources
 
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkTestBase
 import graft.pinot.SegmentWriter
 import org.apache.spark.sql.functions._
@@ -52,6 +54,42 @@ class PinotStreamReadSpec extends SparkTestBase {
     // offset round-trip survives paths needing escapes
     val off = PinotStreamOffsetFixture.roundTrip(Seq("/a/b seg", "/c\"d", "/e\\f"))
     assert(off === Seq("/a/b seg", "/c\"d", "/e\\f").sorted)
+  }
+
+  test("a stream over a table compacted under it fails loudly, naming the vanished segments") {
+    val root = graft.TestDirs.create("pinot_stream_compact")
+    val tableDir = root.resolve("events_OFFLINE")
+    val ckpt = root.resolve("ckpt").toString
+    writeSeg(tableDir, "seg0", 0, 100)
+    writeSeg(tableDir, "seg1", 100, 250)
+
+    def runOnce(): Unit = {
+      val q = spark.readStream.format("pinot").load(tableDir.toString)
+        .agg(count(lit(1)).as("cnt"))
+        .writeStream.outputMode("complete")
+        .format("memory").queryName("pinot_tail_compact")
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination(60000) finally q.stop()
+    }
+
+    runOnce()
+    assert(spark.table("pinot_tail_compact").head().getLong(0) === 250L)
+    // the merged segment is a new path holding seg0 + seg1's rows: a set
+    // difference of paths would stream them again (total 500)
+    graft.pinot.PinotCompact.compact(tableDir.toString)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](runOnce())
+    val typed = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case p: graft.pinot.PinotFormatException => p }
+    assert(typed.isDefined, s"expected a PinotFormatException cause, got $e")
+    assert(typed.get.getMessage.contains("seg0") &&
+      typed.get.getMessage.contains("seg1"), typed.get.getMessage)
+    // no batch past the first was committed
+    val commits = java.nio.file.Files.list(root.resolve("ckpt/commits"))
+    try assert(commits.iterator().asScala.map(_.getFileName.toString)
+      .filterNot(_.startsWith(".")).toSet === Set("0"))
+    finally commits.close()
   }
 }
 

@@ -380,4 +380,36 @@ class PinotWriteSpec extends SparkTestBase {
     val got = back.filter(col("k") === 2997L).select("s").collect()
     assert(got.map(_.getString(0)).toSeq === Seq("v999"))
   }
+
+  test("a sketch kind the column type does not take fails on the driver, before any job") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = graft.TestDirs.create("pinot_write_sketch")
+      .resolve("sk_OFFLINE").toString
+    val df = Seq((1, 10), (2, 20)).toDF("id", "v")
+    val sc = spark.sparkContext
+    val flushKey = "graft.test.flush"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(flushKey) != null)
+          flushed.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      val e = intercept[graft.pinot.PinotFormatException](
+        df.write.format("pinot").mode("append")
+          .option("sketchColumns", "v:freq8").save(dir))
+      assert(e.getMessage.contains("v (freq8)"), e.getMessage)
+      // the listener bus delivers in order: once a tagged job's start is
+      // seen, every job the write could have started has been counted
+      sc.setLocalProperty(flushKey, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(flushKey, null)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get === 0, "the rejected write started a Spark job")
+    } finally sc.removeSparkListener(l)
+  }
 }
