@@ -823,11 +823,12 @@ object PinotRoundtrip {
     "q166_pinot_upsert_stream" -> ((s, d) => {
       val dir = upsertTable(s, d)
       val work = graft.QueryWorkDirs.create("q166_upsert_stream")
-      val updatesOut = work.resolve("updates").toString
-      val q = graft.sources.pinot.PinotUpsert.latestStream(s, dir)
+      val updatesOut = graft.ScratchFileSystem.on(work.resolve("updates"))
+      val q = graft.StreamCalls.start(s)(graft.sources.pinot.PinotUpsert
+        .latestStream(s, dir)
         .writeStream
         .outputMode("update")
-        .option("checkpointLocation", work.resolve("ckpt").toString)
+        .option("checkpointLocation", graft.ScratchFileSystem.on(work.resolve("ckpt")))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (df: DataFrame, batchId: Long) =>
           // one output file per micro-batch, not one per source split:
@@ -841,7 +842,7 @@ object PinotRoundtrip {
             .repartition(1)
             .write.mode("append").parquet(updatesOut)
         }
-        .start()
+        .start())
       require(q.awaitTermination(300000),
         "q166: the AvailableNow upsert stream did not terminate")
       s.read.parquet(updatesOut)
@@ -950,19 +951,19 @@ object PinotRoundtrip {
       val coldDir = lambdaTable(s, d)
       val deltaDir = lambdaDeltaTable(s, d)
       val work = graft.QueryWorkDirs.create("q160_lambda")
-      val payloadOut = work.resolve("delta_payload").toString
-      val q = s.readStream.format("pinot").load(deltaDir)
+      val payloadOut = graft.ScratchFileSystem.on(work.resolve("delta_payload"))
+      val q = graft.StreamCalls.start(s)(s.readStream.format("pinot").load(deltaDir)
         .agg(graft.functions.SketchAgg.build(
           when(col("event_id").isNotNull, xxhash64(col("event_id"))),
           "hll18").as("sketch"))
         .writeStream
         .outputMode("complete")
-        .option("checkpointLocation", work.resolve("ckpt").toString)
+        .option("checkpointLocation", graft.ScratchFileSystem.on(work.resolve("ckpt")))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (df: DataFrame, _: Long) =>
           df.write.mode("overwrite").parquet(payloadOut)
         }
-        .start()
+        .start())
       require(q.awaitTermination(300000),
         "q160: the AvailableNow delta stream did not terminate")
       graft.sources.pinot.PinotSketches

@@ -5,7 +5,8 @@ import java.nio.file.Files
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{classic, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -107,6 +108,14 @@ object SketchDedup {
     */
   private val MaxBytesPerTrigger = 64L << 20
 
+  /** Runs a growing batch's flag write beside its survivor write. */
+  private lazy val WritePool =
+    java.util.concurrent.Executors.newCachedThreadPool { r =>
+      val t = new Thread(r, "graft-neardup-write")
+      t.setDaemon(true)
+      t
+    }
+
   /** The bucket table as batch `batchId` sees it: the seed partition and
     * the survivors of earlier batches. The schema is given, so the read
     * runs no inference job.
@@ -178,13 +187,14 @@ object SketchDedup {
     * admits at most [[MaxBytesPerTrigger]] of whole files, so a small
     * backlog drains in one micro-batch. Each batch collects its bands
     * once, checks them against the standing bucket table in one job
-    * ([[flaggedAgainst]] over [[heldBands]]) and appends the flagged ids
+    * ([[flaggedAgainst]] over [[heldBands]]) that appends the flagged ids
     * to `flaggedDir`. With `grow = true` the corpus grows as the crawl
     * lands: [[inWaveOrder]] walks the batch's waves in file order, so
     * wave k dedups against the seed corpus plus the SURVIVORS of waves
     * < k (earlier batches through the table, earlier waves of this batch
-    * through a driver-side set), and the batch's survivors are written
-    * once as the `ingest_batch=<id>` partition. The answer is the same at
+    * through a driver-side set), so the check's ids come back to the
+    * driver, and the batch's flags and survivors (the `ingest_batch=<id>`
+    * partition) are written side by side. The answer is the same at
     * any batch split; `maxFilesPerTrigger = Some(1)` runs one wave per
     * batch, the reference shape specs compare against.
     * Crash-retry safety: the bucket read prunes to
@@ -216,7 +226,7 @@ object SketchDedup {
         col("_metadata.file_path").as("wave_path"))
     def write(rows: Iterable[Row], schema: StructType) =
       s.createDataFrame(rows.toSeq.asJava, schema).coalesce(1).write
-    val q = bandsOver(docs, "wave_ts", "wave_path")
+    val q = graft.StreamCalls.start(s)(bandsOver(docs, "wave_ts", "wave_path")
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", ckptDir)
@@ -228,18 +238,23 @@ object SketchDedup {
           val hits = flaggedAgainst(bucketsBefore(s, bucketRoot, batchId),
             heldBands(s, held.toSeq.map(r =>
               Row(r.getLong(0), r.getInt(1), r.getString(2)))))
-            .collect().map(_.getLong(0)).toSet
-          val (flagged, survivors) =
-            if (grow) inWaveOrder(held, hits) else (hits, Nil)
-          if (flagged.nonEmpty)
-            write(flagged.map(Row(_)), FlagSchema).mode("append").parquet(flaggedDir)
-          if (grow)
+          if (!grow) hits.write.mode("append").parquet(flaggedDir)
+          else {
+            val (flagged, survivors) =
+              inWaveOrder(held, hits.collect().map(_.getLong(0)).toSet)
+            val flags = SQLExecution.withThreadLocalCaptured(
+              s.asInstanceOf[classic.SparkSession], WritePool) {
+              if (flagged.nonEmpty) write(flagged.map(Row(_)), FlagSchema)
+                .mode("append").parquet(flaggedDir)
+            }
             write(survivors, BandSchema).mode("overwrite")
               .parquet(s"$bucketRoot/ingest_batch=$batchId")
+            flags.join()
+          }
         }
         ()
       }
-      .start()
+      .start())
     require(q.awaitTermination(timeoutMs),
       "near-dup: the AvailableNow stream did not terminate")
   }
@@ -346,16 +361,14 @@ object SketchDedup {
     val (seedBuckets, inDir, wavesDir) = fixture(s, d, docs, incoming)
     val work = graft.QueryWorkDirs.create(
       if (grow) "q175_neardup" else "q172_neardup")
-    val bucketRoot =
-      if (!grow) seedBuckets
-      else {
-        val own = work.resolve("buckets")
-        copySeedBuckets(seedBuckets, own)
-        own.toString
-      }
-    val flaggedDir = Files.createDirectories(work.resolve("flagged")).toString
+    // the call's own dirs, on the scratch scheme (ScratchFileSystem)
+    def scratch(sub: String) = graft.ScratchFileSystem.on(work.resolve(sub))
+    if (grow) copySeedBuckets(seedBuckets, work.resolve("buckets"))
+    val bucketRoot = if (grow) scratch("buckets") else seedBuckets
+    Files.createDirectories(work.resolve("flagged"))
+    val flaggedDir = scratch("flagged")
     runNearDup(s, if (grow) wavesDir else inDir, incoming.schema, bucketRoot,
-      work.resolve("ckpt").toString, flaggedDir, grow)
+      scratch("ckpt"), flaggedDir, grow)
     val flagged = s.read.schema(FlagSchema).parquet(flaggedDir).distinct()
       .withColumnRenamed("doc_id", "f_id")
     incoming.select(col("doc_id"))

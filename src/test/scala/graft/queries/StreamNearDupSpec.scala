@@ -1,5 +1,7 @@
 package graft.queries
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkTestBase
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -277,5 +279,93 @@ class StreamNearDupSpec extends SparkTestBase {
     // the batched run drained all three waves in its one batch 0
     assert(batchBuckets.map(_._1) === Set(-1L, 0L))
     assert(waveBuckets.map(_._1) === Set(-1L, 0L, 1L, 2L))
+  }
+
+  /** A dir of `work` on the scratch scheme the near-dup queries use. */
+  private def scratch(work: java.nio.file.Path, sub: String) =
+    graft.ScratchFileSystem.on(work.resolve(sub))
+
+  /** No `.crc` file under `work`: what was written there went through
+    * the scratch scheme, not `file:`.
+    */
+  private def assertNoCrc(work: java.nio.file.Path): Unit = {
+    val walk = java.nio.file.Files.walk(work)
+    try assert(!walk.iterator().asScala.exists(_.toString.endsWith(".crc")),
+      s"a .crc file under $work: written through file:")
+    finally walk.close()
+  }
+
+  test("graftscratch: near-dup flags survive a checkpointed restart " +
+      "between incoming waves") {
+    val docs = graft.Tables.load(spark, sfDir, "documents")
+    val corpus = docs.filter(col("doc_id") % 10 < 8)
+    val incoming = docs.filter(col("doc_id") % 10 >= 8)
+      .select(col("doc_id"), col("text"))
+    val work = graft.TestDirs.create("neardup_restart_scratch")
+    val bucketRoot = scratch(work, "buckets")
+    SketchDedup.bandsOver(corpus).write
+      .parquet(s"$bucketRoot/ingest_batch=-1")
+    val inDir = work.resolve("incoming")
+    java.nio.file.Files.createDirectories(inDir)
+    val flaggedDir = scratch(work, "flagged")
+    incoming.select("doc_id").limit(0).write.parquet(flaggedDir)
+    def runOnce(): Unit = SketchDedup.runNearDup(spark, inDir.toString,
+      incoming.schema, bucketRoot, scratch(work, "ckpt"),
+      flaggedDir, grow = false, timeoutMs = 120000)
+    incoming.filter(col("doc_id") % 20 >= 18).coalesce(1)
+      .write.mode("append").parquet(inDir.toString)
+    runOnce()
+    incoming.filter(col("doc_id") % 20 < 18).coalesce(1)
+      .write.mode("append").parquet(inDir.toString)
+    runOnce()
+    val streamed = spark.read.parquet(flaggedDir)
+      .as[Long].collect().toSet
+    val buckets = spark.read.parquet(bucketRoot)
+    val batchTwin = SketchDedup.bandsOver(incoming)
+      .join(buckets, Seq("band", "sig"), "left_semi")
+      .select("doc_id").as[Long].collect().toSet
+    assert(streamed === batchTwin,
+      "flag set after the restart differs from the batch twin")
+    assert(java.nio.file.Files.exists(work.resolve("ckpt/commits/1")),
+      "the restart did not commit its second batch on the scratch dir")
+    assertNoCrc(work.resolve("ckpt"))
+    assertNoCrc(work.resolve("flagged"))
+  }
+
+  test("graftscratch grow mode: wave-2 docs dedup against wave-1 " +
+      "SURVIVORS across a restart; flagged docs never join the bucket table") {
+    val work = graft.TestDirs.create("neardup_grow_scratch")
+    val bucketRoot = scratch(work, "buckets")
+    val corpusText = "alpha beta gamma delta epsilon zeta eta theta"
+    val noveltyText = "red orange yellow green blue indigo violet pink"
+    SketchDedup.bandsOver(Seq((1L, corpusText)).toDF("doc_id", "text"))
+      .write.parquet(s"$bucketRoot/ingest_batch=-1")
+    val inDir = work.resolve("incoming")
+    java.nio.file.Files.createDirectories(inDir)
+    val flaggedDir = scratch(work, "flagged")
+    val schema = Seq((0L, "")).toDF("doc_id", "text").schema
+    Seq.empty[Long].toDF("doc_id").write.parquet(flaggedDir)
+    def runOnce(): Unit = SketchDedup.runNearDup(spark, inDir.toString,
+      schema, bucketRoot, scratch(work, "ckpt"),
+      flaggedDir, grow = true, timeoutMs = 120000)
+    Seq((100L, noveltyText), (101L, corpusText)).toDF("doc_id", "text")
+      .coalesce(1).write.mode("append").parquet(inDir.toString)
+    runOnce()
+    Seq((200L, noveltyText),
+      (201L, "sun moon star cloud rain snow wind storm"))
+      .toDF("doc_id", "text")
+      .coalesce(1).write.mode("append").parquet(inDir.toString)
+    runOnce()
+    val flagged = spark.read.parquet(flaggedDir).as[Long].collect().toSet
+    assert(flagged === Set(101L, 200L),
+      s"expected {101 (vs corpus), 200 (vs wave-1 survivor)}, got $flagged")
+    val buckets = spark.read.parquet(bucketRoot)
+      .select(col("ingest_batch").cast("long"), col("doc_id"))
+      .distinct().as[(Long, Long)].collect().toSet
+    assert(buckets === Set((-1L, 1L), (0L, 100L), (1L, 201L)),
+      s"bucket table partitions diverged: $buckets")
+    assertNoCrc(work.resolve("ckpt"))
+    assertNoCrc(work.resolve("buckets"))
+    assertNoCrc(work.resolve("flagged"))
   }
 }
